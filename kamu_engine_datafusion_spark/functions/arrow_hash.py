@@ -608,7 +608,7 @@ def dsir_score_udf(lr_ints: list[int], buckets: int) -> "callable":
     """Arrow-batched pandas UDF ``text -> long``: the DSIR fixed-point
     log-importance score ``Σ_bigram lr[bucket(bigram)]`` against the
     per-bucket log-ratio literal table — the vectorized twin of the
-    interpreted ``F.aggregate`` fold in ``_dsir_score_with_counts``
+    interpreted ``F.aggregate`` fold ``sampling._dsir_score_fold``
     (bit-exact: same poly31 buckets, same int64 sums). NULL text →
     NULL (callers coalesce to 0, matching the JVM plan)."""
     import numpy as np

@@ -16,9 +16,9 @@ Spark-first shape (the same discipline as the fixed-point Lloyd loop in
   against the weight vector broadcast as a literal array — the DSIR
   scoring shape, whole-stage codegen, no shuffle;
 - **one aggregate per GD iteration**: the gradient ``g_j = Σ_i r_i ·
-  x_ij`` is a partial+final ``groupBy(bucket).sum(residual)`` over the
-  exploded-token frame — ≤ ``buckets+1`` longs cross the wire; weights
-  (``(buckets+1)`` ints) update driver-side and re-broadcast;
+  x_ij`` is summed per task by one ``mapInArrow`` kernel, then a
+  ``groupBy(bucket)`` final sum — ≤ ``buckets+1`` longs per task cross
+  the wire; weights (``(buckets+1)`` ints) update driver-side;
 - **deterministic and oracle-replayable**: weights live in fixed point
   (scale ``2^scale_bits``), the sigmoid is the Elliott "fast sigmoid"
   ``σ̃(m) = 1/2 + m / (2(1+|m|))`` — exact integer arithmetic, no exp()
@@ -47,29 +47,6 @@ from pyspark.sql import functions as F
 from kamu_engine_datafusion_spark.functions.columns import poly_hash31
 
 
-#: Backend of the hashed-feature bucket build: ``arrow`` = the
-#: vectorized kernel (``functions/arrow_hash.py::hashed_bucket_set_udf``
-#: — bit-exact poly31 buckets in one ArrowEvalPython); ``jvm`` = the
-#: interpreted per-token transform (the SQL-replayable definition, kept
-#: as the correctness twin — equivalence pytest-pinned). Flipped by
-#: tests only; the xxhash64 profile stays JVM (codegen-native).
-_CLS_SCAN_BACKEND = "arrow"
-
-#: Backend of the per-iteration GRADIENT pass (r18, guide §4.2):
-#: ``arrow`` = one ``mapInArrow`` kernel per iteration computes the
-#: margin fold, the clamp, the Elliott residual quantization, AND the
-#: per-bucket partial gradient in exact int64 numpy — the iteration
-#: job collapses to scan → kernel → ≤(buckets+1)-row final sum,
-#: with no weight broadcast join, no interpreted fold, no exploded
-#: (row × bucket) exchange. ``jvm`` = the staged broadcast-weight-row
-#: formulation (the SQL-replayable definition, kept as the
-#: correctness twin — trajectory equality pytest-pinned). All
-#: arithmetic is integer (clip/abs/floor-div on int64 wraps exactly
-#: like the JVM longs at these magnitudes), so the trajectories are
-#: equal bit for bit.
-_CLS_GRAD_BACKEND = "arrow"
-
-
 def _bucket_of(tok: Column, buckets: int, hash_fn: str) -> Column:
     if hash_fn == "poly":
         return F.pmod(poly_hash31(tok), F.lit(buckets))
@@ -83,15 +60,23 @@ def _tokens(text: Column) -> Column:
 
 
 def _bucket_set(text: Column, buckets: int, hash_fn: str) -> Column:
-    """Distinct presence-feature buckets of a text column — rides
-    :data:`_CLS_SCAN_BACKEND` for the poly profile (r17, guide §4: the
-    per-token interpreted char fold dominated the feature build)."""
-    if hash_fn == "poly" and _CLS_SCAN_BACKEND == "arrow":
+    """Distinct presence-feature buckets of a text column. The poly
+    profile runs the vectorized kernel (bit-exact poly31 buckets in one
+    ArrowEvalPython — the per-token interpreted char fold dominated the
+    feature build); xxhash64 runs :func:`_bucket_set_fold`, which is
+    codegen-native."""
+    if hash_fn == "poly":
         from kamu_engine_datafusion_spark.functions.arrow_hash import (
             hashed_bucket_set_udf,
         )
 
         return hashed_bucket_set_udf(buckets)(text)
+    return _bucket_set_fold(text, buckets, hash_fn)
+
+
+def _bucket_set_fold(text: Column, buckets: int, hash_fn: str) -> Column:
+    """The SQL-replayable per-token bucket fold behind
+    :func:`_bucket_set`, for either hash profile."""
     return F.array_distinct(
         F.transform(
             _tokens(text), lambda t: _bucket_of(t, buckets, hash_fn)
@@ -143,16 +128,17 @@ def train_quality_classifier(
     row-unique (it keys the residual join back onto the feature
     frame).
 
-    Per iteration: margins fold in-row against the literal weights,
-    residuals quantize in-row — ``round_half_up(σ̃·S)`` via the pure
-    integer identity ``(2a + b) div (2b)`` (operands non-negative, so
-    Spark ``div`` ≡ floor ≡ the oracle's ``//``) — and ONE
-    ``groupBy(feature)`` aggregate over the distinct (row, bucket)
-    frame emits ≤ ``buckets+1`` gradient longs (map-side combine caps
-    per-task state at the same). The feature frame is
-    localCheckpoint-ed once — iterations re-read columnar cache, not
-    parquet (swap for ``persist(MEMORY_AND_DISK)`` at true corpus
-    scale).
+    Per iteration ONE ``mapInArrow`` kernel computes the margins, the
+    ±clamp, the Elliott residual quantization — ``round_half_up(σ̃·S)``
+    via the pure integer identity ``(2a + b) // (2b)`` (operands
+    non-negative, so floor ≡ the oracle's ``//``) — and the per-bucket
+    partial gradient in exact int64 numpy (sums bounded far below 2^63
+    by the module's overflow envelope); only ≤ ``buckets + 2`` partial
+    longs per task cross back for the final sum. ``n`` comes from the
+    first pass's count row (feature-frame rows, incl. NULL-text rows).
+    The feature frame is localCheckpoint-ed once — iterations re-read
+    columnar cache, not parquet (swap for ``persist(MEMORY_AND_DISK)``
+    at true corpus scale).
     """
     scale = 1 << scale_bits
     # hash/tokenize ONCE: the checkpointed base carries the distinct
@@ -165,115 +151,6 @@ def train_quality_classifier(
         _bucket_set(F.col(text_col), buckets, hash_fn).alias("__bs"),
         F.col(label_col).cast("long").alias("__y"),
     ).localCheckpoint(eager=True)
-    if _CLS_GRAD_BACKEND == "arrow":
-        # the kernel path derives n from its own first pass (the bias
-        # feature is present in every row), so the standalone count
-        # job is fused away; the empty-frame ValueError is unchanged
-        return _train_arrow(
-            base, buckets, iters, lr_num, lr_den, scale_bits, clamp
-        )
-    n = base.count()
-    if n == 0:
-        raise ValueError("train_quality_classifier: empty training frame")
-    # presence features per row = distinct buckets + the always-on bias
-    # feature j = buckets, appended IN-ROW: the gradient explodes this
-    # array straight out of the cached base — the former
-    # exploded-frame + per-iteration __rid JOIN shape paid two extra
-    # exchanges per iteration and an extra checkpoint job for the same
-    # integer sums (r17, guide §2.2). NULL __bs (null text) must still
-    # contribute its bias row, hence the coalesce.
-    feat = F.concat(
-        F.coalesce(F.col("__bs"), F.array().cast("array<long>")),
-        F.array(F.lit(buckets).cast("long")),
-    )
-
-    w = [0] * (buckets + 1)
-    traj = [list(w)]
-    lim = clamp * scale
-    spark = df.sparkSession
-    for it in range(1, iters + 1):
-        # weights enter as broadcast DATA (one row), not literals: 12
-        # iterations with literal arrays are 12 DIFFERENT plans — each
-        # pays full analysis + janino codegen (~0.3-0.5 s/iteration of
-        # pure compile, measured r17); with weights as an attribute
-        # the plan SOURCE is identical every iteration and the codegen
-        # cache hits. Inside the interpreted fold an attribute is just
-        # a row-value read (the r9 bloom-bitmap lesson) — values
-        # identical.
-        wrow = spark.createDataFrame(
-            [([int(x) for x in w[:-1]], int(w[-1]))],
-            "__warr array<bigint>, __wb bigint",
-        )
-        wbase = base.crossJoin(F.broadcast(wrow))
-        z = F.coalesce(
-            F.aggregate(
-                F.col("__bs"),
-                F.lit(0).cast("long"),
-                lambda acc, j: acc
-                + F.element_at("__warr", (j + 1).cast("int")),
-            ),
-            F.lit(0),
-        ) + F.col("__wb")
-        zc = F.greatest(F.least(z, F.lit(lim)), F.lit(-lim)).cast("long")
-        # stage the clamped margin FIRST: az/num/den reference it three
-        # times between them, and the interpreted fold gets no codegen
-        # CSE — unstaged, the whole margin tree evaluated 3x per row
-        # per iteration (r17). The staged alias survives
-        # CollapseProject (non-cheap, multiply referenced); num/den
-        # stay staged too (den is referenced twice by the div
-        # identity).
-        zbase = wbase.select("__y", "__bs", zc.alias("__zc"))
-        az = F.abs(F.col("__zc"))
-        res_base = zbase.select(
-            "__y",
-            "__bs",
-            ((F.lit(scale) + az + F.col("__zc")) * F.lit(scale)).alias(
-                "__num"
-            ),
-            (F.lit(2).cast("long") * (F.lit(scale) + az)).alias("__den"),
-        )
-        res_expr = (
-            F.expr("(2 * __num + __den) div (2 * __den)")
-            - F.col("__y") * F.lit(scale)
-        ).cast("long")
-        g_rows = (
-            res_base.select(
-                res_expr.alias("__r"), F.explode(feat).alias("__j")
-            )
-            .groupBy("__j")
-            .agg(F.sum("__r").alias("__g"))
-            .collect()
-        )
-        g = {int(r["__j"]): int(r["__g"]) for r in g_rows}
-        w = [
-            w[j] - (lr_num * g.get(j, 0)) // (lr_den * it * n)
-            for j in range(buckets + 1)
-        ]
-        traj.append(list(w))
-    return traj
-
-
-def _train_arrow(
-    base: DataFrame,
-    buckets: int,
-    iters: int,
-    lr_num: int,
-    lr_den: int,
-    scale_bits: int,
-    clamp: int,
-) -> list[list[int]]:
-    """The GD loop with the per-iteration gradient as ONE ``mapInArrow``
-    kernel (r18, guide §4.2): margins, the ±clamp, the Elliott residual
-    quantization and the per-bucket partial gradient all run in exact
-    int64 numpy per task; only ≤ ``buckets + 2`` partial longs per task
-    cross back for the final sum. Bit-identical to the JVM twin: every
-    step is int64 arithmetic (sums bounded far below 2^63 by the
-    module's documented overflow envelope), clip/abs/floor-div on
-    non-negative operands agree exactly, and the trajectory-equality
-    pytest pins it. ``n`` comes from the first pass's count row
-    (feature frame rows, incl. NULL-text rows — identical to the old
-    standalone ``count()``)."""
-    scale = 1 << scale_bits
     lim = clamp * scale
     w = [0] * (buckets + 1)
     traj = [list(w)]
@@ -308,7 +185,7 @@ def _train_arrow(
                 vals = vals.astype(np.int64, copy=False)
                 idx = np.repeat(np.arange(nr, dtype=np.int64), lens)
                 # margin: Σ w[bucket] per row + bias (NULL/empty bucket
-                # arrays contribute the bias alone, like the JVM
+                # arrays contribute the bias alone, like _margin_expr's
                 # coalesce)
                 z = np.zeros(nr, dtype=np.int64)
                 np.add.at(z, idx, wnp[vals])

@@ -36,57 +36,25 @@ import warnings
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
-#: Backend of the exact-integer vector arithmetic (pair dot products,
-#: k-means argmin encodings, power-iteration projections): ``arrow`` =
-#: the vectorized numpy kernels (``functions/arrow_hash.py`` — one
-#: ArrowEvalPython per scan, bit-exact: numpy int64 wraps like a JVM
-#: long); ``jvm`` = the interpreted zip_with/aggregate HOF folds (the
-#: SQL-replayable definition, kept as the correctness twin —
-#: equivalence pytest-pinned). Same values either way; flipped by
-#: tests only. Consumed here and by ``streaming/structured.py`` /
-#: ``operators/similarity.py`` via :func:`int_dot_expr` /
-#: :func:`kmeans_enc_expr`.
-_INT_VEC_BACKEND = "arrow"
-
-
 def int_dot_expr(u, v):
-    """Exact integer dot product of two ``array<long>`` columns —
-    rides :data:`_INT_VEC_BACKEND` (r17, guide §4: the interpreted
-    fold costs ~3-4 µs per 64-dim pair and dominated every per-pair
-    quantized-cosine verify)."""
-    if _INT_VEC_BACKEND == "arrow":
-        from kamu_engine_datafusion_spark.functions.arrow_hash import (
-            int_dot_udf,
-        )
+    """Exact integer dot product of two ``array<long>`` columns: the
+    vectorized numpy kernel (``functions/arrow_hash.py``), bit-exact
+    because numpy int64 wraps like a JVM long. An interpreted
+    zip_with/aggregate fold costs ~3-4 µs per 64-dim pair and dominated
+    every per-pair quantized-cosine verify."""
+    from kamu_engine_datafusion_spark.functions.arrow_hash import int_dot_udf
 
-        return int_dot_udf()(u, v)
-    return F.aggregate(
-        F.zip_with(u, v, lambda x, y: x * y),
-        F.lit(0).cast("long"),
-        lambda acc, x: acc + x,
-    )
+    return int_dot_udf()(u, v)
 
 
 def int_dot_const_expr(col, vec: list[int]):
     """Exact integer dot of an ``array<long>`` column with a CONSTANT
-    int vector — rides :data:`_INT_VEC_BACKEND` (arrow: the constant
-    rides the UDF closure; jvm: a literal array inside the interpreted
-    fold)."""
-    if _INT_VEC_BACKEND == "arrow":
-        from kamu_engine_datafusion_spark.functions.arrow_hash import (
-            int_dot_const_udf,
-        )
-
-        return int_dot_const_udf(vec)(col)
-    return F.aggregate(
-        F.zip_with(
-            col,
-            F.array(*[F.lit(int(x)).cast("long") for x in vec]),
-            lambda a, b: a * b,
-        ),
-        F.lit(0).cast("long"),
-        lambda a, x: a + x,
+    int vector (the constant rides the UDF closure)."""
+    from kamu_engine_datafusion_spark.functions.arrow_hash import (
+        int_dot_const_udf,
     )
+
+    return int_dot_const_udf(vec)(col)
 
 
 def _oriented(df: DataFrame) -> DataFrame:
@@ -372,37 +340,20 @@ def quantize_vectors(
 def kmeans_enc_expr(centroids: list[list[int]], k: int, vec=None):
     """Argmin-with-tie-encoding over a quantized vector column
     (default ``__qv``; pass ``vec`` for a slice — the PQ subspace
-    case): quantized squared L2 distance to each centroid (broadcast
-    as literals — assignment never shuffles), encoded ``dist·k + cid``
-    so one ``least`` yields (distance, lowest-winning-cid) at once.
+    case): quantized squared L2 distance to each centroid (the
+    centroids ride the UDF closure — assignment never shuffles),
+    encoded ``dist·k + cid`` so one minimum yields (distance,
+    lowest-winning-cid) at once. One vectorized ``Σ(a−b)²`` pass per
+    centroid per Arrow batch, bit-exact incl. the tie encoding."""
+    from kamu_engine_datafusion_spark.functions.arrow_hash import (
+        nearest_centroid_enc_udf,
+    )
 
-    Rides :data:`_INT_VEC_BACKEND` (r17): the JVM form runs ONE
-    interpreted zip_with/aggregate fold PER CENTROID per row; the
-    arrow kernel does one vectorized ``Σ(a−b)²`` pass per centroid
-    per Arrow batch — bit-exact, incl. the unique tie encoding."""
     if vec is None:
         vec = F.col("__qv")
-    if _INT_VEC_BACKEND == "arrow":
-        from kamu_engine_datafusion_spark.functions.arrow_hash import (
-            nearest_centroid_enc_udf,
-        )
-
-        return nearest_centroid_enc_udf(
-            [[int(v) for v in c] for c in centroids], k
-        )(vec)
-    encs = []
-    for cid, c_vec in enumerate(centroids):
-        dist = F.aggregate(
-            F.zip_with(
-                vec,
-                F.array(*[F.lit(int(v)) for v in c_vec]),
-                lambda a, b: (a - b) * (a - b),
-            ),
-            F.lit(0).cast("long"),
-            lambda acc, x: acc + x,
-        )
-        encs.append(dist * F.lit(k) + F.lit(cid))
-    return encs[0] if k == 1 else F.least(*encs)
+    return nearest_centroid_enc_udf(
+        [[int(v) for v in c] for c in centroids], k
+    )(vec)
 
 
 def lloyd_centroids(
@@ -655,34 +606,8 @@ def semdedup_state_rows(
         F.col(id_col),
         (enc % F.lit(k)).cast("long").alias("cluster"),
         "q2",
-        # exact integer self-dot — rides _INT_VEC_BACKEND (r17)
         int_dot_expr(F.col("q2"), F.col("q2")).alias("n2"),
     )
-
-
-def _semdedup_neardup(dot, ln, rn, tau2_num: int, tau2_den: int):
-    """The division-free cosine² ≥ τ² test of :func:`semdedup`:
-    positive dot AND dot²·tau2_den ≥ tau2_num·‖a‖²·‖b‖²."""
-    return (dot > 0) & (
-        dot * dot * F.lit(tau2_den) >= F.lit(tau2_num) * ln * rn
-    )
-
-
-#: Backend of the semdedup kill predicate (r18, guide §8): ``arrow`` =
-#: per-cluster grouped kernel — each cluster's quantized matrices ship
-#: ONCE through applyInPandas and the full pair dot-product block is
-#: one exact matrix multiply (float64 is exact here: every partial sum
-#: is integer-valued below 2^53, guarded at runtime; falls back to
-#: int64 matmul inside the guard, and raises loudly past the BIGINT
-#: envelope exactly where ANSI mode would). The join formulation
-#: shipped ~2·dim longs PER CANDIDATE PAIR through ArrowEvalPython —
-#: quadratic bytes (measured at the 10× corpus: xsemdedup_incremental
-#: 33.7 s, xhybrid_maintained 78 s, nearly all in the pair legs).
-#: ``jvm`` = the cluster equi-join + per-pair dot formulation (the
-#: SQL-replayable definition, kept as the correctness twin —
-#: kill-set equality pytest-pinned incl. NULL/ragged/empty-state
-#: edges). Flipped by tests only.
-_SEMDEDUP_KILL_BACKEND = "arrow"
 
 
 def _semdedup_dead_grouped(
@@ -693,8 +618,16 @@ def _semdedup_dead_grouped(
     tau2_den: int,
 ) -> DataFrame:
     """The kill set ``(__dead)`` of :func:`semdedup_increment_against_
-    index` via the per-cluster grouped kernel. Exact reproduction of
-    the join formulation's semantics:
+    index`: each cluster's quantized matrices ship ONCE through
+    applyInPandas and the full pair dot-product block is one exact
+    matrix multiply (float64 is exact while every partial sum is an
+    integer below 2^53, guarded at runtime; int64 matmul inside the
+    next guard; a loud error past the BIGINT envelope exactly where
+    ANSI mode would fail). Shipping ~2·dim longs per candidate pair
+    instead was quadratic in bytes (10× corpus: xsemdedup_incremental
+    33.7 s, xhybrid_maintained 78 s, nearly all in the pair legs).
+    Semantics are those of the cluster equi-join + per-pair dot
+    formulation:
 
     - NULL-cluster rows never join (equi-join) → the NULL group emits
       nothing;
@@ -884,57 +817,11 @@ def semdedup_increment_against_index(
     Scale: the only joins are cluster equi-joins — increment × touched
     clusters' state and increment × itself — so the quadratic budget
     is per-cluster, as in the batch paper shape; the corpus is never
-    re-read and survivors never re-verify. r18: the kill predicate
-    rides :data:`_SEMDEDUP_KILL_BACKEND` — the grouped kernel ships
-    each cluster's matrices once instead of 2·dim longs per pair
-    (guide §8's decide-with-small-rows rule applied to the pair
-    block; kill sets bit-identical, twin pytest)."""
-    if _SEMDEDUP_KILL_BACKEND == "arrow":
-        dead = _semdedup_dead_grouped(
-            inc_rows, state_rows, id_col, tau2_num, tau2_den
-        )
-        return inc_rows.join(
-            dead.withColumnRenamed("__dead", id_col), id_col, "left_anti"
-        )
-    near = lambda: _semdedup_neardup(  # noqa: E731
-        F.col("__dot"), F.col("__ln"), F.col("__rn"), tau2_num, tau2_den
+    re-read and survivors never re-verify. The kill predicate is the
+    per-cluster grouped kernel :func:`_semdedup_dead_grouped`."""
+    dead = _semdedup_dead_grouped(
+        inc_rows, state_rows, id_col, tau2_num, tau2_den
     )
-    dot = int_dot_expr(F.col("__lq"), F.col("__rq"))
-    right = inc_rows.select(
-        "cluster",
-        F.col(id_col).alias("__rid"),
-        F.col("q2").alias("__rq"),
-        F.col("n2").alias("__rn"),
-    )
-    dead = None
-    if state_rows is not None:
-        left_idx = state_rows.select(
-            "cluster",
-            F.col("q2").alias("__lq"),
-            F.col("n2").alias("__ln"),
-        )
-        dead = (
-            left_idx.join(right, "cluster")
-            .withColumn("__dot", dot)
-            .filter(near())
-            .select(F.col("__rid").alias("__dead"))
-            .distinct()
-        )
-    left_inc = inc_rows.select(
-        "cluster",
-        F.col(id_col).alias("__lid"),
-        F.col("q2").alias("__lq"),
-        F.col("n2").alias("__ln"),
-    )
-    within = (
-        left_inc.join(right, "cluster")
-        .filter(F.col("__lid") < F.col("__rid"))
-        .withColumn("__dot", dot)
-        .filter(near())
-        .select(F.col("__rid").alias("__dead"))
-        .distinct()
-    )
-    dead = within if dead is None else dead.unionByName(within).distinct()
     return inc_rows.join(
         dead.withColumnRenamed("__dead", id_col), id_col, "left_anti"
     )
@@ -1248,7 +1135,7 @@ def centroid_shift_from_stats(
 
 def _int_gram(df: DataFrame, col: str, dim: int) -> list[list[int]]:
     """Exact integer Gram matrix ``G_jk = Σ_rows v_j·v_k`` of a
-    BIGINT-array column in ONE corpus pass (r17): ``mapInArrow``
+    BIGINT-array column in ONE corpus pass: ``mapInArrow``
     accumulates per-task partial matrices with numpy int64 (exact —
     the caller's magnitude precheck bounds every partial term far
     below 2^63) and emits one flattened 〈pos, g〉 batch per task;
@@ -1269,10 +1156,8 @@ def _int_gram(df: DataFrame, col: str, dim: int) -> list[list[int]]:
                 arr = arr.drop_null()
             if len(arr) == 0:
                 continue
-            # Ragged vectors would silently mis-reshape; the JVM twin
-            # skips them via NULL-padded zip_with, but a kernel that
-            # reshapes wrong data corrupts EVERY row — fail loudly
-            # (r18 advice fix).
+            # Ragged vectors would silently mis-reshape, and a kernel
+            # that reshapes wrong data corrupts EVERY row — fail loudly.
             lens = pc.list_value_length(arr).to_numpy(
                 zero_copy_only=False
             ).astype(np.int64)
@@ -1284,11 +1169,10 @@ def _int_gram(df: DataFrame, col: str, dim: int) -> list[list[int]]:
                 )
             flat = arr.flatten()
             if flat.null_count:
-                # A NULL element nulls the row's dot products in the
-                # JVM twin (F.sum skips the row) — drop those ROWS here
-                # too; to_numpy would otherwise promote to float64 and
-                # astype would turn NaN into garbage int64 (r18 advice
-                # fix, twin-pytest pinned).
+                # A NULL element nulls the row's BIGINT dot products
+                # (F.sum skips the row) — drop those ROWS here too;
+                # to_numpy would otherwise promote to float64 and
+                # astype would turn NaN into garbage int64.
                 valid = np.asarray(pc.is_valid(flat)).reshape(-1, dim)
                 row_ok = valid.all(axis=1)
                 flat = flat.fill_null(0)
@@ -1425,38 +1309,25 @@ def top_principal_component(
         (j * 2654435761) % (2 * v_scale + 1) - v_scale for j in range(dim)
     ]
 
-    # Projection backend by MEASURED input size (n is already known
+    # Projection kernel by MEASURED input size (n is already known
     # here): the arrow kernel wins when the per-row interpreted fold
-    # (~0.25 µs/element) outweighs one ArrowEvalPython round-trip per
-    # power iteration (~0.3 s) — crossover ≈ 2M elements. Derived from
-    # the runtime input, not a local-mode constant (r17, guide §2/§4);
-    # the module switch still forces the JVM twin for tests.
-    use_arrow = (
-        _INT_VEC_BACKEND == "arrow" and n * dim >= 2_000_000
-    )
+    # (~0.25 µs/element) outweighs one ArrowEvalPython round-trip
+    # (~0.3 s) — crossover ≈ 2M elements, derived from the runtime
+    # input rather than a local-mode constant.
+    use_arrow = n * dim >= 2_000_000
 
-    # First-principles pass count (r17, guide §1.1/§1.2): the whole
-    # iteration needs only the dim×dim integer Gram matrix
-    # G_jk = Σ_rows x'_j·x'_k — w = X'ᵀ(X'v) = Gᵀv by exact integer
-    # distributivity, so ONE corpus pass replaces ``iters`` kernel
-    # passes and the 8 driver-synchronized jobs become driver-side
-    # exact-int matvecs (Python ints — arbitrary precision, and the
-    # w-sum precheck above already bounds every partial term the JVM
-    # twin would have summed in BIGINT, so the trajectories are equal
-    # bit for bit; pytest-pinned against the loop twin). The final
-    # projection/variance aggregates (chk/fin below) keep their exact
-    # cluster-side form — and their overflow guards — unchanged.
-    # use_gram deliberately does NOT share use_arrow's n·dim >= 2M
-    # crossover (r18 advice follow-up, measured): the crossover trades
-    # ONE ArrowEvalPython round-trip per iteration against the
-    # interpreted fold, but the Gram path trades ONE mapInArrow pass
-    # against ``iters`` driver-synchronized jobs — at n=500/dim=64
-    # (sf0.001, far below the crossover) the Gram path reads 1.9-2.2 s
-    # vs the loop's 8.2-11.0 s in a within-JVM alternating A/B, so the
-    # switch is justified unconditionally.
-    use_gram = _INT_VEC_BACKEND == "arrow"
-    if use_gram:
-        G = _int_gram(qc, "__qc", dim)
+    # The whole iteration needs only the dim×dim integer Gram matrix
+    # G_jk = Σ_rows x'_j·x'_k: w = X'ᵀ(X'v) = Gᵀv by exact integer
+    # distributivity, so ONE corpus pass replaces ``iters``
+    # driver-synchronized projection jobs (w is a driver-side Python
+    # int matvec — arbitrary precision, and the w-sum precheck above
+    # bounds every partial term a BIGINT sum would have carried, so
+    # the trajectory equals the per-iteration loop's bit for bit).
+    # This holds at every size: at n=500/dim=64 the Gram path reads
+    # 1.9-2.2 s vs the loop's 8.2-11.0 s in a within-JVM alternating
+    # A/B. The final projection/variance aggregates (chk/fin below)
+    # keep their exact cluster-side form and their overflow guards.
+    G = _int_gram(qc, "__qc", dim)
 
     def _proj(vec_ints):
         if use_arrow:
@@ -1472,31 +1343,7 @@ def top_principal_component(
         )
 
     for _ in range(iters):
-        if use_gram:
-            w = [
-                sum(G[j][k] * v[k] for k in range(dim))
-                for j in range(dim)
-            ]
-        else:
-            s = _proj(v)
-            # project the dot product ONCE per row before the
-            # aggregate — referencing `s` inside each of the `dim` sum
-            # expressions would inline `dim` copies of the projection
-            # fold/kernel (the r9 HOF lesson; a pandas UDF gets no
-            # codegen CSE either)
-            w_row = (
-                qc.select(s.alias("__s"), "__qc")
-                .agg(
-                    *[
-                        F.sum(
-                            F.col("__s") * F.element_at("__qc", j + 1)
-                        ).alias(f"__w{j}")
-                        for j in range(dim)
-                    ]
-                )
-                .collect()[0]
-            )
-            w = [int(w_row[f"__w{j}"]) for j in range(dim)]
+        w = [sum(G[j][k] * v[k] for k in range(dim)) for j in range(dim)]
         m = max(abs(x) for x in w)
         if m == 0:
             break  # degenerate: X'v = 0 — keep the current direction

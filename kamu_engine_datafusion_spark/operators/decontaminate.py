@@ -259,18 +259,6 @@ def ngram_novelty(
     )
 
 
-_M31 = 2_147_483_647
-
-#: Backend of the Bloom phase-1 corpus prefilter: ``arrow`` = the
-#: vectorized kernel (``functions/arrow_hash.py::
-#: bloom_candidate_shingles_udf`` — one ArrowEvalPython doing
-#: tokenize→shingle→hash→membership per doc, bit-exact with the JVM
-#: expression); ``jvm`` = the interpreted HOF pipeline (kept as the
-#: correctness twin — equivalence pytest-pinned). Same candidate sets
-#: either way; flipped by tests only.
-_BLOOM_SCAN_BACKEND = "arrow"
-
-
 def bloom_build(
     benchmark: DataFrame,
     text_col: str = "text",
@@ -295,55 +283,10 @@ def bloom_build(
         minhash_coeffs,
     )
 
-    coeffs = minhash_coeffs(k_hashes, seed)
-    if _BLOOM_SCAN_BACKEND == "arrow":
-        # vectorized build (r18, guide §4): ONE ArrowEvalPython does
-        # tokenize→shingle→hash→positions per doc — the JVM form ran
-        # the shingle build and the k position rehashes as interpreted
-        # HOFs per shingle. Position sets bit-identical (twin pytest);
-        # the global distinct below makes per-doc vs corpus-wide
-        # dedup order irrelevant.
-        from kamu_engine_datafusion_spark.functions.arrow_hash import (
-            bloom_positions_udf,
-        )
-
-        pos = benchmark.select(
-            F.explode(
-                bloom_positions_udf(shingle_len, m_bits, coeffs, hash_fn)(
-                    F.col(text_col)
-                )
-            ).alias("__p")
-        ).distinct()
-    else:
-        sh = benchmark.select(
-            F.explode(
-                F.array_distinct(
-                    word_shingles(tokens(text_col), shingle_len)
-                )
-            ).alias("__sh")
-        ).distinct()
-        from kamu_engine_datafusion_spark.functions.columns import _let
-
-        # Let-bind the shingle hash: the k_hashes rehashes each
-        # reference it, and the poly profile's char fold is an
-        # interpreted HOF with no codegen CSE — unbound, every rehash
-        # re-runs the fold (r17).
-        h = _sh_hash31(F.col("__sh"), hash_fn)
-        pos = sh.select(
-            F.explode(
-                _let(
-                    h,
-                    lambda hv: F.array(
-                        *[
-                            (hv * F.lit(a) + F.lit(b))
-                            % F.lit(_M31)
-                            % F.lit(m_bits)
-                            for a, b in coeffs
-                        ]
-                    ),
-                )
-            ).alias("__p")
-        ).distinct()
+    pos = _bloom_positions(
+        benchmark, text_col, shingle_len, m_bits,
+        minhash_coeffs(k_hashes, seed), hash_fn,
+    )
     bitmap = [0] * ((m_bits + 63) // 64)
     for r in pos.collect():
         p = int(r["__p"])
@@ -354,35 +297,30 @@ def bloom_build(
     return [w - (1 << 64) if w >= (1 << 63) else w for w in bitmap]
 
 
-def _sh_hash31(sh, hash_fn: str):
-    """31-bit shingle hash: ``xxhash64`` (JVM-codegen'd, the production
-    profile) or ``poly`` (the SQL-replayable char fold for oracles)."""
-    from kamu_engine_datafusion_spark.functions.columns import poly_hash31
+def _bloom_positions(
+    df: DataFrame,
+    text_col: str,
+    shingle_len: int,
+    m_bits: int,
+    coeffs: list,
+    hash_fn: str,
+) -> DataFrame:
+    """The distinct Bloom bit positions ``(__p)`` of every shingle in
+    ``df``: ONE ArrowEvalPython does tokenize→shingle→31-bit
+    hash→positions per doc (``functions/arrow_hash.py::
+    bloom_positions_udf``); the global distinct makes per-doc vs
+    corpus-wide dedup order irrelevant."""
+    from kamu_engine_datafusion_spark.functions.arrow_hash import (
+        bloom_positions_udf,
+    )
 
-    if hash_fn == "poly":
-        return poly_hash31(sh)
-    if hash_fn == "xxhash64":
-        return F.pmod(F.xxhash64(sh), F.lit(_M31))
-    raise ValueError(f"unknown hash_fn: {hash_fn!r}")
-
-
-def _bloom_member_h(h, bm, coeffs: list, m_bits: int):
-    """In-row Bloom membership given a PRE-COMPUTED 31-bit hash: every
-    universal-family bit is set. The hash must be computed once per
-    shingle OUTSIDE the k-condition expression — interpreted HOF
-    lambdas do no CSE, so inlining it here would re-run the hash k
-    times per shingle (measured 100× vs the direct join before this
-    split; see SCALE.md r10). ``getbit(word, bit)`` takes a COLUMN
-    position (unlike the shiftleft/shiftright python wrappers)."""
-    cond = None
-    for a, b in coeffs:
-        p = (h * F.lit(a) + F.lit(b)) % F.lit(_M31) % F.lit(m_bits)
-        word = F.element_at(
-            bm, (F.floor(p / F.lit(64)) + F.lit(1)).cast("int")
-        )
-        c = F.getbit(word, F.pmod(p, F.lit(64)).cast("int")) == F.lit(1)
-        cond = c if cond is None else (cond & c)
-    return cond
+    return df.select(
+        F.explode(
+            bloom_positions_udf(shingle_len, m_bits, coeffs, hash_fn)(
+                F.col(text_col)
+            )
+        ).alias("__p")
+    ).distinct()
 
 
 def bloom_flag_contaminated(
@@ -402,10 +340,10 @@ def bloom_flag_contaminated(
     benchmark shingle sets too big to broadcast as strings:
 
     1. **Bloom prefilter, in-row**: each document's distinct shingles
-       filter against the ``m_bits`` bitmap (a literal long array —
-       128 KiB at the default) INSIDE the scan; documents with zero
-       Bloom-positive shingles — the vast majority of a clean corpus —
-       never leave the scan stage. A Bloom filter has no false
+       filter against the ``m_bits`` bitmap (carried by the kernel's
+       closure — 128 KiB at the default) INSIDE the scan; documents
+       with zero Bloom-positive shingles — the vast majority of a clean
+       corpus — never leave the scan stage. A Bloom filter has no false
        negatives, so nothing contaminated can slip past the prefilter.
     2. **Exact verify**: only the Bloom-positive shingles of the
        candidate documents join the true benchmark set (the broadcast
@@ -452,83 +390,27 @@ def bloom_flag_with_bitmap(
     pytest-pinned across a 3-tick maintained fold). ``bitmap`` and
     the geometry params must match the fold's (the
     ``read_maintained_heavy_hitters`` contract)."""
+    from kamu_engine_datafusion_spark.functions.arrow_hash import (
+        bloom_candidate_shingles_udf,
+        word_shingle_set_udf,
+    )
     from kamu_engine_datafusion_spark.functions.columns import (
         minhash_coeffs,
     )
 
-    coeffs = minhash_coeffs(k_hashes, seed)
-    if _BLOOM_SCAN_BACKEND == "arrow":
-        # vectorized phase 1: ONE ArrowEvalPython does
-        # tokenize→shingle→hash→k-bit membership per doc (bit-exact
-        # candidate sets) — the JVM form runs the shingle hash and the
-        # k getbit tests inside interpreted HOF lambdas per shingle
-        # (r17, guide §4). The bitmap rides the UDF closure (8–128 KiB)
-        # instead of a broadcast row.
-        from kamu_engine_datafusion_spark.functions.arrow_hash import (
-            bloom_candidate_shingles_udf,
-        )
-
-        cand_udf = bloom_candidate_shingles_udf(
-            bitmap, shingle_len, m_bits, coeffs, hash_fn
-        )
-        cand = (
-            corpus.select(
-                F.col(id_col).alias("__id"),
-                cand_udf(F.col(text_col)).alias("__cand"),
-            )
-            .filter(F.size("__cand") > 0)
-        )
-    else:
-        # the bitmap enters the plan as DATA (one broadcast row), NOT as
-        # a 16k-literal CreateArray expression: an outer EXPRESSION
-        # inside an interpreted HOF lambda re-evaluates per element (the
-        # r9 transform+element_at lesson) — as a literal array the
-        # membership test measured ~80× slower than this attribute-bound
-        # form; an attribute is just a row-value read
-        spark = corpus.sparkSession
-        bm_df = spark.createDataFrame(
-            [(bitmap,)], "__bm array<bigint>"
-        )
-        # hash each shingle ONCE (a transform), THEN test membership on
-        # the precomputed hash — never inside the k-way condition (no
-        # CSE in interpreted HOF lambdas)
-        hashed = F.transform(
-            F.array_distinct(word_shingles(tokens(text_col), shingle_len)),
-            lambda s: F.struct(
-                s.alias("s"), _sh_hash31(s, hash_fn).alias("h")
-            ),
-        )
-        cand = (
-            corpus.crossJoin(F.broadcast(bm_df))
-            .select(
-                F.col(id_col).alias("__id"),
-                F.transform(
-                    F.filter(
-                        hashed,
-                        lambda q: _bloom_member_h(
-                            q["h"], F.col("__bm"), coeffs, m_bits
-                        ),
-                    ),
-                    lambda q: q["s"],
-                ).alias("__cand"),
-            )
-            .filter(F.size("__cand") > 0)
-        )
-    if _BLOOM_SCAN_BACKEND == "arrow":
-        # phase-2 exact verify: benchmark shingle strings via the
-        # vectorized set kernel (r18 — the interpreted word_shingles
-        # transform over the whole benchmark was the last HOF in this
-        # read's hot path; word_shingle_set_udf is the pytest-pinned
-        # twin of array_distinct(word_shingles(…)))
-        from kamu_engine_datafusion_spark.functions.arrow_hash import (
-            word_shingle_set_udf,
-        )
-
-        bench_sh_arr = word_shingle_set_udf(shingle_len)(F.col(text_col))
-    else:
-        bench_sh_arr = F.array_distinct(
-            word_shingles(tokens(text_col), shingle_len)
-        )
+    # phase 1: ONE ArrowEvalPython does tokenize→shingle→hash→k-bit
+    # membership per doc; the bitmap rides the UDF closure (8–128 KiB)
+    # instead of a broadcast row
+    cand_udf = bloom_candidate_shingles_udf(
+        bitmap, shingle_len, m_bits, minhash_coeffs(k_hashes, seed), hash_fn
+    )
+    cand = corpus.select(
+        F.col(id_col).alias("__id"),
+        cand_udf(F.col(text_col)).alias("__cand"),
+    ).filter(F.size("__cand") > 0)
+    # phase-2 exact verify: the benchmark's distinct shingle strings
+    # (word_shingle_set_udf ≡ array_distinct(word_shingles(tokens(…))))
+    bench_sh_arr = word_shingle_set_udf(shingle_len)(F.col(text_col))
     bench_shingles = F.broadcast(
         benchmark.select(F.explode(bench_sh_arr).alias("__sh")).distinct()
     )

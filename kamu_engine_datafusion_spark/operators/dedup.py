@@ -1859,26 +1859,17 @@ def dedup_increment_against_index(
     return survivors, new_index_rows
 
 
-#: Backend of the in-row rolling window-hash scan (duplicate_spans /
-#: span_dedup_increment): ``arrow`` = the vectorized kernel
-#: (``functions/arrow_hash.py::shingle_hash_array_udf`` — bit-exact
-#: ordered window hashes in one ArrowEvalPython); ``jvm`` = the
-#: interpreted slice/zip_with HOF (the SQL-replayable definition, kept
-#: as the correctness twin — equivalence pytest-pinned). Flipped by
-#: tests only.
-_SPAN_SCAN_BACKEND = "arrow"
-
-
 def _window_hash_arr(text_col: str, n: int):
-    """The ordered per-position window-hash array of ``text_col`` —
-    rides :data:`_SPAN_SCAN_BACKEND` (r17, guide §4)."""
-    if _SPAN_SCAN_BACKEND == "arrow":
-        from kamu_engine_datafusion_spark.functions.arrow_hash import (
-            shingle_hash_array_udf,
-        )
+    """The ordered per-position window-hash array of ``text_col``: the
+    vectorized kernel (``functions/arrow_hash.py::
+    shingle_hash_array_udf``), bit-exact with
+    :func:`~kamu_engine_datafusion_spark.functions.columns
+    .shingle_hash_array` over :func:`tokens` in one ArrowEvalPython."""
+    from kamu_engine_datafusion_spark.functions.arrow_hash import (
+        shingle_hash_array_udf,
+    )
 
-        return shingle_hash_array_udf(n)(F.col(text_col))
-    return shingle_hash_array(tokens(text_col), n)
+    return shingle_hash_array_udf(n)(F.col(text_col))
 
 
 def duplicate_spans(

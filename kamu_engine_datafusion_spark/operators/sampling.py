@@ -1011,16 +1011,6 @@ def pack_sequences_ffd(
     return df.groupBy(*group_keys).applyInPandas(fold, out_schema)
 
 
-#: Backend of the DSIR poly-profile corpus scans (bucket counts and
-#: per-doc scoring): ``arrow`` = the vectorized kernels
-#: (``functions/arrow_hash.py::dsir_bucket_udf``/``dsir_score_udf`` —
-#: one ArrowEvalPython per scan, bit-exact poly31 bigram buckets);
-#: ``jvm`` = the interpreted HOF fold (the SQL-replayable definition,
-#: kept as the correctness twin — equivalence pytest-pinned). Same
-#: values either way; flipped by tests only.
-_DSIR_SCAN_BACKEND = "arrow"
-
-
 def _dsir_toks(c: Column) -> Column:
     return F.split(F.trim(F.lower(c)), r"\s+")
 
@@ -1067,11 +1057,11 @@ def dsir_bucket_counts(
     on the extra column are BIT-IDENTICAL to counting each slice
     separately, at ONE scan instead of one per slice (guide §2.3)."""
     eg = [F.col(c) for c in extra_group_cols]
-    if hash_fn == "poly" and _DSIR_SCAN_BACKEND == "arrow":
+    if hash_fn == "poly":
         # vectorized kernel: per-doc bucket arrays (bit-exact poly31
         # bigram buckets), exploding LONGS instead of bigram STRINGS —
         # the poly char fold otherwise runs interpreted per exploded
-        # bigram (r17, guide §4)
+        # bigram
         from kamu_engine_datafusion_spark.functions.arrow_hash import (
             dsir_bucket_udf,
         )
@@ -1081,13 +1071,55 @@ def dsir_bucket_counts(
             F.explode(dsir_bucket_udf(buckets)(F.col(text_col))).alias("b"),
         )
     else:
-        exploded = df.select(
-            *eg, F.explode(_dsir_bigrams(F.col(text_col))).alias("__ng")
-        ).select(
-            *eg, _dsir_bucket(F.col("__ng"), buckets, hash_fn).alias("b")
-        )
+        exploded = _dsir_bucket_fold(df, text_col, buckets, hash_fn, eg)
     return exploded.groupBy(*extra_group_cols, "b").agg(
         F.count(F.lit(1)).cast("long").alias("c")
+    )
+
+
+def _dsir_bucket_fold(
+    df: DataFrame, text_col: str, buckets: int, hash_fn: str, eg=()
+) -> DataFrame:
+    """One ``(*eg, b)`` row per bigram occurrence via the
+    SQL-replayable HOF fold — the :func:`dsir_bucket_counts` scan for
+    the xxhash64 profile (codegen-native)."""
+    return df.select(
+        *eg, F.explode(_dsir_bigrams(F.col(text_col))).alias("__ng")
+    ).select(*eg, _dsir_bucket(F.col("__ng"), buckets, hash_fn).alias("b"))
+
+
+def _dsir_lr_ints(ct: dict, cr: dict, buckets: int, lam: float) -> list[int]:
+    """The 1e-9 fixed-point per-bucket log-ratio ``ln p(b) − ln q(b)``
+    of the add-``lam`` smoothed target (``ct``) and raw (``cr``)
+    bucket-count models, snapped half-up."""
+    import math
+
+    tt = float(sum(ct.values()))
+    tr = float(sum(cr.values()))
+    lb = lam * buckets
+    lr_ints = []
+    for b in range(buckets):
+        x = math.log((ct.get(b, 0) + lam) / (tt + lb)) - math.log(
+            (cr.get(b, 0) + lam) / (tr + lb)
+        )
+        lr_ints.append(int(math.floor(x * 1e9 + 0.5)))
+    return lr_ints
+
+
+def _dsir_score_fold(
+    text: Column, lr_ints: list[int], buckets: int, hash_fn: str
+) -> Column:
+    """Per-doc ``Σ lr[bucket(bigram)]`` via the SQL-replayable HOF
+    fold — the scoring scan for the xxhash64 profile. NULL for NULL
+    text."""
+    arr = F.array(*[F.lit(v).cast("long") for v in lr_ints])
+    return F.aggregate(
+        _dsir_bigrams(text),
+        F.lit(0).cast("long"),
+        lambda acc, ng: acc
+        + F.element_at(
+            arr, (_dsir_bucket(ng, buckets, hash_fn) + F.lit(1)).cast("int")
+        ),
     )
 
 
@@ -1104,43 +1136,23 @@ def _dsir_score_with_counts(
     :func:`dsir_scores_from_stats`: build the 1e-9 fixed-point
     log-ratio literal array from the two bucket-count dicts and fold
     it over each doc's hashed bigrams in-row at scan speed."""
-    import math
-
-    tt = float(sum(ct.values()))
-    tr = float(sum(cr.values()))
-    lb = lam * buckets
-    lr_ints = []
-    for b in range(buckets):
-        x = math.log((ct.get(b, 0) + lam) / (tt + lb)) - math.log(
-            (cr.get(b, 0) + lam) / (tr + lb)
-        )
-        lr_ints.append(int(math.floor(x * 1e9 + 0.5)))
-
+    lr_ints = _dsir_lr_ints(ct, cr, buckets, lam)
     # NULL text must score 0, not NULL: the fold/kernel yields NULL for
     # NULL text, which would both diverge from the oracle's
     # COALESCE(score, 0) and null out the Gumbel key (dropping the doc
     # from the draw entirely instead of ranking it at weight e^0).
-    if hash_fn == "poly" and _DSIR_SCAN_BACKEND == "arrow":
+    if hash_fn == "poly":
         # vectorized scoring kernel: the per-doc Σ lr[bucket(bigram)]
         # fold is otherwise an interpreted HOF re-running the poly
-        # char fold per bigram (r17, guide §4) — bit-exact int64 sums
+        # char fold per bigram — bit-exact int64 sums
         from kamu_engine_datafusion_spark.functions.arrow_hash import (
             dsir_score_udf,
         )
 
         raw_score = dsir_score_udf(lr_ints, buckets)(F.col(text_col))
     else:
-        arr = F.array(*[F.lit(v).cast("long") for v in lr_ints])
-        raw_score = F.aggregate(
-            _dsir_bigrams(F.col(text_col)),
-            F.lit(0).cast("long"),
-            lambda acc, ng: acc
-            + F.element_at(
-                arr,
-                (_dsir_bucket(ng, buckets, hash_fn) + F.lit(1)).cast(
-                    "int"
-                ),
-            ),
+        raw_score = _dsir_score_fold(
+            F.col(text_col), lr_ints, buckets, hash_fn
         )
     score = F.coalesce(raw_score, F.lit(0).cast("long"))
     return df.withColumn("dsir_score", score)

@@ -543,8 +543,7 @@ def pq_topk(
         for s in range(m_sub)
     ]
     # exact integer dist² to the constant query — the k=1 case of the
-    # routed argmin encoding (enc = dist·1 + 0); rides
-    # clustering._INT_VEC_BACKEND (r17)
+    # routed argmin encoding (enc = dist·1 + 0)
     true_dist = kmeans_enc_expr([list(qv)], 1, vec=F.col("__qv"))
     coded = q.select(
         F.col(id_col), *code_cols, true_dist.alias("true_dist2q")

@@ -37,7 +37,6 @@ from pyspark.sql import functions as F
 from kamu_engine_datafusion_spark.functions.columns import (
     half_up,
     minhash_coeffs,
-    poly_hash31,
 )
 
 _M31 = 2_147_483_647
@@ -87,34 +86,25 @@ def persist_sketch(sketch: DataFrame) -> DataFrame:
     return s
 
 
-#: Backend of the "poly" hash profile on corpus scans: ``arrow`` =
-#: the bit-exact vectorized kernel (``functions/arrow_hash.py::
-#: poly31_hash_udf``, one ArrowEvalPython per scan — the sanctioned
-#: vectorized escape, r16 minhash precedent); ``jvm`` = the
-#: interpreted per-char HOF fold (the SQL-replayable definition, kept
-#: as the correctness twin — equivalence pytest-pinned). Same values
-#: either way; flipped by tests only.
-_POLY_SCAN_BACKEND = "arrow"
-
-
 def _hash31(key, hash_fn: str):
-    """31-bit key hash: ``poly`` = the char-fold (SQL-replayable, the
-    oracle profile); ``xxhash64`` = JVM-codegen'd xxhash folded mod M31
-    (the production profile at 100 TB — avalanching and ~an order of
-    magnitude cheaper than the per-char fold; same policy as DSIR).
+    """31-bit key hash: ``poly`` = the char-fold values of
+    :func:`~kamu_engine_datafusion_spark.functions.columns.poly_hash31`
+    (SQL-replayable, the oracle profile) computed by the bit-exact
+    vectorized kernel (``functions/arrow_hash.py::poly31_hash_udf``,
+    one ArrowEvalPython per scan); ``xxhash64`` = JVM-codegen'd xxhash
+    folded mod M31 (the production profile at 100 TB — avalanching and
+    ~an order of magnitude cheaper than the per-char fold; same policy
+    as DSIR).
 
-    The poly profile rides ``_POLY_SCAN_BACKEND``. Call sites are all
-    top-level projections (a pandas UDF cannot sit inside a HOF
-    lambda), and multi-reference consumers stage the result in its own
-    projection so either backend evaluates ONCE per row (r17)."""
+    Call sites are all top-level projections (a pandas UDF cannot sit
+    inside a HOF lambda), and multi-reference consumers stage the
+    result in its own projection so it evaluates ONCE per row."""
     if hash_fn == "poly":
-        if _POLY_SCAN_BACKEND == "arrow":
-            from kamu_engine_datafusion_spark.functions.arrow_hash import (
-                poly31_hash_udf,
-            )
+        from kamu_engine_datafusion_spark.functions.arrow_hash import (
+            poly31_hash_udf,
+        )
 
-            return poly31_hash_udf()(key)
-        return poly_hash31(key)
+        return poly31_hash_udf()(key)
     if hash_fn == "xxhash64":
         return F.pmod(F.xxhash64(key), F.lit(_M31))
     raise ValueError(f"unknown hash_fn: {hash_fn!r}")

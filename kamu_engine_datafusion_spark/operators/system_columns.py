@@ -10,13 +10,18 @@ Reference ``with_system_columns`` (``src/engine.rs:478-561``):
 4. Final column order ``offset, op, system_time, event_time, <data…>``.
 
 Spark-first design: the reference pays for deterministic offsets by
-serializing the *entire* plan. We keep the user query parallel and offer
-two offset assigners:
+serializing the *entire* plan (``target_partitions=1``). Two offset
+assigners:
 
-- :func:`assign_offsets_serial` — parity mode: ``coalesce(1)`` **after**
-  the query has computed in parallel, then a zero-shuffle, zero-sort
-  per-partition id. Right for ODF micro-batch outputs (the output must
-  be a single file anyway, A17).
+- :func:`assign_offsets_serial` — parity mode: ``coalesce(1)``, then a
+  zero-shuffle, zero-sort per-partition id. ``coalesce(1)`` is a
+  NARROW dependency, so it does not stop at the query: Spark folds
+  every operator back to the last exchange into the same single task.
+  A query with no exchange (a filter/map) runs scan → project →
+  offsets → write as ONE task; a query with an exchange (GROUP BY,
+  shuffled join) computes the stages before its last exchange in
+  parallel and only the final stage in one task. Right for ODF
+  micro-batch outputs (the output must be a single file anyway, A17).
 - :func:`assign_offsets_distributed` — scale mode: classic two-pass
   assignment (per-partition counts → driver-side cumulative bases →
   base + intra-partition index). No global sort, no single-partition
@@ -95,10 +100,12 @@ def assign_offsets_serial(
     """A13 (parity mode): dense Int64 offsets ``start, start+1, …`` in
     result-row order on a single partition.
 
-    ``coalesce(1)`` merges the (parallel) upstream partitions in
-    partition order without a shuffle; ``monotonically_increasing_id``
-    on one partition is exactly ``0..n-1`` in row order — equivalent to
-    the reference's ``row_number() OVER (PARTITION BY 1 ORDER BY NULL)``
+    ``coalesce(1)`` merges the upstream partitions in partition order
+    without a shuffle — and, being narrow, pulls every operator back to
+    the last exchange into the same single task.
+    ``monotonically_increasing_id`` on one partition is exactly
+    ``0..n-1`` in row order — equivalent to the reference's
+    ``row_number() OVER (PARTITION BY 1 ORDER BY NULL)``
     (``src/engine.rs:495-518``) but with no window sort at all.
     """
     return df.coalesce(1).withColumn(

@@ -108,10 +108,12 @@ class TransformRequestInput:
     dataset_id: str | None = None
 
     def __post_init__(self) -> None:
-        assert (len(self.data_paths) > 0) == (self.offset_interval is not None), (
-            "data_paths must be non-empty iff offset_interval is set "
-            "(reference invariant, src/engine.rs:193-196)"
-        )
+        if (len(self.data_paths) > 0) != (self.offset_interval is not None):
+            raise InvalidQueryError(
+                f"input {self.query_alias!r}: data_paths must be non-empty "
+                "iff offset_interval is set (reference invariant, "
+                "src/engine.rs:193-196)"
+            )
 
 
 @dataclass

@@ -10,9 +10,11 @@ Mirrors the reference's session configuration (reference
 - snappy Parquet writer (``src/engine.rs:569-572``) → parquet codec snappy
 - ``target_partitions=1`` (``src/engine.rs:38``) is deliberately NOT
   mirrored globally: the reference serializes the whole plan to get
-  deterministic offsets/single-file output; we keep the query parallel and
-  only serialize at offset-assignment/write time (SURVEY.md §4.1), which
-  is strictly better at scale.
+  deterministic offsets/single-file output; here only the offset/write
+  stage is single-partition (``coalesce(1)``). Because coalesce is a
+  narrow dependency, that stage still reaches back to the plan's last
+  exchange: stages before a shuffle run parallel, but an exchange-free
+  query runs as one task end to end.
 """
 
 from __future__ import annotations
@@ -45,14 +47,11 @@ _RUNTIME_CONFS = {
 
 
 def tune_session(spark: SparkSession) -> SparkSession:
-    """Apply ODF runtime confs to an externally-built session (idempotent)."""
+    """Apply ODF runtime confs to an externally-built session
+    (idempotent). A conf the session refuses raises: the ODF contract
+    (e.g. the ANSI overflow pin) depends on every one of them."""
     for k, v in _RUNTIME_CONFS.items():
-        try:
-            spark.conf.set(k, v)
-        except Exception:
-            # Some confs may be static in exotic deployments; ODF semantics
-            # that depend on them are re-checked where they matter.
-            pass
+        spark.conf.set(k, v)
     return spark
 
 

@@ -24,6 +24,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from kamu_engine_datafusion_spark.plans.types import (
+    InvalidQueryError,
     OffsetInterval,
     TransformRequestInput,
 )
@@ -78,8 +79,12 @@ def register_input(spark: SparkSession, inp: TransformRequestInput) -> DataFrame
     """A1+A3+A4+A5: load one request input and register it as a temp view
     under its ``query_alias`` (``src/engine.rs:183-271``)."""
     if inp.data_paths:
+        if inp.offset_interval is None:
+            raise InvalidQueryError(
+                f"input {inp.query_alias!r}: data_paths without an "
+                "offset_interval"
+            )
         df = read_parquet_ledger(spark, inp.data_paths)
-        assert inp.offset_interval is not None
         df = slice_offset_interval(df, inp.vocab.offset_column, inp.offset_interval)
     else:
         df = empty_ledger(spark, inp.schema_file)

@@ -16,9 +16,10 @@ pyarrow metadata.
 
 Scale note: single-file output is an ODF-protocol requirement for the
 coordinator, not an engine limitation. ``write_parquet_dir`` is the
-scale path (many files, parallel write); ``write_parquet_single_file``
-only serializes the final write stage — upstream computation stays
-parallel, unlike the reference's global ``target_partitions=1``.
+scale path (many files, parallel write). ``write_parquet_single_file``
+writes one partition; since ``coalesce(1)`` is a narrow dependency, the
+single write task also runs everything back to the plan's last
+exchange — for an exchange-free query, the whole scan and projection.
 """
 
 from __future__ import annotations
@@ -65,9 +66,9 @@ def write_parquet_single_file(df: DataFrame, path: str) -> int:
         import pyarrow.parquet as pq
 
         num_records = pq.ParquetFile(parts[0]).metadata.num_rows
-        if os.path.exists(path):
-            os.remove(path)
-        shutil.move(parts[0], path)
+        # tmp_dir sits in the destination directory, so this is one
+        # atomic rename: a crash leaves either the old file or the new
+        os.replace(parts[0], path)
         return int(num_records)
     finally:
         shutil.rmtree(tmp_dir, ignore_errors=True)

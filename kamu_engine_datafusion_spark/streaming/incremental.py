@@ -90,12 +90,15 @@ class IncrementalRunner:
 
     def tick(self, system_time: datetime) -> TransformResponse | None:
         """Run one micro-batch over each input's unread slice. Returns the
-        response, or None when no input has new data."""
+        response, or None when no input has new data or some input has
+        no part file yet (there is no schema file to offer for it)."""
         req_inputs = []
         any_new = False
         for inp in self.inputs:
-            top = inp.max_offset()
             files = inp.part_files()
+            if not files:
+                return None
+            top = inp.max_offset()
             if top is not None and top >= inp.next_unread_offset:
                 any_new = True
                 req_inputs.append(

@@ -2693,9 +2693,8 @@ def ann_topk_from_state_rows(
         int_dot_expr,
     )
 
-    # exact integer dot — rides clustering._INT_VEC_BACKEND (r17: the
-    # interpreted zip_with fold dominated every stored-state scoring
-    # read; the arrow kernel is bit-exact)
+    # exact integer dot (vectorized kernel: an interpreted zip_with
+    # fold dominated every stored-state scoring read)
     dot = int_dot_expr(F.col("q2"), F.col("__qq"))
     cos = F.when(
         (F.col("n2") > 0) & (F.lit(qn2) > 0),
@@ -4324,16 +4323,13 @@ def maintained_bloom(
     the touched buckets. Read back with :func:`read_bloom_state` for
     the scan-side membership test.
     """
-    from kamu_engine_datafusion_spark.operators.decontaminate import (
-        _sh_hash31,
-    )
     from kamu_engine_datafusion_spark.functions.columns import (
         minhash_coeffs,
-        tokens,
-        word_shingles,
+    )
+    from kamu_engine_datafusion_spark.operators.decontaminate import (
+        _bloom_positions,
     )
 
-    m31 = 2_147_483_647
     coeffs = minhash_coeffs(k_hashes, seed)
     spark = spark or SparkSession.getActiveSession()
     stream = (
@@ -4343,58 +4339,9 @@ def maintained_bloom(
     )
 
     def _words(batch_df: DataFrame) -> DataFrame:
-        from kamu_engine_datafusion_spark.operators import (
-            decontaminate as _dec,
+        pos = _bloom_positions(
+            batch_df, text_col, shingle_len, m_bits, coeffs, hash_fn
         )
-
-        if _dec._BLOOM_SCAN_BACKEND == "arrow":
-            # the fold's hot path rides the vectorized positions
-            # kernel (r18 — bit-identical position sets, twin pytest;
-            # the JVM chain below is the SQL-replayable definition)
-            from kamu_engine_datafusion_spark.functions.arrow_hash import (
-                bloom_positions_udf,
-            )
-
-            pos = batch_df.select(
-                F.explode(
-                    bloom_positions_udf(
-                        shingle_len, m_bits, coeffs, hash_fn
-                    )(F.col(text_col))
-                ).alias("__p")
-            ).distinct()
-        else:
-            from kamu_engine_datafusion_spark.functions.columns import _let
-
-            # Let-bind the shingle hash: k_hashes rehashes each
-            # reference it, and the poly profile's char fold is an
-            # interpreted HOF with no codegen CSE — unbound, every
-            # rehash re-runs the fold per shingle (r17).
-            h = _sh_hash31(F.col("__sh"), hash_fn)
-            pos = (
-                batch_df.select(
-                    F.explode(
-                        F.array_distinct(
-                            word_shingles(tokens(text_col), shingle_len)
-                        )
-                    ).alias("__sh")
-                )
-                .select(
-                    F.explode(
-                        _let(
-                            h,
-                            lambda hv: F.array(
-                                *[
-                                    (hv * F.lit(a) + F.lit(b))
-                                    % F.lit(m31)
-                                    % F.lit(m_bits)
-                                    for a, b in coeffs
-                                ]
-                            ),
-                        )
-                    ).alias("__p")
-                )
-                .distinct()
-            )
         # per-word OR of the tick's bit positions: shiftleft needs a
         # literal count in the python API — build the single-bit word
         # with the SQL form, then fold bits of the same word together

@@ -30,15 +30,11 @@ import struct
 from pyspark.sql import SparkSession
 
 from kamu_engine_datafusion_spark.plans.transform import Engine
-from kamu_engine_datafusion_spark.plans.types import (
-    InternalError,
-    InvalidQueryError,
-    RawQueryRequest,
-)
 from kamu_engine_datafusion_spark.transport import odf_flatbuffers as fb
 from kamu_engine_datafusion_spark.transport.http2 import H2Server
 from kamu_engine_datafusion_spark.transport.http_server import (
-    _steps,
+    classify_error,
+    parse_raw_query_request,
     parse_transform_request,
 )
 
@@ -96,6 +92,21 @@ def grpc_unframe(body: bytes) -> list[bytes]:
     return msgs
 
 
+def _error_response(e: Exception) -> bytes:
+    invalid, message, backtrace = classify_error(e)
+    if invalid:
+        return fb.encode_response(
+            fb.UNION_INVALID_QUERY,
+            "ResponseInvalidQuery",
+            {"message": message},
+        )
+    return fb.encode_response(
+        fb.UNION_INTERNAL_ERROR,
+        "ResponseInternalError",
+        {"message": message, "backtrace": backtrace},
+    )
+
+
 def serve_grpc(spark: SparkSession, port: int = 2884) -> H2Server:
     """Start the gRPC transport on a background thread; returns the
     server (call ``.shutdown()`` to stop)."""
@@ -120,74 +131,20 @@ def serve_grpc(spark: SparkSession, port: int = 2884) -> H2Server:
                     ),
                 },
             )
-        except InvalidQueryError as e:
-            return fb.encode_response(
-                fb.UNION_INVALID_QUERY,
-                "ResponseInvalidQuery",
-                {"message": str(e)},
-            )
-        except InternalError as e:
-            return fb.encode_response(
-                fb.UNION_INTERNAL_ERROR,
-                "ResponseInternalError",
-                {"message": str(e), "backtrace": e.backtrace or ""},
-            )
-        except (KeyError, TypeError, ValueError) as e:
-            return fb.encode_response(
-                fb.UNION_INVALID_QUERY,
-                "ResponseInvalidQuery",
-                {"message": f"malformed request: {e!r}"},
-            )
         except Exception as e:  # reference src/grpc.rs:39-69 error chain
-            return fb.encode_response(
-                fb.UNION_INTERNAL_ERROR,
-                "ResponseInternalError",
-                {"message": str(e), "backtrace": ""},
-            )
+            return _error_response(e)
 
     def run_raw_query(payload: bytes) -> bytes:
         body = fb.decode_raw_query_request(payload)
         try:
-            transform = body.get("transform") or {}
-            queries = transform.get("queries")
-            if queries is None and transform.get("query") is not None:
-                queries = [{"query": transform["query"], "alias": None}]
-            resp = engine.execute_raw_query(
-                RawQueryRequest(
-                    input_data_paths=body["input_data_paths"],
-                    transform=_steps(queries or []),
-                    output_data_path=body["output_data_path"],
-                )
-            )
+            resp = engine.execute_raw_query(parse_raw_query_request(body))
             return fb.encode_response(
                 fb.UNION_SUCCESS,
                 "RawQueryResponseSuccess",
                 {"num_records": resp.num_records},
             )
-        except InvalidQueryError as e:
-            return fb.encode_response(
-                fb.UNION_INVALID_QUERY,
-                "ResponseInvalidQuery",
-                {"message": str(e)},
-            )
-        except InternalError as e:
-            return fb.encode_response(
-                fb.UNION_INTERNAL_ERROR,
-                "ResponseInternalError",
-                {"message": str(e), "backtrace": e.backtrace or ""},
-            )
-        except (KeyError, TypeError, ValueError) as e:
-            return fb.encode_response(
-                fb.UNION_INVALID_QUERY,
-                "ResponseInvalidQuery",
-                {"message": f"malformed request: {e!r}"},
-            )
         except Exception as e:
-            return fb.encode_response(
-                fb.UNION_INTERNAL_ERROR,
-                "ResponseInternalError",
-                {"message": str(e), "backtrace": ""},
-            )
+            return _error_response(e)
 
     def handler(headers: dict, body: bytes, respond) -> None:
         path = headers.get(":path", "")

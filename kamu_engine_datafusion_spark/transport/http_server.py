@@ -65,6 +65,29 @@ def _transform_steps(raw) -> list[SqlQueryStep]:
     return _steps(raw)
 
 
+def classify_error(e: Exception) -> tuple[bool, str, str]:
+    """The one error mapping both transports render (reference
+    ``src/grpc.rs:39-69``): ``(invalid_query, message, backtrace)``.
+    Contract violations and malformed requests (a missing key, a wrong
+    type, undecodable JSON) are InvalidQuery; everything else is an
+    InternalError, with the engine's backtrace when it has one."""
+    if isinstance(e, InvalidQueryError):
+        return True, str(e), ""
+    if isinstance(e, InternalError):
+        return False, str(e), e.backtrace or ""
+    if isinstance(e, (KeyError, TypeError, ValueError)):
+        return True, f"malformed request: {e!r}", ""
+    return False, str(e), ""
+
+
+def parse_raw_query_request(body: dict) -> RawQueryRequest:
+    return RawQueryRequest(
+        input_data_paths=body["input_data_paths"],
+        transform=_transform_steps(body["transform"]),
+        output_data_path=body["output_data_path"],
+    )
+
+
 def _vocab(raw: dict | None) -> DatasetVocabulary:
     return DatasetVocabulary(**raw) if raw else DatasetVocabulary()
 
@@ -216,39 +239,26 @@ def serve(spark: SparkSession, port: int = 2884) -> ThreadingHTTPServer:
                     )
                 elif self.path == "/execute_raw_query":
                     resp = engine.execute_raw_query(
-                        RawQueryRequest(
-                            input_data_paths=body["input_data_paths"],
-                            transform=_steps(body["transform"]),
-                            output_data_path=body["output_data_path"],
-                        )
+                        parse_raw_query_request(body)
                     )
                     self._reply(200, {"num_records": resp.num_records})
                 else:
                     self._reply(404, {"error": "not_found"})
-            except InvalidQueryError as e:
-                self._reply(400, {"error": "invalid_query", "message": str(e)})
-            except (json.JSONDecodeError, KeyError, TypeError, ValueError) as e:
-                self._reply(
-                    400,
-                    {
-                        "error": "invalid_query",
-                        "message": f"malformed request: {e!r}",
-                    },
-                )
-            except InternalError as e:
-                self._reply(
-                    500,
-                    {
-                        "error": "internal",
-                        "message": str(e),
-                        "backtrace": e.backtrace,
-                    },
-                )
-            except Exception as e:  # catch-all: never drop the connection
-                self._reply(
-                    500,
-                    {"error": "internal", "message": str(e), "backtrace": ""},
-                )
+            except Exception as e:  # never drop the connection
+                invalid, message, backtrace = classify_error(e)
+                if invalid:
+                    self._reply(
+                        400, {"error": "invalid_query", "message": message}
+                    )
+                else:
+                    self._reply(
+                        500,
+                        {
+                            "error": "internal",
+                            "message": message,
+                            "backtrace": backtrace,
+                        },
+                    )
 
     server = ThreadingHTTPServer(("127.0.0.1", port), Handler)
     threading.Thread(target=server.serve_forever, daemon=True).start()

@@ -141,24 +141,21 @@ def test_classifier_presence_not_counts(spark):
 
 
 def test_classifier_grad_backend_twins(spark):
-    """r18: the mapInArrow gradient kernel must reproduce the JVM
-    broadcast-weight-row formulation bit for bit — including NULL and
-    whitespace-only text rows (bias-only contribution, counted in n)."""
-    import kamu_engine_datafusion_spark.operators.classifier as C
+    """The mapInArrow gradient kernel (over the vectorized bucket-set
+    build) must reproduce the staged Spark SQL formulation (per-token
+    bucket fold, broadcast weight row, exploded presence features) bit
+    for bit — including NULL and whitespace-only text rows (bias-only
+    contribution, counted in n)."""
+    from tests import jvm_twins as J
 
     rows = _two_vocab_corpus(n=80)
     rows += [(1000, None, 0), (1001, "   ", 1)]
     df = spark.createDataFrame(rows, "doc_id long, text string, y int")
     kwargs = dict(buckets=32, iters=3, lr_num=8)
-    assert C._CLS_GRAD_BACKEND == "arrow"  # the operator default
     a = train_quality_classifier(df, "doc_id", "text", "y", **kwargs)
-    old = C._CLS_GRAD_BACKEND
-    C._CLS_GRAD_BACKEND = "jvm"
-    try:
-        b = train_quality_classifier(df, "doc_id", "text", "y", **kwargs)
-    finally:
-        C._CLS_GRAD_BACKEND = old
+    b = J.train_quality_classifier_staged(df, "doc_id", "text", "y", **kwargs)
     assert a == b  # every iteration, every weight
+    assert a[-1] != a[0]  # the trajectory actually moved
 
 
 def test_classifier_empty_frame_raises(spark):

@@ -654,7 +654,7 @@ def test_semdedup_increment_one_shot_equals_batch(spark):
 
 
 def test_semdedup_kill_backend_twins(spark):
-    """r18: the per-cluster grouped kill kernel must reproduce the
+    """The per-cluster grouped kill kernel must reproduce the
     cluster-equi-join + per-pair-dot formulation's survivor set
     EXACTLY — including NULL clusters (never equi-join), NULL q2 /
     NULL-element / NULL-n2 rows (neither kill nor die via pairs),
@@ -663,6 +663,7 @@ def test_semdedup_kill_backend_twins(spark):
     import random
 
     from kamu_engine_datafusion_spark.operators import clustering as C
+    from tests import jvm_twins as J
 
     rng = random.Random(11)
     dim = 8
@@ -703,26 +704,18 @@ def test_semdedup_kill_backend_twins(spark):
     st_rows.append((1100, 2, dup, n2(dup)))  # kills any dup in c2
     state = mk(st_rows)
 
-    def run(backend, st):
-        prev = C._SEMDEDUP_KILL_BACKEND
-        C._SEMDEDUP_KILL_BACKEND = backend
-        try:
-            return sorted(
-                r["vec_id"]
-                for r in C.semdedup_increment_against_index(
-                    inc, st, tau2_num=8_000
-                ).collect()
-            )
-        finally:
-            C._SEMDEDUP_KILL_BACKEND = prev
+    def run(fn, st):
+        return sorted(
+            r["vec_id"] for r in fn(inc, st, tau2_num=8_000).collect()
+        )
 
     for st in (state, None):
-        a = run("arrow", st)
-        j = run("jvm", st)
+        a = run(C.semdedup_increment_against_index, st)
+        j = run(J.semdedup_increment_join, st)
         assert a == j, (st is None, set(a) ^ set(j))
     # sanity: the exact-dup pair resolved lower-id-wins, NULL-edge
     # rows survived (they can neither kill nor die)
-    surv = set(run("arrow", None))
+    surv = set(run(C.semdedup_increment_against_index, None))
     assert 500 in surv and 501 not in surv
     assert {510, 511, 512, 513} <= surv
 
@@ -1010,13 +1003,14 @@ def test_read_maintained_ann_topk_from_semdedup_state(spark, tmp_path):
 
 
 def test_int_vec_arrow_backend_twins(spark):
-    """r17: the exact-integer vector kernels (int dot, const dot,
-    k-means argmin encoding) are bit-exact with the interpreted
+    """The exact-integer vector kernels (int dot, const dot, k-means
+    argmin encoding) are bit-exact with the interpreted
     zip_with/aggregate folds — incl. NULL vectors, length mismatches,
     negative components, and tie encodings."""
     from pyspark.sql import functions as F
 
     from kamu_engine_datafusion_spark.operators import clustering as C
+    from tests import jvm_twins as J
 
     rows = [
         (1, [1, 2, 3, 4], [5, -6, 7, 8]),
@@ -1032,67 +1026,52 @@ def test_int_vec_arrow_backend_twins(spark):
     cents = [[0, 0, 0, 0], [1, 2, 3, 4], [1, 2, 3, 5], [-5, 0, 5, 0]]
     const = [3, -1, 4, -1]
 
-    def run():
+    def run(dot, dot_const, enc):
         return sorted(
             map(
                 tuple,
                 df.select(
                     "id",
-                    C.int_dot_expr(F.col("u"), F.col("v")).alias("d"),
-                    C.int_dot_const_expr(F.col("u"), const).alias("dc"),
-                    C.kmeans_enc_expr(cents, len(cents), vec=F.col("u"))
-                    .alias("enc"),
+                    dot(F.col("u"), F.col("v")).alias("d"),
+                    dot_const(F.col("u"), const).alias("dc"),
+                    enc(cents, len(cents), vec=F.col("u")).alias("enc"),
                 ).collect(),
             )
         )
 
-    arrow = run()
-    old = C._INT_VEC_BACKEND
-    C._INT_VEC_BACKEND = "jvm"
-    try:
-        jvm = run()
-    finally:
-        C._INT_VEC_BACKEND = old
-    assert arrow == jvm
+    kernels = run(C.int_dot_expr, C.int_dot_const_expr, C.kmeans_enc_expr)
+    folds = run(J.int_dot_fold, J.int_dot_const_fold, J.kmeans_enc_fold)
+    assert kernels == folds
+    # the NULL / length-mismatch rows really are NULL, not garbage
+    by_id = {r[0]: r for r in kernels}
+    assert by_id[4][1:] == (None, None, None) and by_id[5][1] is None
 
 
 def test_top_principal_component_gram_equals_loop_twin(spark):
-    """r17: the one-pass Gram path (arrow backend) must reproduce the
-    per-iteration BIGINT loop (jvm twin) bit for bit — w = X'ᵀ(X'v)
-    equals Gᵀv by exact integer distributivity, including NULL-vector
-    rows (skipped by both) and the degenerate m == 0 break."""
+    """The one-pass Gram path must reproduce the per-iteration power
+    loop bit for bit — w = X'ᵀ(X'v) equals Gᵀv by exact integer
+    distributivity, including NULL-vector rows (counted in n_rows,
+    skipped by the sums) and NULL-element rows (dropped from the Gram,
+    not cast to garbage int64)."""
     import numpy as np
 
     from kamu_engine_datafusion_spark.operators import clustering as C
+    from tests import jvm_twins as J
 
     rng = np.random.default_rng(7)
     rows = [
         (i, [float(x) for x in rng.normal(size=8)]) for i in range(60)
     ]
-    rows.append((60, None))  # NULL vector: must not shift the result
-    # NULL ELEMENT inside a vector (r18 advice fix): the JVM twin nulls
-    # that row's dot products (F.sum skips the row); the Gram kernel
-    # must drop the row too, not cast the promoted NaN to garbage int64
+    rows.append((60, None))
     bad = [float(x) for x in rng.normal(size=8)]
     bad[3] = None
     rows.append((61, bad))
     df = spark.createDataFrame(rows, "vec_id long, embedding array<double>")
-    prev = C._INT_VEC_BACKEND
-    try:
-        C._INT_VEC_BACKEND = "arrow"
-        a = sorted(
-            tuple(r)
-            for r in C.top_principal_component(
-                df, "vec_id", "embedding", dim=8
-            ).collect()
-        )
-        C._INT_VEC_BACKEND = "jvm"
-        b = sorted(
-            tuple(r)
-            for r in C.top_principal_component(
-                df, "vec_id", "embedding", dim=8
-            ).collect()
-        )
-    finally:
-        C._INT_VEC_BACKEND = prev
+    a = sorted(
+        tuple(r)
+        for r in C.top_principal_component(
+            df, "vec_id", "embedding", dim=8
+        ).collect()
+    )
+    b = J.top_principal_component_reference([r[1] for r in rows], dim=8)
     assert a == b

@@ -149,10 +149,9 @@ def test_bloom_prefilter_passes_all_members(spark):
         word_shingles,
     )
     from kamu_engine_datafusion_spark.operators.decontaminate import (
-        _bloom_member_h,
-        _sh_hash31,
         bloom_build,
     )
+    from tests.jvm_twins import bloom_member, hash31_fold
 
     bench = spark.createDataFrame(
         [("the quick brown fox jumps over the lazy dog",),
@@ -168,9 +167,9 @@ def test_bloom_prefilter_passes_all_members(spark):
             F.filter(
                 F.transform(
                     F.array_distinct(word_shingles(tokens("text"), 3)),
-                    lambda s: _sh_hash31(s, "xxhash64"),
+                    lambda s: hash31_fold(s, "xxhash64"),
                 ),
-                lambda h: _bloom_member_h(h, bm, coeffs, m_bits),
+                lambda h: bloom_member(h, bm, coeffs, m_bits),
             )
         ).alias("n_pos"),
         F.size(
@@ -208,10 +207,9 @@ def test_bloom_no_false_negatives_any_corpus(spark, docs, m_pow, k):
         word_shingles,
     )
     from kamu_engine_datafusion_spark.operators.decontaminate import (
-        _bloom_member_h,
-        _sh_hash31,
         bloom_build,
     )
+    from tests.jvm_twins import bloom_member, hash31_fold
 
     bench = spark.createDataFrame(
         [(" ".join(ws),) for ws in docs], "text string"
@@ -225,9 +223,9 @@ def test_bloom_no_false_negatives_any_corpus(spark, docs, m_pow, k):
             F.filter(
                 F.transform(
                     F.array_distinct(word_shingles(tokens("text"), 3)),
-                    lambda s: _sh_hash31(s, "xxhash64"),
+                    lambda s: hash31_fold(s, "xxhash64"),
                 ),
-                lambda h: _bloom_member_h(h, bm, coeffs, m_bits),
+                lambda h: bloom_member(h, bm, coeffs, m_bits),
             )
         ).alias("n_pos"),
         F.size(
@@ -275,15 +273,15 @@ def test_word_ngrams_short_docs_general_n(spark):
 
 
 def test_bloom_build_backend_twins(spark):
-    """r18: the vectorized build kernel (bloom_positions_udf) produces
-    the EXACT bitmap of the interpreted JVM build — both hash
+    """The vectorized build kernel (bloom_positions_udf) produces the
+    EXACT bitmap of the interpreted shingle/rehash build — both hash
     profiles, incl. null/empty/short texts."""
     from pyspark.sql import functions as F
 
-    from kamu_engine_datafusion_spark.operators import decontaminate as D
     from kamu_engine_datafusion_spark.operators.decontaminate import (
         bloom_build,
     )
+    from tests import jvm_twins as J
 
     docs = spark.read.parquet(
         "/root/testdata/sf0.001/documents.parquet"
@@ -295,35 +293,25 @@ def test_bloom_build_backend_twins(spark):
     )
     bench = docs.filter(F.col("doc_id") >= 450).unionByName(edge)
 
-    def run(hash_fn):
-        return bloom_build(
-            bench, shingle_len=5, m_bits=1 << 16, k_hashes=4,
-            hash_fn=hash_fn,
-        )
-
     for hash_fn in ("xxhash64", "poly"):
-        assert D._BLOOM_SCAN_BACKEND == "arrow"
-        arrow = run(hash_fn)
-        old = D._BLOOM_SCAN_BACKEND
-        D._BLOOM_SCAN_BACKEND = "jvm"
-        try:
-            jvm = run(hash_fn)
-        finally:
-            D._BLOOM_SCAN_BACKEND = old
-        assert arrow == jvm, hash_fn
+        kw = dict(shingle_len=5, m_bits=1 << 16, k_hashes=4, hash_fn=hash_fn)
+        arrow = bloom_build(bench, **kw)
+        assert arrow == J.bloom_build_fold(bench, **kw), hash_fn
+        assert any(arrow), hash_fn
 
 
 def test_bloom_scan_backend_twins(spark):
-    """r17: the vectorized Bloom phase-1 prefilter
-    (bloom_candidate_shingles_udf) flags the exact same documents with
-    the exact same overlap counts as the interpreted JVM pipeline —
-    under both hash profiles, incl. null/empty/short texts."""
+    """The vectorized Bloom phase-1 prefilter
+    (bloom_candidate_shingles_udf) and phase-2 shingle set
+    (word_shingle_set_udf) flag the exact same documents with the exact
+    same overlap counts as the interpreted HOF pipeline — under both
+    hash profiles, incl. null/empty/short texts."""
     from pyspark.sql import functions as F
 
-    from kamu_engine_datafusion_spark.operators import decontaminate as D
     from kamu_engine_datafusion_spark.operators.decontaminate import (
         bloom_flag_contaminated,
     )
+    from tests import jvm_twins as J
 
     docs = spark.read.parquet(
         "/root/testdata/sf0.001/documents.parquet"
@@ -336,11 +324,11 @@ def test_bloom_scan_backend_twins(spark):
     corpus = docs.filter(F.col("doc_id") < 400).unionByName(edge)
     bench = docs.filter(F.col("doc_id") >= 450)
 
-    def run(hash_fn):
+    def run(fn, hash_fn):
         return sorted(
             map(
                 tuple,
-                bloom_flag_contaminated(
+                fn(
                     corpus, bench, shingle_len=5, threshold=1,
                     m_bits=1 << 16, k_hashes=4, hash_fn=hash_fn,
                 ).collect(),
@@ -348,11 +336,6 @@ def test_bloom_scan_backend_twins(spark):
         )
 
     for hash_fn in ("xxhash64", "poly"):
-        arrow = run(hash_fn)
-        old = D._BLOOM_SCAN_BACKEND
-        D._BLOOM_SCAN_BACKEND = "jvm"
-        try:
-            jvm = run(hash_fn)
-        finally:
-            D._BLOOM_SCAN_BACKEND = old
-        assert arrow == jvm, hash_fn
+        arrow = run(bloom_flag_contaminated, hash_fn)
+        assert arrow == run(J.bloom_flag_contaminated_fold, hash_fn), hash_fn
+        assert any(r[2] for r in arrow), hash_fn

@@ -396,17 +396,16 @@ def test_word_shingle_set_arrow_matches_jvm(spark):
             assert sorted(r["jvm"]) == sorted(r["arrow"]), r["doc_id"]
 
 
-def test_span_scan_backend_twins(spark):
-    """r17: the vectorized window-hash kernel (shingle_hash_array_udf)
+def test_span_scan_backend_twins(spark, monkeypatch):
+    """The vectorized window-hash kernel (shingle_hash_array_udf)
     yields the exact duplicate_spans rows of the interpreted
-    slice/zip_with form — incl. short docs (filtered), tail pads, and
-    null text."""
-    from pyspark.sql import functions as F
-
+    slice/zip_with form (patched in from the test-side reference) —
+    incl. short docs (filtered), tail pads, and null text."""
     from kamu_engine_datafusion_spark.operators import dedup as D2
     from kamu_engine_datafusion_spark.operators.dedup import (
         duplicate_spans,
     )
+    from tests import jvm_twins as J
 
     docs = spark.read.parquet(
         "/root/testdata/sf0.001/documents.parquet"
@@ -424,12 +423,8 @@ def test_span_scan_backend_twins(spark):
         )
 
     arrow = run()
-    old = D2._SPAN_SCAN_BACKEND
-    D2._SPAN_SCAN_BACKEND = "jvm"
-    try:
-        jvm = run()
-    finally:
-        D2._SPAN_SCAN_BACKEND = old
+    monkeypatch.setattr(D2, "_window_hash_arr", J.window_hash_arr_fold)
+    jvm = run()
     assert arrow == jvm and len(arrow) > 0
 
 

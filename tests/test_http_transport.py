@@ -89,6 +89,53 @@ def test_raw_query_over_http(server, tmp_path):
     assert status == 200 and resp["num_records"] == 3
 
 
+def test_raw_query_accepts_transform_sql_envelope(server, tmp_path):
+    """The reference ``Transform::Sql`` envelope ``{"queries": [...]}``
+    parses over HTTP exactly as it does over gRPC."""
+    ledger = write_cities_ledger(str(tmp_path / "cities.parquet"))
+    out = str(tmp_path / "raw.parquet")
+    status, resp = _post(
+        server,
+        "/execute_raw_query",
+        {
+            "input_data_paths": [ledger],
+            "transform": {
+                "engine": "spark",
+                "queries": [{"query": "select city from input"}],
+            },
+            "output_data_path": out,
+        },
+    )
+    assert (status, resp) == (200, {"num_records": 3})
+    assert pq.ParquetFile(out).metadata.num_rows == 3
+
+
+def test_data_paths_without_offset_interval_maps_to_400(server, tmp_path):
+    ledger = write_cities_ledger(str(tmp_path / "cities.parquet"))
+    status, resp = _post(
+        server,
+        "/execute_transform",
+        {
+            "dataset_alias": "bar",
+            "system_time": "2023-02-01T00:00:00Z",
+            "next_offset": 0,
+            "transform": [{"query": "select event_time, city from foo"}],
+            "inputs": [
+                {
+                    "dataset_alias": "foo",
+                    "query_alias": "foo",
+                    "schema_file": ledger,
+                    "data_paths": [ledger],
+                }
+            ],
+            "new_data_path": str(tmp_path / "out.parquet"),
+        },
+    )
+    assert status == 400
+    assert resp["error"] == "invalid_query"
+    assert "offset_interval" in resp["message"]
+
+
 def test_invalid_query_maps_to_400(server, tmp_path):
     ledger = write_cities_ledger(str(tmp_path / "cities.parquet"))
     status, resp = _post(

@@ -1306,10 +1306,13 @@ def test_sample_with_cuts_unseen_stratum_kept(spark):
 
 
 def test_dsir_arrow_backend_twins(spark):
-    """r17: the vectorized DSIR kernels (dsir_bucket_udf /
-    dsir_score_udf) are bit-exact with the interpreted JVM fold —
-    bucket counts AND per-doc scores, incl. null text, empty text,
-    one-token docs, tab/newline whitespace, and unicode."""
+    """The vectorized DSIR kernels (dsir_bucket_udf / dsir_score_udf)
+    are bit-exact with the interpreted bigram fold called directly with
+    the poly profile — bucket counts AND per-doc scores, incl. null
+    text, empty text, one-token docs, tab/newline whitespace, and
+    unicode."""
+    from pyspark.sql import functions as F
+
     from kamu_engine_datafusion_spark.operators import sampling as S
     from kamu_engine_datafusion_spark.operators.sampling import (
         dsir_bucket_counts,
@@ -1326,23 +1329,37 @@ def test_dsir_arrow_backend_twins(spark):
     )
     raw = raw.unionByName(edge)
 
-    def run():
-        counts = sorted(
-            map(tuple, dsir_bucket_counts(raw, buckets=64,
-                                          hash_fn="poly").collect())
+    counts = sorted(
+        map(
+            tuple,
+            dsir_bucket_counts(raw, buckets=64, hash_fn="poly").collect(),
         )
-        scores = sorted(
-            (r["doc_id"], r["dsir_score"])
-            for r in dsir_scores(raw, tgt, buckets=64,
-                                 hash_fn="poly").collect()
-        )
-        return counts, scores
+    )
+    scores = sorted(
+        (r["doc_id"], r["dsir_score"])
+        for r in dsir_scores(raw, tgt, buckets=64, hash_fn="poly").collect()
+    )
 
-    arrow = run()
-    old = S._DSIR_SCAN_BACKEND
-    S._DSIR_SCAN_BACKEND = "jvm"
-    try:
-        jvm = run()
-    finally:
-        S._DSIR_SCAN_BACKEND = old
-    assert arrow == jvm
+    def fold_counts(d):
+        return (
+            S._dsir_bucket_fold(d, "text", 64, "poly")
+            .groupBy("b")
+            .agg(F.count(F.lit(1)).cast("long").alias("c"))
+        )
+
+    jvm_counts = sorted(map(tuple, fold_counts(raw).collect()))
+    lr = S._dsir_lr_ints(
+        dict(fold_counts(tgt).collect()), dict(jvm_counts), 64, 0.5
+    )
+    jvm_scores = sorted(
+        (r["doc_id"], r["s"])
+        for r in raw.select(
+            "doc_id",
+            F.coalesce(
+                S._dsir_score_fold(F.col("text"), lr, 64, "poly"), F.lit(0)
+            ).alias("s"),
+        ).collect()
+    )
+    assert counts == jvm_counts
+    assert scores == jvm_scores
+    assert any(s != 0 for _, s in scores)

@@ -1232,11 +1232,12 @@ def test_poly31_arrow_matches_hof_fold(spark):
     assert all(r["fast"] == r["slow"] for r in out)
 
 
-def test_quantile_sketch_backend_twins(spark):
-    """quantile_sketch retains the identical rows under the arrow and
-    jvm poly backends (the module switch exists for exactly this
-    pin)."""
+def test_quantile_sketch_backend_twins(spark, monkeypatch):
+    """quantile_sketch retains the identical rows whether the poly key
+    hash runs the vectorized kernel or the interpreted per-char fold
+    (patched in from the test-side reference)."""
     from kamu_engine_datafusion_spark.operators import sketches as S
+    from tests import jvm_twins as J
 
     df = spark.createDataFrame(
         [(g, str(i), (i * 37) % 101) for g in ("a", "b") for i in range(400)],
@@ -1245,15 +1246,8 @@ def test_quantile_sketch_backend_twins(spark):
     rows_arrow = sorted(
         map(tuple, quantile_sketch(df, ["g"], "rid", "val", k=32).collect())
     )
-    old = S._POLY_SCAN_BACKEND
-    S._POLY_SCAN_BACKEND = "jvm"
-    try:
-        rows_jvm = sorted(
-            map(
-                tuple,
-                quantile_sketch(df, ["g"], "rid", "val", k=32).collect(),
-            )
-        )
-    finally:
-        S._POLY_SCAN_BACKEND = old
+    monkeypatch.setattr(S, "_hash31", J.hash31_fold)
+    rows_jvm = sorted(
+        map(tuple, quantile_sketch(df, ["g"], "rid", "val", k=32).collect())
+    )
     assert rows_arrow == rows_jvm
