@@ -151,6 +151,9 @@ def train_quality_classifier(
         _bucket_set(F.col(text_col), buckets, hash_fn).alias("__bs"),
         F.col(label_col).cast("long").alias("__y"),
     ).localCheckpoint(eager=True)
+    if iters < 1 and base.isEmpty():
+        # with iterations the first pass's row count raises this below
+        raise ValueError("train_quality_classifier: empty training frame")
     lim = clamp * scale
     w = [0] * (buckets + 1)
     traj = [list(w)]

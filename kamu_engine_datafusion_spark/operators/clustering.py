@@ -364,7 +364,8 @@ def lloyd_centroids(
     returning the final integer centroids (bounded: k·dim ints on the
     driver). Per iteration ONE partial+final aggregate emitting
     ``k×(dim+1)`` longs — the only shuffle; empty clusters keep their
-    previous centroid."""
+    previous centroid. Rows shorter than ``dim`` fail loudly (ANSI
+    ``element_at``)."""
     if k < 1 or iters < 1:
         raise ValueError("k and iters must be >= 1")
     init = q.orderBy(id_col).limit(k).collect()
@@ -388,7 +389,11 @@ def lloyd_centroids(
             )
             .collect()
         )
-        by_cid = {int(r["__cid"]): r for r in stats}
+        # NULL __cid: NULL / NULL-element / length-mismatched vectors,
+        # which are nearest to no centroid and move none
+        by_cid = {
+            int(r["__cid"]): r for r in stats if r["__cid"] is not None
+        }
         cents = [
             [
                 int(math.floor(by_cid[cid][f"__s{j}"] / by_cid[cid]["__n"]))
@@ -490,12 +495,13 @@ def semdedup(
     ``n_dups`` the count of lower-id near-dup partners and ``is_kept``
     a 0/1 BIGINT.
 
-    Scale: the only quadratic work is the within-cluster self-join; its
-    budget is set by cluster granularity (at 100 TB, pick
-    ``k ≈ n / target_cluster_rows`` so each cluster is bounded — the
-    paper uses ~100k clusters for web-scale corpora). Pass
-    ``max_cluster_rows`` to fail loudly (driver-side, one k-row
-    aggregate) before any oversize cluster detonates the join.
+    Scale: the only quadratic work is the within-cluster pair block of
+    the grouped kill kernel :func:`_semdedup_dead_grouped` (one exact
+    matrix multiply per cluster); its budget is set by cluster
+    granularity (at 100 TB, pick ``k ≈ n / target_cluster_rows`` so
+    each cluster is bounded — the paper uses ~100k clusters for
+    web-scale corpora). Pass ``max_cluster_rows`` to fail loudly
+    (driver-side, one k-row aggregate) before any pair work.
     """
     assign = kmeans_fixed_point(df, id_col, vec_col, dim, k, iters, scale)
     q2 = df.select(
@@ -527,40 +533,25 @@ def semdedup(
                 f"semdedup: clusters exceed max_cluster_rows={max_cluster_rows}: "
                 f"{over}; raise k to shrink clusters"
             )
-    left = a.select(
-        F.col("cluster"),
-        F.col(id_col).alias("__lid"),
-        F.col("__q2").alias("__lq"),
-        F.col("__n2").alias("__ln"),
-    )
-    right = a.select(
-        F.col("cluster"),
-        F.col(id_col).alias("__rid"),
-        F.col("__q2").alias("__rq"),
-        F.col("__n2").alias("__rn"),
-    )
-    dot = int_dot_expr(F.col("__lq"), F.col("__rq"))
-    dups = (
-        left.join(right, "cluster")
-        .filter(F.col("__lid") < F.col("__rid"))
-        .withColumn("__dot", dot)
-        .filter(
-            (F.col("__dot") > 0)
-            & (
-                F.col("__dot") * F.col("__dot") * F.lit(tau2_den)
-                >= F.lit(tau2_num) * F.col("__ln") * F.col("__rn")
-            )
-        )
-        .groupBy("__rid")
-        .agg(F.count(F.lit(1)).cast("long").alias("n_dups"))
+    dups = _semdedup_dead_grouped(
+        a.select(
+            id_col,
+            "cluster",
+            F.col("__q2").alias("q2"),
+            F.col("__n2").alias("n2"),
+        ),
+        None,
+        id_col,
+        tau2_num,
+        tau2_den,
     )
     return (
-        a.join(dups, a[id_col] == dups["__rid"], "left")
+        a.join(dups, a[id_col] == dups["__dead"], "left")
         .select(
             F.col(id_col),
             F.col("cluster"),
-            F.coalesce(F.col("n_dups"), F.lit(0).cast("long")).alias("n_dups"),
-            F.when(F.col("__rid").isNull(), F.lit(1))
+            F.coalesce(F.col("__n"), F.lit(0).cast("long")).alias("n_dups"),
+            F.when(F.col("__dead").isNull(), F.lit(1))
             .otherwise(F.lit(0))
             .cast("long")
             .alias("is_kept"),
@@ -617,17 +608,22 @@ def _semdedup_dead_grouped(
     tau2_num: int,
     tau2_den: int,
 ) -> DataFrame:
-    """The kill set ``(__dead)`` of :func:`semdedup_increment_against_
-    index`: each cluster's quantized matrices ship ONCE through
-    applyInPandas and the full pair dot-product block is one exact
-    matrix multiply (float64 is exact while every partial sum is an
-    integer below 2^53, guarded at runtime; int64 matmul inside the
-    next guard; a loud error past the BIGINT envelope exactly where
-    ANSI mode would fail). Shipping ~2·dim longs per candidate pair
-    instead was quadratic in bytes (10× corpus: xsemdedup_incremental
-    33.7 s, xhybrid_maintained 78 s, nearly all in the pair legs).
-    Semantics are those of the cluster equi-join + per-pair dot
-    formulation:
+    """The SemDeDup kill kernel shared by batch :func:`semdedup` and
+    :func:`semdedup_increment_against_index`: ``(__dead, __n)`` — every
+    increment row with at least one near-dup killer, and ``__n`` its
+    number of killers (batch ``n_dups``; the incremental path keeps the
+    rows absent here, i.e. with 0 killers). ``__dead`` has the id
+    column's type.
+
+    Each cluster's quantized matrices ship ONCE through applyInPandas
+    and the full pair dot-product block is one exact matrix multiply
+    (float64 is exact while every partial sum is an integer below 2^53,
+    guarded at runtime; int64 matmul inside the next guard; a loud
+    error past the BIGINT envelope exactly where ANSI mode would fail).
+    Shipping ~2·dim longs per candidate pair instead was quadratic in
+    bytes (10× corpus: xsemdedup_incremental 33.7 s, xhybrid_maintained
+    78 s, nearly all in the pair legs). Semantics are those of the
+    cluster equi-join + per-pair dot formulation:
 
     - NULL-cluster rows never join (equi-join) → the NULL group emits
       nothing;
@@ -636,20 +632,22 @@ def _semdedup_dead_grouped(
     - rows of DIFFERENT vector lengths pair to a NULL dot (zip_with
       padding) → excluded; same-length pairs compare normally;
     - state rows kill increment rows in their cluster; increment rows
-      kill HIGHER-id increment rows (dead or alive);
+      kill HIGHER-id increment rows (dead or alive); a NULL id is
+      never lower than another id;
     - ``near = dot > 0 AND dot²·tau2_den ≥ tau2_num·n2_a·n2_b`` in
       exact integer arithmetic (overflow raises loudly, the ANSI
       discipline).
     """
+    import numpy as np
     import pandas as pd
+    from pyspark.sql import types as T
+    from pyspark.sql.pandas.types import to_arrow_type
 
     num, den = int(tau2_num), int(tau2_den)
 
     def _clean(sub):
         """Rows eligible for pair tests: (ids, n2, {length: (row_idx,
         matrix)})."""
-        import numpy as np
-
         ids = sub["__kid"].to_numpy()
         n2_raw = sub["n2"]
         by_len: dict[int, list[int]] = {}
@@ -670,16 +668,12 @@ def _semdedup_dead_grouped(
             by_len.setdefault(len(v), []).append(k)
         out = {}
         for ln_, idxs in by_len.items():
-            import numpy as np
-
             X = np.array([vecs[k] for k in idxs], dtype=np.int64)
             out[ln_] = (np.asarray(idxs), X)
         return ids, n2, out
 
     def _dots(X, Y):
         """Exact integer dot block X @ Y.T (rows × rows)."""
-        import numpy as np
-
         if X.size == 0 or Y.size == 0:
             return np.zeros((len(X), len(Y)), dtype=np.int64)
         dim = X.shape[1]
@@ -700,13 +694,11 @@ def _semdedup_dead_grouped(
             "sum loudly too)"
         )
 
-    def _near_any(D, ln_vec, rn_vec, extra_mask=None):
-        """Per victim column j: any killer i with near(i, j) — exact
-        int64 with loud overflow guards."""
-        import numpy as np
-
+    def _near_count(D, ln_vec, rn_vec, extra_mask=None):
+        """Per victim column j: the number of killers i with
+        near(i, j) — exact int64 with loud overflow guards."""
         if D.size == 0:
-            return np.zeros(D.shape[1], dtype=bool)
+            return np.zeros(D.shape[1], dtype=np.int64)
         md = int(np.abs(D).max(initial=0))
         if md * md > ((1 << 63) - 1) // max(den, 1):
             raise ValueError(
@@ -726,21 +718,32 @@ def _semdedup_dead_grouped(
         )
         if extra_mask is not None:
             near &= extra_mask
-        return near.any(axis=0)
+        return near.sum(axis=0)
+
+    def _lower(idv):
+        """``lower[i, j]``: id i < id j; False where either is NULL."""
+        ok = pd.notna(idv)
+        lower = np.zeros((len(idv), len(idv)), dtype=bool)
+        v = idv[ok]
+        lower[np.ix_(ok, ok)] = v[:, None] < v[None, :]
+        return lower
+
+    def _out(ids, n):
+        return pd.DataFrame({
+            "__dead": pd.Series(ids, dtype=id_dtype),
+            "__n": pd.Series(n, dtype="int64"),
+        })
 
     def _kill(pdf):
-        import numpy as np
-
-        empty = pd.DataFrame({"__dead": pd.Series([], dtype="int64")})
         if len(pdf) == 0 or pd.isna(pdf["cluster"].iloc[0]):
             # NULL-cluster rows never equi-join
-            return empty
+            return _out([], [])
         st = pdf[pdf["__sd"] == 0]
         inc = pdf[pdf["__sd"] == 1]
         if len(inc) == 0:
-            return empty
+            return _out([], [])
         i_ids, i_n2, i_mats = _clean(inc)
-        dead = np.zeros(len(i_ids), dtype=bool)
+        killers = np.zeros(len(i_ids), dtype=np.int64)
         if len(st):
             s_ids, s_n2, s_mats = _clean(st)
             for ln_, (ii, Xi) in i_mats.items():
@@ -750,15 +753,18 @@ def _semdedup_dead_grouped(
                 D = _dots(Xs, Xi)
                 ln_vec = np.array([s_n2[k] for k in si], dtype=np.int64)
                 rn_vec = np.array([i_n2[k] for k in ii], dtype=np.int64)
-                dead[ii] |= _near_any(D, ln_vec, rn_vec)
+                killers[ii] += _near_count(D, ln_vec, rn_vec)
         for ln_, (ii, Xi) in i_mats.items():
             D = _dots(Xi, Xi)
             nv = np.array([i_n2[k] for k in ii], dtype=np.int64)
-            idv = np.asarray([i_ids[k] for k in ii])
-            lower = idv[:, None] < idv[None, :]
-            dead[ii] |= _near_any(D, nv, nv, extra_mask=lower)
-        out = np.unique(np.asarray(i_ids)[dead])
-        return pd.DataFrame({"__dead": pd.Series(out, dtype="int64")})
+            killers[ii] += _near_count(
+                D, nv, nv, extra_mask=_lower(i_ids[ii])
+            )
+        # a NULL victim id matches no row downstream; a repeated id
+        # sums its rows' killers (the pair join's group-by-victim)
+        hit = (killers > 0) & pd.notna(i_ids)
+        per_id = pd.Series(killers[hit]).groupby(i_ids[hit]).sum()
+        return _out(per_id.index.to_numpy(), per_id.to_numpy())
 
     inc_part = inc_rows.select(
         "cluster",
@@ -777,7 +783,15 @@ def _semdedup_dead_grouped(
         ).unionByName(inc_part)
     else:
         both = inc_part
-    return both.groupBy("cluster").applyInPandas(_kill, "__dead long")
+    id_type = both.schema["__kid"].dataType
+    id_dtype = to_arrow_type(id_type).to_pandas_dtype()
+    return both.groupBy("cluster").applyInPandas(
+        _kill,
+        T.StructType([
+            T.StructField("__dead", id_type),
+            T.StructField("__n", T.LongType()),
+        ]),
+    )
 
 
 def semdedup_increment_against_index(
@@ -823,7 +837,7 @@ def semdedup_increment_against_index(
         inc_rows, state_rows, id_col, tau2_num, tau2_den
     )
     return inc_rows.join(
-        dead.withColumnRenamed("__dead", id_col), id_col, "left_anti"
+        dead.select(F.col("__dead").alias(id_col)), id_col, "left_anti"
     )
 
 

@@ -26,16 +26,12 @@ Caching discipline: the LSH operators ``persist()`` small
 multi-consumer intermediates (banded signature sets, duplicate-id
 sets). Intermediates a call's own outputs no longer need are
 unpersisted before returning; the rest (an output's direct inputs) are
-parked on a deferred-release ledger and unpersisted at the NEXT dedup
-call — so a long-lived session looping over increments holds at most
-one tick's intermediates and never needs ``clearCache()``. Call
-:func:`release_intermediates` after the last call of a session.
-Releasing early is always safe: an unpersisted intermediate recomputes
-from lineage (slower, never wrong). ``persist`` rather than
-``localCheckpoint`` because ``DataFrame.unpersist`` releases only
-cacheManager entries — checkpoint RDD blocks would stay pinned, and
-GC-driven ContextCleaner reclamation is measured-unreliable for
-py4j-held objects.
+parked on ``DEDUP_LEDGER`` (a :class:`.deferred.DeferredLedger`) and
+unpersisted at the NEXT dedup call — so a long-lived session looping
+over increments holds at most one tick's intermediates and never needs
+``clearCache()``. Call ``DEDUP_LEDGER.release()`` after the last call
+of a session. Releasing early is always safe: an unpersisted
+intermediate recomputes from lineage (slower, never wrong).
 """
 
 from __future__ import annotations
@@ -58,73 +54,27 @@ from kamu_engine_datafusion_spark.functions.columns import (
     tokens,
     word_shingles,
 )
+from kamu_engine_datafusion_spark.operators.deferred import DeferredLedger
 
+#: Per-call intermediates that a returned (lazy) DataFrame still reads:
+#: released at the start of the next dedup entry point.
+DEDUP_LEDGER = DeferredLedger()
 
-# Materialized intermediates that a returned (lazy) DataFrame still
-# reads from: they cannot be unpersisted inside the call that made them,
-# so they are released at the next dedup call / release_intermediates().
-_DEFERRED: list[DataFrame] = []
-
-
-def _release_deferred(blocking: bool = False) -> None:
-    while _DEFERRED:
-        df = _DEFERRED.pop()
-        try:
-            df.unpersist(blocking=blocking)
-        except Exception:
-            pass  # session of a previous test/tick may already be stopped
-
-
-def release_intermediates(blocking: bool = False) -> None:
-    """Unpersist the previous dedup call's materialized intermediates.
-
-    Called automatically at the start of every LSH dedup entry point;
-    call it manually after the LAST call of a session (once its outputs
-    are consumed) to drop the final residue.
-    """
-    _release_deferred(blocking=blocking)
-
-
-#: Persisted metadata-sized MAINTAINED-STATE frames (accumulated index
-#: bands/sigs, component edges, …) — a SEPARATE ledger from _DEFERRED
-#: because the per-call _release_deferred() must NOT drop state a later
-#: tick still folds over. Same device as
-#: ``operators/sketches.release_sketch_intermediates``.
-_STATE_DEFERRED: list[DataFrame] = []
-
-
-def release_state_intermediates(blocking: bool = False) -> None:
-    """Unpersist every maintained-state frame parked by
-    :func:`persist_state`. Call at the start of a new top-level
-    fold/query (releasing the PRIOR invocation's blocks) so a
-    long-lived engine stays flat — releasing early is always safe
-    (Spark recomputes), just slower."""
-    while _STATE_DEFERRED:
-        df = _STATE_DEFERRED.pop()
-        try:
-            df.unpersist(blocking)
-        except Exception:
-            pass
-
-
-def persist_state(state: DataFrame) -> DataFrame:
-    """Persist a METADATA-SIZED maintained-state frame on the state
-    ledger and return it.
-
-    Why (r17, guide §2/§5): a chained per-tick fold
-    (``state = f(state, tick)``) that references ``state`` more than
-    once per tick (an index is probed AND unioned; component edges are
-    joined twice) nests the dual reference — at action time tick t's
-    plan re-derives tick t−1's whole chain per reference, 2^ticks
-    recomputes of the earliest ticks (measured:
-    ``xminhash_index_maintained`` 14.2 s at sf0.1 for a 3-tick fold
-    over 300 docs). Persisting each tick's accumulated state makes the
-    fold linear: even lazily, the first action computes each persisted
-    level once and every later reference reads the cache. Never call
-    this on a corpus-sized frame."""
-    s = state.persist()
-    _STATE_DEFERRED.append(s)
-    return s
+#: METADATA-SIZED maintained-state frames (accumulated index bands/sigs,
+#: component edges, …), released at the start of a new top-level
+#: fold/query — a separate ledger because the per-call release above
+#: must NOT drop state a later tick still folds over.
+#:
+#: Why persist them (r17): a chained per-tick fold
+#: (``state = f(state, tick)``) that references ``state`` more than once
+#: per tick (an index is probed AND unioned; component edges are joined
+#: twice) nests the dual reference — at action time tick t's plan
+#: re-derives tick t−1's whole chain per reference, 2^ticks recomputes
+#: of the earliest ticks (measured: ``xminhash_index_maintained``
+#: 14.2 s at sf0.1 for a 3-tick fold over 300 docs). Persisting each
+#: tick's accumulated state makes the fold linear. Never persist a
+#: corpus-sized frame here.
+STATE_LEDGER = DeferredLedger()
 
 
 def normalize_text(col: Column | str) -> Column:
@@ -439,7 +389,7 @@ def minhash_lsh_candidates(
     first so identical texts don't form such buckets.
     """
     if _cleanup is None:  # standalone call: this IS the entry point
-        _release_deferred()
+        DEDUP_LEDGER.release()
     rows_per_band = num_hashes // num_bands
     sigs = minhash_signatures(
         df,
@@ -485,7 +435,7 @@ def minhash_lsh_candidates(
     else:
         # the returned pair set still reads banded's cache lazily;
         # park it for release at the next call
-        _DEFERRED.append(banded)
+        DEDUP_LEDGER.park(banded)
     if max_bucket_size and bucket_cap_mode == "collect":
         banded = _cap_buckets(banded, "__band", max_bucket_size, "collect")
     else:
@@ -587,7 +537,7 @@ def verified_jaccard(
         sh_col.alias("__sh"),
     ).persist()
     sh.count()  # populate before the two join legs race through it
-    _DEFERRED.append(sh)
+    DEDUP_LEDGER.park(sh)
     return (
         pairs.join(sh.withColumnRenamed("__id", "id_a").withColumnRenamed("__sh", "sh_a"), "id_a")
         .join(sh.withColumnRenamed("__id", "id_b").withColumnRenamed("__sh", "sh_b"), "id_b")
@@ -640,7 +590,7 @@ def minhash_lsh_dedup(
     which the returned anti-join still reads — is released at the next
     dedup call (see module docstring).
     """
-    _release_deferred()
+    DEDUP_LEDGER.release()
     # candidates are tiny but their lineage is the whole signature+LSH
     # pipeline; verification references them 4x (two id legs, two joins)
     # so materialize to compute that pipeline once
@@ -690,7 +640,7 @@ def minhash_lsh_dedup(
     # banded set and pairs stay cached until the NEXT dedup call (the
     # module's standard one-tick deferred-release discipline) instead
     # of being dropped eagerly.
-    _DEFERRED.extend((*handles, cand))
+    DEDUP_LEDGER.park(*handles, cand)
     return df.join(dups, id_col, "left_anti")
 
 
@@ -725,7 +675,7 @@ def simhash_near_dups(
     token hash (fingerprints have 31 bits), enabling a full cross-engine
     oracle of the pipeline.
     """
-    _release_deferred()
+    DEDUP_LEDGER.release()
     sig_bits = 31 if base_hash == "poly" else 64
     hash_expr = (
         poly_hash31(F.col("__t")) if base_hash == "poly" else F.xxhash64("__t")
@@ -809,7 +759,7 @@ def _blocked_hamming_pairs(
     call like every LSH intermediate."""
     fp = fp.persist()
     fp.count()  # populate before the two join legs race through it
-    _DEFERRED.append(fp)
+    DEDUP_LEDGER.park(fp)
     a, b = fp.alias("a"), fp.alias("b")
     pairs = (
         a.join(
@@ -854,7 +804,7 @@ def phash_near_dups(
     ~uniform under a well-mixed hash, and the only corpus-sized
     exchange is the block-key shuffle of (id, fp, block) triples.
     """
-    _release_deferred()
+    DEDUP_LEDGER.release()
     hi = F.conv(F.substring(phash_col, 1, 8), 16, 10).cast("long")
     lo = F.conv(F.substring(phash_col, 9, 8), 16, 10).cast("long")
     fps = media.select(
@@ -1127,7 +1077,7 @@ def embedding_near_dups(
     with the ``"jvm"`` folds at arrow speed; the hash-verified oracle
     keys pin this backend (equivalence pytest-pinned on the corpus).
     """
-    _release_deferred()
+    DEDUP_LEDGER.release()
     if dim is None:
         head = df.select(F.size(vec_col)).head()
         dim = head[0] if head else None
@@ -1182,7 +1132,7 @@ def embedding_near_dups(
         "__id",
         F.explode(band_keys_col).alias("__band"),
     ).persist()
-    _DEFERRED.append(banded)
+    DEDUP_LEDGER.park(banded)
     if max_bucket_size:
         # the collect-mode cap's count job populates the cache — no
         # separate count() pass
@@ -1357,7 +1307,7 @@ def semantic_dedup(
     summation order may flip near-tie assignments or pairs within float
     rounding of the threshold, so the oracle demo pins ``"jvm"``.
     """
-    _release_deferred()
+    DEDUP_LEDGER.release()
     base = df.select(
         F.col(id_col).alias("__id"),
         F.col(vec_col).cast("array<double>").alias("__v"),
@@ -1481,7 +1431,7 @@ def semantic_dedup(
         .select(F.col("b.__id").alias("__dup"))
         .distinct()
     )
-    _DEFERRED.append(assigned)
+    DEDUP_LEDGER.park(assigned)
     return df.join(dups, df[id_col] == F.col("__dup"), "left_anti")
 
 
@@ -1695,9 +1645,9 @@ def dedup_increment_against_index(
     processing many increments holds one tick's worth of blocks, flat
     over time, no ``clearCache()`` (the leak formulation this replaces
     measured 18s → 40s+ by the second uncleared call at 45k indexed
-    docs). :func:`release_intermediates` drops the last tick's residue.
+    docs). ``DEDUP_LEDGER.release()`` drops the last tick's residue.
     """
-    _release_deferred()
+    DEDUP_LEDGER.release()
     rows_per_band = num_hashes // num_bands
     sigs = (
         precomputed_sigs
@@ -1828,7 +1778,7 @@ def dedup_increment_against_index(
     dead = vs_index.unionByName(within).distinct().persist()
     if eager_dead:
         dead.count()  # populate before survivors + new_index_rows fan out
-    _DEFERRED.extend((banded, dead))
+    DEDUP_LEDGER.park(banded, dead)
     survivors = new_docs.join(
         dead.withColumnRenamed("new_id", id_col), id_col, "left_anti"
     )
@@ -2302,7 +2252,7 @@ def minhash_lsh_report(
     """
     from kamu_engine_datafusion_spark.functions.columns import half_up
 
-    _release_deferred()
+    DEDUP_LEDGER.release()
     handles: list[DataFrame] = []
     cand = minhash_lsh_candidates(
         df,
@@ -2348,7 +2298,7 @@ def minhash_lsh_report(
     rep.count()
     for h in (*handles, cand):
         h.unpersist(blocking=True)
-    _DEFERRED.append(rep)
+    DEDUP_LEDGER.park(rep)
     return rep
 
 
@@ -2405,12 +2355,12 @@ def phash_increment_against_index(
     matching partitions are read; the increment's internal dedup
     reuses the same chunk rows.
     """
-    _release_deferred()
+    DEDUP_LEDGER.release()
     inc = phash_index(
         new_media, id_col, phash_col, max_hamming, num_blocks
     ).persist()
     inc.count()  # populate before the join legs fan out
-    _DEFERRED.append(inc)
+    DEDUP_LEDGER.park(inc)
 
     vs_index_pairs = (
         inc.alias("n")
@@ -2447,7 +2397,7 @@ def phash_increment_against_index(
         .persist()
     )
     dead.count()  # populate before survivors + new_index_rows fan out
-    _DEFERRED.append(dead)
+    DEDUP_LEDGER.park(dead)
     survivors = new_media.join(
         dead.withColumnRenamed("media_id", id_col), id_col, "left_anti"
     )

@@ -698,9 +698,9 @@ def debounce_increment(
     ticklast = tickends.select(*group_cols, "last_us")
     if last is None:
         return kept, ticklast
-    new_last = ticklast.unionByName(
-        last.select(*group_cols, "last_us").join(
-            ticklast.select(*group_cols), group_cols, "left_anti"
-        )
+    # fold the stored time in: a group whose tick rows all have NULL
+    # timestamps has a NULL tick last and must keep its stored one
+    new_last = ticklast.join(st, group_cols, "full").select(
+        *group_cols, F.greatest("last_us", "__st_us").alias("last_us")
     )
     return kept, new_last

@@ -13,6 +13,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from kamu_engine_datafusion_spark.operators.deferred import DeferredLedger
+
 
 def salted_count(
     df: DataFrame, key_cols: list[str], salt_buckets: int = 16
@@ -86,20 +88,9 @@ def bucketed_join(
     return spark.table(left_table).join(spark.table(right_table), key)
 
 
-# Deferred-release ledger (the dedup/retrieval convention): the profile
-# returned by key_skew_profile lazily reads its persisted count table,
-# so it is unpersisted at the NEXT call / release_intermediates().
-_DEFERRED: list[DataFrame] = []
-
-
-def release_intermediates(blocking: bool = False) -> None:
-    """Unpersist the previous key_skew_profile call's count table."""
-    while _DEFERRED:
-        df = _DEFERRED.pop()
-        try:
-            df.unpersist(blocking=blocking)
-        except Exception:
-            pass
+#: The profile returned by key_skew_profile lazily reads its persisted
+#: count table, so the table is released at the NEXT call.
+SKEW_LEDGER = DeferredLedger()
 
 
 def key_skew_profile(
@@ -121,13 +112,12 @@ def key_skew_profile(
     both read it. Never a full sort.
     """
     key = F.concat_ws(chr(31), *[F.col(c).cast("string") for c in key_cols])
-    release_intermediates()
-    counts = (
+    SKEW_LEDGER.release()
+    counts = SKEW_LEDGER.persist(
         df.select(key.alias("__key"))
         .groupBy("__key")
         .agg(F.count(F.lit(1)).alias("__n"))
-    ).persist()
-    _DEFERRED.append(counts)
+    )
     total = counts.agg(F.sum("__n").alias("__total"))
     top = counts.orderBy(F.col("__n").desc(), "__key").limit(top_n)
     from pyspark.sql import Window

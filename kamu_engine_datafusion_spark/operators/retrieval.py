@@ -30,31 +30,19 @@ from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 from kamu_engine_datafusion_spark.functions.columns import tokens
+from kamu_engine_datafusion_spark.operators.deferred import DeferredLedger
 
-#: Deferred-release ledger (same discipline as ``operators.dedup``): the
-#: term-frequency table feeds two consumers (the score join and the
+#: The term-frequency table feeds two consumers (the score join and the
 #: document-frequency aggregate) and Catalyst cannot share a subplan, so
 #: without materialization the full corpus tokenize+explode runs TWICE.
 #: Persisted handles are released at the NEXT retrieval call; an
 #: unpersisted intermediate recomputes from lineage — slower, never wrong.
-_DEFERRED: list[DataFrame] = []
+RETRIEVAL_LEDGER = DeferredLedger()
 
 
-def release_intermediates(blocking: bool = False) -> None:
-    """Unpersist the previous retrieval call's materialized term table."""
-    while _DEFERRED:
-        df = _DEFERRED.pop()
-        try:
-            df.unpersist(blocking=blocking)
-        except Exception:
-            pass
-
-
-def _persist_deferred(df: DataFrame) -> DataFrame:
-    release_intermediates()
-    df = df.persist()
-    _DEFERRED.append(df)
-    return df
+def _persist_term_table(df: DataFrame) -> DataFrame:
+    RETRIEVAL_LEDGER.release()
+    return RETRIEVAL_LEDGER.persist(df)
 
 
 def bm25_scores(
@@ -87,7 +75,7 @@ def bm25_scores(
         F.size(tokens(text_col)).alias("__len"),
         F.explode(tokens(text_col)).alias("__t"),
     ).filter(F.col("__t").isin(terms))
-    tf = _persist_deferred(
+    tf = _persist_term_table(
         tok.groupBy("__id", "__t").agg(
             F.count(F.lit(1)).alias("__tf"), F.first("__len").alias("__len")
         )
@@ -150,7 +138,7 @@ def tfidf_topk_terms(
     )
     if min_tf > 1:
         tf = tf.filter(F.col("tf") >= min_tf)
-    tf = _persist_deferred(tf)
+    tf = _persist_term_table(tf)
     dfreq = tf.groupBy("term").agg(F.count(F.lit(1)).alias("__df"))
     n_docs = df.agg(F.count(F.lit(1)).alias("__N"))
     idf = F.log((F.col("__N") + F.lit(1.0)) / (F.col("__df") + F.lit(1.0))) + F.lit(
@@ -215,10 +203,14 @@ def hybrid_rrf(
     # maintained-store fold). r18 (guide §2.6/§5): persist both lists
     # so the guard count doubles as the cache-populating job, and run
     # the two counts CONCURRENTLY — the legs are independent until the
-    # fusion join. Released at the next retrieval call (module ledger).
+    # fusion join. Released at the next retrieval call. What earlier
+    # calls parked is released only AFTER the counts have cached both
+    # lists: ``sparse`` is normally a lazy read of the term table the
+    # same query's bm25_scores just parked, and releasing that first
+    # would recompute the corpus tokenize. A re-run of the same query
+    # shares the earlier call's cache entries, which therefore stay.
     sparse = sparse.persist()
     dense = dense.persist()
-    _DEFERRED.extend((sparse, dense))
 
     def _guard_count(lst: DataFrame) -> int:
         return lst.limit(max_list_rows + 1).count()
@@ -227,12 +219,16 @@ def hybrid_rrf(
 
     from pyspark import inheritable_thread_target
 
-    with ThreadPoolExecutor(max_workers=2) as pool:
-        counts = list(
-            pool.map(
-                inheritable_thread_target(_guard_count), (sparse, dense)
+    try:
+        with ThreadPoolExecutor(max_workers=2) as pool:
+            counts = list(
+                pool.map(
+                    inheritable_thread_target(_guard_count), (sparse, dense)
+                )
             )
-        )
+    finally:
+        RETRIEVAL_LEDGER.release(keep=(sparse, dense))
+        RETRIEVAL_LEDGER.park(sparse, dense)
     for (name, _), n in zip((("sparse", sparse), ("dense", dense)), counts):
         if n > max_list_rows:
             raise ValueError(

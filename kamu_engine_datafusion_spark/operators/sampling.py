@@ -729,26 +729,24 @@ def assign_group_ranks_distributed(
 
     The input is persisted before the stats pass (the two passes must
     observe one physical partitioning — range boundaries are sampled);
-    the persist rides the shared offset/rank deferred ledger, released
-    at the next distributed offset/rank call (see
-    ``system_columns.release_offset_intermediates``).
+    the persist rides the shared offset/rank ledger
+    ``system_columns.OFFSET_LEDGER``, released at the next distributed
+    offset/rank call.
     """
     from kamu_engine_datafusion_spark.operators.system_columns import (
-        _DEFERRED,
         _MID_INDEX_MASK,
         _MID_PARTITION_SHIFT,
-        release_offset_intermediates,
+        OFFSET_LEDGER,
     )
 
     if _release_prior:
-        release_offset_intermediates()
+        OFFSET_LEDGER.release()
     ordered = df.repartitionByRange(
         *group_cols, *order_cols
     ).sortWithinPartitions(*group_cols, *order_cols)
-    with_mid = ordered.withColumn(
-        "__gr_mid", F.monotonically_increasing_id()
-    ).persist()
-    _DEFERRED.append(with_mid)
+    with_mid = OFFSET_LEDGER.persist(
+        ordered.withColumn("__gr_mid", F.monotonically_increasing_id())
+    )
     pid = F.shiftright(F.col("__gr_mid"), _MID_PARTITION_SHIFT)
     idx = F.col("__gr_mid").bitwiseAND(F.lit(_MID_INDEX_MASK))
     stats = (

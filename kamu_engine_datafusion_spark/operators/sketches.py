@@ -38,52 +38,19 @@ from kamu_engine_datafusion_spark.functions.columns import (
     half_up,
     minhash_coeffs,
 )
+from kamu_engine_datafusion_spark.operators.deferred import DeferredLedger
 
 _M31 = 2_147_483_647
 
-#: Persisted metadata-sized merge/collapse intermediates (see
-#: :func:`release_sketch_intermediates`). Same deferred-release ledger
-#: discipline as ``operators/system_columns._DEFERRED``.
-_DEFERRED: list[DataFrame] = []
-
-
-def release_sketch_intermediates(blocking: bool = False) -> None:
-    """Unpersist every sketch merge/collapse intermediate persisted by
-    :func:`quantile_sketch_merge` / :func:`quantile_sketch_collapse`.
-
-    Why those persist (r17): ``_qsk_retain`` references its input
-    TWICE (per-level counts + the threshold-filter probe). On a fresh
-    build that is two corpus scans — the correct 100 TB shape (never
-    persist a corpus-sized projection to save one pruned scan). On a
-    MERGE the input is the metadata-sized union of part sketches, and
-    a chained fold (``state = merge([state, part])`` per tick) nests
-    the dual reference: tick t's plan re-derives tick t−1's whole
-    chain twice → 2^ticks recomputes of the earliest parts (measured:
-    ``xsketch_quantile_merge`` 13.9 s at sf0.1 for a 3-tick fold over
-    600k rows). Persisting the ≤ |groups|·k·parts-row union makes the
-    fold linear again. Call this at the start of a new top-level
-    query/fold (releasing the PRIOR invocation's blocks) so a
-    long-lived engine stays flat — releasing early is always safe
-    (Spark recomputes), just slower."""
-    while _DEFERRED:
-        df = _DEFERRED.pop()
-        try:
-            df.unpersist(blocking)
-        except Exception:
-            pass
-
-
-def persist_sketch(sketch: DataFrame) -> DataFrame:
-    """Persist a METADATA-SIZED sketch frame (≤ ~k rows per group) on
-    the deferred ledger and return it. For query compositions that
-    reference the same part sketch from several downstream reads
-    (e.g. a per-tick sketch feeding both a KS block and a merge
-    chain): each reference otherwise re-derives the part's corpus
-    scans. Never call this on a corpus-sized frame — the build's
-    two pruned scans are cheaper than spilling the corpus."""
-    s = sketch.persist()
-    _DEFERRED.append(s)
-    return s
+#: METADATA-SIZED sketch frames (≤ ~k rows per group) that a query
+#: composition references from several downstream reads (e.g. a
+#: per-tick sketch feeding both a KS block and a merge chain): each
+#: reference otherwise re-derives the part's corpus scans. Never persist
+#: a corpus-sized frame here — the build's two pruned scans are cheaper
+#: than spilling the corpus. Released at the start of a new top-level
+#: query/fold (the PRIOR invocation's blocks) so a long-lived engine
+#: stays flat — releasing early is always safe (Spark recomputes).
+SKETCH_LEDGER = DeferredLedger()
 
 
 def _hash31(key, hash_fn: str):
@@ -578,7 +545,7 @@ def quantile_sketch_merge(
     # (persist-only levels re-analyzed the whole nested tree per job).
     # LAZY (r17): an eager checkpoint scheduled one extra
     # driver-synchronized job per merge level and double-materialized
-    # persist_sketch'd parts; the first consumer action materializes
+    # SKETCH_LEDGER parts; the first consumer action materializes
     # the level instead (A/B over the five KS/merge/collapse keys:
     # every one faster, e.g. xsketch_quantile_merge 7.6 → 4.0 s,
     # xks_drift_log 7.2 → 5.2 s at sf0.1; values identical).

@@ -29,6 +29,7 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
+from kamu_engine_datafusion_spark.operators.deferred import DeferredLedger
 from kamu_engine_datafusion_spark.plans.types import (
     OP_CORRECT_FROM,
     OP_RETRACT,
@@ -149,20 +150,9 @@ def history_intervals(
     )
 
 
-# Deferred-release ledger (the retrieval/dedup convention): the
-# returned gap-filled frame lazily reads the persisted rollup, so it is
-# unpersisted at the NEXT gapfill call / release_intermediates().
-_DEFERRED: list[DataFrame] = []
-
-
-def release_intermediates(blocking: bool = False) -> None:
-    """Unpersist the previous gapfill call's materialized rollup."""
-    while _DEFERRED:
-        df = _DEFERRED.pop()
-        try:
-            df.unpersist(blocking=blocking)
-        except Exception:
-            pass
+#: The gap-filled frame returned by rollup_gapfill lazily reads the
+#: persisted rollup, so the rollup is released at the NEXT gapfill call.
+GAPFILL_LEDGER = DeferredLedger()
 
 
 def rollup_gapfill(
@@ -195,11 +185,10 @@ def rollup_gapfill(
     # the rollup feeds the bounds agg, the grid's group list, the
     # sentinel, and the densify join — persist + populate so the
     # aggregation shuffle runs once (the rollup is grid-sized: tiny)
-    release_intermediates()
-    rolled = rollup_time_buckets(
-        events, time_col, bucket, group_cols, aggs
-    ).persist()
-    _DEFERRED.append(rolled)
+    GAPFILL_LEDGER.release()
+    rolled = GAPFILL_LEDGER.persist(
+        rollup_time_buckets(events, time_col, bucket, group_cols, aggs)
+    )
     bounds = rolled.agg(
         F.min("bucket_start").alias("lo"), F.max("bucket_start").alias("hi")
     ).collect()[0]

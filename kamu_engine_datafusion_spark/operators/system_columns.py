@@ -38,6 +38,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from kamu_engine_datafusion_spark.operators.deferred import DeferredLedger
 from kamu_engine_datafusion_spark.plans.types import OP_APPEND, DatasetVocabulary
 
 #: monotonically_increasing_id packs the partition id in the upper 31
@@ -54,44 +55,14 @@ _BASE_MAP_LITERAL_MAX = 64
 #: Unix epoch for exact integer millisecond arithmetic.
 _EPOCH = datetime(1970, 1, 1, tzinfo=timezone.utc)
 
-#: Persisted intermediates from prior distributed offset/rank calls,
-#: released at the NEXT such call (the dedup-family cache discipline:
-#: a long-lived engine must not accumulate registry-pinned blocks).
-#: The returned DataFrames still read these blocks, so they are freed
-#: only once the caller has moved on to the next pipeline — and by
-#: then each block was fully materialized (memory+disk) by the
-#: builder's own eager stats pass, so nothing recomputes.
-#:
-#: HAZARD (r8 advice, documented contract): release is what makes the
-#: returned DataFrames single-use. Re-executing a distributed-offset
-#: result AFTER its persist was released recomputes the lineage, and
-#: ``monotonically_increasing_id`` is only stable for a fixed physical
-#: partitioning — a re-planned scan (AQE, re-sampled range boundaries,
-#: a lost executor's recomputed partition) can renumber rows, yielding
-#: offsets that are dense and plausible but DIFFERENT — silently
-#: wrong. The ODF engine's own call pattern is safe by construction
-#: (every transform materializes its result to parquet before the next
-#: request). Any other caller must fully materialize (sink, collect,
-#: or checkpoint) each result before triggering the next distributed
-#: offset/rank call or calling the release function itself.
-_DEFERRED: list[DataFrame] = []
-
-
-def release_offset_intermediates(blocking: bool = False) -> None:
-    """Unpersist intermediates deferred by earlier distributed
-    offset/rank calls. Called automatically at the next such call;
-    call explicitly at the end of a session's last pipeline.
-
-    After this returns, DataFrames produced by EARLIER distributed
-    offset/rank calls must be treated as spent: re-executing one
-    recomputes its lineage and may silently renumber offsets (see the
-    ``_DEFERRED`` contract above). Materialize results first."""
-    while _DEFERRED:
-        df = _DEFERRED.pop()
-        try:
-            df.unpersist(blocking=blocking)
-        except Exception:
-            pass  # session already stopped: nothing to free
+#: Persists of distributed offset/rank calls (this module and
+#: ``sampling.grouped_rank``), released at the NEXT such call. The
+#: returned DataFrames still read these blocks, so they are freed only
+#: once the caller has moved on to the next pipeline — and by then each
+#: block was fully materialized (memory+disk) by the builder's own eager
+#: stats pass, so nothing recomputes. Releasing makes earlier results
+#: single-use: see the HAZARD on :class:`DeferredLedger`.
+OFFSET_LEDGER = DeferredLedger()
 
 
 def assign_offsets_serial(
@@ -134,10 +105,10 @@ def assign_offsets_distributed(
     The input is persisted (memory-and-disk) before the count pass:
     upstream stages like ``repartitionByRange`` re-sample boundaries on
     recompute, so the two passes MUST observe the same physical
-    partitioning. The persist rides the module's deferred ledger and is
+    partitioning. The persist rides :data:`OFFSET_LEDGER` and is
     released at the NEXT distributed offset/rank call (or via
-    :func:`release_offset_intermediates`) — a long-lived engine stays
-    flat instead of accumulating pinned blocks per call.
+    ``OFFSET_LEDGER.release()``) — a long-lived engine stays flat
+    instead of accumulating pinned blocks per call.
     ``_release_prior=False`` is for composite builders whose plan still
     references a prior call's persist (e.g. the distributed interleave:
     rank persist feeds the offset pass).
@@ -147,10 +118,9 @@ def assign_offsets_distributed(
     ``sortWithinPartitions`` upstream first.
     """
     if _release_prior:
-        release_offset_intermediates()
+        OFFSET_LEDGER.release()
     mid = F.monotonically_increasing_id()
-    with_mid = df.withColumn("__odf_mid", mid).persist()
-    _DEFERRED.append(with_mid)
+    with_mid = OFFSET_LEDGER.persist(df.withColumn("__odf_mid", mid))
     # Pass 1: per-partition counts (partition id lives in the mid's high bits,
     # so the count job and the final pass see identical partition ids even if
     # a recompute re-plans the scan).

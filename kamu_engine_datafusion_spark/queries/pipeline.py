@@ -2696,11 +2696,10 @@ def q_xpipeline_embed(spark: SparkSession, sf_dir: str) -> DataFrame:
     from kamu_engine_datafusion_spark.operators import dedup as DD
 
     from kamu_engine_datafusion_spark.operators.dedup import (
-        persist_state,
-        release_state_intermediates,
+        STATE_LEDGER,
     )
 
-    release_state_intermediates()
+    STATE_LEDGER.release()
     t = load(spark, sf_dir, "embeddings")
     emb = t["embeddings"]
     sub = emb.filter(F.col("vec_id") < 2000)
@@ -2713,7 +2712,7 @@ def q_xpipeline_embed(spark: SparkSession, sf_dir: str) -> DataFrame:
     # the tiny dup-id set feeds THREE consumers (quantization params,
     # the quantized search, the MMR pool prune) — persist it so the
     # whole near-dup pipeline computes once, not per consumer (r17)
-    dups = persist_state(
+    dups = STATE_LEDGER.persist(
         pairs.select(F.col("id_b").alias("vec_id")).distinct()
     )
     surv = sub.join(dups, "vec_id", "left_anti")
@@ -2845,15 +2844,14 @@ def q_xsketch_quantile_merge(spark: SparkSession, sf_dir: str) -> DataFrame:
     (previously only a pytest/Hypothesis property). Returns the
     retained state rows themselves: (grp, rid, val, lvl, thr)."""
     from kamu_engine_datafusion_spark.operators.sketches import (
+        SKETCH_LEDGER,
         quantile_sketch,
         quantile_sketch_merge,
-        release_sketch_intermediates,
     )
 
-    # Free the PRIOR invocation's merge intermediates (deferred
-    # ledger, see release_sketch_intermediates) — each bench rep /
+    # Free the PRIOR invocation's sketch blocks — each bench rep /
     # oracle run rebuilds the fold from the parquet inputs.
-    release_sketch_intermediates()
+    SKETCH_LEDGER.release()
     t = load(spark, sf_dir, "lineitem")
     li = t["lineitem"].select(
         F.col("l_returnflag").alias("grp"),
@@ -2867,10 +2865,10 @@ def q_xsketch_quantile_merge(spark: SparkSession, sf_dir: str) -> DataFrame:
     # to the sketch built over that tick's rows alone. The merge fold
     # below is unchanged — it still exercises the exact merge law.
     from kamu_engine_datafusion_spark.operators.sketches import (
-        persist_sketch,
+        SKETCH_LEDGER,
     )
 
-    fine = persist_sketch(
+    fine = SKETCH_LEDGER.persist(
         quantile_sketch(li, ["grp", "__tick"], "rid", "val", k=256)
     )
     state = None
@@ -5227,12 +5225,12 @@ def q_xsketch_window_collapse(
     construction. At 100 TB a drift reference follows the window at
     sketch cost; history is never re-scanned."""
     from kamu_engine_datafusion_spark.operators.sketches import (
+        SKETCH_LEDGER,
         quantile_sketch,
         quantile_sketch_collapse,
-        release_sketch_intermediates,
     )
 
-    release_sketch_intermediates()
+    SKETCH_LEDGER.release()
     t = load(spark, sf_dir, "lineitem")
     li = t["lineitem"].select(
         F.col("l_returnflag").alias("grp"),
@@ -5265,13 +5263,13 @@ def q_xks_drift_sketch(spark: SparkSession, sf_dir: str) -> DataFrame:
     reads two metadata-sized states; neither population is
     re-scanned."""
     from kamu_engine_datafusion_spark.operators.sketches import (
+        SKETCH_LEDGER,
         ks_from_sketches,
         quantile_sketch,
         quantile_sketch_merge,
-        release_sketch_intermediates,
     )
 
-    release_sketch_intermediates()
+    SKETCH_LEDGER.release()
     t = load(spark, sf_dir, "lineitem")
     li = t["lineitem"].select(
         F.col("l_returnflag").alias("grp"),
@@ -5286,10 +5284,10 @@ def q_xks_drift_sketch(spark: SparkSession, sf_dir: str) -> DataFrame:
     # (grp, tick)-grouped sketch at __tick == i is bit-identical to
     # building each tick's sketch separately.
     from kamu_engine_datafusion_spark.operators.sketches import (
-        persist_sketch,
+        SKETCH_LEDGER,
     )
 
-    fine = persist_sketch(
+    fine = SKETCH_LEDGER.persist(
         quantile_sketch(li, ["grp", "__tick"], "rid", "val", k=256)
     )
     parts = [
@@ -5310,14 +5308,13 @@ def q_xks_drift_log(spark: SparkSession, sf_dir: str) -> DataFrame:
     Oracle: two tick-filtered sketch-chain + KS blocks unioned with
     their tick labels."""
     from kamu_engine_datafusion_spark.operators.sketches import (
+        SKETCH_LEDGER,
         ks_from_sketches,
-        persist_sketch,
         quantile_sketch,
         quantile_sketch_merge,
-        release_sketch_intermediates,
     )
 
-    release_sketch_intermediates()
+    SKETCH_LEDGER.release()
     t = load(spark, sf_dir, "lineitem")
     li = t["lineitem"].select(
         F.col("l_returnflag").alias("grp"),
@@ -5334,7 +5331,7 @@ def q_xks_drift_log(spark: SparkSession, sf_dir: str) -> DataFrame:
     # retain threshold sees exactly the same group rows). The old
     # per-tick builds paid three scans of lineitem; persist the fine
     # sketch once and every part is a metadata-sized slice.
-    fine = persist_sketch(
+    fine = SKETCH_LEDGER.persist(
         quantile_sketch(li, ["grp", "__tick"], "rid", "val", k=256)
     )
     parts = [
@@ -6064,14 +6061,13 @@ def q_xks_window_drift(spark: SparkSession, sf_dir: str) -> DataFrame:
     distribution?"""
     from kamu_engine_datafusion_spark.functions.columns import tokens
     from kamu_engine_datafusion_spark.operators.sketches import (
+        SKETCH_LEDGER,
         ks_from_sketches,
-        persist_sketch,
         quantile_sketch,
         quantile_sketch_collapse,
-        release_sketch_intermediates,
     )
 
-    release_sketch_intermediates()
+    SKETCH_LEDGER.release()
     t = load(spark, sf_dir, "documents")
     d = t["documents"].select(
         F.col("source").alias("grp"),
@@ -6081,7 +6077,7 @@ def q_xks_window_drift(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     # The fine per-bucket sketch feeds BOTH window collapses; persist
     # the metadata-sized frame so the corpus tokenize+sketch runs once.
-    fine = persist_sketch(
+    fine = SKETCH_LEDGER.persist(
         quantile_sketch(d, ["grp", "bucket"], "rid", "val", k=256)
     )
     before = quantile_sketch_collapse(

@@ -315,8 +315,8 @@ def streaming_dedup_against_index(
     """
     from kamu_engine_datafusion_spark.operators.dedup import (
         dedup_increment_against_index,
+        DEDUP_LEDGER,
         minhash_index,
-        release_intermediates,
     )
 
     def _tick(batch_df: DataFrame, batch_id: int) -> None:
@@ -346,7 +346,7 @@ def streaming_dedup_against_index(
             new_rows = minhash_index(survivors, text_col=text_col, id_col=id_col)
         survivors.write.mode("append").parquet(out_dir)
         new_rows.write.mode("append").parquet(index_dir)
-        release_intermediates()
+        DEDUP_LEDGER.release()
 
     return (
         stream.writeStream.foreachBatch(_tick)

@@ -118,6 +118,76 @@ def semdedup_increment_join(
     )
 
 
+def semdedup_join(
+    df: DataFrame,
+    id_col: str,
+    vec_col: str,
+    dim: int,
+    k: int = 8,
+    iters: int = 3,
+    scale: int = 10_000,
+    sim_scale: int = 1_000,
+    tau2_num: int = 9_025,
+    tau2_den: int = 10_000,
+) -> DataFrame:
+    """Batch ``semdedup`` as a cluster self-join plus a per-pair exact
+    dot: ``n_dups`` counts the lower-id rows of the same cluster that
+    are near-dups of the row; ``is_kept`` is 1 when there are none."""
+    from kamu_engine_datafusion_spark.operators.clustering import (
+        kmeans_fixed_point,
+    )
+
+    assign = kmeans_fixed_point(df, id_col, vec_col, dim, k, iters, scale)
+    q2 = df.select(
+        F.col(id_col),
+        F.transform(
+            F.col(vec_col),
+            lambda x: F.floor(
+                x.cast("double") * F.lit(float(sim_scale)) + F.lit(0.5)
+            ).cast("long"),
+        ).alias("__q2"),
+    )
+    a = q2.join(assign.select(id_col, "cluster"), id_col).withColumn(
+        "__n2", int_dot_fold(F.col("__q2"), F.col("__q2"))
+    )
+    left = a.select(
+        "cluster",
+        F.col(id_col).alias("__lid"),
+        F.col("__q2").alias("__lq"),
+        F.col("__n2").alias("__ln"),
+    )
+    right = a.select(
+        "cluster",
+        F.col(id_col).alias("__rid"),
+        F.col("__q2").alias("__rq"),
+        F.col("__n2").alias("__rn"),
+    )
+    dot = F.col("__dot")
+    dups = (
+        left.join(right, "cluster")
+        .filter(F.col("__lid") < F.col("__rid"))
+        .withColumn("__dot", int_dot_fold(F.col("__lq"), F.col("__rq")))
+        .filter(
+            (dot > 0)
+            & (
+                dot * dot * F.lit(tau2_den)
+                >= F.lit(tau2_num) * F.col("__ln") * F.col("__rn")
+            )
+        )
+        .groupBy("__rid")
+        .agg(F.count(F.lit(1)).cast("long").alias("n_dups"))
+    )
+    return a.join(dups, a[id_col] == dups["__rid"], "left").select(
+        F.col(id_col),
+        F.col("cluster"),
+        F.coalesce(F.col("n_dups"), F.lit(0).cast("long")).alias("n_dups"),
+        F.when(F.col("__rid").isNull(), F.lit(1))
+        .otherwise(F.lit(0))
+        .cast("long")
+        .alias("is_kept"),
+    )
+
+
 def top_principal_component_reference(
     vectors: list[list[float] | None],
     dim: int,

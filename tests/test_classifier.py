@@ -164,3 +164,17 @@ def test_classifier_empty_frame_raises(spark):
     df = spark.createDataFrame([], "doc_id long, text string, y int")
     with pytest.raises(ValueError, match="empty training frame"):
         train_quality_classifier(df, "doc_id", "text", "y", iters=1)
+
+
+def test_classifier_empty_frame_raises_without_iterations(spark):
+    """iters=0 runs no gradient pass, yet an empty frame still raises;
+    a non-empty frame returns the zero start weights alone."""
+    import pytest
+
+    empty = spark.createDataFrame([], "doc_id long, text string, y int")
+    with pytest.raises(ValueError, match="empty training frame"):
+        train_quality_classifier(empty, "doc_id", "text", "y", iters=0)
+    df = spark.createDataFrame([(1, "a b", 1)], "doc_id long, text string, y int")
+    assert train_quality_classifier(
+        df, "doc_id", "text", "y", buckets=4, iters=0
+    ) == [[0] * 5]

@@ -695,6 +695,9 @@ def test_semdedup_kill_backend_twins(spark):
     withnull[2] = None
     inc_rows.append((512, 1, withnull, n2(withnull)))  # NULL element
     inc_rows.append((513, 1, dup[:4], n2(dup[:4])))  # ragged length
+    # NULL ids: never lower than another id; a state kill matches none
+    inc_rows.append((None, 1, list(dup), n2(dup)))
+    inc_rows.append((None, 2, list(dup), n2(dup)))
     inc = mk(inc_rows)
 
     st_rows = []
@@ -706,7 +709,8 @@ def test_semdedup_kill_backend_twins(spark):
 
     def run(fn, st):
         return sorted(
-            r["vec_id"] for r in fn(inc, st, tau2_num=8_000).collect()
+            (r["vec_id"] for r in fn(inc, st, tau2_num=8_000).collect()),
+            key=lambda v: (v is None, v),
         )
 
     for st in (state, None):
@@ -718,6 +722,56 @@ def test_semdedup_kill_backend_twins(spark):
     surv = set(run(C.semdedup_increment_against_index, None))
     assert 500 in surv and 501 not in surv
     assert {510, 511, 512, 513} <= surv
+
+
+def test_semdedup_batch_kernel_equals_pair_join_twin(spark):
+    """Batch semdedup's grouped kill kernel must reproduce the cluster
+    self-join + per-pair-dot formulation's (cluster, n_dups, is_kept)
+    EXACTLY — string ids, NULL vector / NULL element / over-long rows
+    (NULL cluster: they never join), an exact duplicate pair, and a
+    pair landing exactly on the threshold (the >= in the near test)."""
+    import random
+
+    from kamu_engine_datafusion_spark.operators import clustering as C
+    from tests import jvm_twins as J
+
+    rng = random.Random(5)
+    rows = [
+        (f"v{i:03d}", [round(rng.uniform(-0.6, 0.6), 3) for _ in range(4)])
+        for i in range(40)
+    ]
+    rows += [
+        # cos² = 1/2 exactly at sim_scale 1000: 500² · 2 == 1 · 500² · 2·500²
+        ("t1", [0.5, 0.0, 0.0, 0.0]),
+        ("t2", [0.5, 0.5, 0.0, 0.0]),
+        ("d1", [0.2, -0.3, 0.4, 0.1]),
+        ("d0", [0.2, -0.3, 0.4, 0.1]),
+        ("xnull", None),
+        ("xelem", [0.2, None, 0.4, 0.1]),
+        ("xrag", [0.2, -0.3, 0.4, 0.1, 0.0, 0.3]),
+        ("xrag2", [0.2, -0.3, 0.4, 0.1, 0.0, 0.3]),
+    ]
+    df = spark.createDataFrame(rows, "vid string, emb array<double>")
+
+    def run(fn):
+        return {
+            r["vid"]: (r["cluster"], r["n_dups"], r["is_kept"])
+            for r in fn(
+                df, "vid", "emb", dim=4, k=2, iters=2, tau2_num=1, tau2_den=2
+            ).collect()
+        }
+
+    got, want = run(C.semdedup), run(J.semdedup_join)
+    assert got == want, sorted(
+        v for v in got.keys() | want.keys() if got.get(v) != want.get(v)
+    )
+    assert len(got) == len(rows)
+    # the edges resolved as the join does, and the counts are not trivial
+    assert got["d0"][1:] == (0, 1) and got["d1"][1:] == (1, 0)
+    assert got["t1"][0] == got["t2"][0] and got["t2"][1:] == (1, 0)
+    for v in ("xnull", "xelem", "xrag", "xrag2"):
+        assert got[v] == (None, 0, 1)
+    assert max(n for _, n, _ in got.values()) > 2
 
 
 def test_maintained_semdedup_index_folds_and_replays(spark, tmp_path):

@@ -239,8 +239,8 @@ def test_minhash_arrow_layout_identical_and_dedup_equal(spark):
 
     from kamu_engine_datafusion_spark.operators.dedup import (
         minhash_lsh_dedup,
+        DEDUP_LEDGER,
         minhash_signatures,
-        release_intermediates,
     )
 
     docs = spark.read.parquet(
@@ -281,14 +281,14 @@ def test_minhash_arrow_layout_identical_and_dedup_equal(spark):
         r["doc_id"]
         for r in minhash_lsh_dedup(d, threshold=0.7).collect()
     )
-    release_intermediates()
+    DEDUP_LEDGER.release()
     surv_arrow = sorted(
         r["doc_id"]
         for r in minhash_lsh_dedup(
             d, threshold=0.7, signature_layout="arrow"
         ).collect()
     )
-    release_intermediates()
+    DEDUP_LEDGER.release()
     assert surv_jvm == surv_arrow
 
     # r17: the poly base hash has its own vectorized kernel — the
@@ -434,8 +434,8 @@ def test_embedding_near_dups_arrow_exact_bit_identical(spark):
     left-to-right folds — same band keys, same pairs, same 6dp
     cosines — on the real embeddings corpus."""
     from kamu_engine_datafusion_spark.operators.dedup import (
+        DEDUP_LEDGER,
         embedding_near_dups,
-        release_intermediates,
     )
 
     emb = spark.read.parquet(
@@ -453,7 +453,7 @@ def test_embedding_near_dups_arrow_exact_bit_identical(spark):
                 ).collect(),
             )
         )
-        release_intermediates()
+        DEDUP_LEDGER.release()
         return out
 
     exact = run("arrow_exact")
@@ -466,7 +466,7 @@ def test_semantic_dedup_arrow_exact_bit_identical(spark):
     dots + pair dots) must keep the exact jvm survivor set — same
     assignments, same thresholded pairs."""
     from kamu_engine_datafusion_spark.operators.dedup import (
-        release_intermediates,
+        DEDUP_LEDGER,
         semantic_dedup,
     )
 
@@ -482,7 +482,7 @@ def test_semantic_dedup_arrow_exact_bit_identical(spark):
                 cosine_backend=backend,
             ).collect()
         )
-        release_intermediates()
+        DEDUP_LEDGER.release()
         return out
 
     exact = run("arrow_exact")

@@ -6,7 +6,7 @@ call persist()-ed intermediates and pushed clearCache() onto the caller.
 Discipline now: intermediates are eagerly local-checkpointed; the ones a
 call's outputs no longer need are unpersisted before return, the rest go
 on a deferred ledger released at the next call (steady state = one
-tick's blocks, flat) and `release_intermediates()` drops the final
+tick's blocks, flat) and `DEDUP_LEDGER.release()` drops the final
 residue."""
 
 from __future__ import annotations
@@ -14,10 +14,10 @@ from __future__ import annotations
 from pyspark.sql import functions as F
 
 from kamu_engine_datafusion_spark.operators.dedup import (
+    DEDUP_LEDGER,
     dedup_increment_against_index,
     minhash_index,
     minhash_lsh_dedup,
-    release_intermediates,
 )
 
 DOCS = [
@@ -33,7 +33,7 @@ def _n_cached(spark) -> int:
 
 
 def test_minhash_dedup_repeated_calls_stay_flat(spark):
-    release_intermediates(blocking=True)
+    DEDUP_LEDGER.release(blocking=True)
     df = spark.createDataFrame(DOCS, ["doc_id", "text"])
     baseline = _n_cached(spark)
     counts, cached = [], []
@@ -44,12 +44,12 @@ def test_minhash_dedup_repeated_calls_stay_flat(spark):
     assert len(set(counts)) == 1  # deterministic across calls
     # steady state: each call's residue is released by the next call
     assert cached[2] <= cached[0], cached
-    release_intermediates(blocking=True)
+    DEDUP_LEDGER.release(blocking=True)
     assert _n_cached(spark) <= baseline
 
 
 def test_incremental_dedup_repeated_ticks_stay_flat(spark, tmp_path):
-    release_intermediates(blocking=True)
+    DEDUP_LEDGER.release(blocking=True)
     corpus = spark.createDataFrame(DOCS, ["doc_id", "text"])
     idx_path = str(tmp_path / "idx")
     minhash_index(corpus).write.parquet(idx_path)
@@ -68,7 +68,7 @@ def test_incremental_dedup_repeated_ticks_stay_flat(spark, tmp_path):
         assert new_rows.count() >= 1
         cached.append(_n_cached(spark))
     assert cached[2] <= cached[0], cached
-    release_intermediates(blocking=True)
+    DEDUP_LEDGER.release(blocking=True)
     assert _n_cached(spark) <= baseline
 
 
@@ -104,11 +104,11 @@ def test_distributed_offsets_repeated_calls_stay_flat(spark):
         interleave_sources,
     )
     from kamu_engine_datafusion_spark.operators.system_columns import (
+        OFFSET_LEDGER,
         assign_offsets_distributed,
-        release_offset_intermediates,
     )
 
-    release_offset_intermediates(blocking=True)
+    OFFSET_LEDGER.release(blocking=True)
     baseline = _n_cached(spark)
     df = spark.range(0, 2000).withColumnRenamed("id", "k").withColumn(
         "s", (F.col("k") % 3).cast("string")
@@ -128,5 +128,5 @@ def test_distributed_offsets_repeated_calls_stay_flat(spark):
         assert n == 2000 * 2 // 3 + 1 or n > 0
         cached.append(_n_cached(spark))
     assert cached[-1] <= cached[-2], cached
-    release_offset_intermediates(blocking=True)
+    OFFSET_LEDGER.release(blocking=True)
     assert _n_cached(spark) <= baseline

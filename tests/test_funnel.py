@@ -133,6 +133,38 @@ def test_debounce_increment_null_ts_precondition_pinned(spark):
         debounce_increment(state, bad, gap_seconds=600.0)[0].collect()
 
 
+def test_debounce_increment_null_ts_tick_keeps_stored_last(spark):
+    """A tick whose only rows for a group have NULL timestamps must not
+    erase the group's stored last event time: a later real event before
+    it still violates the append order."""
+    from datetime import datetime, timezone
+
+    import pytest
+
+    from kamu_engine_datafusion_spark.operators.funnel import (
+        debounce_increment,
+    )
+
+    def t(sec):
+        return datetime(2024, 1, 1, 0, sec // 60, sec % 60,
+                        tzinfo=timezone.utc)
+
+    schema = "user_id long, ts timestamp, event_type string, event_id long"
+    tick0 = spark.createDataFrame([(1, t(100), "click", 0)], schema)
+    _, state = debounce_increment(None, tick0, gap_seconds=600.0)
+    null_tick = spark.createDataFrame([(1, None, "click", 1)], schema)
+    _, state = debounce_increment(
+        state.localCheckpoint(eager=True), null_tick, gap_seconds=600.0
+    )
+    state = state.localCheckpoint(eager=True)
+    assert [tuple(r) for r in state.collect()] == [
+        (1, "click", 100_000_000 + 1_704_067_200_000_000)
+    ]
+    late = spark.createDataFrame([(1, t(99), "click", 2)], schema)
+    with pytest.raises(ValueError, match="event-time order"):
+        debounce_increment(state, late, gap_seconds=600.0)[0].collect()
+
+
 def test_debounce_collapses_bursts(spark):
     """Events within the gap of their predecessor are dropped; the
     first of a burst survives; independent (user, type) streams don't

@@ -83,15 +83,14 @@ def test_key_skew_profile_ranks_and_shares(spark):
 
 def test_key_skew_profile_releases_previous_cache(spark):
     from kamu_engine_datafusion_spark.operators.partitioning import (
-        _DEFERRED,
+        SKEW_LEDGER,
         key_skew_profile,
-        release_intermediates,
     )
 
     df = spark.createDataFrame([("a",), ("b",)], "k string")
     key_skew_profile(df, ["k"]).collect()
-    assert len(_DEFERRED) == 1
+    assert len(SKEW_LEDGER) == 1
     key_skew_profile(df, ["k"]).collect()
-    assert len(_DEFERRED) == 1  # previous one released, not accumulated
-    release_intermediates()
-    assert not _DEFERRED
+    assert len(SKEW_LEDGER) == 1  # previous one released, not accumulated
+    SKEW_LEDGER.release()
+    assert not SKEW_LEDGER

@@ -237,6 +237,38 @@ def test_hybrid_rrf_guard_trips_on_unbounded_input(spark):
     assert hybrid_rrf(big, dense, max_list_rows=500, top_k=3).count() == 3
 
 
+def test_hybrid_rrf_back_to_back_calls_stay_flat(spark):
+    """Each call parks its two persisted lists and releases what earlier
+    calls parked, so repeated fusions hold one call's blocks."""
+    from kamu_engine_datafusion_spark.operators.retrieval import (
+        RETRIEVAL_LEDGER,
+        hybrid_rrf,
+    )
+
+    def n_cached() -> int:
+        return spark.sparkContext._jsc.sc().getPersistentRDDs().size()
+
+    RETRIEVAL_LEDGER.release(blocking=True)
+    baseline = n_cached()
+    cached = []
+    for i in range(3):
+        sparse = spark.createDataFrame(
+            [(1, 9.0 + i), (2, 5.0)], "doc_id long, score double"
+        )
+        dense = spark.createDataFrame(
+            [(2, 0.9), (3, 0.8 - i / 10)], "doc_id long, cosine double"
+        )
+        assert hybrid_rrf(sparse, dense, top_k=10).count() == 3
+        cached.append(n_cached())
+    assert cached == [baseline + 2] * 3, (baseline, cached)
+    # the same lists again share the cache entries the last call made:
+    # releasing that call's frames must not drop them
+    hybrid_rrf(sparse, dense, top_k=10).count()
+    assert n_cached() == baseline + 2
+    RETRIEVAL_LEDGER.release(blocking=True)
+    assert n_cached() == baseline
+
+
 def test_mmr_pool_cap_guard(spark):
     """mmr_diversify refuses a driver-side pool past the O(pool²) cap."""
     import pytest

@@ -1,7 +1,10 @@
-"""Dump .explain('formatted') for the headline bench queries into
-plans/r18/<query>_<tag>.txt (judge evidence for OPTIMIZATION_r18.md).
+"""Dump .explain('formatted') of registry queries into
+<outdir>/<query>_<tag>.txt — before/after plan evidence for a change.
 
-Usage: python tools/dump_r18_plans.py <tag> [query ...]
+Usage: python tools/dump_key_plans.py <outdir> <tag> [query ...]
+
+With no queries it dumps the headline set below. The corpus is read
+from $SPARK_GRAFT_SF_DIR.
 """
 
 from __future__ import annotations
@@ -13,8 +16,6 @@ sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 from kamu_engine_datafusion_spark import queries as q  # noqa: E402
 from kamu_engine_datafusion_spark.session import odf_session  # noqa: E402
-
-SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
 
 HEADLINE = [
     "b16_groupby_agg",
@@ -35,15 +36,16 @@ HEADLINE = [
 
 
 def main():
-    tag = sys.argv[1]
-    names = sys.argv[2:] or HEADLINE
-    outdir = os.path.join(os.path.dirname(os.path.dirname(os.path.abspath(__file__))), "plans", "r18")
+    if len(sys.argv) < 3 or "SPARK_GRAFT_SF_DIR" not in os.environ:
+        sys.exit(__doc__)
+    outdir, tag = sys.argv[1], sys.argv[2]
+    names = sys.argv[3:] or HEADLINE
+    sf_dir = os.environ["SPARK_GRAFT_SF_DIR"]
     os.makedirs(outdir, exist_ok=True)
-    spark = odf_session("r18-plans")
+    spark = odf_session("dump-key-plans")
     registry = q.registry()
     for name in names:
-        fn = registry[name]
-        df = fn(spark, SF_DIR)
+        df = registry[name](spark, sf_dir)
         plan = df._sc._jvm.PythonSQLUtils.explainString(
             df._jdf.queryExecution(), "formatted"
         )

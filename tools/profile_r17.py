@@ -69,7 +69,7 @@ def profile_minhash(spark):
 
     # stage 2: candidates (includes persist + cap collect + self-join)
     def cands():
-        D._release_deferred()
+        D.DEDUP_LEDGER.release()
         noop(
             minhash_lsh_candidates(
                 docs, signature_layout="arrow", signature_fan_out=8

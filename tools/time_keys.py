@@ -1,7 +1,9 @@
-"""r18: per-rep noop-sink timing of a named set of registered query
-keys at the given SF dir — the round-18 measurement pass (guide §1).
+"""Per-rep noop-sink timing of registry query keys.
 
-Usage: python tools/time_keys_r18.py [sf_dir] [reps] key [key ...]
+Usage: python tools/time_keys.py [sf_dir] [reps] [key ...]
+
+``sf_dir`` defaults to $SPARK_GRAFT_SF_DIR, ``reps`` to 1. With no keys
+it times every registered key and ends with the slowest 40.
 """
 
 from __future__ import annotations
@@ -17,11 +19,16 @@ from kamu_engine_datafusion_spark.session import odf_session  # noqa: E402
 
 
 def main():
-    sf_dir = sys.argv[1] if len(sys.argv) > 1 else "/root/testdata/sf0.1"
-    reps = int(sys.argv[2]) if len(sys.argv) > 2 else 2
-    keys = sys.argv[3:]
-    spark = odf_session("r18-time-keys")
+    sf_dir = sys.argv[1] if len(sys.argv) > 1 else os.environ.get(
+        "SPARK_GRAFT_SF_DIR"
+    )
+    if not sf_dir:
+        sys.exit(__doc__)
+    reps = int(sys.argv[2]) if len(sys.argv) > 2 else 1
+    spark = odf_session("time-keys")
     reg = q.registry()
+    keys = sys.argv[3:] or list(reg)
+    results = {}
     for name in keys:
         fn = reg.get(name)
         if fn is None:
@@ -37,10 +44,16 @@ def main():
                 ).save()
                 times.append(time.perf_counter() - t0)
             spark.sparkContext.setJobDescription(None)
-            reps_s = " ".join(f"{t:.3f}" for t in times)
-            print(f"TIME {name}: [{reps_s}] min={min(times):.3f}", flush=True)
         except Exception as e:  # keep sweeping
             print(f"FAIL {name}: {type(e).__name__}: {e}", flush=True)
+            continue
+        results[name] = min(times)
+        reps_s = " ".join(f"{t:.3f}" for t in times)
+        print(f"TIME {name}: [{reps_s}] min={min(times):.3f}", flush=True)
+    if len(keys) > 1:
+        print("== slowest ==")
+        for name, t in sorted(results.items(), key=lambda kv: -kv[1])[:40]:
+            print(f"  {t:8.3f}s  {name}")
 
 
 if __name__ == "__main__":
