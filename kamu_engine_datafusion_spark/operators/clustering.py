@@ -360,18 +360,24 @@ def lloyd_centroids(
     q: DataFrame, id_col: str, dim: int, k: int, iters: int
 ) -> list[list[int]]:
     """The Lloyd's loop over a pre-quantized ``__qv`` frame: ``iters``
-    (assign → update) cycles from the deterministic k-lowest-id init,
-    returning the final integer centroids (bounded: k·dim ints on the
-    driver). Per iteration ONE partial+final aggregate emitting
-    ``k×(dim+1)`` longs — the only shuffle; empty clusters keep their
-    previous centroid. Rows shorter than ``dim`` fail loudly (ANSI
-    ``element_at``)."""
+    (assign → update) cycles from the deterministic init (the k
+    lowest-id VALID vectors: non-NULL, ``size == dim``, no NULL
+    element), returning the final integer centroids (bounded: k·dim
+    ints on the driver). Per iteration ONE partial+final aggregate
+    emitting ``k×(dim+1)`` longs — the only shuffle; empty clusters
+    keep their previous centroid. Invalid vectors are nearest to no
+    centroid (NULL ``__cid``), so they neither seed nor move one."""
     if k < 1 or iters < 1:
         raise ValueError("k and iters must be >= 1")
-    init = q.orderBy(id_col).limit(k).collect()
+    valid = (
+        F.col("__qv").isNotNull()
+        & (F.size("__qv") == F.lit(dim))
+        & F.forall("__qv", lambda x: x.isNotNull())
+    )
+    init = q.filter(valid).orderBy(id_col).limit(k).collect()
     cents: list[list[int]] = [list(r["__qv"]) for r in init]
     if len(cents) < k:
-        raise ValueError(f"need at least k={k} rows, got {len(cents)}")
+        raise ValueError(f"need at least k={k} valid rows, got {len(cents)}")
 
     import math
 
@@ -379,6 +385,7 @@ def lloyd_centroids(
         enc = kmeans_enc_expr(cents, k)
         stats = (
             q.withColumn("__cid", (enc % F.lit(k)).cast("long"))
+            .filter(F.col("__cid").isNotNull())
             .groupBy("__cid")
             .agg(
                 F.count(F.lit(1)).alias("__n"),
@@ -389,11 +396,7 @@ def lloyd_centroids(
             )
             .collect()
         )
-        # NULL __cid: NULL / NULL-element / length-mismatched vectors,
-        # which are nearest to no centroid and move none
-        by_cid = {
-            int(r["__cid"]): r for r in stats if r["__cid"] is not None
-        }
+        by_cid = {int(r["__cid"]): r for r in stats}
         cents = [
             [
                 int(math.floor(by_cid[cid][f"__s{j}"] / by_cid[cid]["__n"]))

@@ -23,1082 +23,76 @@ Determinism rules applied throughout (driver hash-matches values):
 
 from __future__ import annotations
 
-from collections.abc import Callable
+import json
+import re
+from collections.abc import Callable, Collection, Iterable
+from pathlib import Path
 
 from pyspark.sql import DataFrame, SparkSession
 
 from kamu_engine_datafusion_spark.queries import layer_a, layer_b, pipeline
 from kamu_engine_datafusion_spark.queries.layer_b import q_b16_groupby_agg
 
-__all__ = ["registry", "oracles", "q_b16_groupby_agg"]
-
-# Registration order is verification-priority order: the driver's
-# CORRECTNESS gate checks registry entries front-to-back (first ~50), so
-# the window rotates each round: (1) keys whose implementation or
-# oracle changed this round, then (2) the keys whose last driver-green
-# is the oldest, then the recently-verified remainder. Every key's
-# latest driver-green should be at most a couple of rounds old after
-# each rotation.
-# r17 ROTATION PLAN (build _PRIORITY_R17 with CORRECTNESS_r16 in
-# hand): (1) any key this window turns red, (2) the ELEVEN keys
-# registered r16 BELOW the window (xks_drift_sketch, xppmi_window,
-# xdedup_trajectory, xsession_quality, xkmv_overlap_delta,
-# xfunnel_state, xnovelty_state, xhybrid_maintained,
-# xkmv_containment_delta, xks_drift_log, xsketch_window_collapse —
-# oracles shipped, locally hash-green at
-# 3 SFs, zero registration work left: move them above the cut),
-# (3) xwinsorize_sketch (the one r11-era key squeezed out of the r16
-# window by xdedup_minhash's backend re-verify — first in line after
-# the staged keys), then the oldest-green cohort:
-# the r12 window (xdedup_exact, xdedup_paragraph, xmm_features,
-# xmm_frames, xpivot, xrollup_time, xsessionize,
-# xsample_weighted_merge, xbm25_incremental, xlm_backoff,
-# xdistinctive_tokens, xnegative_samples, xtop_pc,
-# xmm_phash_incremental, xurl_dedup, xdomain_cap, xupsample_repeat,
-# xhybrid_rrf, xinterleave, xinterleave_dist, xledger_compact,
-# xtext_truncate, xcorpus_card, xdedup_cross, xpipeline_curate,
-# xdebounce, xlangid_eval, xdedup_report, xvocab_coverage, xsim_ivf,
-# xsim_srp_lsh, xsim_topk_brute, xskyline, xsalted_agg, xsnapshot,
-# xtext_c4_filter, xtext_fingerprint, xtext_gopher, xtext_langid,
-# xtext_quality, xtext_redact_pii, xtext_repetition, xtext_tokens,
-# xsample, xrange_join, xmm_decode, xprofile), then the r13 keys.
-# r18 ROTATION PLAN (build _PRIORITY_R18 with CORRECTNESS_r17 in
-# hand): (1) any key this window turns red, (2) keys staged r17
-# below the window (see the tail of _PRIORITY_R17), (3) the r12
-# remainder (xdedup_report, xvocab_coverage, xsim_ivf, xsim_srp_lsh,
-# xsim_topk_brute, xskyline, xsalted_agg, xsnapshot, xtext_c4_filter,
-# xtext_fingerprint, xtext_gopher, xtext_langid, xtext_quality,
-# xtext_redact_pii, xtext_repetition, xtext_tokens, xsample,
-# xrange_join, xmm_decode, xprofile — the 20 oldest greens once this
-# window retires the r12 head), then the r13 cohort.
-_PRIORITY_R18 = [
-    # ==== round-18 verification window (first 50 keys) ====
-    # -- NEW in round 18 (VERDICT r17 item 2): the driver-checkable
-    #    full-corpus poly twin of the rows-only xxhash64 bench key —
-    #    hash-verifies the exact pipeline the bench optimizes --
-    "xdedup_minhash_survivors",
-    # -- implementation touched in round 18 (re-verify: fold-tick
-    #    overlap, classifier job fusion, sketch-persist fix, bloom
-    #    maintained kernel) --
-    "xminhash_index_maintained",  # CHANGED r18: concurrent tick sig jobs
-    "xsemdedup_incremental",  # CHANGED r18: concurrent tick state rows
-    "xann_semdedup_topk",  # CHANGED r18: shared fold change
-    "xmmr_semdedup",  # CHANGED r18: shared fold change
-    "xhybrid_maintained",  # CHANGED r18: shared fold change
-    "xhybrid_freshness",  # CHANGED r18: shared fold change
-    "xks_drift_log",  # CHANGED r18: double-materialization fix
-    "xquality_classifier",  # CHANGED r18: fused per-iteration jobs
-    "xbloom_decontaminate_maintained",  # CHANGED r18: maintained kernel
-    "xheavy_hitters_grid",  # CHANGED r18: one-scan tick grids
-    "xtop_pc",  # CHANGED r18: _int_gram null-element guard (advice)
-    "b17_count_distinct",  # CHANGED r18: fused single-scan revert
-    "xdedup_incremental",  # CHANGED r18: deferred dead-count
-    "xdedup_index_pairs",  # CHANGED r18: deferred dead-count
-    "xks_drift_sketch",  # CHANGED r18: one-scan tick sketches
-    "xsketch_quantile_merge",  # CHANGED r18: one-scan tick sketches
-    "xsketch_cm_merge",  # CHANGED r18: one-scan tick grids
-    "xdsir_incremental",  # CHANGED r18: one-scan tick counts
-    "xdecontaminate_bloom",  # CHANGED r18: phase-2 bench kernel
-    # -- the r17-staged below-window families (locally sweep-green;
-    #    never driver-certified) --
-    "xkmv_window_collapse",
-    "xppmi_drift",
-    "xsession_rates_gate",
-    "xspan_dedup_maintained",
-    "xspan_removal_maintained",
-    "xks_window_drift",
-    "xkmv_window_overlap",
-    # -- the r12-stale remainder (the 20 oldest greens) --
-    "xdedup_report",
-    "xvocab_coverage",
-    "xsim_ivf",
-    "xsim_srp_lsh",
-    "xsim_topk_brute",
-    "xskyline",
-    "xsalted_agg",
-    "xsnapshot",
-    "xtext_c4_filter",
-    "xtext_fingerprint",
-    "xtext_gopher",
-    "xtext_langid",
-    "xtext_quality",
-    "xtext_redact_pii",
-    "xtext_repetition",
-    "xtext_tokens",
-    "xsample",
-    "xrange_join",
-    "xmm_decode",
-    "xprofile",
-    # -- r13-cohort head fills the remainder of the 50-window --
-    "xdecontaminate_fuzzy",
-    "xquality_gate",
-    "xmix_budget",
-    "xcluster_kmeans",
-    "xcluster_quality",
+__all__ = [
+    "registry",
+    "oracles",
+    "load_rounds",
+    "verification_order",
+    "q_b16_groupby_agg",
 ]
 
-_PRIORITY_R17 = [
-    # ==== round-17 verification window (first 50 keys) ====
-    # -- the ELEVEN r16 below-window registrations (the only
-    #    registered capability the driver has never certified;
-    #    locally hash-green at 3 SFs since r16) --
-    "xks_drift_sketch",
-    "xppmi_window",
-    "xdedup_trajectory",
-    "xsession_quality",
-    "xkmv_overlap_delta",
-    "xfunnel_state",
-    "xnovelty_state",
-    "xhybrid_maintained",
-    "xkmv_containment_delta",
-    "xks_drift_log",
-    "xsketch_window_collapse",
-    # -- the TWO r11-stale keys (oldest greens on disk; the r16
-    #    verdict caught xdecontaminate_bloom missing from the plan) --
-    "xwinsorize_sketch",
-    "xdecontaminate_bloom",
-    # -- NEW in round 17: the folded-state verification tail (the
-    #    xmoments_state device applied to the last two twin-oracle
-    #    maintained families) --
-    "xquality_rates_state",  # NEW: Gopher counter frame hashed
-    "xtemperature_state",  # NEW: count frame + induced cut cells
-    # -- implementation changed in round 17 (re-verify): the three
-    #    ADVICE fixes (decimal-squared moments guard, every-column
-    #    as-of lazy guard) and the arrow-backend DEFAULT flip
-    #    (minhash/verify layouts resolve to arrow for xxhash64;
-    #    embedding cosine/signature backends default arrow with jvm
-    #    pinned at the oracle-exact call sites) --
-    "xmoments_state",  # CHANGED r17: per-row decimal q² square
-    "xzscore_maintained",  # CHANGED r17: same guard upstream
-    "xasof_maintained",  # CHANGED r17: guard on EVERY right_<c>
-    "xdedup_minhash",  # CHANGED r17: arrow now the operator default
-    "xdedup_embcos",  # CHANGED r17: jvm backends pinned at call site
-    "xdedup_semantic",  # CHANGED r17: jvm cosine pinned at call site
-    "xpipeline_embed",  # CHANGED r17: jvm backends pinned at call site
-    "xminhash_index_maintained",  # CHANGED r17: arrow default upstream
-    # -- the r12-stale cohort head (27 oldest greens; the 20-key r12
-    #    remainder rotates to the r18 head) --
-    "xdedup_exact",
-    "xdedup_paragraph",
-    "xmm_features",
-    "xmm_frames",
-    "xpivot",
-    "xrollup_time",
-    "xsessionize",
-    "xsample_weighted_merge",
-    "xbm25_incremental",
-    "xlm_backoff",
-    "xdistinctive_tokens",
-    "xnegative_samples",
-    "xtop_pc",
-    "xmm_phash_incremental",
-    "xurl_dedup",
-    "xdomain_cap",
-    "xupsample_repeat",
-    "xhybrid_rrf",
-    "xinterleave",
-    "xinterleave_dist",
-    "xledger_compact",
-    "xtext_truncate",
-    "xcorpus_card",
-    "xdedup_cross",
-    "xpipeline_curate",
-    "xdebounce",
-    "xlangid_eval",
-    # ---- window boundary (50 = 11 rotated + 2 r11-stale + 2 new
-    # state keys + 8 changed re-verifies + 27 r12-stale head). Keys
-    # staged during r17 register BELOW this line as the r18 head. ----
-    # -- registered r17 BELOW the window with full oracles (locally
-    #    sweep-green): the four r17-staged families from the r16
-    #    candidate list — KMV sliding-window retirement (bottom-k
-    #    merge law), per-tick SPPMI collocation-shift alarm log,
-    #    session-quality × maintained quality-rates admission gate,
-    #    hybrid serving with per-store freshness (2-tick ANN store,
-    #    tick scalars derived from the stores) --
-    "xkmv_window_collapse",
-    "xppmi_drift",
-    "xsession_rates_gate",
-    "xhybrid_freshness",
-    # -- the fifth r17-staged family: maintained substring-span dedup
-    #    (gram first-occurrence index fold; append-order contract) --
-    "xspan_dedup_maintained",
-    # -- r17-staged second wave: the removal serving twin, the
-    #    window-shift KS self-drift (both inputs collapsed windows),
-    #    and the windowed cross-source overlap matrix --
-    "xspan_removal_maintained",
-    "xks_window_drift",
-    "xkmv_window_overlap",
-]
+_ROOT = Path(__file__).resolve().parents[2]
 
-_PRIORITY_R16 = [
-    # ==== round-16 verification window (first 50 keys) ====
-    # -- the nine r15-registered below-window keys (the only
-    #    registered capability the driver has never certified;
-    #    locally hash-green at sf0.001/0.01/0.1 since r15) — five of
-    #    them also carry this round's advice fixes (lazy as-of
-    #    validation, moment-overflow guard, unseen-strata cuts, MMR
-    #    id typing, general-n gram guard), so head placement doubles
-    #    as their re-verify --
-    "xintervals_maintained",
-    "xasof_maintained",  # CHANGED r16: lazy in-plan probe validation
-    "xmmr_semdedup",  # CHANGED r16: id type derived from store schema
-    "xcollocations_maintained",
-    "xnovelty_maintained",  # CHANGED r16: general-n gram guard
-    "xmoments_state",  # CHANGED r16: decimal-summed overflow guard
-    "xzscore_maintained",  # CHANGED r16: same guard upstream
-    "xtemperature_maintained",  # CHANGED r16: left-join cut table
-    "xcap_maintained",
-    # -- NEW in round 16: folded-STATE verification for the remaining
-    #    twin-oracle maintained families (VERDICT r15 item 3 — the
-    #    xmoments_state device; tick-structured oracles replaying the
-    #    fold's own merge law) --
-    "xretention_state",  # NEW: per-user min/union activity rows
-    "xtransitions_state",  # NEW: additive pair-count frame
-    "xvocab_state",  # NEW: full term-count frame, no top-k read
-    "xcollocations_state",  # NEW: pair + unigram frames joined
-    # -- implementation changed in round 16 (vectorized signature
-    #    backend; rows-only key — row count must hold) --
-    "xdedup_minhash",
-    # -- the r11-stale remainder (oldest greens on disk; retires the
-    #    r11 cohort except xwinsorize_sketch, first in the r17 head) --
-    "b04_parquet_sink",
-    "b03_information_schema",
-    "xdecontaminate",
-    "xquality_classifier",
-    "xdedup_simhash_sql",
-    "xsample_weighted",
-    "xsample_weighted_group",
-    "xvocab_oov",
-    "xscd2",
-    "xlm_score",
-    "xchunk_docs",
-    "xquality_gate",
-    "xsim_topk_batch",
-    "xdecontaminate_13",
-    "xsample_temperature",
-    "xcap_per_source",
-    "xsplit_by_group",
-    "xmix_budget",
-    "xhistogram",
-    "xdrift_psi",
-    "xtext_entropy",
-    "xmmr",
-    "xpipeline_embed",
-    "xbpe",
-    "xbpe_encode",
-    "xlength_buckets",
-    "xdedup_canonical",
-    "xsnapshot_diff",
-    "xchangelog_merge",
-    "xsnapshot_merge",
-    "xtext_repetition_report",
-    "xsource_tvd",
-    "xcentroid_shift",
-    "xsketch_quantile_merge",
-    "xsketch_cm_merge",
-    "xmm_phash_neardup",
-    # ---- window boundary (50 = 9 rotated + 4 new state keys + 1
-    # backend re-verify + 36 r11-remainder keys). xwinsorize_sketch
-    # sits first below the cut — the r17 head. ----
-    "xwinsorize_sketch",
-    # -- registered r16 BELOW the window with full oracles (locally
-    #    sweep-green at 3 SFs): the five r16-staged families, queued
-    #    as the r17 window head alongside the rotation above --
-    "xks_drift_sketch",
-    "xppmi_window",
-    "xdedup_trajectory",
-    "xsession_quality",
-    "xkmv_overlap_delta",
-    # -- r16 state-verification extensions (funnel walk accumulators,
-    #    reference n-gram set) — also below-window, r17 head --
-    "xfunnel_state",
-    "xnovelty_state",
-    # -- r16 flagship serving composition: hybrid retrieval from TWO
-    #    maintained stores (postings BM25 + SemDeDup-store ANN, RRF
-    #    fused) — below-window, r17 head --
-    "xhybrid_maintained",
-    # -- r16 directional twin of the overlap delta --
-    "xkmv_containment_delta",
-    # -- r16 per-tick drift alarm log (the trajectory device applied
-    #    to KS drift) --
-    "xks_drift_log",
-    # -- r16 sliding-window sketch retirement (collapse == direct
-    #    window build by the exact merge law) --
-    "xsketch_window_collapse",
-]
+# The driver's CORRECTNESS gate checks registry entries front to back
+# (about 50 a round), so registry() lists the keys that most need a
+# driver check first. A key scores the round of its latest driver check
+# when that check was green (hash_match, or err == "no_oracle" on a key
+# with no oracle: rows-only by design), and -1 when its latest check was
+# not green or it was never checked. Keys sort by (score, registration
+# index): red and unchecked keys first, then the oldest greens. With no
+# round files on disk every key scores -1 and registration order stands.
 
-_PRIORITY_R15 = [
-    # ==== round-15 verification window (first 50 keys) ====
-    # -- NEW in round 15: the nine r14-staged maintained families,
-    #    each with its COVERAGE-recorded oracle design --
-    "xsessions_maintained",  # NEW: 3-tick session fold, closed ∪ open
-    "xretention_maintained",  # NEW: semilattice activity fold + matrix
-    "xfunnel_maintained",  # NEW: walk-accumulator fold + counts read
-    "xtransitions_maintained",  # NEW: pair-count fold + matrix read
-    "xdebounce_maintained",  # NEW: kept-log fold, id-sum fingerprint
-    "xquality_rates_maintained",  # NEW: Gopher counter fold + rates
-    "xvocab_maintained",  # NEW: term-count fold + top-20 vocab read
-    "xbloom_decontaminate_maintained",  # NEW: OR-folded bitmap read
-    "xbm25_postings_maintained",  # NEW: postings fold + top-k serving
-    # -- NEW in round 15: tick-structured STATE verification for the
-    #    two r14 twin-oracle keys (VERDICT item 5) --
-    "xcentroid_stats_state",  # NEW: folded (n, sv, ss) rows hashed
-    "xlm_counts_state",  # NEW: folded (n, w1..w3, c) frame hashed
-    # -- the 25 remaining r10-stale keys (oldest greens on disk) --
-    "xpack_efficiency",
-    "xpack_ffd",
-    "xpack_ffd_stats",
-    "xpack_layout",
-    "xpack_sequences",
-    "xquantile_bins",
-    "xretention",
-    "xrolling_time",
-    "xrollup_gapfill",
-    "xshuffle",
-    "xsim_quantize",
-    "xsim_quantized_topk",
-    "xsketch_hll",
-    "xsketch_quantile",
-    "xskipgram",
-    "xstandardize",
-    "xtext_clean",
-    "xtfidf",
-    "xtransitions",
-    "xunpivot",
-    "xvocab",
-    "xwinsorize",
-    "xkey_skew",
-    "xmerge_intervals",
-    "xoutliers",
-    # -- the r11-stale head (oldest once r10 retires; the rest of the
-    #    r11 cohort queues for r16) --
-    "a13_offsets_distributed",
-    "a14_system_columns",
-    "b17_count_distinct",
-    "b23_ranking",
-    "b30_subqueries",
-    "b38_conditional",
-    "b39_array",
-    "b40_struct_map",
-    "b41_json",
-    "xasof_join",
-    "xdedup_incremental",
-    "xdedup_index_pairs",
-    "xdedup_simhash",
-    "xdedup_minhash",
-    # ---- window boundary (50 = 11 new + 25 r10-stale + 14 r11-stale.
-    # The r11 tail just below the cut rotates to the r16 head — see
-    # the r16 rotation plan above.) ----
-    # -- registered r15 BELOW the window with full oracles (locally
-    #    sweep-green at 3 SFs): the three r15-staged families, queued
-    #    as the r16 window head alongside the rotation above --
-    "xintervals_maintained",
-    "xasof_maintained",
-    "xmmr_semdedup",
-    "xcollocations_maintained",
-    "xnovelty_maintained",
-    "xmoments_state",
-    "xzscore_maintained",
-    "xtemperature_maintained",
-    "xcap_maintained",
-]
 
-_PRIORITY_R14 = [
-    # ==== round-14 verification window (first 50 keys) ====
-    # -- the r09-stale cohort (oldest greens on disk; retires r09) --
-    "b19_stats_agg",
-    "b19_percentile",
-    "b20_rollup",
-    "b20_grouping_sets",
-    "b21_collect_agg",
-    "b22_distinct",
-    "b23_topk_per_group",
-    "b24_analytic",
-    "b25_window_frames",
-    "b26_orderby",
-    "b27_limit_offset",
-    "b28_union_all",
-    "b29_setops",
-    "b31_string_core",
-    "b32_unicode_string",
-    "b33_regex",
-    "b34_crypto",
-    "b35_encoding",
-    "b36_math",
-    "b37_datetime",
-    "b39_explode",
-    # -- NEW in round 14: the nine r13-staged families, all with
-    #    COVERAGE-recorded oracle designs --
-    "xsemdedup_incremental",  # NEW: 3-tick SemDeDup index fold
-    "xann_semdedup_topk",  # NEW: IVF ANN read over the same store
-    "xkmv_overlap_maintained",  # NEW: overlap matrix from folded KMV
-    "xcurriculum_sketch",  # NEW: sketch-fed curriculum boundaries
-    "xdrift_psi_maintained",  # NEW: frozen-grid histogram fold + PSI
-    "xheavy_hitters_grid",  # NEW: heavy hitters from the folded grid
-    "xdsir_incremental",  # NEW: DSIR scoring from folded counts
-    "xcentroid_from_stats",  # NEW: centroid drift from folded stats
-    "xlm_backoff_incremental",  # NEW: backoff LM from folded counts
-    # -- the r10-stale head (20 oldest; the other 25 queue for r15) --
-    "xbigram_lm",
-    "xbm25",
-    "xcdc_ingest",
-    "xchangelog_agg",
-    "xcollocations",
-    "xcorr_matrix",
-    "xdecontaminate_fuzzy",
-    "xdedup_cc_incremental",
-    "xdedup_cluster",
-    "xdedup_embcos",
-    "xdedup_lines",
-    "xdedup_minhash_sql",
-    "xdedup_ngram_jaccard",
-    "xdedup_semantic",
-    "xdedup_span_removal",
-    "xdedup_spans",
-    "xdq_checks",
-    "xfunnel",
-    "xfuzzy_join",
-    "xmm_phash",
-]
+def load_rounds(max_round: int | None = None) -> list[tuple[int, dict]]:
+    """``(round, {key: driver row})`` for every ``CORRECTNESS_r*.json``
+    in the repository root, oldest first; rounds above ``max_round``
+    are skipped."""
+    out = []
+    for p in _ROOT.glob("CORRECTNESS_r*.json"):
+        m = re.fullmatch(r"CORRECTNESS_r(\d+)\.json", p.name)
+        if m and (max_round is None or int(m.group(1)) <= max_round):
+            out.append((int(m.group(1)), json.loads(p.read_text())))
+    return sorted(out, key=lambda r: r[0])
 
-_PRIORITY_R13 = [
-    # ==== round-13 verification window (first ~50 keys) ====
-    # -- the r08 tail (oldest greens on disk; retires the r08 block) --
-    "b06_filter",
-    "b16_groupby_agg",
-    "b26_tpch_q3alike",
-    "b10_tpch_q5alike",
-    "b01_parquet_scan",
-    "b02_view_scan",
-    "a03_empty_input",
-    "a04_offset_slice",
-    "a06_multi_step",
-    "a08_normalize_ts",
-    "b05_projection",
-    "b07_cast",
-    "b08_literals",
-    "b09_case_predicates",
-    "b10_join_inner",
-    "b10_join_shuffle",
-    "b11_join_left",
-    # -- NEW in round 13: the staged families, all with oracles --
-    "xsketch_kmv",  # NEW: KMV distinct estimate, both CASE regimes
-    "xsketch_kmv_merge",  # NEW: 3-tick fold == batch sketch rows
-    "xkmv_overlap",  # NEW: Jaccard + containment from sketches alone
-    "xheavy_hitters",  # NEW: CM+verify == direct ceil(phi*N) rule
-    "xcorpus_card_maintained",  # NEW: additive+KMV card fold, is_exact
-    "xhard_negatives",  # NEW: label-masked ANN negatives
-    "xrater_kappa",  # NEW: Cohen's kappa, lang vs langid
-    "xminhash_index_maintained",  # NEW: 3-tick index state, sig CSVs
-    # -- implementation changed in round 13 (re-verify: split layout) --
-    "xdedup_incremental",
-    "xdedup_index_pairs",
-    # -- the r09-stale head (oldest cohort once r08 retires) --
-    "xlayout_zonemap",
-    "xlayout_zorder",
-    "xcluster_kmeans",
-    "xcluster_semdedup",
-    "xcluster_quality",
-    "xsketch_countmin",
-    "xsim_pq",
-    "b18_approx_bounds",
-    "xsource_overlap",
-    "xtok_fertility",
-    "xpipeline_curriculum",
-    "xpipeline_dsir",
-    "xdsir_diag",
-    "xngram_novelty",
-    "xcurriculum",
-    "xdsir_sample",
-    "xpipeline_e2e",
-    "xsample_stratified",
-    "b11_join_full",
-    "b12_semi_anti",
-    "b13_cross_join",
-    "b14_theta_join",
-    "b18_approx_agg",
-    # ---- window boundary (50 = 17-key r08 tail + 8 new + 2 changed
-    # (split-index port) + the 23-key head of the r09-stale cohort.
-    # The r09 tail just below the cut (b19_stats_agg, b19_percentile,
-    # b20_rollup, b20_grouping_sets, b21_collect_agg, b22_distinct,
-    # b23_topk_per_group, b24_analytic, b25_window_frames, b26_orderby,
-    # b27_limit_offset, b28_union_all, b29_setops, b31–b37, b39_explode,
-    # …) rotates to the r14 head.) ----
-]
 
-_PRIORITY_R12 = [
-    # ==== round-12 verification window (first ~50 keys) ====
-    # -- the r06 tail (oldest greens on disk; retires the r06 block) --
-    "xdedup_exact",
-    "xdedup_paragraph",
-    "xmm_features",
-    "xmm_frames",
-    "xpivot",
-    "xrollup_time",
-    "xsessionize",
-    # -- NEW in round 12: the nine staged families, all with oracles --
-    "xsample_weighted_merge",  # NEW: 3-tick A-Res fold == batch draw
-    "xbm25_incremental",  # NEW: folded term stats + bm25_from_stats
-    "xlm_backoff",  # NEW: Stupid Backoff trigram LM scoring
-    "xdistinctive_tokens",  # NEW: Fightin' Words log-odds z top-k
-    "xnegative_samples",  # NEW: hash-ring contrastive negatives
-    "xtop_pc",  # NEW: fixed-point power iteration, 8 CTE iterations
-    "xmm_phash_incremental",  # NEW: image dedup vs persisted pHash index
-    "xurl_dedup",  # NEW: URL canonicalization dedup (synthesized urls)
-    "xdomain_cap",  # NEW: registered_domain → cap → data card compose
-    # -- implementation changed in round 12 (re-verify) --
-    "xmm_phash_neardup",  # twin-corpus construction shared w/ incremental
-    "xdedup_minhash",  # reshaped: survivor set, non-vacuous row count
-    "xdedup_simhash",  # reshaped: survivor set, non-vacuous row count
-    # -- the r08-stale head (oldest cohort once r06 retires) --
-    "xupsample_repeat",
-    "xhybrid_rrf",
-    "xinterleave",
-    "xinterleave_dist",
-    "xledger_compact",
-    "xtext_truncate",
-    "xcorpus_card",
-    "xdedup_cross",
-    "xpipeline_curate",
-    "xdebounce",
-    "xlangid_eval",
-    "xdedup_report",
-    "xvocab_coverage",
-    "xsim_ivf",
-    "xsim_srp_lsh",
-    "xsim_topk_brute",
-    "xskyline",
-    "xsalted_agg",
-    "xsnapshot",
-    "xtext_c4_filter",
-    "xtext_fingerprint",
-    "xtext_gopher",
-    "xtext_langid",
-    "xtext_quality",
-    "xtext_redact_pii",
-    "xtext_repetition",
-    "xtext_tokens",
-    "xsample",
-    "xrange_join",
-    "xmm_decode",
-    "xprofile",
-    # ---- window boundary (50 = 7 r06-tail + 9 new + 3 changed + the
-    # 31-key head of the r08-stale cohort. The r08 tail just below the
-    # cut (b06_filter, b16_groupby_agg, b26_tpch_q3alike,
-    # b10_tpch_q5alike, b01/b02, a03/a04/a06/a08, b05/b07/b08/b09,
-    # b10_join_inner/shuffle, b11_join_left, …) rotates to the r13
-    # head.) ----
-]
+def verification_order(
+    keys: Iterable[str],
+    rounds: Iterable[tuple[int, dict]],
+    oracle_keys: Collection[str],
+) -> list[str]:
+    """``keys`` (in registration order) sorted by the rule above."""
+    latest: dict[str, tuple[int, dict]] = {}
+    for rnd, data in sorted(rounds, key=lambda r: r[0]):
+        for key, row in data.items():
+            latest[key] = (rnd, row)
 
-_PRIORITY_R11 = [
-    # ==== round-11 verification window (first ~50 keys) ====
-    # -- NEW in round 11: the four staged r10 families --
-    "xtext_repetition_report",  # NEW: Gopher dup-line/n-gram repetition
-    "xsource_tvd",  # NEW: pairwise source token-distribution TVD
-    "xcentroid_shift",  # NEW: pairwise group centroid drift gate
-    "xdecontaminate_bloom",  # NEW: Bloom prefilter ≡ exact rule, proven
-    # -- NEW in round 11: maintained-fold merge laws driver-verified --
-    "xsketch_quantile_merge",  # NEW: 3-tick fold == batch sketch
-    "xsketch_cm_merge",  # NEW: cell-wise grid fold == one-shot grid
-    # -- NEW in round 11: multimodal near-dup + key-less integrations --
-    "xmm_phash_neardup",  # NEW: pHash pigeonhole Hamming pairs
-    "xwinsorize_sketch",  # NEW: sketch-fed winsorize cut points
-    "xdedup_index_pairs",  # NEW: emit_pairs edge set (feeds cc state)
-    # -- implementation changed in round 11 (re-verify) --
-    "xquality_classifier",  # NULL-text label coalesce (advice fix)
-    "xdedup_simhash",  # pigeonhole/verify tail extracted (rows-only)
-    "xdedup_simhash_sql",  # same refactor, hash-verified twin
-    "xsample_weighted",  # ares_key helper extracted (shared w/ streaming)
-    "xsample_weighted_group",  # same refactor
-    # -- the r06-stale block (oldest greens; retire in ≤2 rounds) --
-    "xvocab_oov",
-    "xscd2",
-    "xlm_score",
-    "xchunk_docs",
-    "xquality_gate",
-    "xsim_topk_batch",
-    "xdecontaminate_13",
-    "xsample_temperature",
-    "xcap_per_source",
-    "xsplit_by_group",
-    "xmix_budget",
-    "xhistogram",
-    "xdrift_psi",
-    "xtext_entropy",
-    "xmmr",
-    "xpipeline_embed",
-    "xbpe",
-    "xbpe_encode",
-    "xlength_buckets",
-    "xdedup_canonical",
-    "xsnapshot_diff",
-    "xchangelog_merge",
-    "xsnapshot_merge",
-    "a13_offsets_distributed",
-    "a14_system_columns",
-    "b04_parquet_sink",
-    "b17_count_distinct",
-    "b03_information_schema",
-    "b23_ranking",
-    "b30_subqueries",
-    "b38_conditional",
-    "b39_array",
-    "b40_struct_map",
-    "b41_json",
-    "xasof_join",
-    "xdecontaminate",
-    # ---- window boundary (~50: 9 new + 5 changed + the head of the
-    # 43-key r06-stale block. The r06 tail just below the cut
-    # (xdedup_exact xdedup_paragraph xmm_features xmm_frames xpivot
-    # xrollup_time xsessionize) rotates to the r12 head — the block
-    # retires fully next round.) ----
-    "xdedup_exact",
-    "xdedup_paragraph",
-    "xmm_features",
-    "xmm_frames",
-    "xpivot",
-    "xrollup_time",
-    "xsessionize",
-]
+    def score(key: str) -> int:
+        rnd, row = latest.get(key, (-1, {}))
+        if row.get("err") == "no_oracle":
+            green = key not in oracle_keys
+        else:
+            green = bool(row.get("hash_match"))
+        return rnd if green else -1
 
-_PRIORITY_R10 = [
-    # ==== round-10 verification window (first ~50 keys) ====
-    # -- NEW in round 10 --
-    "xsketch_quantile",  # NEW: mergeable hash-level quantile sketch audit
-    "xdedup_cc_incremental",  # NEW: incremental CC ≡ full-closure replay
-    "xquality_classifier",  # NEW: fixed-point GD quality gate, trajectory replay
-    # -- implementation changed in round 10 (re-verify) --
-    "xsketch_hll",  # BIGINT shift + NULL-key guard in hll_distinct_report
-    "xpack_layout",  # eager_guard=True at the registry call site
-    "xpack_sequences",  # eager_guard=True
-    "xpack_ffd",  # eager_guard=True (rows-only key)
-    "xpack_ffd_stats",  # eager_guard=True
-    "xpack_efficiency",  # eager_guard pre-count before the budget loop
-    # -- r03/r04 rows-only keys (oldest driver data of all) --
-    "xdedup_minhash",
-    "xdedup_simhash",
-    # -- the 38-key r05-stale block (retire it: last green 5 rounds ago) --
-    "xchangelog_agg",
-    "xoutliers",
-    "xtext_clean",
-    "xcollocations",
-    "xbigram_lm",
-    "xdq_checks",
-    "xwinsorize",
-    "xrolling_time",
-    "xfuzzy_join",
-    "xkey_skew",
-    "xmm_phash",
-    "xskipgram",
-    "xtransitions",
-    "xcorr_matrix",
-    "xquantile_bins",
-    "xstandardize",
-    "xunpivot",
-    "xmerge_intervals",
-    "xcdc_ingest",
-    "xdedup_minhash_sql",
-    "xdedup_incremental",
-    "xdedup_simhash_sql",
-    "xdedup_embcos",
-    "xdedup_semantic",
-    "xdedup_ngram_jaccard",
-    "xdedup_cluster",
-    "xdedup_spans",
-    "xdedup_span_removal",
-    "xdedup_lines",
-    "xsim_quantize",
-    "xsim_quantized_topk",
-    "xdecontaminate_fuzzy",
-    "xrollup_gapfill",
-    "xfunnel",
-    "xretention",
-    "xshuffle",
-    "xbm25",
-    "xtfidf",
-    # -- fill to 50 from the (now-oldest) r06 block --
-    "xvocab",
-]
-
-_PRIORITY_R9 = [
-    # ==== round-9 verification window (first ~50 keys) ====
-    # -- NEW in round 9 --
-    "xlayout_zonemap",  # NEW: zone-map clustering/skip-fraction audit
-    "xlayout_zorder",  # NEW: z-order rewrite audited via z-cell zone maps
-    "xcluster_kmeans",  # NEW: fixed-point Lloyd's k-means over embeddings
-    "xcluster_semdedup",  # NEW: SemDeDup — within-cluster quantized-cosine dedup
-    "xcluster_quality",  # NEW: per-cluster purity/inertia vs ground-truth label
-    "xsketch_hll",  # NEW: HyperLogLog registers + estimate audit, bit-exact
-    "xsketch_countmin",  # NEW: Count-Min grid + heavy-hitter overestimate audit
-    "xsim_pq",  # NEW: product-quantization ADC top-k, per-subspace codebooks
-    "b18_approx_bounds",  # NEW: sketch-accuracy invariant projection
-    "xpack_layout",  # NEW: per-doc packed-batch manifest (chunk+start)
-    "xsource_overlap",  # NEW: pairwise source content-overlap matrix
-    "xtok_fertility",  # NEW: per-lang tokenizer fertility / bytes-per-subword
-    "xpipeline_curriculum",  # NEW: gate→mix→curriculum e2e (chained oracle)
-    "xpipeline_dsir",  # NEW: 4-stage DSIR curation e2e (chained oracle)
-    "xdsir_diag",  # NEW: DSIR importance-weight ESS/concentration diag
-    "xngram_novelty",  # NEW: per-doc bigram novelty vs reference slice
-    "xcurriculum",  # NEW: per-lang equal-count difficulty stages
-    "xpack_efficiency",  # NEW: packing-efficiency curve over budgets
-    # -- never driver-checked (landed after the r8 rotation) --
-    "xdsir_sample",  # also impl changed r9: NULL-text score coalesced to 0
-    "xpack_ffd_stats",
-    # -- implementation/oracle changed after their last driver green --
-    "xsample_weighted",  # A-Res half-up key change (last green r5)
-    "xpack_sequences",  # sharded sub-groups (last green r6)
-    "xpipeline_e2e",  # sharded stage-4 (last green r6)
-    "xsample_stratified",  # (last green r6)
-    # -- the 26-key r04-stale block: last driver-green CORRECTNESS_r04 --
-    "b11_join_full",
-    "b12_semi_anti",
-    "b13_cross_join",
-    "b14_theta_join",
-    "b18_approx_agg",
-    "b19_stats_agg",
-    "b19_percentile",
-    "b20_rollup",
-    "b20_grouping_sets",
-    "b21_collect_agg",
-    "b22_distinct",
-    "b23_topk_per_group",
-    "b24_analytic",
-    "b25_window_frames",
-    "b26_orderby",
-    "b27_limit_offset",
-    "b28_union_all",
-    "b29_setops",
-    "b31_string_core",
-    "b32_unicode_string",
-    "b33_regex",
-    "b34_crypto",
-    "b35_encoding",
-    "b36_math",
-    "b37_datetime",
-    "b39_explode",
-    # -- rows-only twins, driver-checked r03/r04 --
-    "xdedup_minhash",
-    "xdedup_simhash",
-    # -- head of the r05-stale x block (last driver-green r05) --
-    "xchangelog_agg",
-    "xoutliers",
-    "xtext_clean",
-    "xcollocations",
-    "xbigram_lm",
-    "xdq_checks",
-    "xwinsorize",
-    "xrolling_time",
-    "xfuzzy_join",
-    "xkey_skew",
-    "xmm_phash",
-    "xskipgram",
-    "xtransitions",
-    "xcorr_matrix",
-    # ---- window boundary (~50: 2 new + 2 never-checked + 4
-    # post-change-unverified + the full 26-key r04-stale block + the 2
-    # rows-only twins + the head of the r05-stale block. The r05 tail
-    # just below the cut rotates to the r10 head.) ----
-]
-
-_PRIORITY_R7 = [
-    # ==== round-7 verification window (first ~50 keys) ====
-    # -- implementation/oracle changed this round --
-    "xupsample_repeat",  # oracle repeat factors now CAST AS DOUBLE
-    "xhybrid_rrf",  # half-up rank keys + fused score, both sides
-    "xinterleave",  # mode param added (serial default, unchanged path)
-    "xinterleave_dist",  # NEW: distributed no-window twin, shared oracle
-    # -- NEW in round 7 --
-    "xledger_compact",  # NEW: retention-horizon ledger compaction
-    "xsample_weighted_group",  # NEW: per-group A-Res weighted sampling
-    "xtext_truncate",  # NEW: token-boundary truncation, content-pinned
-    "xcorpus_card",  # NEW: per-(source,lang) data-card summary
-    "xdedup_cross",  # NEW: cross-corpus exact dedup (md5 twin)
-    "xpipeline_curate",  # NEW: 4-stage e2e curation oracle (r7 ops)
-    "xdebounce",  # NEW: burst dedup / event debounce
-    "xlangid_eval",  # NEW: classifier confusion-matrix eval
-    "xdedup_report",  # NEW: dedup drop-reason audit (poly twin)
-    "xvocab_coverage",  # NEW: tokenizer-design cumulative coverage
-    "xpack_ffd",  # NEW: FFD bin packing (rows-only: sequential fold)
-    # -- r03-stale block: last driver-green in CORRECTNESS_r03 --
-    "xsim_ivf",
-    "xsim_srp_lsh",
-    "xsim_topk_brute",
-    "xskyline",
-    "xsalted_agg",
-    "xsnapshot",
-    "xtext_c4_filter",
-    "xtext_fingerprint",
-    "xtext_gopher",
-    "xtext_langid",
-    "xtext_quality",
-    "xtext_redact_pii",
-    "xtext_repetition",
-    "xtext_tokens",
-    "xsample",
-    # -- head of the r04-stale block --
-    "xrange_join",
-    "xmm_decode",
-    "xprofile",
-    "b06_filter",
-    "b16_groupby_agg",
-    "b26_tpch_q3alike",
-    "b10_tpch_q5alike",
-    "b01_parquet_scan",
-    "b02_view_scan",
-    "a03_empty_input",
-    "a04_offset_slice",
-    "a06_multi_step",
-    "a08_normalize_ts",
-    "b05_projection",
-    "b07_cast",
-    "b08_literals",
-    "b09_case_predicates",
-    "b10_join_inner",
-    "b10_join_shuffle",
-    "b11_join_left",
-    "b11_join_full",
-    "b12_semi_anti",
-    "b13_cross_join",
-    "b14_theta_join",
-    "b18_approx_agg",
-    "b19_stats_agg",
-    "b19_percentile",
-    "b20_rollup",
-    "b20_grouping_sets",
-    "b21_collect_agg",
-    "b22_distinct",
-    # ---- window boundary (~50: 4 changed + 10 new-in-r7 + 15
-    # r03-stale + the head of the r04-stale block; a 50-key cut lands
-    # inside the r04 block around b09/b10_join. The new keys take
-    # precedence over rotating more r04 greens — a never-checked key is
-    # a worse signal than a 3-round-stale green; the r04 tail rotates
-    # to the r8 head.) ----
-    "b23_topk_per_group",
-    "b24_analytic",
-    "b25_window_frames",
-    "b26_orderby",
-    "b27_limit_offset",
-    "b28_union_all",
-    "b29_setops",
-    "b31_string_core",
-    "b32_unicode_string",
-    "b33_regex",
-    "b34_crypto",
-    "b35_encoding",
-    "b36_math",
-    "b37_datetime",
-    "b39_explode",
-]
-
-_PRIORITY_R6 = [
-    # ==== round-6 verification window (first ~50 keys) ====
-    # -- never driver-checked (below the window cut in r4 AND r5) --
-    "xpipeline_e2e",  # oracle re-fixed r6: CAST(sum) latent HUGEINT
-    "xsample_stratified",  # oracle re-fixed r6 (latent HUGEINT)
-    "xpack_sequences",  # oracle re-fixed r6 (latent HUGEINT)
-    "xvocab",
-    "xvocab_oov",
-    "xscd2",
-    "xlm_score",
-    "xchunk_docs",
-    "xquality_gate",  # oracle re-fixed r6 (latent HUGEINT)
-    "xsim_topk_batch",
-    "xdecontaminate_13",
-    # -- red in CORRECTNESS_r05, oracles re-fixed this round:
-    #    DuckDB types uncast sum(BIGINT) as HUGEINT (int128), which the
-    #    driver's fetch canonicalizes unlike Spark's BIGINT; every final
-    #    projection sum now wrapped in CAST(... AS BIGINT) --
-    "xsample_temperature",
-    "xcap_per_source",
-    "xsplit_by_group",
-    "xmix_budget",
-    # -- implementation changed in round 6 (ADVICE fixes + batched BPE
-    #    trainer): re-verify even though r05 was green --
-    "xhistogram",  # null guard in degenerate min==max bin path
-    "xdrift_psi",  # same null-guard pattern
-    "xtext_entropy",  # empty/null-doc divergence vs oracle fixed
-    "xmmr",  # half-up rounding instead of engine round() builtins
-    "xpipeline_embed",  # stage-4 MMR follows the half-up change
-    "xbpe",  # trainer batched (top-k non-conflicting merges/round)
-    "xbpe_encode",  # downstream of the batched trainer
-    # -- NEW in round 6 --
-    "xupsample_repeat",  # NEW: fractional epoch-mixing upsampler
-    "xlength_buckets",  # NEW: length-bucketed batching assignment
-    "xdedup_canonical",  # NEW: quality-aware canonical per component
-    "xhybrid_rrf",  # NEW: BM25+dense reciprocal-rank fusion
-    "xsnapshot_diff",  # NEW: snapshot→changelog CDC diff
-    "xchangelog_merge",  # NEW: maintained-view merge ≡ recompute
-    "xsnapshot_merge",  # NEW: maintained-snapshot fold ≡ batch
-    "xinterleave",  # NEW: stride-scheduled mixture interleaving
-    # -- oldest driver-green (r03) block: a13…b41 + the r03 x keys --
-    "a13_offsets_distributed",
-    "a14_system_columns",
-    "b04_parquet_sink",
-    "b17_count_distinct",
-    "b03_information_schema",
-    "b23_ranking",
-    "b30_subqueries",
-    "b38_conditional",
-    "b39_array",
-    "b40_struct_map",
-    "b41_json",
-    "xasof_join",
-    "xdecontaminate",
-    "xdedup_exact",
-    "xdedup_paragraph",
-    "xmm_features",
-    "xmm_frames",
-    "xpivot",
-    "xrollup_time",
-    "xsessionize",
-    "xsim_ivf",
-    "xsim_srp_lsh",
-    "xsim_topk_brute",
-    "xskyline",
-    "xsalted_agg",
-    "xsnapshot",
-    "xtext_c4_filter",
-    "xtext_fingerprint",
-    "xtext_gopher",
-    "xtext_langid",
-    # ---- window boundary (~50 — the exact cut lands inside the r03
-    # block, around xsim_topk_brute/xskyline). Round-6 composition: the
-    # 11 keys the driver has NEVER checked, the 4 keys red in r05
-    # (oracles re-cast), 7 keys whose implementation/oracle changed
-    # this round, 4 brand-new round-6 keys, and the head of the
-    # r03-stale block. The r03 tail just below the cut
-    # (xsalted_agg … xsample) rotates to the round-7 head. Everything
-    # below was driver-green in r04 (b05–b39 block) or r05 (the 50-key
-    # r05 window), and the whole registry passes the local
-    # check_correctness sweep — now hardened to fail loudly on any
-    # HUGEINT-typed oracle column, the class that shipped the r05 reds.
-    # ----
-    "xtext_quality",
-    "xtext_redact_pii",
-    "xtext_repetition",
-    "xtext_tokens",
-    "xsample",
-    # -- driver-green in r05 --
-    "xchangelog_agg",
-    "xoutliers",
-    "xtext_clean",
-    "xcollocations",
-    "xbigram_lm",
-    "xdq_checks",
-    "xwinsorize",
-    "xrolling_time",
-    "xfuzzy_join",
-    "xkey_skew",
-    "xmm_phash",
-    "xskipgram",
-    "xtransitions",
-    "xcorr_matrix",
-    "xquantile_bins",
-    "xstandardize",
-    "xunpivot",
-    "xmerge_intervals",
-    "xcdc_ingest",
-    "xdedup_minhash_sql",
-    "xdedup_incremental",
-    "xdedup_simhash_sql",
-    "xdedup_embcos",
-    "xdedup_semantic",
-    "xdedup_ngram_jaccard",
-    "xdedup_cluster",
-    "xdedup_spans",
-    "xdedup_span_removal",
-    "xdedup_lines",
-    "xsim_quantize",
-    "xsim_quantized_topk",
-    "xdecontaminate_fuzzy",
-    "xsample_weighted",
-    "xrollup_gapfill",
-    "xfunnel",
-    "xretention",
-    "xshuffle",
-    "xbm25",
-    "xtfidf",
-    "xdedup_minhash",  # rows-only twin: weak signal, hash twin inside
-    "xdedup_simhash",  # rows-only twin: weak signal, hash twin inside
-    # -- driver-green in r04 --
-    "xrange_join",
-    "xmm_decode",
-    "xprofile",
-    "b06_filter",
-    "b16_groupby_agg",
-    "b26_tpch_q3alike",
-    "b10_tpch_q5alike",
-    "b01_parquet_scan",
-    "b02_view_scan",
-    "a03_empty_input",
-    "a04_offset_slice",
-    "a06_multi_step",
-    "a08_normalize_ts",
-    "b05_projection",
-    "b07_cast",
-    "b08_literals",
-    "b09_case_predicates",
-    "b10_join_inner",
-    "b10_join_shuffle",
-    "b11_join_left",
-    "b11_join_full",
-    "b12_semi_anti",
-    "b13_cross_join",
-    "b14_theta_join",
-    "b18_approx_agg",
-    "b19_stats_agg",
-    "b19_percentile",
-    "b20_rollup",
-    "b20_grouping_sets",
-    "b21_collect_agg",
-    "b22_distinct",
-    "b23_topk_per_group",
-    "b24_analytic",
-    "b25_window_frames",
-    "b26_orderby",
-    "b27_limit_offset",
-    "b28_union_all",
-    "b29_setops",
-    "b31_string_core",
-    "b32_unicode_string",
-    "b33_regex",
-    "b34_crypto",
-    "b35_encoding",
-    "b36_math",
-    "b37_datetime",
-    "b39_explode",
-]
-
-#: The driver-facing order: the round-15 window first, then the prior
-#: windows oldest-last (keys already placed in a newer window are
-#: filtered out — the composition stays duplicate-free and exhaustive
-#: by the entry-contract test).
-_seen: set[str] = set()
-_PRIORITY = [
-    k
-    for k in _PRIORITY_R18
-    + _PRIORITY_R17
-    + _PRIORITY_R16
-    + _PRIORITY_R15
-    + _PRIORITY_R14
-    + _PRIORITY_R13
-    + _PRIORITY_R12
-    + _PRIORITY_R11
-    + _PRIORITY_R10
-    + _PRIORITY_R9
-    + _PRIORITY_R7
-    + _PRIORITY_R6
-    if not (k in _seen or _seen.add(k))
-]
+    return sorted(keys, key=score)  # stable: ties keep registration order
 
 
 def registry() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
     merged: dict[str, Callable[[SparkSession, str], DataFrame]] = {}
     for mod in (layer_a, layer_b, pipeline):
         merged.update(mod.QUERIES)
-    out = {k: merged[k] for k in _PRIORITY if k in merged}
-    out.update({k: v for k, v in merged.items() if k not in out})
-    return out
+    order = verification_order(merged, load_rounds(), set(oracles()))
+    return {k: merged[k] for k in order}
 
 
 def oracles() -> dict[str, str]:

@@ -4552,8 +4552,7 @@ def q_xbm25_postings_maintained(
 
 
 def q_xintervals_maintained(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """The maintained interval-consolidation state, driver-verified
-    (registered r15 BELOW the driver window; r16 window head): the
+    """The maintained interval-consolidation state, driver-verified: the
     ``xmerge_intervals`` span population (user_id < 200 activity
     spans) folds over three event-id ticks through
     ``operators/rangejoin.py::intervals_increment`` — exactly
@@ -6154,8 +6153,6 @@ QUERIES = {
     "xbm25_postings_maintained": q_xbm25_postings_maintained,
     "xcentroid_stats_state": q_xcentroid_stats_state,
     "xlm_counts_state": q_xlm_counts_state,
-    # registered r15 BELOW the driver window (locally sweep-green at 3
-    # SFs); the r16 rotation plan puts them at the window head
     "xintervals_maintained": q_xintervals_maintained,
     "xasof_maintained": q_xasof_maintained,
     "xmmr_semdedup": q_xmmr_semdedup,
@@ -10768,9 +10765,8 @@ ORACLES["xcollocations_state"] = (
     "JOIN uc u2 ON bg.w2 = u2.token"
 )
 
-# r16-staged families, registered BELOW the driver window (the r17
-# head): oracles replay the sketch/fold constructions and the exact
-# float trees.
+# Sketch/fold families: oracles replay the sketch/fold constructions
+# and the exact float trees.
 
 # -- xks_drift_sketch: both quantile-sketch chains (tick filters) +
 #    the integer-cross-product KS --

@@ -727,10 +727,15 @@ def test_semdedup_kill_backend_twins(spark):
 def test_semdedup_batch_kernel_equals_pair_join_twin(spark):
     """Batch semdedup's grouped kill kernel must reproduce the cluster
     self-join + per-pair-dot formulation's (cluster, n_dups, is_kept)
-    EXACTLY — string ids, NULL vector / NULL element / over-long rows
-    (NULL cluster: they never join), an exact duplicate pair, and a
-    pair landing exactly on the threshold (the >= in the near test)."""
+    EXACTLY — string ids, NULL vector / NULL element / over-long /
+    short rows (NULL cluster: they never join; a NULL and a short
+    vector hold the two lowest ids, so they must not seed a centroid),
+    an exact duplicate pair, and a pair landing exactly on the
+    threshold (the >= in the near test). Fewer than k valid rows
+    raise."""
     import random
+
+    import pytest
 
     from kamu_engine_datafusion_spark.operators import clustering as C
     from tests import jvm_twins as J
@@ -750,6 +755,8 @@ def test_semdedup_batch_kernel_equals_pair_join_twin(spark):
         ("xelem", [0.2, None, 0.4, 0.1]),
         ("xrag", [0.2, -0.3, 0.4, 0.1, 0.0, 0.3]),
         ("xrag2", [0.2, -0.3, 0.4, 0.1, 0.0, 0.3]),
+        ("a0null", None),
+        ("a1short", [0.2, -0.3]),
     ]
     df = spark.createDataFrame(rows, "vid string, emb array<double>")
 
@@ -769,9 +776,12 @@ def test_semdedup_batch_kernel_equals_pair_join_twin(spark):
     # the edges resolved as the join does, and the counts are not trivial
     assert got["d0"][1:] == (0, 1) and got["d1"][1:] == (1, 0)
     assert got["t1"][0] == got["t2"][0] and got["t2"][1:] == (1, 0)
-    for v in ("xnull", "xelem", "xrag", "xrag2"):
+    for v in ("xnull", "xelem", "xrag", "xrag2", "a0null", "a1short"):
         assert got[v] == (None, 0, 1)
     assert max(n for _, n, _ in got.values()) > 2
+    invalid = df.filter(~F.col("vid").rlike("^[vtd]"))
+    with pytest.raises(ValueError, match="valid rows"):
+        C.semdedup(invalid, "vid", "emb", dim=4, k=2, iters=2)
 
 
 def test_maintained_semdedup_index_folds_and_replays(spark, tmp_path):

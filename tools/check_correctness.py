@@ -11,12 +11,13 @@ Usage: python tools/check_correctness.py [sf_dir] [key_prefix...]
 from __future__ import annotations
 
 import math
+import os
 import sys
 from datetime import date, datetime
 
 import duckdb
 
-sys.path.insert(0, "/root/repo")
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 from __spark_entry__ import oracle_sql, queries  # noqa: E402
 from kamu_engine_datafusion_spark.session import odf_session  # noqa: E402

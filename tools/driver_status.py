@@ -7,6 +7,9 @@ the repo root into a latest-signal-per-key table and rewrites the section
 between the ``driver-status`` markers in COVERAGE.md. The hand-written
 operator tables stay as the *capability* inventory; this table is the
 *verification* inventory, and it cannot disagree with the driver.
+Rows are sorted by key, not by ``registry()`` order: the registry's
+verification order moves whenever a new round file lands, and the
+table must not.
 
 Usage: python tools/driver_status.py [--check]
   --check: exit 1 if COVERAGE.md is stale instead of rewriting it.
@@ -24,29 +27,21 @@ dropped round file — still fails.
 
 from __future__ import annotations
 
-import glob
-import json
 import os
 import re
 import sys
 
 REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, REPO)
+
+from kamu_engine_datafusion_spark.queries import (  # noqa: E402
+    load_rounds,
+    oracles,
+    registry,
+)
+
 BEGIN = "<!-- driver-status:begin (generated by tools/driver_status.py) -->"
 END = "<!-- driver-status:end -->"
-
-
-def load_rounds(max_round: int | None = None) -> list[tuple[int, dict]]:
-    out = []
-    for p in sorted(glob.glob(os.path.join(REPO, "CORRECTNESS_r*.json"))):
-        m = re.search(r"CORRECTNESS_r(\d+)\.json$", p)
-        if not m:
-            continue
-        rnd = int(m.group(1))
-        if max_round is not None and rnd > max_round:
-            continue
-        with open(p) as f:
-            out.append((rnd, json.load(f)))
-    return sorted(out)
 
 
 def latest_signal(
@@ -91,10 +86,7 @@ def latest_signal(
 
 
 def render(max_round: int | None = None) -> str:
-    sys.path.insert(0, REPO)
-    from kamu_engine_datafusion_spark.queries import registry, oracles
-
-    keys = list(registry())
+    keys = sorted(registry())
     has_oracle = set(oracles())
     sig = latest_signal(max_round, sql_keys=has_oracle)
     latest_round = max((r for r, _ in load_rounds(max_round)), default=0)
@@ -105,11 +97,11 @@ def render(max_round: int | None = None) -> str:
         "### Driver verification signal (generated — do not hand-edit)",
         "",
         f"Latest driver round on disk: **r{latest_round:02d}**. "
-        "One row per registry key; status = the key's LATEST driver check. "
-        "`never` = the driver's ~50-key window has not yet reached this key "
-        "(the local `tools/check_correctness.py` sweep is the only signal; "
-        "the registry's `_PRIORITY` rotation is responsible for retiring "
-        "these).",
+        "One row per registry key, sorted by key; status = the key's LATEST "
+        "driver check. `never` = the driver's ~50-key window has not yet "
+        "reached this key (the local `tools/check_correctness.py` sweep is "
+        "the only signal; `registry()` puts never-checked and red keys at "
+        "the head of the next window).",
         "",
         "| key | oracle | last checked | status |",
         "|---|---|---|---|",

@@ -6,9 +6,11 @@ from __future__ import annotations
 
 import contextlib
 import io
+import os
 import sys
 
-sys.path.insert(0, "/root/repo")
+REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, REPO)
 
 from kamu_engine_datafusion_spark import queries as q  # noqa: E402
 from kamu_engine_datafusion_spark.session import odf_session  # noqa: E402
@@ -154,7 +156,7 @@ def main() -> None:
         with contextlib.redirect_stdout(buf):
             df.explain("formatted")
         out.append(f"\n## {name}\n\n```\n{buf.getvalue().strip()}\n```\n")
-    with open("/root/repo/PLANS.md", "w") as f:
+    with open(os.path.join(REPO, "PLANS.md"), "w") as f:
         f.write("".join(out))
     print("wrote PLANS.md")
 

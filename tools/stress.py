@@ -2404,7 +2404,7 @@ def main() -> None:
     if _want("maintained_debounce"):
         _debounce_stress()
 
-    # ---- r16-staged families (r17 window head): 10×-scale rows ----
+    # ---- sketch/fold families: 10×-scale rows ----
 
     def _ks_drift_stress() -> None:
         from kamu_engine_datafusion_spark.operators.sketches import (
