@@ -22,7 +22,11 @@ SYSTEM_TIME = datetime(2023, 2, 1, tzinfo=UTC)  # request system_time
 
 @pytest.fixture(scope="session")
 def spark():
-    s = odf_session("odf-tests", master="local[8]", shuffle_partitions=8)
+    # Four task threads and four shuffle partitions: still multi-partition
+    # everywhere (partition-invariance tests repartition explicitly), but
+    # not oversubscribed on a 4-core host, where local[8] cost about a
+    # fifth more wall time per small job.
+    s = odf_session("odf-tests", master="local[4]", shuffle_partitions=4)
     yield s
     s.stop()
 
