@@ -46,6 +46,15 @@ _RUNTIME_CONFS = {
 }
 
 
+def default_driver_memory(physical_bytes: int) -> str:
+    """The driver heap when ``SPARK_DRIVER_MEM`` is unset: 60% of the
+    host's physical memory, capped at 48g. The rest is left to the JVM's
+    off-heap use, the Python workers and anything else on the host; a
+    fixed 48g let a busy local JVM grow past a small host's memory and
+    get OOM-killed."""
+    return f"{min(physical_bytes * 6 // 10 >> 20, 48 << 10)}m"
+
+
 def tune_session(spark: SparkSession) -> SparkSession:
     """Apply ODF runtime confs to an externally-built session
     (idempotent). A conf the session refuses raises: the ODF contract
@@ -69,13 +78,16 @@ def odf_session(
     coalescing from a high initial value).
     """
     cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
+    driver_mem = os.environ.get("SPARK_DRIVER_MEM") or default_driver_memory(
+        os.sysconf("SC_PHYS_PAGES") * os.sysconf("SC_PAGE_SIZE")
+    )
     master = master or f"local[{cpus}]"
     nshuffle = shuffle_partitions or (int(cpus) if cpus.isdigit() else 32)
     b = (
         SparkSession.builder.appName(app_name)
         .master(master)
         .config("spark.sql.shuffle.partitions", str(nshuffle))
-        .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEM", "48g"))
+        .config("spark.driver.memory", driver_mem)
         .config("spark.ui.enabled", "false")
         .config("spark.sql.execution.pyspark.udf.faulthandler.enabled", "true")
     )

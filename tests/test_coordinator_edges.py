@@ -5,25 +5,34 @@ from __future__ import annotations
 
 import os
 import shutil
+import threading
+from concurrent.futures import ThreadPoolExecutor
 from datetime import datetime, timezone
 
+import pyarrow as pa
 import pyarrow.parquet as pq
 import pytest
 
 from kamu_engine_datafusion_spark import (
+    DatasetVocabulary,
     InvalidQueryError,
     OffsetInterval,
     SqlQueryStep,
+    TransformRequest,
     TransformRequestInput,
+    execute_transform,
 )
-from kamu_engine_datafusion_spark.session import tune_session
+from kamu_engine_datafusion_spark.session import default_driver_memory, tune_session
+from kamu_engine_datafusion_spark.sources.compact import compact_ledger
 from kamu_engine_datafusion_spark.sources.ledger import register_input
 from kamu_engine_datafusion_spark.sources.sink import write_parquet_single_file
 from kamu_engine_datafusion_spark.streaming.incremental import (
     IncrementalRunner,
     LedgerInput,
 )
+from kamu_engine_datafusion_spark.transport.grpc_server import serve_grpc
 from tests.conftest import write_cities_ledger
+from tests.test_coordinator_soak import _wire_executor
 
 UTC = timezone.utc
 
@@ -124,3 +133,230 @@ def test_tune_session_propagates_a_refused_conf():
 
     with pytest.raises(RuntimeError, match="cannot modify"):
         tune_session(Session())
+
+
+def test_default_driver_memory_is_a_share_of_the_host_capped_at_48g():
+    assert default_driver_memory(16 << 30) == "9830m"
+    assert default_driver_memory(1 << 40) == "49152m"
+    assert default_driver_memory(80 << 30) == "49152m"
+
+
+# -- incremental ticks: the request and the bookkeeping cost the increment ----
+
+SRC_SQL = "select event_time, city, population from src"
+
+
+def _part(ledger_dir, name: str, start: int, n: int, statistics: bool = True) -> str:
+    """One offset-dense part file; ``population`` carries the input
+    offset so an output row names the input row it came from."""
+    os.makedirs(ledger_dir, exist_ok=True)
+    tbl = pa.table(
+        {
+            "offset": pa.array(range(start, start + n), pa.int64()),
+            "op": pa.array([0] * n, pa.int32()),
+            "system_time": pa.array(
+                [datetime(2023, 1, 1, tzinfo=UTC)] * n, pa.timestamp("ms", "UTC")
+            ),
+            "event_time": pa.array(
+                [datetime(2023, 1, 1, tzinfo=UTC)] * n, pa.timestamp("ms", "UTC")
+            ),
+            "city": pa.array([f"c{o}" for o in range(start, start + n)]),
+            "population": pa.array(range(start, start + n), pa.int64()),
+        }
+    )
+    path = os.path.join(str(ledger_dir), name)
+    pq.write_table(tbl, path, write_statistics=statistics)
+    return path
+
+
+def _src_runner(spark, tmp_path, next_unread_offset: int):
+    """A one-input runner whose executor records each request."""
+    requests: list[TransformRequest] = []
+
+    def run(spark, req):
+        requests.append(req)
+        return execute_transform(spark, req)
+
+    inp = LedgerInput("src", "src", str(tmp_path / "src"),
+                      next_unread_offset=next_unread_offset)
+    runner = IncrementalRunner(
+        spark=spark,
+        transform=[SqlQueryStep(query=SRC_SQL)],
+        inputs=[inp],
+        output_dir=str(tmp_path / "out"),
+        executor=run,
+    )
+    return runner, inp, requests
+
+
+def _tick_rows(runner, requests, first: int, last: int) -> list[str]:
+    """Run one tick; check that its output holds exactly input offsets
+    ``first..last`` under dense output offsets from the runner's
+    ``next_offset``; return the data paths the request named."""
+    next_offset = runner.next_offset
+    resp = runner.tick(datetime(2023, 2, 1, tzinfo=UTC))
+    (inp,) = requests[-1].inputs
+    assert inp.offset_interval == OffsetInterval(first, last)
+    n = last - first + 1
+    assert resp.new_offset_interval == OffsetInterval(next_offset, next_offset + n - 1)
+    out = pq.read_table(requests[-1].new_data_path).to_pydict()
+    assert sorted(out["offset"]) == list(range(next_offset, next_offset + n))
+    assert sorted(out["population"]) == list(range(first, last + 1))
+    return [os.path.basename(p) for p in inp.data_paths]
+
+
+def test_tick_sends_only_unread_files_and_reads_each_footer_once(
+    spark, tmp_path, monkeypatch
+):
+    """A tick over a ledger with consumed history names only the files
+    holding unread offsets, and a later tick opens only the footer of
+    the file fed since: the consumed history is neither sent nor re-read."""
+    src = tmp_path / "src"
+    for k in range(6):
+        _part(src, f"part-{k:05d}.parquet", 3 * k, 3)
+    runner, inp, requests = _src_runner(spark, tmp_path, next_unread_offset=18)
+
+    _part(src, "part-00006.parquet", 18, 3)
+    assert _tick_rows(runner, requests, 18, 20) == ["part-00006.parquet"]
+
+    new = _part(src, "part-00007.parquet", 21, 3)
+    opened: list[str] = []
+    real = pq.ParquetFile
+
+    def counting(path, *a, **k):
+        opened.append(str(path))
+        return real(path, *a, **k)
+
+    monkeypatch.setattr(pq, "ParquetFile", counting)
+    assert _tick_rows(runner, requests, 21, 23) == ["part-00007.parquet"]
+    assert [p for p in opened if p.startswith(str(src))] == [new]
+    assert inp.max_offset() == 23
+
+
+def test_ledger_input_rereads_a_rewritten_part_file(tmp_path, monkeypatch):
+    """The span cache is keyed on (path, size, mtime): a file rewritten
+    in place is read again, an unchanged one is not."""
+    src = tmp_path / "src"
+    _part(src, "part-00000.parquet", 0, 3)
+    last = _part(src, "part-00001.parquet", 3, 3)
+    inp = LedgerInput("src", "src", str(src))
+    assert inp.max_offset() == 5
+
+    opened: list[str] = []
+    real = pq.ParquetFile
+    monkeypatch.setattr(
+        pq, "ParquetFile", lambda p, *a, **k: opened.append(p) or real(p, *a, **k)
+    )
+    assert inp.max_offset() == 5
+    assert opened == []
+    _part(src, "part-00001.parquet", 3, 6)
+    assert inp.max_offset() == 8
+    assert opened == [last]
+
+
+def test_tick_spans_survive_compaction_between_ticks(spark, tmp_path):
+    """``compact_ledger`` between two ticks renames the history to
+    ``part-<first offset>.<token>.parquet``, which does not sort with
+    tick names: spans come from the footers, so the next tick still
+    sends exactly the files holding unread offsets, the compacted
+    ones included, and the span cache drops the vanished names."""
+    src = tmp_path / "src"
+    for k in range(4):
+        _part(src, f"part-{k:05d}.parquet", 3 * k, 3)
+    runner, inp, requests = _src_runner(spark, tmp_path, next_unread_offset=12)
+    assert inp.max_offset() == 11
+    _part(src, "part-00004.parquet", 12, 3)
+    assert compact_ledger(spark, str(src), target_rows_per_file=5) == 3
+
+    files = inp.part_files()
+    holding_unread = [
+        os.path.basename(p) for p in files
+        if max(pq.read_table(p, columns=["offset"]).column(0).to_pylist()) >= 12
+    ]
+    sent = _tick_rows(runner, requests, 12, 14)
+    assert sent == holding_unread and len(sent) < len(files)
+    assert sorted(inp._spans) == files
+
+    _part(src, "part-00005.parquet", 15, 3)
+    assert _tick_rows(runner, requests, 15, 17) == ["part-00005.parquet"]
+    assert sorted(inp._spans) == inp.part_files()
+
+
+def test_tick_skips_a_zero_row_part_file(spark, tmp_path):
+    src = tmp_path / "src"
+    _part(src, "part-00000.parquet", 0, 3)
+    _part(src, "part-00001.parquet", 3, 0)
+    _part(src, "part-00002.parquet", 3, 3)
+    runner, inp, requests = _src_runner(spark, tmp_path, next_unread_offset=0)
+    assert inp.max_offset() == 5
+    assert _tick_rows(runner, requests, 0, 5) == [
+        "part-00000.parquet", "part-00002.parquet"
+    ]
+
+
+def test_tick_always_sends_a_part_file_without_statistics(spark, tmp_path):
+    """A file whose footer has no offset statistics has no known span:
+    it is sent with every tick, and the engine's offset filter keeps
+    the output to the unread rows. The highest offset still comes out
+    right when the newest file is the one without statistics."""
+    src = tmp_path / "src"
+    _part(src, "part-00000.parquet", 0, 3)
+    _part(src, "part-00001.parquet", 3, 3, statistics=False)
+    _part(src, "part-00002.parquet", 6, 3)
+    runner, inp, requests = _src_runner(spark, tmp_path, next_unread_offset=6)
+    assert inp.max_offset() == 8
+    assert _tick_rows(runner, requests, 6, 8) == [
+        "part-00001.parquet", "part-00002.parquet"
+    ]
+
+    _part(src, "part-00003.parquet", 9, 3, statistics=False)
+    assert inp.max_offset() == 11
+    assert _tick_rows(runner, requests, 9, 11) == [
+        "part-00001.parquet", "part-00003.parquet"
+    ]
+
+
+def test_concurrent_transforms_on_one_context_stay_isolated(spark, tmp_path):
+    """Two ExecuteTransform RPCs in flight at once, on separate
+    connections to one served SparkContext, with the same query alias
+    over different ledgers: each output holds only its own rows, with
+    dense offsets from its own ``next_offset``."""
+    cases = [(0, 0, 40), (1000, 500, 60)]  # (next_offset, first input offset, rows)
+    reqs = []
+    for k, (next_offset, first, n) in enumerate(cases):
+        ledger = _part(tmp_path / f"in{k}", "part-00000.parquet", first, n)
+        reqs.append(TransformRequest(
+            dataset_alias="output",
+            system_time=datetime(2023, 2, 1, tzinfo=UTC),
+            next_offset=next_offset,
+            vocab=DatasetVocabulary(),
+            transform=[SqlQueryStep(query=SRC_SQL)],
+            inputs=[TransformRequestInput(
+                dataset_alias=f"in{k}",
+                query_alias="src",
+                schema_file=ledger,
+                data_paths=[ledger],
+                offset_interval=OffsetInterval(first, first + n - 1),
+            )],
+            new_data_path=str(tmp_path / f"out{k}.parquet"),
+        ))
+    server = serve_grpc(spark, port=0)
+    run = _wire_executor({"port": server.server_address[1]})
+    both_sent = threading.Barrier(len(reqs))
+
+    def call(req):
+        both_sent.wait()
+        return run(spark, req)
+
+    try:
+        with ThreadPoolExecutor(len(reqs)) as pool:
+            resps = list(pool.map(call, reqs))
+    finally:
+        server.shutdown()
+    for (next_offset, first, n), req, resp in zip(cases, reqs, resps):
+        assert resp.new_offset_interval == OffsetInterval(
+            next_offset, next_offset + n - 1
+        )
+        out = pq.read_table(req.new_data_path).to_pydict()
+        assert sorted(out["offset"]) == list(range(next_offset, next_offset + n))
+        assert sorted(out["population"]) == list(range(first, first + n))
