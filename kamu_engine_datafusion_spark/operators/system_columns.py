@@ -147,17 +147,28 @@ def assign_offsets_distributed(
     # literal map is still cheapest for few partitions, so keep it below a
     # small threshold; above it, broadcast-join (zero shuffle on the fact
     # side, plan size O(1)).
+    # The offset column must come out NOT NULL, like the serial path's, and
+    # a partition without a base must fail rather than get a made-up one.
     idx = F.col("__odf_mid").bitwiseAND(F.lit(_MID_INDEX_MASK))
     if len(bases) <= _BASE_MAP_LITERAL_MAX:
+        pid = F.shiftright(F.col("__odf_mid"), _MID_PARTITION_SHIFT)
         base_map = F.create_map(*[F.lit(x) for kv in bases.items() for x in kv])
-        base = base_map[F.shiftright(F.col("__odf_mid"), _MID_PARTITION_SHIFT)]
+        # A map lookup is nullable. raise_error fails the query on a
+        # missing base; the literal after it is never reached and only
+        # lets Spark type the coalesce NOT NULL.
+        missing = F.raise_error(
+            F.concat(F.lit("no offset base for partition "), pid.cast("string"))
+        )
+        base = F.coalesce(base_map[pid], missing, F.lit(0))
         return with_mid.withColumn(
             offset_column, (base + idx).cast(T.LongType())
         ).drop("__odf_mid")
     spark = with_mid.sparkSession
+    # NOT NULL bases keep the inner join's offset non-null. The join
+    # drops no row: the bases were counted from these same persisted rows.
     bases_df = spark.createDataFrame(
         [(int(p), int(b)) for p, b in bases.items()],
-        "__odf_pid BIGINT, __odf_base BIGINT",
+        "__odf_pid BIGINT NOT NULL, __odf_base BIGINT NOT NULL",
     )
     out_cols = [*df.columns, offset_column]
     return (

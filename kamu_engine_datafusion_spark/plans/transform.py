@@ -44,7 +44,7 @@ from kamu_engine_datafusion_spark.plans.types import (
     TransformResponse,
 )
 from kamu_engine_datafusion_spark.session import tune_session
-from kamu_engine_datafusion_spark.sources.ledger import register_input
+from kamu_engine_datafusion_spark.sources.ledger import read_parquet, register_input
 from kamu_engine_datafusion_spark.sources.sink import write_parquet_single_file
 
 #: Name the final (alias-less) step's view is registered under
@@ -146,7 +146,7 @@ def execute_raw_query(
     write a single Parquet file, return the record count."""
     session = tune_session(spark.newSession())
 
-    df = session.read.parquet(*request.input_data_paths)
+    df = read_parquet(session, request.input_data_paths)
     df.createOrReplaceTempView(INPUT_VIEW_NAME)
 
     out = run_transform_steps(session, request.transform)

@@ -24,6 +24,7 @@ from pyspark.sql import SparkSession
 from pyspark.sql import functions as F
 
 from kamu_engine_datafusion_spark.plans.types import DatasetVocabulary
+from kamu_engine_datafusion_spark.sources.ledger import read_parquet
 
 
 def compact_ledger(
@@ -34,14 +35,15 @@ def compact_ledger(
 ) -> int:
     """Compact ``<ledger_dir>/*.parquet`` in place; returns the new file
     count. Output files hold contiguous, sorted offset ranges named
-    ``part-<first_offset>.parquet``.
+    ``part-<first_offset:012d>.<token>.parquet``, the token unique to
+    this compaction.
     """
     vocab = vocab or DatasetVocabulary()
     off = vocab.offset_column
     files = sorted(glob.glob(os.path.join(ledger_dir, "*.parquet")))
     if not files:
         return 0
-    df = spark.read.parquet(*files)
+    df = read_parquet(spark, files)
     total = df.count()
     if total == 0:
         return len(files)

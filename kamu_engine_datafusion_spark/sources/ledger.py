@@ -9,8 +9,13 @@ view under the input's ``query_alias`` (``src/engine.rs:267-271``).
 
 Spark-first notes:
 
-- ``spark.read.parquet(*paths)`` keeps schema inference, multi-file
-  reads, partition parallelism, and Parquet row-group pruning.
+- :func:`read_parquet` gives Spark the schema up front. Without one,
+  ``spark.read.parquet(*paths)`` runs a job just to read one footer,
+  which on a small request takes about as long as the write. The helper
+  reads that same footer on the driver and looks Spark's own answer for
+  it up in a process-wide cache, so a request runs one job: its write.
+  Multi-file reads, partition parallelism and row-group pruning are
+  unchanged.
 - The offset filter is an ordinary Catalyst predicate → pushed to the
   Parquet scan; with ledger files written in offset order, row-group
   min/max statistics prune whole files/row groups, which is exactly the
@@ -20,14 +25,103 @@ Spark-first notes:
 
 from __future__ import annotations
 
+import os
+import threading
+from collections import OrderedDict
+
+import pyarrow as pa
+import pyarrow.parquet as pq
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.types import StructType
 
 from kamu_engine_datafusion_spark.plans.types import (
     InvalidQueryError,
     OffsetInterval,
     TransformRequestInput,
 )
+
+#: Footer schemas :func:`read_parquet` keeps; the least recently used
+#: entry goes first.
+SCHEMA_CACHE_MAX = 256
+
+#: Session confs Spark's Parquet → Catalyst schema conversion reads.
+_SCHEMA_CONFS = (
+    "spark.sql.parquet.binaryAsString",
+    "spark.sql.parquet.int96AsTimestamp",
+    "spark.sql.parquet.inferTimestampNTZ.enabled",
+    "spark.sql.legacy.parquet.nanosAsLong",
+    "spark.sql.caseSensitive",
+    "spark.sql.parquet.fieldId.read.enabled",
+    "spark.sql.parquet.ignoreVariantAnnotation",
+    "spark.sql.parquet.reader.respectUnknownTypeAnnotation.enabled",
+    "spark.sql.variant.allowReadingShredded",
+)
+
+#: The footer key Spark writes its own schema under; when present,
+#: Spark reads the schema from it instead of converting the Parquet one.
+_SPARK_ROW_METADATA = b"org.apache.spark.sql.parquet.row.metadata"
+
+#: Characters that make Hadoop expand a path as a glob.
+_GLOB_CHARS = frozenset("{}[]*?\\")
+
+_schemas: OrderedDict[tuple, StructType] = OrderedDict()
+_schemas_lock = threading.Lock()
+
+
+def _is_plain_file(path: str) -> bool:
+    """A path Spark reads as exactly itself: an absolute path (a relative
+    one resolves against the JVM's working directory) to a regular file,
+    not a glob, not a hidden or summary file (``_metadata``) that
+    listing treats apart."""
+    return (
+        os.path.isabs(path)
+        and os.path.isfile(path)
+        and not _GLOB_CHARS.intersection(path)
+        and not os.path.basename(path).startswith(("_", "."))
+    )
+
+
+def read_parquet(spark: SparkSession, paths: list[str]) -> DataFrame:
+    """``spark.read.parquet(*paths)`` with the schema given up front, so
+    building the relation runs no Spark job.
+
+    Spark infers the schema of a multi-file read from one footer: the
+    first leaf file by path string (``ParquetUtils.splitFiles``), paths
+    normalized as Hadoop's ``Path`` does. This reads that footer with
+    pyarrow on the driver and keys a process-wide cache on its physical
+    schema text, the Spark schema stored in its key-value metadata, and
+    the session confs that steer the conversion. A miss stores Spark's
+    own ``read.parquet(file).schema``, so a hit returns what inference
+    would have. Directories, globs, URIs, relative paths, hidden files,
+    an unreadable footer and a session that merges schemas fall back to
+    the plain read.
+    """
+    if (
+        not paths
+        or spark.conf.get("spark.sql.parquet.mergeSchema").lower() == "true"
+        or not all(_is_plain_file(p) for p in paths)
+    ):
+        return spark.read.parquet(*paths)
+    first = min(paths, key=os.path.normpath)
+    try:
+        with pq.ParquetFile(first) as f:
+            physical = str(f.schema).split("\n", 1)[1]
+            spark_schema = (f.metadata.metadata or {}).get(_SPARK_ROW_METADATA)
+    except (OSError, pa.ArrowException):
+        return spark.read.parquet(*paths)
+    key = (physical, spark_schema, *(spark.conf.get(k) for k in _SCHEMA_CONFS))
+    with _schemas_lock:
+        schema = _schemas.get(key)
+        if schema is not None:
+            _schemas.move_to_end(key)
+    if schema is None:
+        schema = spark.read.parquet(first).schema
+        with _schemas_lock:
+            _schemas[key] = schema
+            while len(_schemas) > SCHEMA_CACHE_MAX:
+                _schemas.popitem(last=False)
+    return spark.read.schema(schema).parquet(*paths)
 
 
 def read_parquet_ledger(
@@ -45,22 +139,22 @@ def read_parquet_ledger(
     """
     if merge_schema:
         return spark.read.option("mergeSchema", "true").parquet(*paths)
-    return spark.read.parquet(*paths)
+    return read_parquet(spark, paths)
 
 
 def read_ledger_schema(spark: SparkSession, schema_file: str):
     """A2: introspect the ledger schema from a schema file's footer.
 
     Reference reads the raw Parquet footer (``src/engine.rs:198-211``);
-    a zero-row read gives Spark the same information.
+    :func:`read_parquet` reads the same footer, with Spark's types.
     """
-    return spark.read.parquet(schema_file).schema
+    return read_parquet(spark, [schema_file]).schema
 
 
 def empty_ledger(spark: SparkSession, schema_file: str) -> DataFrame:
     """A3: synthesize a correctly-typed zero-row table for an input that
     has no new data (``src/engine.rs:213-221``, ``:263-265``)."""
-    return spark.read.parquet(schema_file).filter(F.lit(False))
+    return read_parquet(spark, [schema_file]).filter(F.lit(False))
 
 
 def slice_offset_interval(

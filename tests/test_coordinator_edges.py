@@ -3,28 +3,34 @@ a coordinator relies on is lost or half-advanced on the way."""
 
 from __future__ import annotations
 
+import glob
 import os
 import shutil
+import sys
 import threading
+import time
 from concurrent.futures import ThreadPoolExecutor
 from datetime import datetime, timezone
 
 import pyarrow as pa
 import pyarrow.parquet as pq
 import pytest
+from pyspark.sql import functions as F
 
 from kamu_engine_datafusion_spark import (
     DatasetVocabulary,
     InvalidQueryError,
     OffsetInterval,
+    RawQueryRequest,
     SqlQueryStep,
     TransformRequest,
     TransformRequestInput,
+    execute_raw_query,
     execute_transform,
 )
 from kamu_engine_datafusion_spark.session import default_driver_memory, tune_session
 from kamu_engine_datafusion_spark.sources.compact import compact_ledger
-from kamu_engine_datafusion_spark.sources.ledger import register_input
+from kamu_engine_datafusion_spark.sources.ledger import read_parquet, register_input
 from kamu_engine_datafusion_spark.sources.sink import write_parquet_single_file
 from kamu_engine_datafusion_spark.streaming.incremental import (
     IncrementalRunner,
@@ -220,16 +226,24 @@ def test_tick_sends_only_unread_files_and_reads_each_footer_once(
     assert _tick_rows(runner, requests, 18, 20) == ["part-00006.parquet"]
 
     new = _part(src, "part-00007.parquet", 21, 3)
-    opened: list[str] = []
+    opened: dict[str, list[str]] = {}  # calling module -> paths opened
     real = pq.ParquetFile
 
     def counting(path, *a, **k):
-        opened.append(str(path))
+        caller = sys._getframe(1).f_globals["__name__"]
+        opened.setdefault(caller, []).append(str(path))
         return real(path, *a, **k)
 
     monkeypatch.setattr(pq, "ParquetFile", counting)
     assert _tick_rows(runner, requests, 21, 23) == ["part-00007.parquet"]
-    assert [p for p in opened if p.startswith(str(src))] == [new]
+    monkeypatch.undo()
+    assert opened.pop(IncrementalRunner.__module__) == [new]
+    # The engine reads one schema footer per input, of a file the
+    # request names; nothing else opens a ledger file.
+    (sent,) = requests[-1].inputs
+    engine = opened.pop(read_parquet.__module__, [])
+    assert len(engine) <= 1 and set(engine) <= {*sent.data_paths, sent.schema_file}
+    assert not [p for ps in opened.values() for p in ps if p.startswith(str(src))]
     assert inp.max_offset() == 23
 
 
@@ -360,3 +374,203 @@ def test_concurrent_transforms_on_one_context_stay_isolated(spark, tmp_path):
         out = pq.read_table(req.new_data_path).to_pydict()
         assert sorted(out["offset"]) == list(range(next_offset, next_offset + n))
         assert sorted(out["population"]) == list(range(first, first + n))
+
+
+# -- one Spark job per request: schemas come from a cached footer lookup ------
+
+
+def _spark_jobs(spark, action) -> int:
+    """The number of Spark jobs started while ``action`` ran, from a diff
+    of the status tracker's job ids. Job events reach the tracker on an
+    asynchronous listener bus: read until every new job has finished
+    and two reads agree."""
+    tracker = spark.sparkContext.statusTracker()
+    before = set(tracker.getJobIdsForGroup(None))
+    action()
+    deadline = time.monotonic() + 10
+    last = None
+    while True:
+        new = set(tracker.getJobIdsForGroup(None)) - before
+        infos = [tracker.getJobInfo(j) for j in new]
+        if new == last and all(
+            i is not None and i.status in ("SUCCEEDED", "FAILED") for i in infos
+        ):
+            return len(new)
+        assert time.monotonic() < deadline, f"Spark status did not settle: {new}"
+        last = new
+        time.sleep(0.05)
+
+
+def test_transform_and_raw_query_each_run_one_spark_job(spark, tmp_path):
+    """With the schema cache warm, a transform over one input with data
+    and one without runs exactly one Spark job, its write, and so does a
+    raw query: no input's schema costs a schema-inference job."""
+    a = write_cities_ledger(str(tmp_path / "a.parquet"))
+    b = write_cities_ledger(str(tmp_path / "b.parquet"))
+
+    def transform(k: int):
+        return execute_transform(spark, TransformRequest(
+            dataset_alias="out",
+            system_time=datetime(2023, 2, 1, tzinfo=UTC),
+            next_offset=0,
+            vocab=DatasetVocabulary(),
+            transform=[SqlQueryStep(
+                query="select event_time, city from a "
+                "union all select event_time, city from b"
+            )],
+            inputs=[
+                TransformRequestInput("a", "a", schema_file=a, data_paths=[a],
+                                      offset_interval=OffsetInterval(0, 2)),
+                TransformRequestInput("b", "b", schema_file=b),
+            ],
+            new_data_path=str(tmp_path / f"transform{k}.parquet"),
+        ))
+
+    def raw_query(k: int):
+        return execute_raw_query(spark, RawQueryRequest(
+            input_data_paths=[a],
+            transform=[SqlQueryStep(query="select city from input")],
+            output_data_path=str(tmp_path / f"raw{k}.parquet"),
+        ))
+
+    transform(0)
+    raw_query(0)
+    assert _spark_jobs(spark, lambda: transform(1)) == 1
+    assert _spark_jobs(spark, lambda: raw_query(1)) == 1
+    assert pq.read_table(tmp_path / "transform1.parquet").num_rows == 3
+    assert pq.read_table(tmp_path / "raw1.parquet").num_rows == 3
+
+
+def _typed_columns() -> dict[str, pa.Array]:
+    """One column per Parquet → Spark conversion worth telling apart."""
+    ts = [datetime(2023, 1, 1, tzinfo=UTC), None]
+    return {
+        "int8": pa.array([1, None], pa.int8()),
+        "int16": pa.array([1, None], pa.int16()),
+        "int32": pa.array([1, None], pa.int32()),
+        "int64": pa.array([1, None], pa.int64()),
+        "uint32": pa.array([1, None], pa.uint32()),
+        "uint64": pa.array([1, None], pa.uint64()),
+        "float": pa.array([1.5, None], pa.float32()),
+        "double": pa.array([1.5, None], pa.float64()),
+        "decimal": pa.array([None, None], pa.decimal128(12, 3)),
+        "string": pa.array(["x", None]),
+        "binary": pa.array([b"x", None]),
+        "bool": pa.array([True, None]),
+        "date": pa.array([datetime(2023, 1, 1).date(), None], pa.date32()),
+        **{
+            f"ts_{unit}_{'utc' if tz else 'naive'}": pa.array(
+                [t if tz else t and t.replace(tzinfo=None) for t in ts],
+                pa.timestamp(unit, tz),
+            )
+            for unit in ("ms", "us", "ns")
+            for tz in ("UTC", None)
+        },
+        "list": pa.array([[1, 2], None], pa.list_(pa.int64())),
+        "struct": pa.array([{"f": 1}, None], pa.struct([("f", pa.int64())])),
+        "map": pa.array([[("k", 1)], None], pa.map_(pa.string(), pa.int64())),
+    }
+
+
+def test_read_parquet_schema_matches_spark_inference(spark, tmp_path):
+    """``read_parquet`` gives exactly the schema ``spark.read.parquet``
+    infers. Every file names its one column ``c``, so a cache key that
+    missed a type distinction would hand one file another's schema; the
+    two Spark-written files have the same Parquet schema and differ only
+    in the Spark schema stored in their footers."""
+    cases = []
+    for name, arr in _typed_columns().items():
+        path = str(tmp_path / f"{name}.parquet")
+        pq.write_table(pa.table({"c": arr}), path)
+        cases.append([path])
+    df = spark.createDataFrame([("x",)], "c string")
+    for name, metadata in (("spark_plain", {}), ("spark_commented", {"k": "v"})):
+        spark_written = str(tmp_path / name)
+        df.select(F.col("c").alias("c", metadata=metadata)).coalesce(1).write.parquet(
+            spark_written
+        )
+        (part,) = glob.glob(os.path.join(spark_written, "*.parquet"))
+        cases.append([part])
+    # Spark infers from the first path in lexical order of the normalized
+    # path, not in argument order: "sub/../a" is "a", before "b".
+    for name, col in (("b", "second"), ("a", "first")):
+        pq.write_table(pa.table({col: [1]}), str(tmp_path / f"{name}.parquet"))
+    (tmp_path / "sub").mkdir()
+    cases.append([str(tmp_path / "b.parquet"), str(tmp_path / "sub/../a.parquet")])
+    cases.append([str(tmp_path / f"{n}.parquet") for n in ("b", "a")])
+    cases.append([spark_written])  # a directory: the plain read
+
+    for paths in cases:
+        assert read_parquet(spark, paths).schema == spark.read.parquet(*paths).schema, paths
+    assert read_parquet(spark, [part]).schema["c"].metadata == {"k": "v"}
+    assert read_parquet(spark, cases[-2]).columns == ["first"]
+    assert read_parquet(spark, cases[-3]).columns == ["first"]
+
+    # A session that converts differently must not get the cached answer.
+    def schema_or_error(read):
+        try:
+            return read().schema
+        except Exception as e:  # noqa: BLE001 - the error is the answer
+            return type(e)
+
+    other = spark.newSession()
+    other.conf.set("spark.sql.legacy.parquet.nanosAsLong", "false")
+    ns = [str(tmp_path / "ts_ns_utc.parquet")]
+    assert (
+        schema_or_error(lambda: read_parquet(other, ns))
+        == schema_or_error(lambda: other.read.parquet(*ns))
+        != schema_or_error(lambda: read_parquet(spark, ns))
+    )
+
+
+class _NamingSpark:
+    """Just enough of a SparkSession for ``read_parquet``: every conf at
+    ``false``, and a read whose schema is the name of the file read."""
+
+    class conf:  # noqa: N801 - mirrors SparkSession.conf
+        @staticmethod
+        def get(key):
+            return "false"
+
+    @property
+    def read(self):
+        return self
+
+    def parquet(self, *paths):
+        return type("Inferred", (), {"schema": os.path.basename(paths[0])})
+
+    def schema(self, schema):
+        return type("Reader", (), {"parquet": staticmethod(lambda *paths: schema)})
+
+
+def test_schema_cache_under_thread_contention(tmp_path, monkeypatch):
+    """Concurrent requests share the schema cache: with eviction forced
+    on nearly every call and a tiny switch interval, each read still
+    gets its own file's schema and the cache stays within its bound."""
+    from kamu_engine_datafusion_spark.sources import ledger
+
+    paths = []
+    for k in range(6):
+        path = str(tmp_path / f"f{k}.parquet")
+        pq.write_table(pa.table({f"c{k}": [k]}), path)
+        paths.append(path)
+    monkeypatch.setattr(ledger, "SCHEMA_CACHE_MAX", 3)
+    monkeypatch.setattr(ledger, "_schemas", type(ledger._schemas)())
+    fake = _NamingSpark()
+
+    def reads(seed: int) -> int:
+        wrong = 0
+        for i in range(150):
+            path = paths[(seed * 7 + i * 5) % len(paths)]
+            wrong += read_parquet(fake, [path]) != os.path.basename(path)
+        return wrong
+
+    interval = sys.getswitchinterval()
+    sys.setswitchinterval(1e-6)
+    try:
+        with ThreadPoolExecutor(max_workers=8) as pool:
+            futures = [pool.submit(reads, seed) for seed in range(8)]
+            assert [f.result(timeout=60) for f in futures] == [0] * 8
+    finally:
+        sys.setswitchinterval(interval)
+    assert len(ledger._schemas) <= 3
