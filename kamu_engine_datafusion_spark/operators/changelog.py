@@ -126,6 +126,30 @@ def merge_changelog_aggs(
     return merged.filter(F.col("n_live") != 0)
 
 
+def sum_merge(
+    state: DataFrame | None, inc: DataFrame, keys: list[str]
+) -> DataFrame:
+    """The additive merge law of the maintained counter folds: per
+    ``keys``, every other column of the increment ``inc`` summed with
+    the stored state as BIGINT; ``inc`` itself when there is no state
+    yet. Meant for integer counters only — their sums are exact in any
+    union order, so a fold over ticks equals the one-shot count (a
+    floating-point sum would depend on the order)."""
+    if state is None:
+        return inc
+    return (
+        inc.unionByName(state)
+        .groupBy(*keys)
+        .agg(
+            *[
+                F.sum(c).cast("long").alias(c)
+                for c in inc.columns
+                if c not in keys
+            ]
+        )
+    )
+
+
 def cdc_to_ledger(
     df: DataFrame,
     op_col: str = "op",

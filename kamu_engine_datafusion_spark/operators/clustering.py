@@ -1080,6 +1080,31 @@ def centroid_stats(
     )
 
 
+def centroid_stats_merge(
+    state: DataFrame | None, inc: DataFrame, dim: int
+) -> DataFrame:
+    """Fold one tick's :func:`centroid_stats` into stored stats:
+    element-wise BIGINT addition per group (``n``, every ``sv``
+    coordinate, ``ss``) — exact in any order, so the fold over ticks
+    equals the stats of the whole input. ``inc`` itself when there is
+    no state yet."""
+    if state is None:
+        return inc
+    return (
+        inc.unionByName(state.select("grp", "n", "sv", "ss"))
+        .groupBy("grp")
+        .agg(
+            F.sum("n").cast("long").alias("n"),
+            F.aggregate(
+                F.collect_list("sv"),
+                F.array(*[F.lit(0).cast("long") for _ in range(dim)]),
+                lambda acc, v: F.zip_with(acc, v, lambda a, b: a + b),
+            ).alias("sv"),
+            F.sum("ss").cast("long").alias("ss"),
+        )
+    )
+
+
 def centroid_shift_from_stats(
     stats: DataFrame,
     dim: int,

@@ -20,6 +20,7 @@ from kamu_engine_datafusion_spark.operators import multimodal as M
 from kamu_engine_datafusion_spark.operators import similarity as S
 from kamu_engine_datafusion_spark.operators import text as X
 from kamu_engine_datafusion_spark.operators.asof import asof_join
+from kamu_engine_datafusion_spark.operators.changelog import sum_merge
 from kamu_engine_datafusion_spark.queries._util import load
 
 # ---------------------------------------------------------------------------
@@ -2909,13 +2910,7 @@ def q_xsketch_cm_merge(spark: SparkSession, sf_dir: str) -> DataFrame:
     state = None
     for i in range(3):
         grid = fine.filter(F.col("__tick") == i).drop("__tick")
-        state = (
-            grid
-            if state is None
-            else state.unionByName(grid)
-            .groupBy("i", "bucket")
-            .agg(F.sum("c").cast("long").alias("c"))
-        )
+        state = sum_merge(state, grid, ["i", "bucket"])
     return state.select(
         F.col("i").cast("long").alias("i"),
         F.col("bucket").cast("long").alias("bucket"),
@@ -3154,19 +3149,7 @@ def q_xbm25_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
     stats = None
     for i in range(3):
         inc = term_stats_increment(d.filter(F.col("doc_id") % 3 == i))
-        if stats is None:
-            stats = inc
-        else:
-            stats = (
-                stats.unionByName(inc)
-                .groupBy("term")
-                .agg(
-                    F.sum("df").cast("long").alias("df"),
-                    F.sum("n_docs").cast("long").alias("n_docs"),
-                    F.sum("tot_len").cast("long").alias("tot_len"),
-                    F.sum("n_len").cast("long").alias("n_len"),
-                )
-            )
+        stats = sum_merge(stats, inc, ["term"])
     out = bm25_from_stats(d, _BM25_TERMS, _ckpt_state(stats))
     return out.select(
         "doc_id", "n_terms_matched", F.round("score", 4).alias("score")
@@ -3932,13 +3915,7 @@ def q_xdrift_psi_maintained(spark: SparkSession, sf_dir: str) -> DataFrame:
             ),
             "value", lo, hi, nb,
         )
-        state = (
-            inc
-            if state is None
-            else inc.unionByName(state)
-            .groupBy("bin")
-            .agg(F.sum("n").cast("long").alias("n"))
-        )
+        state = sum_merge(state, inc, ["bin"])
     out = psi_from_histograms(ref_h, state, lo, hi, nb)
     return out.select(
         "bin",
@@ -3989,13 +3966,7 @@ def q_xheavy_hitters_grid(spark: SparkSession, sf_dir: str) -> DataFrame:
     grid = None
     for i in range(3):
         inc = fine.filter(F.col("__tick") == i).drop("__tick")
-        grid = (
-            inc
-            if grid is None
-            else inc.unionByName(grid)
-            .groupBy("i", "bucket")
-            .agg(F.sum("c").cast("long").alias("c"))
-        )
+        grid = sum_merge(grid, inc, ["i", "bucket"])
     return heavy_hitters_from_grid(
         grid, stream, "tok", phi_num=1, phi_den=200,
         depth=4, width=256, seed=7, hash_fn="poly",
@@ -4037,13 +4008,7 @@ def q_xdsir_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
         state = None
         for i in range(3):
             inc = fine.filter(F.col("__tick") == i).drop("__tick")
-            state = (
-                inc
-                if state is None
-                else inc.unionByName(state)
-                .groupBy("b")
-                .agg(F.sum("c").cast("long").alias("c"))
-            )
+            state = sum_merge(state, inc, ["b"])
         return state
 
     out = dsir_scores_from_stats(
@@ -4070,6 +4035,7 @@ def q_xcentroid_from_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     from kamu_engine_datafusion_spark.operators.clustering import (
         centroid_shift_from_stats,
         centroid_stats,
+        centroid_stats_merge,
     )
 
     t = load(spark, sf_dir, "embeddings")
@@ -4083,26 +4049,7 @@ def q_xcentroid_from_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
             emb.filter(F.col("vec_id") % 3 == i),
             "grp", "vec_id", "embedding", dim,
         )
-        if state is None:
-            state = inc
-        else:
-            state = (
-                inc.unionByName(state.select("grp", "n", "sv", "ss"))
-                .groupBy("grp")
-                .agg(
-                    F.sum("n").cast("long").alias("n"),
-                    F.aggregate(
-                        F.collect_list("sv"),
-                        F.array(
-                            *[F.lit(0).cast("long") for _ in range(dim)]
-                        ),
-                        lambda acc, v: F.zip_with(
-                            acc, v, lambda a, b: a + b
-                        ),
-                    ).alias("sv"),
-                    F.sum("ss").cast("long").alias("ss"),
-                )
-            )
+        state = centroid_stats_merge(state, inc, dim)
     return centroid_shift_from_stats(state, dim=dim)
 
 
@@ -4133,13 +4080,7 @@ def q_xlm_backoff_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
     counts = None
     for i in range(3):
         inc = lm_ngram_counts(ref.filter(F.col("doc_id") % 3 == i))
-        counts = (
-            inc
-            if counts is None
-            else inc.unionByName(counts)
-            .groupBy("n", "w1", "w2", "w3")
-            .agg(F.sum("c").cast("long").alias("c"))
-        )
+        counts = sum_merge(counts, inc, ["n", "w1", "w2", "w3"])
     return backoff_score_from_counts(d, _ckpt_state(counts))
 
 
@@ -4328,13 +4269,7 @@ def q_xtransitions_maintained(spark: SparkSession, sf_dir: str) -> DataFrame:
     for tick in _event_time_ticks(t["events"]):
         inc, last = transitions_increment(last, tick)
         last = _ckpt_state(last)
-        counts = (
-            inc
-            if counts is None
-            else inc.unionByName(counts)
-            .groupBy("from_type", "to_type")
-            .agg(F.sum("n").cast("long").alias("n"))
-        )
+        counts = sum_merge(counts, inc, ["from_type", "to_type"])
     out = transitions_from_counts(counts)
     return out.select(
         "from_type", "to_type", "n", F.round("p", 9).alias("p")
@@ -4403,15 +4338,7 @@ def q_xquality_rates_maintained(
         inc = quality_rule_counts(
             d.filter(F.col("doc_id") % 3 == i), "source"
         )
-        if state is None:
-            state = inc
-        else:
-            csum = [
-                F.sum(c).cast("long").alias(c)
-                for c in inc.columns
-                if c != "grp"
-            ]
-            state = inc.unionByName(state).groupBy("grp").agg(*csum)
+        state = sum_merge(state, inc, ["grp"])
     return quality_rates_from_counts(_ckpt_state(state), dp=4)
 
 
@@ -4437,13 +4364,7 @@ def q_xvocab_maintained(spark: SparkSession, sf_dir: str) -> DataFrame:
     state = None
     for i in range(3):
         inc = term_counts(d.filter(F.col("doc_id") % 3 == i))
-        state = (
-            inc
-            if state is None
-            else inc.unionByName(state)
-            .groupBy("token")
-            .agg(F.sum("freq").cast("long").alias("freq"))
-        )
+        state = sum_merge(state, inc, ["token"])
     return vocabulary_from_counts(_ckpt_state(state), top_v=20)
 
 
@@ -4533,19 +4454,7 @@ def q_xbm25_postings_maintained(
             pinc if postings is None else postings.unionByName(pinc)
         )
         sinc = term_stats_increment(tick)
-        if stats is None:
-            stats = sinc
-        else:
-            stats = (
-                stats.unionByName(sinc)
-                .groupBy("term")
-                .agg(
-                    F.sum("df").cast("long").alias("df"),
-                    F.sum("n_docs").cast("long").alias("n_docs"),
-                    F.sum("tot_len").cast("long").alias("tot_len"),
-                    F.sum("n_len").cast("long").alias("n_len"),
-                )
-            )
+        stats = sum_merge(stats, sinc, ["term"])
     return bm25_topk_from_postings(
         postings, stats, _BM25_TERMS, k=10, dp=6
     )
@@ -4711,21 +4620,9 @@ def q_xcollocations_maintained(
     for i in range(3):
         tick = d.filter(F.col("doc_id") % 3 == i)
         pinc = pair_counts(tick)
-        pairs = (
-            pinc
-            if pairs is None
-            else pinc.unionByName(pairs)
-            .groupBy("w1", "w2")
-            .agg(F.sum("c").cast("long").alias("c"))
-        )
+        pairs = sum_merge(pairs, pinc, ["w1", "w2"])
         tinc = term_counts(tick)
-        unis = (
-            tinc
-            if unis is None
-            else tinc.unionByName(unis)
-            .groupBy("token")
-            .agg(F.sum("freq").cast("long").alias("freq"))
-        )
+        unis = sum_merge(unis, tinc, ["token"])
     out = collocations_from_counts(
         _ckpt_state(pairs), _ckpt_state(unis), min_count=5,
         top_k=10_000_000,
@@ -4792,17 +4689,7 @@ def q_xmoments_state(spark: SparkSession, sf_dir: str) -> DataFrame:
             ev.filter(F.col("event_id") % 3 == i), "value", ["grp"],
             scale=1_000,
         )
-        state = (
-            inc
-            if state is None
-            else inc.unionByName(state)
-            .groupBy("grp")
-            .agg(
-                F.sum("n").cast("long").alias("n"),
-                F.sum("s1").cast("long").alias("s1"),
-                F.sum("s2").cast("long").alias("s2"),
-            )
-        )
+        state = sum_merge(state, inc, ["grp"])
     return state
 
 
@@ -4833,17 +4720,7 @@ def q_xzscore_maintained(spark: SparkSession, sf_dir: str) -> DataFrame:
             ev.filter(F.col("event_id") % 3 == i), "value", ["grp"],
             scale=1_000,
         )
-        state = (
-            inc
-            if state is None
-            else inc.unionByName(state)
-            .groupBy("grp")
-            .agg(
-                F.sum("n").cast("long").alias("n"),
-                F.sum("s1").cast("long").alias("s1"),
-                F.sum("s2").cast("long").alias("s2"),
-            )
-        )
+        state = sum_merge(state, inc, ["grp"])
     out = zscore_from_moments(
         ev.filter(F.col("event_id") % 3 == 0),
         state,
@@ -4915,13 +4792,7 @@ def q_xtransitions_state(spark: SparkSession, sf_dir: str) -> DataFrame:
     for tick in _event_time_ticks(t["events"]):
         inc, last = transitions_increment(last, tick)
         last = _ckpt_state(last)
-        counts = (
-            inc
-            if counts is None
-            else inc.unionByName(counts)
-            .groupBy("from_type", "to_type")
-            .agg(F.sum("n").cast("long").alias("n"))
-        )
+        counts = sum_merge(counts, inc, ["from_type", "to_type"])
     return counts
 
 
@@ -4941,13 +4812,7 @@ def q_xvocab_state(spark: SparkSession, sf_dir: str) -> DataFrame:
     state = None
     for i in range(3):
         inc = term_counts(d.filter(F.col("doc_id") % 3 == i))
-        state = (
-            inc
-            if state is None
-            else inc.unionByName(state)
-            .groupBy("token")
-            .agg(F.sum("freq").cast("long").alias("freq"))
-        )
+        state = sum_merge(state, inc, ["token"])
     return state
 
 
@@ -4973,21 +4838,9 @@ def q_xcollocations_state(spark: SparkSession, sf_dir: str) -> DataFrame:
     for i in range(3):
         tick = d.filter(F.col("doc_id") % 3 == i)
         pinc = pair_counts(tick)
-        pairs = (
-            pinc
-            if pairs is None
-            else pinc.unionByName(pairs)
-            .groupBy("w1", "w2")
-            .agg(F.sum("c").cast("long").alias("c"))
-        )
+        pairs = sum_merge(pairs, pinc, ["w1", "w2"])
         tinc = term_counts(tick)
-        unis = (
-            tinc
-            if unis is None
-            else tinc.unionByName(unis)
-            .groupBy("token")
-            .agg(F.sum("freq").cast("long").alias("freq"))
-        )
+        unis = sum_merge(unis, tinc, ["token"])
     unis = _ckpt_state(unis)
     u1 = unis.select(F.col("token").alias("w1"), F.col("freq").alias("f1"))
     u2 = unis.select(F.col("token").alias("w2"), F.col("freq").alias("f2"))
@@ -5022,15 +4875,7 @@ def q_xquality_rates_state(
         inc = quality_rule_counts(
             d.filter(F.col("doc_id") % 3 == i), "source"
         )
-        if state is None:
-            state = inc
-        else:
-            csum = [
-                F.sum(c).cast("long").alias(c)
-                for c in inc.columns
-                if c != "grp"
-            ]
-            state = inc.unionByName(state).groupBy("grp").agg(*csum)
+        state = sum_merge(state, inc, ["grp"])
     return state
 
 
@@ -5062,13 +4907,7 @@ def q_xtemperature_state(spark: SparkSession, sf_dir: str) -> DataFrame:
             .groupBy("lang")
             .agg(F.count(F.lit(1)).cast("long").alias("n"))
         )
-        state = (
-            inc
-            if state is None
-            else inc.unionByName(state)
-            .groupBy("lang")
-            .agg(F.sum("n").cast("long").alias("n"))
-        )
+        state = sum_merge(state, inc, ["lang"])
     state = _ckpt_state(state)
     cuts = temperature_cuts_from_counts(
         state, "lang", alpha=0.5, target_fraction=0.4
@@ -5169,19 +5008,7 @@ def q_xhybrid_maintained(spark: SparkSession, sf_dir: str) -> DataFrame:
             pinc if postings is None else postings.unionByName(pinc)
         )
         sinc = term_stats_increment(tick)
-        if stats is None:
-            stats = sinc
-        else:
-            stats = (
-                stats.unionByName(sinc)
-                .groupBy("term")
-                .agg(
-                    F.sum("df").cast("long").alias("df"),
-                    F.sum("n_docs").cast("long").alias("n_docs"),
-                    F.sum("tot_len").cast("long").alias("tot_len"),
-                    F.sum("n_len").cast("long").alias("n_len"),
-                )
-            )
+        stats = sum_merge(stats, sinc, ["term"])
     sparse = bm25_topk_from_postings(
         postings, stats, _BM25_TERMS, k=50, dp=6
     ).select("doc_id", "score")
@@ -5378,21 +5205,9 @@ def q_xppmi_window(spark: SparkSession, sf_dir: str) -> DataFrame:
     for i in range(3):
         tick = d.filter(F.col("doc_id") % 3 == i)
         pinc = pair_counts(tick, window=2)
-        pairs = (
-            pinc
-            if pairs is None
-            else pinc.unionByName(pairs)
-            .groupBy("w1", "w2")
-            .agg(F.sum("c").cast("long").alias("c"))
-        )
+        pairs = sum_merge(pairs, pinc, ["w1", "w2"])
         tinc = term_counts(tick)
-        unis = (
-            tinc
-            if unis is None
-            else tinc.unionByName(unis)
-            .groupBy("token")
-            .agg(F.sum("freq").cast("long").alias("freq"))
-        )
+        unis = sum_merge(unis, tinc, ["token"])
     return ppmi_from_counts(
         _ckpt_state(pairs), _ckpt_state(unis), shift_k=2, min_count=5,
         top_k=100,
@@ -5560,13 +5375,7 @@ def q_xtemperature_maintained(
             .groupBy("lang")
             .agg(F.count(F.lit(1)).cast("long").alias("n"))
         )
-        state = (
-            inc
-            if state is None
-            else inc.unionByName(state)
-            .groupBy("lang")
-            .agg(F.sum("n").cast("long").alias("n"))
-        )
+        state = sum_merge(state, inc, ["lang"])
     cuts = temperature_cuts_from_counts(
         _ckpt_state(state), "lang", alpha=0.5, target_fraction=0.4
     )
@@ -5631,6 +5440,7 @@ def q_xcentroid_stats_state(spark: SparkSession, sf_dir: str) -> DataFrame:
     proves the folded state — not just a read over it — is right."""
     from kamu_engine_datafusion_spark.operators.clustering import (
         centroid_stats,
+        centroid_stats_merge,
     )
 
     t = load(spark, sf_dir, "embeddings")
@@ -5644,26 +5454,7 @@ def q_xcentroid_stats_state(spark: SparkSession, sf_dir: str) -> DataFrame:
             emb.filter(F.col("vec_id") % 3 == i),
             "grp", "vec_id", "embedding", dim,
         )
-        if state is None:
-            state = inc
-        else:
-            state = (
-                inc.unionByName(state.select("grp", "n", "sv", "ss"))
-                .groupBy("grp")
-                .agg(
-                    F.sum("n").cast("long").alias("n"),
-                    F.aggregate(
-                        F.collect_list("sv"),
-                        F.array(
-                            *[F.lit(0).cast("long") for _ in range(dim)]
-                        ),
-                        lambda acc, v: F.zip_with(
-                            acc, v, lambda a, b: a + b
-                        ),
-                    ).alias("sv"),
-                    F.sum("ss").cast("long").alias("ss"),
-                )
-            )
+        state = centroid_stats_merge(state, inc, dim)
     return state.select(
         "grp",
         "n",
@@ -5695,13 +5486,7 @@ def q_xlm_counts_state(spark: SparkSession, sf_dir: str) -> DataFrame:
     counts = None
     for i in range(3):
         inc = lm_ngram_counts(ref.filter(F.col("doc_id") % 3 == i))
-        counts = (
-            inc
-            if counts is None
-            else inc.unionByName(counts)
-            .groupBy("n", "w1", "w2", "w3")
-            .agg(F.sum("c").cast("long").alias("c"))
-        )
+        counts = sum_merge(counts, inc, ["n", "w1", "w2", "w3"])
     return counts
 
 
@@ -5786,16 +5571,8 @@ def q_xppmi_drift(spark: SparkSession, sf_dir: str) -> DataFrame:
             ref_top, cur_top, tk, jaccard_alarm=0.5
         )
         out = row if out is None else out.unionByName(row)
-        pairs_st = (
-            cur_p.unionByName(pairs_st)
-            .groupBy("w1", "w2")
-            .agg(F.sum("c").cast("long").alias("c"))
-        )
-        unis_st = (
-            cur_u.unionByName(unis_st)
-            .groupBy("token")
-            .agg(F.sum("freq").cast("long").alias("freq"))
-        )
+        pairs_st = sum_merge(pairs_st, cur_p, ["w1", "w2"])
+        unis_st = sum_merge(unis_st, cur_u, ["token"])
     return out
 
 
@@ -5841,15 +5618,7 @@ def q_xsession_rates_gate(
         inc = quality_rule_counts(
             d.filter(F.col("doc_id") % 3 == i), "source"
         )
-        if state is None:
-            state = inc
-        else:
-            csum = [
-                F.sum(c).cast("long").alias(c)
-                for c in inc.columns
-                if c != "grp"
-            ]
-            state = inc.unionByName(state).groupBy("grp").agg(*csum)
+        state = sum_merge(state, inc, ["grp"])
     rates = quality_rates_from_counts(_ckpt_state(state), dp=4).select(
         "grp", "rate_pass_all"
     )
@@ -5919,19 +5688,7 @@ def q_xhybrid_freshness(spark: SparkSession, sf_dir: str) -> DataFrame:
             pinc if postings is None else postings.unionByName(pinc)
         )
         sinc = term_stats_increment(tick)
-        if stats is None:
-            stats = sinc
-        else:
-            stats = (
-                stats.unionByName(sinc)
-                .groupBy("term")
-                .agg(
-                    F.sum("df").cast("long").alias("df"),
-                    F.sum("n_docs").cast("long").alias("n_docs"),
-                    F.sum("tot_len").cast("long").alias("tot_len"),
-                    F.sum("n_len").cast("long").alias("n_len"),
-                )
-            )
+        stats = sum_merge(stats, sinc, ["term"])
     sparse = bm25_topk_from_postings(
         postings, stats, _BM25_TERMS, k=50, dp=6
     ).select("doc_id", "score")

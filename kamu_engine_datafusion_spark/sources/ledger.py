@@ -15,7 +15,8 @@ Spark-first notes:
   reads that same footer on the driver and looks Spark's own answer for
   it up in a process-wide cache, so a request runs one job: its write.
   Multi-file reads, partition parallelism and row-group pruning are
-  unchanged.
+  unchanged. :func:`read_ledger_schema` gives a whole ledger directory
+  its schema the same way, for the streaming folds that must pin one.
 - The offset filter is an ordinary Catalyst predicate → pushed to the
   Parquet scan; with ledger files written in offset order, row-group
   min/max statistics prune whole files/row groups, which is exactly the
@@ -142,13 +143,47 @@ def read_parquet_ledger(
     return read_parquet(spark, paths)
 
 
-def read_ledger_schema(spark: SparkSession, schema_file: str):
-    """A2: introspect the ledger schema from a schema file's footer.
+def _listed_by_spark(name: str) -> bool:
+    """Whether Spark's file index lists a directory entry: hidden
+    (``_``/``.``) and in-flight copies are skipped, except partition
+    directories (``_x=1``) and Parquet summary files."""
+    hidden = (
+        (name.startswith("_") and "=" not in name)
+        or name.startswith(".")
+        or name.endswith("._COPYING_")
+    )
+    return not hidden or name.startswith(("_common_metadata", "_metadata"))
 
-    Reference reads the raw Parquet footer (``src/engine.rs:198-211``);
-    :func:`read_parquet` reads the same footer, with Spark's types.
+
+def read_ledger_schema(spark: SparkSession, ledger_dir: str) -> StructType:
+    """A2: the schema ``spark.read.parquet(ledger_dir)`` infers, without
+    the inference job.
+
+    The reference reads the raw Parquet footer
+    (``src/engine.rs:198-211``). Spark infers a directory's schema from
+    its first listed leaf file by path, so :func:`read_parquet` over the
+    directory's listed top-level ``*.parquet`` files reads that same
+    footer on the driver. Anything Spark would list differently — a
+    partition subdirectory, a summary file, a listed file of another
+    kind — and a missing, relative, URI or glob directory get the plain
+    read, which also raises, as ever, for a directory with nothing to
+    infer from.
     """
-    return read_parquet(spark, [schema_file]).schema
+    names = (
+        os.listdir(ledger_dir)
+        if os.path.isabs(ledger_dir)
+        and os.path.isdir(ledger_dir)
+        and not _GLOB_CHARS.intersection(ledger_dir)
+        else []
+    )
+    files = [
+        os.path.join(ledger_dir, n) for n in names if _listed_by_spark(n)
+    ]
+    if files and all(
+        f.endswith(".parquet") and _is_plain_file(f) for f in files
+    ):
+        return read_parquet(spark, files).schema
+    return spark.read.parquet(ledger_dir).schema
 
 
 def empty_ledger(spark: SparkSession, schema_file: str) -> DataFrame:

@@ -1,32 +1,62 @@
-"""Structured Streaming equivalents for continuous sources.
+"""Structured Streaming over ODF ledgers: continuous sources and
+maintained state.
 
 The ODF parity layer needs only incremental batch (see
-``streaming/incremental.py``), but a Spark-native engine should also run
-the same transforms against continuous sources. These helpers wire the
-engine's semantics into ``readStream``/``writeStream``:
+``streaming/incremental.py``); this module runs the engine's semantics
+against continuous sources.
 
-- :func:`ledger_stream` — stream a ledger directory as new part files
-  arrive (file-source micro-batches ≅ coordinator ticks).
-- :func:`windowed_event_counts` — watermarked tumbling-window
-  aggregation over an event-time column (late data handled by Spark
-  state eviction, the piece the reference defers to Flink).
-- :func:`streaming_dedup` — stateful exact dedup across micro-batches
-  (``dropDuplicates`` with a watermark bounds state).
+Streams:
+
+- :func:`ledger_stream` — a ledger directory as a file stream, one part
+  file per micro-batch (≅ one coordinator tick).
+- :func:`windowed_event_counts`, :func:`session_window_counts` —
+  watermarked tumbling- and session-window counts (late data handled by
+  Spark state eviction, the piece the reference defers to Flink).
+- :func:`hll_register_stream` — per-group HyperLogLog registers.
+- :func:`streaming_dedup` — exact dedup with watermark-bounded state.
 - :func:`stream_interval_join` — watermarked stream-stream join with a
   two-sided time bound so both state stores expire.
-- :func:`streaming_dedup_against_index` — continuous-ingestion
-  near-dedup: each micro-batch dedupes against the persisted MinHash
-  index; state lives in the index files, not the state store.
-- :func:`run_to_memory` — drive any streaming DF to completion against
-  currently-available data and return the collected result (test/CI
-  harness; uses availableNow + memory sink).
-"""
+- :func:`stream_to_ledger` — any stream into an ODF ledger through the
+  engine's ingest path, exactly once (:func:`make_ledger_sink`).
+- :func:`streaming_dedup_against_index` — near-dedup of each
+  micro-batch against a persisted MinHash index.
+- :func:`run_to_memory` — run a stream over the data available now into
+  a memory table (test harness).
 
+Maintained state: each ``maintained_*`` fold keeps a state directory
+equal to a batch operator over the whole ledger, at a per-tick cost of
+O(increment + touched state).
+
+- :func:`fold_stream` is their one driver: it starts the availableNow
+  file stream over the ledger directory, its schema read from a footer
+  rather than by an inference job, and hands every micro-batch to the
+  fold.
+- :func:`_fold_buckets` (rewrite) and :func:`_fold_buckets_append`
+  (append-only) stage the buckets a tick touches and commit them through
+  the intent protocol described above them, so a replayed micro-batch
+  folds exactly once.
+- The merge laws live in ``operators/``: integer counters fold with
+  ``operators.changelog.sum_merge``, and sketches, samples, snapshots
+  and dedup indexes with their operator's own merge. The registry's
+  multi-tick keys call the same laws.
+- Folds: view (signed changelog aggregates), snapshot, distinct,
+  countmin, centroid_stats, lm_counts, activity, funnel, debounce,
+  transitions, sessions, asof_state, intervals, postings,
+  quality_rates, term_counts, cap, group_counts, pair_counts,
+  ngram_set, moments, dsir_stats, quantile_sketch, kmv, histogram,
+  corpus_card, weighted_sample, components, term_stats, phash_index,
+  minhash_index, semdedup_index, bloom.
+- ``read_*`` functions serve the live views; :func:`compact_state` and
+  :func:`compact_state_if_needed` bound the files per bucket between
+  ticks.
+"""
 from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
+
+from kamu_engine_datafusion_spark.operators.changelog import sum_merge
 
 
 def ledger_stream(
@@ -186,6 +216,41 @@ def run_to_memory(
     return spark.table(name)
 
 
+def fold_stream(
+    spark: SparkSession | None,
+    ledger_dir: str,
+    checkpoint_dir: str,
+    fold,
+    schema: T.StructType | None = None,
+):
+    """Start the availableNow query that runs ``fold(batch_df,
+    batch_id)`` on every micro-batch of the ledger directory's part
+    files — the one driver behind every ``maintained_*`` fold. Returns
+    the started ``StreamingQuery``.
+
+    A file stream needs its schema pinned. Without ``schema`` it comes
+    from :func:`~kamu_engine_datafusion_spark.sources.ledger.
+    read_ledger_schema`, which reads the footer Spark's directory
+    inference would read, so starting a fold runs no inference job."""
+    from kamu_engine_datafusion_spark.sources.ledger import read_ledger_schema
+
+    spark = spark or SparkSession.getActiveSession()
+    stream = spark.readStream.schema(
+        schema or read_ledger_schema(spark, ledger_dir)
+    ).parquet(ledger_dir)
+    return _start_fold(stream, checkpoint_dir, fold)
+
+
+def _start_fold(stream: DataFrame, checkpoint_dir: str | None, fold):
+    """Run ``fold`` on each micro-batch of ``stream`` over the data
+    available now; the query checkpoints to ``checkpoint_dir`` when one
+    is given."""
+    writer = stream.writeStream.foreachBatch(fold).trigger(availableNow=True)
+    if checkpoint_dir:
+        writer = writer.option("checkpointLocation", checkpoint_dir)
+    return writer.start()
+
+
 def make_ledger_sink(ledger_dir: str, system_time_fn=None, vocab=None):
     """Build the exactly-once ``foreachBatch`` ledger sink.
 
@@ -282,12 +347,11 @@ def stream_to_ledger(
     re-ingest (see :func:`make_ledger_sink`) — the ledger's dense-offset
     contract survives crash/restart at any point.
     """
-    writer = stream_df.writeStream.foreachBatch(
-        make_ledger_sink(ledger_dir, system_time_fn, vocab)
-    ).trigger(availableNow=True)
-    if checkpoint_dir:
-        writer = writer.option("checkpointLocation", checkpoint_dir)
-    return writer.start()
+    return _start_fold(
+        stream_df,
+        checkpoint_dir,
+        make_ledger_sink(ledger_dir, system_time_fn, vocab),
+    )
 
 
 def streaming_dedup_against_index(
@@ -348,69 +412,34 @@ def streaming_dedup_against_index(
         new_rows.write.mode("append").parquet(index_dir)
         DEDUP_LEDGER.release()
 
-    return (
-        stream.writeStream.foreachBatch(_tick)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-    )
+    return _start_fold(stream, checkpoint_dir, _tick)
 
 
 #: Marker file carrying the last-folded micro-batch id INSIDE the
 #: state directory (underscore prefix → invisible to parquet readers),
-#: so it swaps atomically with the state it describes.
+#: rewritten atomically after each tick's buckets are applied.
 _BATCH_MARKER = "_folded_batch_id"
 
 
-def _write_batch_marker(state_dir: str, batch_id: int) -> None:
-    import os
-
-    with open(os.path.join(state_dir, _BATCH_MARKER), "w") as f:
-        f.write(str(batch_id))
-
-
 def _last_folded_batch(state_dir: str) -> int:
+    """The id of the last micro-batch folded into ``state_dir``, −1 when
+    nothing has been folded yet. A marker that exists but does not hold
+    a batch id raises: reading it as "nothing folded" would fold a
+    replayed batch a second time."""
     import os
 
+    path = os.path.join(state_dir, _BATCH_MARKER)
     try:
-        with open(os.path.join(state_dir, _BATCH_MARKER)) as f:
-            return int(f.read().strip())
-    except Exception:
+        with open(path) as f:
+            text = f.read()
+    except FileNotFoundError:
         return -1
-
-
-def _recover_state(state_dir: str) -> None:
-    """Heal a crash that interrupted the two-rename state swap.
-
-    The swap is ``os.replace(state_dir, old)`` then
-    ``os.replace(next, state_dir)``; a crash BETWEEN the two leaves no
-    ``state_dir`` at all, so a naive replay would fold the batch into
-    an EMPTY state and silently drop all prior view state. Recovery
-    rules (run before every fold):
-
-    - ``state_dir`` missing + ``state_dir.next`` carries a batch
-      marker → the fold had fully materialized the new state (the
-      marker is written only after the parquet write completes):
-      promote ``.next`` and drop ``.old``.
-    - ``state_dir`` missing + no promotable ``.next`` but ``.old``
-      exists → the crash hit after the first rename with an
-      incomplete ``.next``: restore ``.old`` so the replay folds
-      against the pre-crash state.
-    - ``state_dir`` present → nothing to heal (a stale ``.next``
-      without a marker is an incomplete write the replay will simply
-      overwrite).
-    """
-    import os
-    import shutil
-
-    if os.path.isdir(state_dir):
-        return
-    nxt, old = state_dir + ".next", state_dir + ".old"
-    if os.path.isdir(nxt) and os.path.isfile(os.path.join(nxt, _BATCH_MARKER)):
-        os.replace(nxt, state_dir)
-        shutil.rmtree(old, ignore_errors=True)
-    elif os.path.isdir(old):
-        os.replace(old, state_dir)
+    try:
+        return int(text.strip())
+    except ValueError:
+        raise ValueError(
+            f"fold marker {path} holds {text!r}, not a batch id"
+        ) from None
 
 
 # ---------------------------------------------------------------------------
@@ -420,11 +449,9 @@ def _recover_state(state_dir: str) -> None:
 # (``__bucket = pmod(xxhash64(keys…), N)``) and a tick rewrites ONLY the
 # buckets its increment touches — the O(increment) claim made physical:
 # an untouched bucket's parquet files are not read, not rewritten, not
-# even re-linked (byte-identity pinned by pytest). The whole-directory
-# swap of the pre-round-7 protocol rewrote the full state through
-# ``coalesce(1)`` every tick — fine while state is group-sized, wrong
-# for a corpus-keyed snapshot where every tick became O(total keys)
-# through one writer.
+# even re-linked (byte-identity pinned by pytest). Rewriting the whole
+# state every tick would make a corpus-keyed snapshot O(total keys) per
+# tick through one writer.
 #
 # Crash safety (exactly-once under foreachBatch's at-least-once replay):
 #   1. touched buckets are staged under ``state.next/__bucket=i/``;
@@ -442,7 +469,8 @@ def _recover_state(state_dir: str) -> None:
 # Single-writer discipline assumed, like the ledger sink.
 # ---------------------------------------------------------------------------
 
-#: Commit-point file inside the staging dir: JSON {batch_id, apply, drop}.
+#: Commit-point file inside the staging dir: JSON {batch_id, apply, drop},
+#: plus the files to move in (``append``) for an append fold.
 _INTENT = "_intent"
 
 #: Hive partition column carrying the key bucket. The ``__`` prefix is
@@ -465,9 +493,8 @@ def _bucket_of(key_cols: list[str], n: int):
 
 
 def _write_root_marker(state_dir: str, batch_id: int) -> None:
-    """Atomic marker update on a LIVE state root (tmp + rename) — the
-    pre-bucketed protocol wrote the marker into a staging dir before a
-    whole-dir swap; here the root stays in place across ticks."""
+    """Atomic marker update on the live state root (tmp + rename); the
+    root stays in place across ticks."""
     import os
 
     tmp = os.path.join(state_dir, _BATCH_MARKER + ".tmp")
@@ -480,24 +507,38 @@ def _stage_dir(state_dir: str) -> str:
     return state_dir + ".next"
 
 
-def _write_intent(state_dir: str, batch_id: int, apply: list[int], drop: list[int]) -> None:
+def _write_intent(
+    state_dir: str,
+    batch_id: int,
+    apply: list[int],
+    drop: list[int],
+    append: list[list[str]] | None = None,
+) -> None:
     import json
     import os
 
     stage = _stage_dir(state_dir)
     tmp = os.path.join(stage, _INTENT + ".tmp")
+    intent = {"batch_id": batch_id, "apply": apply, "drop": drop}
+    if append:
+        intent["append"] = append
     with open(tmp, "w") as f:
-        f.write(json.dumps({"batch_id": batch_id, "apply": apply, "drop": drop}))
+        f.write(json.dumps(intent))
     os.replace(tmp, os.path.join(stage, _INTENT))
 
 
 def _apply_intent(state_dir: str) -> None:
     """Idempotently apply a committed staging dir to the live root.
 
-    Safe to re-run from any crash point: an already-applied bucket's
-    staging dir no longer exists (``os.replace`` moved it) so it is
-    skipped; ``drop`` buckets are removed with an idempotent rmtree;
-    the marker rewrite and staging cleanup are last.
+    A rewrite fold's intent names whole buckets to move in (``apply``)
+    and to remove (``drop``); an append fold's names files to move into
+    the live bucket dirs (``append``: ``[staged, live]`` relative
+    paths). Safe to re-run from any crash point: an already-applied
+    bucket dir or file no longer exists in staging (``os.replace``
+    moved it) so it is skipped, destination names are deterministic so
+    a re-run cannot double-append, and ``drop`` buckets are removed
+    with an idempotent rmtree; the marker rewrite and staging cleanup
+    are last.
     """
     import json
     import os
@@ -509,21 +550,57 @@ def _apply_intent(state_dir: str) -> None:
         return
     with open(intent_path) as f:
         intent = json.loads(f.read())
-    if "append" in intent:
-        return  # an append-fold intent: _apply_append_intent owns it
     os.makedirs(state_dir, exist_ok=True)
-    for b in intent["apply"]:
+    for src_rel, dst_rel in intent.get("append", []):
+        src = os.path.join(stage, src_rel)
+        dst = os.path.join(state_dir, dst_rel)
+        if os.path.isfile(src):
+            os.makedirs(os.path.dirname(dst), exist_ok=True)
+            os.replace(src, dst)
+    for b in intent.get("apply", []):
         src = os.path.join(stage, f"{_BUCKET_COL}={b}")
         dst = os.path.join(state_dir, f"{_BUCKET_COL}={b}")
         if os.path.isdir(src):
             shutil.rmtree(dst, ignore_errors=True)
             os.replace(src, dst)
-    for b in intent["drop"]:
+    for b in intent.get("drop", []):
         shutil.rmtree(
             os.path.join(state_dir, f"{_BUCKET_COL}={b}"), ignore_errors=True
         )
     _write_root_marker(state_dir, intent["batch_id"])
     shutil.rmtree(stage, ignore_errors=True)
+
+
+def _touched_state(
+    batch_df: DataFrame,
+    state_dir: str,
+    key_cols: list[str],
+    n_buckets: int,
+    read_state: bool = True,
+):
+    """``(touched, state_subset)``: the sorted state buckets
+    ``batch_df``'s keys hash to, and the stored rows of exactly those
+    buckets without the bucket column — a partition-pruned scan, so
+    untouched bucket files are never read. ``state_subset`` is None
+    when no touched bucket holds state or ``read_state`` is false."""
+    import os
+
+    touched = sorted(
+        int(r[0])
+        for r in batch_df.select(_bucket_of(key_cols, n_buckets))
+        .distinct()
+        .collect()
+    )
+    if not read_state or not any(
+        os.path.isdir(os.path.join(state_dir, f"{_BUCKET_COL}={b}"))
+        for b in touched
+    ):
+        return touched, None
+    return touched, (
+        batch_df.sparkSession.read.parquet(state_dir)
+        .filter(F.col(_BUCKET_COL).isin(touched))
+        .drop(_BUCKET_COL)
+    )
 
 
 def _fold_buckets_append(
@@ -548,35 +625,19 @@ def _fold_buckets_append(
     bucket). Exactly-once: replayed batches skip on the root marker;
     a crash mid-move re-applies idempotently (deterministic dst names,
     ``os.replace`` per file, already-moved sources are gone)."""
-    import json
     import os
     import shutil
 
     _apply_intent(state_dir)  # heal any interrupted prior tick first
-    _apply_append_intent(state_dir)
     if _last_folded_batch(state_dir) >= batch_id:
         return  # crash-replayed batch: already folded into state
-    sess = batch_df.sparkSession
-    bucket = _bucket_of(key_cols, n_buckets)
-    touched = sorted(
-        r[0]
-        for r in batch_df.select(bucket.alias(_BUCKET_COL)).distinct().collect()
+    touched, state_subset = _touched_state(
+        batch_df, state_dir, key_cols, n_buckets, read_state
     )
     if not touched:  # empty increment: just advance the marker
         os.makedirs(state_dir, exist_ok=True)
         _write_root_marker(state_dir, batch_id)
         return
-    state_subset = None
-    have_state = read_state and any(
-        os.path.isdir(os.path.join(state_dir, f"{_BUCKET_COL}={b}"))
-        for b in touched
-    )
-    if have_state:
-        state_subset = (
-            sess.read.parquet(state_dir)
-            .filter(F.col(_BUCKET_COL).isin([int(b) for b in touched]))
-            .drop(_BUCKET_COL)
-        )
     new_rows = new_rows_fn(state_subset, batch_df)
     stage = _stage_dir(state_dir)
     shutil.rmtree(stage, ignore_errors=True)  # stale uncommitted staging
@@ -612,42 +673,8 @@ def _fold_buckets_append(
             ]
             for i, f in enumerate(files)
         )
-    tmp = os.path.join(stage, _INTENT + ".tmp")
-    with open(tmp, "w") as f:
-        f.write(
-            json.dumps(
-                {"batch_id": batch_id, "append": moves, "apply": [], "drop": []}
-            )
-        )
-    os.replace(tmp, os.path.join(stage, _INTENT))  # commit point
-    _apply_append_intent(state_dir)
-
-
-def _apply_append_intent(state_dir: str) -> None:
-    """Idempotently move a committed append staging's files into the
-    live bucket dirs. Re-runnable from any crash point: an
-    already-moved file's source is gone (skipped), destination names
-    are deterministic so a re-run cannot double-append."""
-    import json
-    import os
-    import shutil
-
-    stage = _stage_dir(state_dir)
-    intent_path = os.path.join(stage, _INTENT)
-    if not os.path.isfile(intent_path):
-        return
-    with open(intent_path) as f:
-        intent = json.loads(f.read())
-    if "append" not in intent:
-        return  # a rewrite-fold intent: _apply_intent owns it
-    for src_rel, dst_rel in intent["append"]:
-        src = os.path.join(stage, src_rel)
-        dst = os.path.join(state_dir, dst_rel)
-        if os.path.isfile(src):
-            os.makedirs(os.path.dirname(dst), exist_ok=True)
-            os.replace(src, dst)
-    _write_root_marker(state_dir, intent["batch_id"])
-    shutil.rmtree(stage, ignore_errors=True)
+    _write_intent(state_dir, batch_id, [], [], moves)  # commit point
+    _apply_intent(state_dir)
 
 
 def _fold_buckets(
@@ -684,27 +711,13 @@ def _fold_buckets(
     _apply_intent(state_dir)  # heal any interrupted prior tick first
     if _last_folded_batch(state_dir) >= batch_id:
         return  # crash-replayed batch: already folded into state
-    sess = batch_df.sparkSession
-    bucket = _bucket_of(key_cols, n_buckets)
-    touched = sorted(
-        r[0]
-        for r in batch_df.select(bucket.alias(_BUCKET_COL)).distinct().collect()
+    touched, state_subset = _touched_state(
+        batch_df, state_dir, key_cols, n_buckets
     )
     if not touched:  # empty increment: just advance the marker
         os.makedirs(state_dir, exist_ok=True)
         _write_root_marker(state_dir, batch_id)
         return
-    state_subset = None
-    have_state = any(
-        os.path.isdir(os.path.join(state_dir, f"{_BUCKET_COL}={b}"))
-        for b in touched
-    )
-    if have_state:
-        state_subset = (
-            sess.read.parquet(state_dir)
-            .filter(F.col(_BUCKET_COL).isin([int(b) for b in touched]))
-            .drop(_BUCKET_COL)
-        )
     merged = merge_fn(state_subset, batch_df)
     stage = _stage_dir(state_dir)
     shutil.rmtree(stage, ignore_errors=True)  # stale uncommitted staging
@@ -777,7 +790,6 @@ def compact_state(
     # healing is uncommitted (intent-less) garbage from a crash before
     # the commit point and is discarded like the folds discard it
     _apply_intent(state_dir)
-    _apply_append_intent(state_dir)
     shutil.rmtree(_stage_dir(state_dir), ignore_errors=True)
     if not os.path.isdir(state_dir):
         return {"buckets_compacted": 0, "files_before": 0, "files_after": 0}
@@ -930,13 +942,6 @@ def maintained_view(
         merge_changelog_aggs,
     )
 
-    spark = spark or SparkSession.getActiveSession()
-    stream = (
-        spark.readStream.schema(
-            schema or spark.read.parquet(ledger_dir).schema
-        ).parquet(ledger_dir)
-    )
-
     def _merge(state_subset, batch_df):
         inc = changelog_agg(
             batch_df, group_cols, sum_cols, keep_dead_groups=True
@@ -950,12 +955,7 @@ def maintained_view(
             batch_df, batch_id, state_dir, group_cols, state_buckets, _merge
         )
 
-    return (
-        stream.writeStream.foreachBatch(_fold)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-    )
+    return fold_stream(spark, ledger_dir, checkpoint_dir, _fold, schema)
 
 
 def maintained_snapshot(
@@ -994,12 +994,6 @@ def maintained_snapshot(
         [primary_key] if isinstance(primary_key, str) else list(primary_key)
     )
     off = vocab.offset_column
-    spark = spark or SparkSession.getActiveSession()
-    stream = (
-        spark.readStream.schema(
-            schema or spark.read.parquet(ledger_dir).schema
-        ).parquet(ledger_dir)
-    )
 
     from pyspark.sql import Window
 
@@ -1019,12 +1013,7 @@ def maintained_snapshot(
             batch_df, batch_id, state_dir, keys, state_buckets, _merge
         )
 
-    return (
-        stream.writeStream.foreachBatch(_fold)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-    )
+    return fold_stream(spark, ledger_dir, checkpoint_dir, _fold, schema)
 
 
 def maintained_distinct(
@@ -1046,7 +1035,7 @@ def maintained_distinct(
     group (binary column), and the fold is ``hll_union_agg`` over
     state ∪ increment — per-tick cost O(increment + |groups|), state
     size |groups| × sketch bytes, error the usual HLL ~1-2%.
-    Exactly-once under crash-replay via the swapped-in batch-id marker.
+    Exactly-once under crash-replay via the bucketed intent/apply protocol.
 
     Retractions are NOT supported (sketches are insert-only — a
     retracted value cannot leave the sketch); feed the live/append
@@ -1056,12 +1045,6 @@ def maintained_distinct(
     maintained folds: a tick unions the increment's sketches with the
     TOUCHED buckets' stored sketches only.
     """
-    spark = spark or SparkSession.getActiveSession()
-    stream = (
-        spark.readStream.schema(
-            schema or spark.read.parquet(ledger_dir).schema
-        ).parquet(ledger_dir)
-    )
 
     def _merge(state_subset, batch_df):
         inc = batch_df.groupBy(*group_cols).agg(
@@ -1080,12 +1063,7 @@ def maintained_distinct(
             batch_df, batch_id, state_dir, group_cols, state_buckets, _merge
         )
 
-    return (
-        stream.writeStream.foreachBatch(_fold)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-    )
+    return fold_stream(spark, ledger_dir, checkpoint_dir, _fold, schema)
 
 
 def maintained_countmin(
@@ -1120,22 +1098,6 @@ def maintained_countmin(
     """
     from kamu_engine_datafusion_spark.operators.sketches import cm_counters
 
-    spark = spark or SparkSession.getActiveSession()
-    stream = (
-        spark.readStream.schema(
-            schema or spark.read.parquet(ledger_dir).schema
-        ).parquet(ledger_dir)
-    )
-
-    def _merge(state_subset, inc_grid):
-        if state_subset is None:
-            return inc_grid
-        return (
-            state_subset.unionByName(inc_grid)
-            .groupBy("i", "bucket")
-            .agg(F.sum("c").cast("long").alias("c"))
-        )
-
     def _fold(batch_df: DataFrame, batch_id: int) -> None:
         # the grid's own keys (i, bucket) don't exist on raw ledger
         # rows, so reduce the increment to its grid FIRST and bucket
@@ -1158,15 +1120,10 @@ def maintained_countmin(
             state_dir,
             ["i", "bucket"],
             state_buckets,
-            _merge,
+            lambda state, inc: sum_merge(state, inc, ["i", "bucket"]),
         )
 
-    return (
-        stream.writeStream.foreachBatch(_fold)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-    )
+    return fold_stream(spark, ledger_dir, checkpoint_dir, _fold, schema)
 
 
 def maintained_centroid_stats(
@@ -1196,28 +1153,8 @@ def maintained_centroid_stats(
     Retractions unsupported; feed the append/live stream."""
     from kamu_engine_datafusion_spark.operators.clustering import (
         centroid_stats,
+        centroid_stats_merge,
     )
-
-    spark = spark or SparkSession.getActiveSession()
-    stream = (
-        spark.readStream.schema(
-            schema or spark.read.parquet(ledger_dir).schema
-        ).parquet(ledger_dir)
-    )
-
-    def _merge(state_subset, inc_stats):
-        if state_subset is None:
-            return inc_stats
-        u = inc_stats.unionByName(state_subset.select("grp", "n", "sv", "ss"))
-        return u.groupBy("grp").agg(
-            F.sum("n").cast("long").alias("n"),
-            F.aggregate(
-                F.collect_list("sv"),
-                F.array(*[F.lit(0).cast("long") for _ in range(dim)]),
-                lambda acc, v: F.zip_with(acc, v, lambda a, b: a + b),
-            ).alias("sv"),
-            F.sum("ss").cast("long").alias("ss"),
-        )
 
     def _fold(batch_df: DataFrame, batch_id: int) -> None:
         # the group key exists only after the stats aggregate — reduce
@@ -1228,15 +1165,10 @@ def maintained_centroid_stats(
             state_dir,
             ["grp"],
             state_buckets,
-            _merge,
+            lambda state, inc: centroid_stats_merge(state, inc, dim),
         )
 
-    return (
-        stream.writeStream.foreachBatch(_fold)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-    )
+    return fold_stream(spark, ledger_dir, checkpoint_dir, _fold, schema)
 
 
 def maintained_lm_counts(
@@ -1264,24 +1196,6 @@ def maintained_lm_counts(
         lm_ngram_counts,
     )
 
-    spark = spark or SparkSession.getActiveSession()
-    stream = (
-        spark.readStream.schema(
-            schema or spark.read.parquet(ledger_dir).schema
-        ).parquet(ledger_dir)
-    )
-
-    def _merge(state_subset, inc_counts):
-        if state_subset is None:
-            return inc_counts
-        return (
-            inc_counts.unionByName(
-                state_subset.select("n", "w1", "w2", "w3", "c")
-            )
-            .groupBy("n", "w1", "w2", "w3")
-            .agg(F.sum("c").cast("long").alias("c"))
-        )
-
     def _fold(batch_df: DataFrame, batch_id: int) -> None:
         # the n-gram key doesn't exist on raw ledger rows — reduce the
         # increment to its count rows FIRST (the maintained_countmin
@@ -1292,15 +1206,10 @@ def maintained_lm_counts(
             state_dir,
             ["n", "w1", "w2", "w3"],
             state_buckets,
-            _merge,
+            lambda state, inc: sum_merge(state, inc, ["n", "w1", "w2", "w3"]),
         )
 
-    return (
-        stream.writeStream.foreachBatch(_fold)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-    )
+    return fold_stream(spark, ledger_dir, checkpoint_dir, _fold, schema)
 
 
 def maintained_activity(
@@ -1331,13 +1240,6 @@ def maintained_activity(
         activity_merge,
     )
 
-    spark = spark or SparkSession.getActiveSession()
-    stream = (
-        spark.readStream.schema(
-            schema or spark.read.parquet(ledger_dir).schema
-        ).parquet(ledger_dir)
-    )
-
     def _merge(state_subset, inc):
         if state_subset is None:
             return inc
@@ -1355,12 +1257,7 @@ def maintained_activity(
             _merge,
         )
 
-    return (
-        stream.writeStream.foreachBatch(_fold)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-    )
+    return fold_stream(spark, ledger_dir, checkpoint_dir, _fold, schema)
 
 
 def maintained_funnel(
@@ -1392,13 +1289,6 @@ def maintained_funnel(
         funnel_fold_increment,
     )
 
-    spark = spark or SparkSession.getActiveSession()
-    stream = (
-        spark.readStream.schema(
-            schema or spark.read.parquet(ledger_dir).schema
-        ).parquet(ledger_dir)
-    )
-
     def _fold(batch_df: DataFrame, batch_id: int) -> None:
         # only funnel-relevant events touch state; key the buckets on
         # the USER column of the filtered increment
@@ -1415,12 +1305,7 @@ def maintained_funnel(
             ),
         )
 
-    return (
-        stream.writeStream.foreachBatch(_fold)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-    )
+    return fold_stream(spark, ledger_dir, checkpoint_dir, _fold, schema)
 
 
 #: Sibling root of a maintained-debounce state dir holding the
@@ -1466,40 +1351,16 @@ def maintained_debounce(
     )
 
     group_cols = group_cols or ["user_id", "event_type"]
-    spark = spark or SparkSession.getActiveSession()
     kept_dir = state_dir + _KEPT_SUFFIX
-    stream = (
-        spark.readStream.schema(
-            schema or spark.read.parquet(ledger_dir).schema
-        ).parquet(ledger_dir)
-    )
 
     def _fold(batch_df: DataFrame, batch_id: int) -> None:
-        import os
-
-        sess = batch_df.sparkSession
-        _apply_append_intent(kept_dir)
+        _apply_intent(kept_dir)
         _apply_intent(state_dir)
         if _last_folded_batch(state_dir) >= batch_id:
             return
-        touched = [
-            int(r[0])
-            for r in batch_df.select(
-                _bucket_of(group_cols, state_buckets).alias("__b")
-            )
-            .distinct()
-            .collect()
-        ]
-        old_last = None
-        if any(
-            os.path.isdir(os.path.join(state_dir, f"{_BUCKET_COL}={b}"))
-            for b in touched
-        ):
-            old_last = (
-                sess.read.parquet(state_dir)
-                .filter(F.col(_BUCKET_COL).isin(touched))
-                .drop(_BUCKET_COL)
-            )
+        _, old_last = _touched_state(
+            batch_df, state_dir, group_cols, state_buckets
+        )
         kept, _ = debounce_increment(
             old_last, batch_df, time_col, gap_seconds, group_cols,
             order_tiebreak,
@@ -1527,12 +1388,7 @@ def maintained_debounce(
             )[1],
         )
 
-    return (
-        stream.writeStream.foreachBatch(_fold)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-    )
+    return fold_stream(spark, ledger_dir, checkpoint_dir, _fold, schema)
 
 
 def read_maintained_debounce(
@@ -1584,56 +1440,21 @@ def maintained_transitions(
         transitions_increment,
     )
 
-    spark = spark or SparkSession.getActiveSession()
     pairs_dir = state_dir + _PAIRS_SUFFIX
-    stream = (
-        spark.readStream.schema(
-            schema or spark.read.parquet(ledger_dir).schema
-        ).parquet(ledger_dir)
-    )
 
     def _fold(batch_df: DataFrame, batch_id: int) -> None:
-        import os
-
-        sess = batch_df.sparkSession
         _apply_intent(pairs_dir)
         _apply_intent(state_dir)
         if _last_folded_batch(state_dir) >= batch_id:
             return
-        touched = [
-            int(r[0])
-            for r in batch_df.select(
-                _bucket_of([user_col], state_buckets).alias("__b")
-            )
-            .distinct()
-            .collect()
-        ]
-        old_last = None
-        if any(
-            os.path.isdir(os.path.join(state_dir, f"{_BUCKET_COL}={b}"))
-            for b in touched
-        ):
-            old_last = (
-                sess.read.parquet(state_dir)
-                .filter(F.col(_BUCKET_COL).isin(touched))
-                .drop(_BUCKET_COL)
-            )
+        _, old_last = _touched_state(
+            batch_df, state_dir, [user_col], state_buckets
+        )
         pair_inc, _ = transitions_increment(
             old_last, batch_df, user_col, type_col, ts_col,
             order_tiebreak,
         )
         pair_inc = pair_inc.localCheckpoint(eager=True)
-
-        def _merge_pairs(state_subset, inc):
-            if state_subset is None:
-                return inc
-            return (
-                inc.unionByName(
-                    state_subset.select("from_type", "to_type", "n")
-                )
-                .groupBy("from_type", "to_type")
-                .agg(F.sum("n").cast("long").alias("n"))
-            )
 
         # pair counts FIRST (own marker; reads the OLD last state)
         _fold_buckets(
@@ -1642,7 +1463,7 @@ def maintained_transitions(
             pairs_dir,
             ["from_type", "to_type"],
             pair_buckets,
-            _merge_pairs,
+            lambda state, inc: sum_merge(state, inc, ["from_type", "to_type"]),
         )
         # last-event rewrite SECOND (authoritative marker); merge_fn
         # recomputes deterministically from the same old state + batch.
@@ -1660,12 +1481,7 @@ def maintained_transitions(
             )[1],
         )
 
-    return (
-        stream.writeStream.foreachBatch(_fold)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-    )
+    return fold_stream(spark, ledger_dir, checkpoint_dir, _fold, schema)
 
 
 def read_maintained_transitions(
@@ -1770,40 +1586,16 @@ def maintained_sessions(
         session_fold_increment,
     )
 
-    spark = spark or SparkSession.getActiveSession()
     closed_dir = state_dir + _CLOSED_SUFFIX
-    stream = (
-        spark.readStream.schema(
-            schema or spark.read.parquet(ledger_dir).schema
-        ).parquet(ledger_dir)
-    )
 
     def _fold(batch_df: DataFrame, batch_id: int) -> None:
-        import os
-
-        sess = batch_df.sparkSession
-        _apply_append_intent(closed_dir)
+        _apply_intent(closed_dir)
         _apply_intent(state_dir)
         if _last_folded_batch(state_dir) >= batch_id:
             return
-        touched = [
-            int(r[0])
-            for r in batch_df.select(
-                _bucket_of([user_col], state_buckets).alias("__b")
-            )
-            .distinct()
-            .collect()
-        ]
-        state_subset = None
-        if any(
-            os.path.isdir(os.path.join(state_dir, f"{_BUCKET_COL}={b}"))
-            for b in touched
-        ):
-            state_subset = (
-                sess.read.parquet(state_dir)
-                .filter(F.col(_BUCKET_COL).isin(touched))
-                .drop(_BUCKET_COL)
-            )
+        _, state_subset = _touched_state(
+            batch_df, state_dir, [user_col], state_buckets
+        )
         closed, _ = session_fold_increment(
             state_subset, batch_df, gap_sec, user_col, ts_col, id_col
         )
@@ -1831,12 +1623,7 @@ def maintained_sessions(
             )[1],
         )
 
-    return (
-        stream.writeStream.foreachBatch(_fold)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-    )
+    return fold_stream(spark, ledger_dir, checkpoint_dir, _fold, schema)
 
 
 def read_maintained_sessions(
@@ -1896,12 +1683,6 @@ def maintained_asof_state(
         asof_state_increment,
     )
 
-    spark = spark or SparkSession.getActiveSession()
-    stream = (
-        spark.readStream.schema(
-            schema or spark.read.parquet(ledger_dir).schema
-        ).parquet(ledger_dir)
-    )
     sel = [*key_cols, ts_col, *value_cols] + (
         [tiebreak_col] if tiebreak_col else []
     )
@@ -1921,12 +1702,7 @@ def maintained_asof_state(
             _merge,
         )
 
-    return (
-        stream.writeStream.foreachBatch(_fold)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-    )
+    return fold_stream(spark, ledger_dir, checkpoint_dir, _fold, schema)
 
 
 def read_asof_probe(
@@ -1998,12 +1774,6 @@ def maintained_intervals(
     )
 
     group_cols = group_cols or ["user_id"]
-    spark = spark or SparkSession.getActiveSession()
-    stream = (
-        spark.readStream.schema(
-            schema or spark.read.parquet(ledger_dir).schema
-        ).parquet(ledger_dir)
-    )
 
     def _merge(state_subset, inc):
         return intervals_increment(
@@ -2020,12 +1790,7 @@ def maintained_intervals(
             _merge,
         )
 
-    return (
-        stream.writeStream.foreachBatch(_fold)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-    )
+    return fold_stream(spark, ledger_dir, checkpoint_dir, _fold, schema)
 
 
 def maintained_postings(
@@ -2061,13 +1826,6 @@ def maintained_postings(
         postings_increment,
     )
 
-    spark = spark or SparkSession.getActiveSession()
-    stream = (
-        spark.readStream.schema(
-            schema or spark.read.parquet(ledger_dir).schema
-        ).parquet(ledger_dir)
-    )
-
     def _fold(batch_df: DataFrame, batch_id: int) -> None:
         _fold_buckets_append(
             postings_increment(batch_df, text_col, id_col),
@@ -2080,12 +1838,7 @@ def maintained_postings(
             sort_cols=["term"],
         )
 
-    return (
-        stream.writeStream.foreachBatch(_fold)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-    )
+    return fold_stream(spark, ledger_dir, checkpoint_dir, _fold, schema)
 
 
 def read_maintained_bm25_topk(
@@ -2162,23 +1915,6 @@ def maintained_quality_rates(
         quality_rule_counts,
     )
 
-    spark = spark or SparkSession.getActiveSession()
-    stream = (
-        spark.readStream.schema(
-            schema or spark.read.parquet(ledger_dir).schema
-        ).parquet(ledger_dir)
-    )
-
-    def _merge(state_subset, inc_counts):
-        if state_subset is None:
-            return inc_counts
-        cols = [c for c in inc_counts.columns if c != "grp"]
-        return (
-            inc_counts.unionByName(state_subset.select("grp", *cols))
-            .groupBy("grp")
-            .agg(*[F.sum(c).cast("long").alias(c) for c in cols])
-        )
-
     def _fold(batch_df: DataFrame, batch_id: int) -> None:
         # the group key exists only after the counters aggregate —
         # reduce the increment FIRST (the maintained_countmin pattern)
@@ -2188,15 +1924,10 @@ def maintained_quality_rates(
             state_dir,
             ["grp"],
             state_buckets,
-            _merge,
+            lambda state, inc: sum_merge(state, inc, ["grp"]),
         )
 
-    return (
-        stream.writeStream.foreachBatch(_fold)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-    )
+    return fold_stream(spark, ledger_dir, checkpoint_dir, _fold, schema)
 
 
 def maintained_term_counts(
@@ -2220,22 +1951,6 @@ def maintained_term_counts(
     Retractions unsupported; feed the append stream."""
     from kamu_engine_datafusion_spark.operators.text import term_counts
 
-    spark = spark or SparkSession.getActiveSession()
-    stream = (
-        spark.readStream.schema(
-            schema or spark.read.parquet(ledger_dir).schema
-        ).parquet(ledger_dir)
-    )
-
-    def _merge(state_subset, inc_counts):
-        if state_subset is None:
-            return inc_counts
-        return (
-            inc_counts.unionByName(state_subset.select("token", "freq"))
-            .groupBy("token")
-            .agg(F.sum("freq").cast("long").alias("freq"))
-        )
-
     def _fold(batch_df: DataFrame, batch_id: int) -> None:
         _fold_buckets(
             term_counts(batch_df, text_col),
@@ -2243,15 +1958,10 @@ def maintained_term_counts(
             state_dir,
             ["token"],
             state_buckets,
-            _merge,
+            lambda state, inc: sum_merge(state, inc, ["token"]),
         )
 
-    return (
-        stream.writeStream.foreachBatch(_fold)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-    )
+    return fold_stream(spark, ledger_dir, checkpoint_dir, _fold, schema)
 
 
 def maintained_cap(
@@ -2286,13 +1996,6 @@ def maintained_cap(
         cap_state_increment,
     )
 
-    spark = spark or SparkSession.getActiveSession()
-    stream = (
-        spark.readStream.schema(
-            schema or spark.read.parquet(ledger_dir).schema
-        ).parquet(ledger_dir)
-    )
-
     def _merge(state_subset, tick):
         return cap_state_increment(
             state_subset, tick, key_col, group_col, cap, salt, hash_fn
@@ -2308,12 +2011,7 @@ def maintained_cap(
             _merge,
         )
 
-    return (
-        stream.writeStream.foreachBatch(_fold)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-    )
+    return fold_stream(spark, ledger_dir, checkpoint_dir, _fold, schema)
 
 
 def maintained_group_counts(
@@ -2345,21 +2043,6 @@ def maintained_group_counts(
         raise ValueError(
             "maintained_group_counts: group_cols must be non-empty"
         )
-    spark = spark or SparkSession.getActiveSession()
-    stream = (
-        spark.readStream.schema(
-            schema or spark.read.parquet(ledger_dir).schema
-        ).parquet(ledger_dir)
-    )
-
-    def _merge(state_subset, inc):
-        if state_subset is None:
-            return inc
-        return (
-            inc.unionByName(state_subset.select(*group_cols, "n"))
-            .groupBy(*group_cols)
-            .agg(F.sum("n").cast("long").alias("n"))
-        )
 
     def _fold(batch_df: DataFrame, batch_id: int) -> None:
         _fold_buckets(
@@ -2370,15 +2053,10 @@ def maintained_group_counts(
             state_dir,
             group_cols,
             state_buckets,
-            _merge,
+            lambda state, inc: sum_merge(state, inc, group_cols),
         )
 
-    return (
-        stream.writeStream.foreachBatch(_fold)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-    )
+    return fold_stream(spark, ledger_dir, checkpoint_dir, _fold, schema)
 
 
 def maintained_pair_counts(
@@ -2405,22 +2083,6 @@ def maintained_pair_counts(
     the append stream."""
     from kamu_engine_datafusion_spark.operators.text import pair_counts
 
-    spark = spark or SparkSession.getActiveSession()
-    stream = (
-        spark.readStream.schema(
-            schema or spark.read.parquet(ledger_dir).schema
-        ).parquet(ledger_dir)
-    )
-
-    def _merge(state_subset, inc):
-        if state_subset is None:
-            return inc
-        return (
-            inc.unionByName(state_subset.select("w1", "w2", "c"))
-            .groupBy("w1", "w2")
-            .agg(F.sum("c").cast("long").alias("c"))
-        )
-
     def _fold(batch_df: DataFrame, batch_id: int) -> None:
         _fold_buckets(
             pair_counts(batch_df, text_col, window),
@@ -2428,15 +2090,10 @@ def maintained_pair_counts(
             state_dir,
             ["w1", "w2"],
             state_buckets,
-            _merge,
+            lambda state, inc: sum_merge(state, inc, ["w1", "w2"]),
         )
 
-    return (
-        stream.writeStream.foreachBatch(_fold)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-    )
+    return fold_stream(spark, ledger_dir, checkpoint_dir, _fold, schema)
 
 
 def maintained_ngram_set(
@@ -2465,13 +2122,6 @@ def maintained_ngram_set(
         word_ngrams_expr,
     )
 
-    spark = spark or SparkSession.getActiveSession()
-    stream = (
-        spark.readStream.schema(
-            schema or spark.read.parquet(ledger_dir).schema
-        ).parquet(ledger_dir)
-    )
-
     def _fold(batch_df: DataFrame, batch_id: int) -> None:
         # the bucket key is the n-gram, so the tick reduces to its
         # distinct n-gram frame FIRST (touched buckets derive from
@@ -2495,12 +2145,7 @@ def maintained_ngram_set(
             ),
         )
 
-    return (
-        stream.writeStream.foreachBatch(_fold)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-    )
+    return fold_stream(spark, ledger_dir, checkpoint_dir, _fold, schema)
 
 
 def maintained_moments(
@@ -2534,27 +2179,6 @@ def maintained_moments(
             "bucketed fold keys state by group; for a global scaler "
             "pass a constant group column"
         )
-    spark = spark or SparkSession.getActiveSession()
-    stream = (
-        spark.readStream.schema(
-            schema or spark.read.parquet(ledger_dir).schema
-        ).parquet(ledger_dir)
-    )
-
-    def _merge(state_subset, inc):
-        if state_subset is None:
-            return inc
-        return (
-            inc.unionByName(
-                state_subset.select(*group_cols, "n", "s1", "s2")
-            )
-            .groupBy(*group_cols)
-            .agg(
-                F.sum("n").cast("long").alias("n"),
-                F.sum("s1").cast("long").alias("s1"),
-                F.sum("s2").cast("long").alias("s2"),
-            )
-        )
 
     def _fold(batch_df: DataFrame, batch_id: int) -> None:
         _fold_buckets(
@@ -2563,15 +2187,10 @@ def maintained_moments(
             state_dir,
             group_cols,
             state_buckets,
-            _merge,
+            lambda state, inc: sum_merge(state, inc, group_cols),
         )
 
-    return (
-        stream.writeStream.foreachBatch(_fold)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-    )
+    return fold_stream(spark, ledger_dir, checkpoint_dir, _fold, schema)
 
 
 def read_maintained_ann_topk(
@@ -2886,22 +2505,6 @@ def maintained_dsir_stats(
         dsir_bucket_counts,
     )
 
-    spark = spark or SparkSession.getActiveSession()
-    stream = (
-        spark.readStream.schema(
-            schema or spark.read.parquet(ledger_dir).schema
-        ).parquet(ledger_dir)
-    )
-
-    def _merge(state_subset, inc_counts):
-        if state_subset is None:
-            return inc_counts
-        return (
-            inc_counts.unionByName(state_subset.select("b", "c"))
-            .groupBy("b")
-            .agg(F.sum("c").cast("long").alias("c"))
-        )
-
     def _fold(batch_df: DataFrame, batch_id: int) -> None:
         # the bucket key (b) doesn't exist on raw ledger rows — reduce
         # the increment to its ≤ buckets count rows FIRST (the
@@ -2912,15 +2515,10 @@ def maintained_dsir_stats(
             state_dir,
             ["b"],
             state_buckets,
-            _merge,
+            lambda state, inc: sum_merge(state, inc, ["b"]),
         )
 
-    return (
-        stream.writeStream.foreachBatch(_fold)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-    )
+    return fold_stream(spark, ledger_dir, checkpoint_dir, _fold, schema)
 
 
 def read_maintained_heavy_hitters(
@@ -2995,13 +2593,6 @@ def maintained_quantile_sketch(
         _qsk_retain,
     )
 
-    spark = spark or SparkSession.getActiveSession()
-    stream = (
-        spark.readStream.schema(
-            schema or spark.read.parquet(ledger_dir).schema
-        ).parquet(ledger_dir)
-    )
-
     def _merge(state_subset, batch_df):
         inc = _qsk_levels(
             batch_df, group_cols, id_col, val_col, hash_fn, "#qsk"
@@ -3022,12 +2613,7 @@ def maintained_quantile_sketch(
             batch_df, batch_id, state_dir, group_cols, state_buckets, _merge
         )
 
-    return (
-        stream.writeStream.foreachBatch(_fold)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-    )
+    return fold_stream(spark, ledger_dir, checkpoint_dir, _fold, schema)
 
 
 def maintained_kmv(
@@ -3059,13 +2645,6 @@ def maintained_kmv(
         kmv_sketch,
     )
 
-    spark = spark or SparkSession.getActiveSession()
-    stream = (
-        spark.readStream.schema(
-            schema or spark.read.parquet(ledger_dir).schema
-        ).parquet(ledger_dir)
-    )
-
     def _merge(state_subset, batch_df):
         inc = kmv_sketch(batch_df, [group_col], key_col, k, hash_fn)
         if state_subset is None:
@@ -3078,12 +2657,7 @@ def maintained_kmv(
             _merge,
         )
 
-    return (
-        stream.writeStream.foreachBatch(_fold)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-    )
+    return fold_stream(spark, ledger_dir, checkpoint_dir, _fold, schema)
 
 
 def maintained_histogram(
@@ -3114,22 +2688,6 @@ def maintained_histogram(
         histogram_fixed_grid,
     )
 
-    spark = spark or SparkSession.getActiveSession()
-    stream = (
-        spark.readStream.schema(
-            schema or spark.read.parquet(ledger_dir).schema
-        ).parquet(ledger_dir)
-    )
-
-    def _merge(state_subset, inc_hist):
-        if state_subset is None:
-            return inc_hist
-        return (
-            inc_hist.unionByName(state_subset.select("bin", "n"))
-            .groupBy("bin")
-            .agg(F.sum("n").cast("long").alias("n"))
-        )
-
     def _fold(batch_df: DataFrame, batch_id: int) -> None:
         # the grid key (bin) doesn't exist on raw ledger rows — reduce
         # the increment to its ≤ num_bins count rows FIRST and bucket
@@ -3140,15 +2698,10 @@ def maintained_histogram(
             state_dir,
             ["bin"],
             state_buckets,
-            _merge,
+            lambda state, inc: sum_merge(state, inc, ["bin"]),
         )
 
-    return (
-        stream.writeStream.foreachBatch(_fold)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-    )
+    return fold_stream(spark, ledger_dir, checkpoint_dir, _fold, schema)
 
 
 def read_maintained_psi(
@@ -3244,24 +2797,14 @@ def corpus_card_fold(
 
     if state_subset is None:
         return inc
-    u = state_subset.unionByName(inc)
-    scal = (
-        u.filter(F.col("kind") == "s")
-        .groupBy("grp", "kind")
-        .agg(
-            F.sum("n_docs").cast("long").alias("n_docs"),
-            F.sum("n_tokens").cast("long").alias("n_tokens"),
-            F.sum("n_short").cast("long").alias("n_short"),
-        )
-        .select(
-            "grp", "kind", F.lit(None).cast("long").alias("hv"),
-            "n_docs", "n_tokens", "n_short",
-        )
-    )
+
+    def rows(kind: str) -> list[DataFrame]:
+        return [d.filter(F.col("kind") == kind) for d in (state_subset, inc)]
+
+    # a scalars row's hv is NULL, so grouping on it keeps one row per grp
+    scal = sum_merge(*rows("s"), ["grp", "kind", "hv"])
     kmv = kmv_merge(
-        [u.filter(F.col("kind") == "k").select("grp", "hv")],
-        ["grp"],
-        k,
+        [d.select("grp", "hv") for d in rows("k")], ["grp"], k
     ).select(
         "grp",
         F.lit("k").alias("kind"),
@@ -3355,12 +2898,6 @@ def maintained_corpus_card(
     as corpus_card). Read back with :func:`read_maintained_corpus_card`.
     Retractions unsupported; feed the append/live stream.
     """
-    spark = spark or SparkSession.getActiveSession()
-    stream = (
-        spark.readStream.schema(
-            schema or spark.read.parquet(ledger_dir).schema
-        ).parquet(ledger_dir)
-    )
 
     def _merge(state_subset, batch_df):
         return corpus_card_fold(
@@ -3389,12 +2926,7 @@ def maintained_corpus_card(
             else _merge(st, b),
         )
 
-    return (
-        stream.writeStream.foreachBatch(_fold_named)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-    )
+    return fold_stream(spark, ledger_dir, checkpoint_dir, _fold_named, schema)
 
 
 def read_maintained_corpus_card(
@@ -3485,13 +3017,6 @@ def maintained_weighted_sample(
     """
     from kamu_engine_datafusion_spark.operators.sampling import ares_key
 
-    spark = spark or SparkSession.getActiveSession()
-    stream = (
-        spark.readStream.schema(
-            schema or spark.read.parquet(ledger_dir).schema
-        ).parquet(ledger_dir)
-    )
-
     def _merge(state_subset, batch_df):
         w = F.col(weight_col).cast("double")
         inc = (
@@ -3524,12 +3049,7 @@ def maintained_weighted_sample(
             _merge,
         )
 
-    return (
-        stream.writeStream.foreachBatch(_fold)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-    )
+    return fold_stream(spark, ledger_dir, checkpoint_dir, _fold, schema)
 
 
 def maintained_components(
@@ -3586,13 +3106,6 @@ def maintained_components(
     """
     from kamu_engine_datafusion_spark.operators.clustering import (
         connected_components,
-    )
-
-    spark = spark or SparkSession.getActiveSession()
-    stream = (
-        spark.readStream.schema(
-            schema or spark.read.parquet(ledger_dir).schema
-        ).parquet(ledger_dir)
     )
 
     def _make_merge(relabel):
@@ -3794,12 +3307,7 @@ def maintained_components(
             _node_upsert,
         )
 
-    return (
-        stream.writeStream.foreachBatch(_fold)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-    )
+    return fold_stream(spark, ledger_dir, checkpoint_dir, _fold, schema)
 
 
 def maintained_term_stats(
@@ -3834,17 +3342,8 @@ def maintained_term_stats(
         term_stats_increment,
     )
 
-    spark = spark or SparkSession.getActiveSession()
-    stream = (
-        spark.readStream.schema(
-            schema or spark.read.parquet(ledger_dir).schema
-        ).parquet(ledger_dir)
-    )
-
     def _merge(state_subset, inc):
-        if state_subset is None:
-            return inc
-        if "n_len" not in state_subset.columns:
+        if state_subset is not None and "n_len" not in state_subset.columns:
             # State persisted by the pre-n_len version of this fold
             # cannot be migrated in place: n_len counts the non-NULL
             # documents each tick contributed, and that count was never
@@ -3857,16 +3356,7 @@ def maintained_term_stats(
                 "cannot be migrated — rebuild the state by re-folding "
                 "the ledger into a fresh state_dir/checkpoint_dir"
             )
-        return (
-            state_subset.unionByName(inc)
-            .groupBy("term")
-            .agg(
-                F.sum("df").cast("long").alias("df"),
-                F.sum("n_docs").cast("long").alias("n_docs"),
-                F.sum("tot_len").cast("long").alias("tot_len"),
-                F.sum("n_len").cast("long").alias("n_len"),
-            )
-        )
+        return sum_merge(state_subset, inc, ["term"])
 
     def _fold(batch_df: DataFrame, batch_id: int) -> None:
         # term-sorted bucket files: BM25 reads carry LITERAL term
@@ -3885,12 +3375,7 @@ def maintained_term_stats(
             sort_cols=["term"],
         )
 
-    return (
-        stream.writeStream.foreachBatch(_fold)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-    )
+    return fold_stream(spark, ledger_dir, checkpoint_dir, _fold, schema)
 
 
 def maintained_phash_index(
@@ -3928,13 +3413,6 @@ def maintained_phash_index(
     """
     from kamu_engine_datafusion_spark.functions.columns import hamming64
     from kamu_engine_datafusion_spark.operators.dedup import phash_index
-
-    spark = spark or SparkSession.getActiveSession()
-    stream = (
-        spark.readStream.schema(
-            schema or spark.read.parquet(ledger_dir).schema
-        ).parquet(ledger_dir)
-    )
 
     def _merge(state_subset, inc_chunks):
         vs_index = (
@@ -3983,12 +3461,7 @@ def maintained_phash_index(
             _merge,
         )
 
-    return (
-        stream.writeStream.foreachBatch(_fold)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-    )
+    return fold_stream(spark, ledger_dir, checkpoint_dir, _fold, schema)
 
 
 def maintained_minhash_index(
@@ -4044,26 +3517,18 @@ def maintained_minhash_index(
     correctness hazard. Live index for batch probing =
     :func:`read_maintained_minhash_index`. Retractions unsupported.
     """
-    import os
-
     from kamu_engine_datafusion_spark.operators.dedup import (
         _cap_buckets,
         estimated_jaccard,
         minhash_index,
     )
 
-    spark = spark or SparkSession.getActiveSession()
     sig_dir = state_dir + _SIG_SUFFIX
-    stream = (
-        spark.readStream.schema(
-            schema or spark.read.parquet(ledger_dir).schema
-        ).parquet(ledger_dir)
-    )
 
     def _fold(batch_df: DataFrame, batch_id: int) -> None:
         sess = batch_df.sparkSession
-        _apply_append_intent(sig_dir)
-        _apply_append_intent(state_dir)
+        _apply_intent(sig_dir)
+        _apply_intent(state_dir)
         if _last_folded_batch(state_dir) >= batch_id:
             return
         inc = minhash_index(
@@ -4071,21 +3536,9 @@ def maintained_minhash_index(
             num_bands, base_hash,
         ).persist()
         inc.count()  # populate before the probe legs fan out
-        bucket = _bucket_of(["__band"], state_buckets)
-        touched = [
-            int(r[0])
-            for r in inc.select(bucket.alias("__b")).distinct().collect()
-        ]
-        state_bands = None
-        if any(
-            os.path.isdir(os.path.join(state_dir, f"{_BUCKET_COL}={b}"))
-            for b in touched
-        ):
-            state_bands = (
-                sess.read.parquet(state_dir)
-                .filter(F.col(_BUCKET_COL).isin(touched))
-                .drop(_BUCKET_COL)
-            )
+        _, state_bands = _touched_state(
+            inc, state_dir, ["__band"], state_buckets
+        )
         capped = (
             _cap_buckets(inc, "__band", max_bucket_size)
             if max_bucket_size
@@ -4185,12 +3638,7 @@ def maintained_minhash_index(
         dead.unpersist()
         inc.unpersist()
 
-    return (
-        stream.writeStream.foreachBatch(_fold)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-    )
+    return fold_stream(spark, ledger_dir, checkpoint_dir, _fold, schema)
 
 
 #: Sidecar suffix for the signature table of the split MinHash index.
@@ -4259,13 +3707,6 @@ def maintained_semdedup_index(
         semdedup_state_rows,
     )
 
-    spark = spark or SparkSession.getActiveSession()
-    stream = (
-        spark.readStream.schema(
-            schema or spark.read.parquet(ledger_dir).schema
-        ).parquet(ledger_dir)
-    )
-
     def _new_rows(state_subset, inc_frame):
         return semdedup_increment_against_index(
             inc_frame, state_subset, id_col, tau2_num, tau2_den
@@ -4286,12 +3727,7 @@ def maintained_semdedup_index(
         finally:
             inc.unpersist()
 
-    return (
-        stream.writeStream.foreachBatch(_fold)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-    )
+    return fold_stream(spark, ledger_dir, checkpoint_dir, _fold, schema)
 
 
 def maintained_bloom(
@@ -4331,12 +3767,6 @@ def maintained_bloom(
     )
 
     coeffs = minhash_coeffs(k_hashes, seed)
-    spark = spark or SparkSession.getActiveSession()
-    stream = (
-        spark.readStream.schema(
-            schema or spark.read.parquet(ledger_dir).schema
-        ).parquet(ledger_dir)
-    )
 
     def _words(batch_df: DataFrame) -> DataFrame:
         pos = _bloom_positions(
@@ -4372,12 +3802,7 @@ def maintained_bloom(
             _merge,
         )
 
-    return (
-        stream.writeStream.foreachBatch(_fold)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-    )
+    return fold_stream(spark, ledger_dir, checkpoint_dir, _fold, schema)
 
 
 def read_bloom_state(

@@ -30,7 +30,11 @@ from kamu_engine_datafusion_spark import (
 )
 from kamu_engine_datafusion_spark.session import default_driver_memory, tune_session
 from kamu_engine_datafusion_spark.sources.compact import compact_ledger
-from kamu_engine_datafusion_spark.sources.ledger import read_parquet, register_input
+from kamu_engine_datafusion_spark.sources.ledger import (
+    read_ledger_schema,
+    read_parquet,
+    register_input,
+)
 from kamu_engine_datafusion_spark.sources.sink import write_parquet_single_file
 from kamu_engine_datafusion_spark.streaming.incremental import (
     IncrementalRunner,
@@ -521,6 +525,67 @@ def test_read_parquet_schema_matches_spark_inference(spark, tmp_path):
         == schema_or_error(lambda: other.read.parquet(*ns))
         != schema_or_error(lambda: read_parquet(spark, ns))
     )
+
+
+def test_ledger_dir_schema_matches_spark_inference(spark, tmp_path):
+    """``read_ledger_schema`` gives a ledger directory the schema
+    ``spark.read.parquet(dir)`` infers: the streaming sink's marker dir,
+    ``_SUCCESS`` and checksum files are not data, the first data file by
+    path decides whatever order the files come in, and a partition
+    subdirectory gets Spark's own answer."""
+    ledger = tmp_path / "ledger"
+    (ledger / "_stream_commits").mkdir(parents=True)
+    (ledger / "_stream_commits" / "0.json").write_text("{}")
+    (ledger / "_SUCCESS").write_text("")
+    for name, col in (("part-1", "second"), ("part-0", "first")):
+        pq.write_table(pa.table({col: [1]}), str(ledger / f"{name}.parquet"))
+        (ledger / f".{name}.parquet.crc").write_bytes(b"crc")
+    files = [str(ledger / f"part-{k}.parquet") for k in (1, 0)]
+
+    want = spark.read.parquet(str(ledger)).schema
+    assert read_ledger_schema(spark, str(ledger)) == want
+    assert read_parquet(spark, files).schema == want
+    assert want.names == ["first"]
+
+    partitioned = tmp_path / "partitioned"
+    (partitioned / "x=1").mkdir(parents=True)
+    pq.write_table(pa.table({"c": [1]}), str(partitioned / "x=1" / "p.pq"))
+    got = read_ledger_schema(spark, str(partitioned))
+    assert got == spark.read.parquet(str(partitioned)).schema
+    assert got.names == ["c", "x"]
+
+
+def test_ledger_dir_schema_runs_no_job_when_warm(spark, tmp_path):
+    """Once the footer's schema is cached, a ledger directory's schema
+    costs no Spark job; Spark's own directory inference costs one on
+    every call."""
+    ledger = str(tmp_path / "ledger")
+    os.makedirs(ledger)
+    pq.write_table(pa.table({"n": [1]}), os.path.join(ledger, "p.parquet"))
+    read_ledger_schema(spark, ledger)
+    assert _spark_jobs(spark, lambda: read_ledger_schema(spark, ledger)) == 0
+    assert _spark_jobs(spark, lambda: spark.read.parquet(ledger).schema) >= 1
+
+
+def test_fold_over_empty_ledger_dir_without_schema_raises(spark, tmp_path):
+    """With no data file to read a schema from, starting a fold without
+    ``schema=`` raises Spark's inference error, before any query starts."""
+    from pyspark.errors import AnalysisException
+
+    from kamu_engine_datafusion_spark.streaming.structured import (
+        maintained_group_counts,
+    )
+
+    ledger = tmp_path / "ledger"
+    (ledger / "_stream_commits").mkdir(parents=True)
+    (ledger / "_SUCCESS").write_text("")
+    active = len(spark.streams.active)
+    with pytest.raises(AnalysisException, match="UNABLE_TO_INFER_SCHEMA"):
+        maintained_group_counts(
+            str(ledger), str(tmp_path / "state"), str(tmp_path / "ck"),
+            ["k"], spark=spark,
+        )
+    assert len(spark.streams.active) == active
 
 
 class _NamingSpark:

@@ -519,63 +519,35 @@ def test_maintained_view_replayed_batch_is_skipped(spark, tmp_path):
     assert after == before  # no double-merge: a(2, 3.0) not a(4, 6.0)
 
 
-def test_recover_state_heals_every_swap_crash_point(tmp_path):
-    """The state swap is two renames: replace(state→old) then
-    replace(next→state). A crash BETWEEN them leaves no state_dir at
-    all; without recovery the replay folds into empty state and all
-    prior view state is silently lost. _recover_state must heal every
-    interruption point (pure filesystem, no Spark needed)."""
+def test_unparseable_fold_marker_fails_the_fold(spark, tmp_path):
+    """A fold marker that exists but holds no batch id fails the next
+    fold loudly: read as "nothing folded", it would let a replayed batch
+    fold a second time and double-count additive state."""
+    import pytest
+
     from kamu_engine_datafusion_spark.streaming.structured import (
         _BATCH_MARKER,
+        _fold_buckets,
         _last_folded_batch,
-        _recover_state,
-        _write_batch_marker,
+        read_maintained_state,
     )
 
-    def mkstate(d, marker=None, extra="part-0.parquet"):
-        os.makedirs(d)
-        with open(os.path.join(d, extra), "w") as f:
-            f.write("data")
-        if marker is not None:
-            _write_batch_marker(d, marker)
+    state_dir = str(tmp_path / "state")
+    assert _last_folded_batch(state_dir) == -1  # no marker: nothing folded
+    counts = spark.createDataFrame([("a", 1), ("b", 2)], "k string, n long")
 
-    # crash point B: between the two renames — state_dir missing,
-    # .old = pre-crash state (marker 4), .next = fully-written new
-    # state (marker 5). Must promote .next and drop .old.
-    st = os.path.join(str(tmp_path), "b", "state")
-    os.makedirs(os.path.dirname(st))
-    mkstate(st + ".old", marker=4)
-    mkstate(st + ".next", marker=5)
-    _recover_state(st)
-    assert _last_folded_batch(st) == 5
-    assert not os.path.exists(st + ".old")
-    assert not os.path.exists(st + ".next")
+    def add(state, inc):
+        if state is None:
+            return inc
+        return inc.unionByName(state).groupBy("k").agg(F.sum("n").alias("n"))
 
-    # crash point D: state_dir missing, .next INCOMPLETE (no marker —
-    # the marker is written only after the parquet write finishes),
-    # .old present. Must restore .old; the replay then re-folds.
-    st = os.path.join(str(tmp_path), "d", "state")
-    os.makedirs(os.path.dirname(st))
-    mkstate(st + ".old", marker=4)
-    os.makedirs(st + ".next")  # torn write: no marker
-    _recover_state(st)
-    assert _last_folded_batch(st) == 4
-
-    # crash point A/C: state_dir present (before the first rename, or
-    # after the second) — recovery must not touch anything.
-    st = os.path.join(str(tmp_path), "a", "state")
-    os.makedirs(os.path.dirname(st))
-    mkstate(st, marker=7)
-    mkstate(st + ".next", marker=8)
-    _recover_state(st)
-    assert _last_folded_batch(st) == 7  # untouched: replay handles .next
-
-    # first-ever batch crashed mid-write: nothing anywhere to restore.
-    st = os.path.join(str(tmp_path), "f", "state")
-    os.makedirs(os.path.dirname(st))
-    os.makedirs(st + ".next")
-    _recover_state(st)
-    assert not os.path.exists(st)
+    _fold_buckets(counts, 0, state_dir, ["k"], 2, add)
+    with open(os.path.join(state_dir, _BATCH_MARKER), "w") as f:
+        f.write("0\x00")
+    with pytest.raises(ValueError, match="not a batch id"):
+        _fold_buckets(counts, 0, state_dir, ["k"], 2, add)
+    state = read_maintained_state(spark, state_dir)
+    assert sorted(map(tuple, state.collect())) == [("a", 1), ("b", 2)]
 
 
 def test_maintained_view_recovers_from_mid_swap_crash(spark, tmp_path):
@@ -1593,14 +1565,12 @@ def test_maintained_phash_index_replayed_batch_is_skipped(spark, tmp_path):
 
 def test_phash_append_intent_heals_at_every_crash_point(spark, tmp_path):
     """The append-only fold's crash protocol: a committed append intent
-    left by a crash (a) is NOT destroyed by the rewrite fold's
-    _apply_intent, (b) applies idempotently — re-running
-    _apply_append_intent moves nothing twice (deterministic dst names,
-    moved sources gone), and the state equals the uncrashed run's."""
+    left by a crash is applied by _apply_intent, idempotently —
+    re-running it moves nothing twice (deterministic dst names, moved
+    sources gone), and the state equals the uncrashed run's."""
     import shutil
 
     from kamu_engine_datafusion_spark.streaming.structured import (
-        _apply_append_intent,
         _apply_intent,
         _stage_dir,
         maintained_phash_index,
@@ -1652,13 +1622,11 @@ def test_phash_append_intent_heals_at_every_crash_point(spark, tmp_path):
     assert moved is not None
     with open(os.path.join(stage, "_intent"), "w") as f:
         f.write(json.dumps({"batch_id": 0, "append": [list(moved)]}))
-    # (a) the rewrite fold's healer must leave the append intent alone
+    # the one applier applies the append intent — and is idempotent
     _apply_intent(state_dir)
-    assert os.path.isdir(stage)
-    # (b) the append healer applies it — and is idempotent
-    _apply_append_intent(state_dir)
     assert not os.path.isdir(stage)
-    _apply_append_intent(state_dir)
+    assert os.path.isfile(os.path.join(state_dir, moved[1]))
+    _apply_intent(state_dir)
     got = sorted(
         tuple(r)
         for r in read_maintained_state(spark, state_dir)
