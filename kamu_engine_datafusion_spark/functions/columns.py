@@ -1,4 +1,6 @@
-"""Reusable Column-expression builders (JVM-side, codegen-friendly).
+"""Reusable Column-expression builders (JVM-side, codegen-friendly):
+tokens and shingles, MinHash coefficients and LSH band keys, vector
+dot products and norms, half-up rounding, Hamming distance.
 
 Everything here composes ``pyspark.sql.functions`` — no Python UDFs — so
 the expressions inline into whole-stage codegen and scale with the
@@ -66,11 +68,6 @@ def minhash_coeffs(num_hashes: int, seed: int = 42) -> list[tuple[int, int]]:
         (rng.randrange(1, _MERSENNE_31), rng.randrange(0, _MERSENNE_31))
         for _ in range(num_hashes)
     ]
-
-
-def minhash_base_hash(col: Column) -> Column:
-    """31-bit base hash of a shingle string (xxhash64 folded mod M31)."""
-    return F.pmod(F.xxhash64(col), F.lit(_MERSENNE_31))
 
 
 #: Rolling-combination prime for hashed shingles (any odd prime < 2^31).
@@ -156,27 +153,6 @@ def shingle_hash_array(tok: Column, n: int) -> Column:
     return _let(h, body)
 
 
-def minhash_signature(shingle_arr: Column, num_hashes: int, seed: int = 42) -> Column:
-    """MinHash signature as a single Column expression: array of
-    ``num_hashes`` minima of universal hashes over the shingle set.
-
-    ONLY for small ``num_hashes``/short arrays: higher-order lambdas
-    (``transform``/``array_min``) evaluate INTERPRETED, outside
-    whole-stage codegen — measured 2.2× slower than the explode→groupBy
-    formulation in ``operators.dedup.minhash_signatures`` at 50k docs
-    (12.8s vs 5.7s; codegen'd MIN aggregates, map-side partials, and a
-    shuffle of only ``num_hashes`` longs per doc). Use the groupBy path
-    for whole-corpus signatures; see SCALE.md round-5.
-    """
-    base = F.transform(shingle_arr, minhash_base_hash)
-    return F.array(
-        *[
-            F.array_min(F.transform(base, lambda h: (h * a + b) % _MERSENNE_31))
-            for (a, b) in minhash_coeffs(num_hashes, seed)
-        ]
-    )
-
-
 def lsh_band_keys(signature: Column, num_bands: int, rows_per_band: int) -> Column:
     """Array of ``num_bands`` band-bucket keys: hash of each contiguous
     ``rows_per_band`` slice of the signature. Docs sharing any band key
@@ -234,44 +210,6 @@ def l2_norm(v: Column, dim: int | None = None) -> Column:
     return F.sqrt(dot_product(v, v, dim))
 
 
-def cosine_similarity(a: Column, b: Column) -> Column:
-    """Cosine similarity of two ``array<numeric>`` columns.
-
-    For pairwise workloads (joins), precompute ``l2_norm`` per row
-    *before* the join and divide ``dot_product`` by the two norm columns
-    — this function recomputes both norms per pair.
-    """
-    return dot_product(a, b) / (l2_norm(a) * l2_norm(b))
-
-
-def simhash64(token_hashes: Column) -> Column:
-    """64-bit SimHash from an ``array<long>`` of per-token hashes: bit b
-    of the result is 1 iff #{tokens with bit b set} > #tokens/2.
-
-    Pure column math: per-bit popcounts via transform + filter sizes.
-    """
-    n = F.size(token_hashes)
-    bits = [
-        F.when(
-            F.size(
-                F.filter(
-                    token_hashes,
-                    lambda h: F.shiftright(h, b).bitwiseAND(F.lit(1)) == 1,
-                )
-            )
-            * 2
-            > n,
-            F.lit(1).cast("long"),
-        )
-        .otherwise(F.lit(0).cast("long"))
-        for b in range(64)
-    ]
-    out = F.lit(0).cast("long")
-    for b, bit in enumerate(bits):
-        out = out + F.shiftleft(bit, b)
-    return out
-
-
 def hamming64(a: Column, b: Column) -> Column:
-    """Hamming distance between two 64-bit SimHashes (popcount of XOR)."""
+    """Hamming distance between two 64-bit hashes (popcount of XOR)."""
     return F.bit_count(a.bitwiseXOR(b)).cast("int")

@@ -70,22 +70,6 @@ def flag_contaminated(
     )
 
 
-def remove_contaminated(
-    corpus: DataFrame,
-    benchmark: DataFrame,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-    shingle_len: int = 3,
-    threshold: int = 1,
-) -> DataFrame:
-    """Drop contaminated documents from the corpus."""
-    flagged = flag_contaminated(
-        corpus, benchmark, text_col, id_col, shingle_len, threshold
-    )
-    keep = flagged.filter(~F.col("contaminated")).select(id_col)
-    return corpus.join(keep, id_col, "left_semi")
-
-
 def fuzzy_flag_contaminated(
     corpus: DataFrame,
     benchmark: DataFrame,

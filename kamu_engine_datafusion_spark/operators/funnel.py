@@ -232,8 +232,8 @@ def debounce_events(
     first event no matter how long the burst runs — the chain of
     sub-threshold gaps keeps suppressing. (An anchor-based variant —
     "kept events must be ``gap_seconds`` apart" — would re-emit once
-    cumulative elapsed time passes the gap; that needs a running fold,
-    ``streaming/stateful.py`` territory, not one window function.)
+    cumulative elapsed time passes the gap; that needs a running fold
+    per group, not one window function.)
 
     Scale: ONE shuffle on the group key, one lag window per group —
     same cost shape as sessionization. Ties on the timestamp break by

@@ -155,36 +155,6 @@ def byte_histogram_features(df: DataFrame, bins: int = 16) -> DataFrame:
     return df.mapInPandas(kernel, FEATURES_SCHEMA)
 
 
-RESIZED_SCHEMA = "media_id long, content binary, n_bytes long"
-
-
-def resize_media(df: DataFrame, target_bytes: int = 64) -> DataFrame:
-    """Resize kernel over ``mapInPandas``: normalize every blob to a fixed
-    byte budget (truncate or zero-pad).
-
-    Stands in for image resize / audio resample — the real kernel decodes,
-    rescales, and re-encodes inside the same Arrow-batched loop; the plan
-    shape (binary in, fixed-size binary out, no shuffle) is identical.
-    """
-
-    def kernel(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        def fit(c) -> bytes:
-            b = bytes(c) if c is not None else b""
-            return b[:target_bytes].ljust(target_bytes, b"\x00")
-
-        for pdf in batches:
-            content = pdf["content"].map(fit)
-            yield pd.DataFrame(
-                {
-                    "media_id": pdf["media_id"],
-                    "content": content,
-                    "n_bytes": content.map(len).astype("int64"),
-                }
-            )
-
-    return df.mapInPandas(kernel, RESIZED_SCHEMA)
-
-
 def frame_sample(df: DataFrame, num_frames: int = 4) -> DataFrame:
     """Frame-sample kernel: split each blob into ``num_frames`` equal
     byte slices (stand-in for video frame extraction); output one row per

@@ -1,16 +1,14 @@
 """Partitioning utilities for the 100 TB regime: skew-salted
-aggregation/joins and bucketed co-located joins.
+aggregation/joins and a key-skew profile.
 
 AQE (enabled in ``session.py``) already splits skewed shuffle/join
-partitions at runtime; these helpers cover the cases AQE can't:
-a single hot GROUP BY key (AQE can't split one key's hash bucket) and
-repeated large-table joins on the same key (where paying one bucketed
-write removes every future shuffle).
+partitions at runtime; these helpers cover the case AQE can't: a single
+hot GROUP BY key (AQE can't split one key's hash bucket).
 """
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from kamu_engine_datafusion_spark.operators.deferred import DeferredLedger
@@ -59,33 +57,6 @@ def salted_join(
     replicated_small = small.select("*", salts)
     out = salted_big.join(replicated_small, [key, "__salt"])
     return out.drop("__salt")
-
-
-def write_bucketed(
-    df: DataFrame,
-    table_name: str,
-    bucket_col: str,
-    num_buckets: int = 32,
-    sort_col: str | None = None,
-) -> None:
-    """Persist a table bucketed (and optionally sorted) by a join key.
-
-    Two tables bucketed on the same key with the same bucket count
-    sort-merge-join WITHOUT a shuffle — write-once, join-free-forever
-    co-location for the keys a pipeline joins on repeatedly (verified by
-    plan assertion in tests/test_partitioning.py).
-    """
-    w = df.write.mode("overwrite").bucketBy(num_buckets, bucket_col)
-    if sort_col:
-        w = w.sortBy(sort_col)
-    w.saveAsTable(table_name)
-
-
-def bucketed_join(
-    spark: SparkSession, left_table: str, right_table: str, key: str
-) -> DataFrame:
-    """Join two pre-bucketed tables on their bucket key (no Exchange)."""
-    return spark.table(left_table).join(spark.table(right_table), key)
 
 
 #: The profile returned by key_skew_profile lazily reads its persisted

@@ -26,8 +26,9 @@ assigners:
   assignment (per-partition counts → driver-side cumulative bases →
   base + intra-partition index). No global sort, no single-partition
   bottleneck; offsets are dense, unique, and ledger-ordered by
-  (partition, position). Use when the output is too large for one file
-  and the coordinator accepts multi-file slices.
+  (partition, position). The registry's sampling and layer-A keys call
+  it directly; the request path always writes one file, so it takes the
+  serial assigner.
 """
 
 from __future__ import annotations
@@ -186,7 +187,6 @@ def with_system_columns(
     vocab: DatasetVocabulary,
     system_time: datetime,
     start_offset: int,
-    distributed_offsets: bool = False,
 ) -> DataFrame:
     """A13–A16: append offset/op/system_time and normalize column order
     (``src/engine.rs:478-561``)."""
@@ -199,10 +199,7 @@ def with_system_columns(
     ]
 
     # A13: offset
-    if distributed_offsets:
-        df = assign_offsets_distributed(df, vocab.offset_column, start_offset)
-    else:
-        df = assign_offsets_serial(df, vocab.offset_column, start_offset)
+    df = assign_offsets_serial(df, vocab.offset_column, start_offset)
 
     # A14: default op = Append(0) Int32 (src/engine.rs:521-533)
     if vocab.operation_type_column not in [f.name for f in df.schema.fields]:

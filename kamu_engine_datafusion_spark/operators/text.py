@@ -1111,11 +1111,6 @@ def _word_ngrams_from_tokens(t: Column, n: int) -> Column:
     return out
 
 
-def _word_ngrams(text: Column, n: int) -> Column:
-    """Space-joined word n-grams of a text column (tokenize + ngrams)."""
-    return _word_ngrams_from_tokens(tokens(text), n)
-
-
 def repetition_report(
     df: DataFrame,
     id_col: str = "doc_id",

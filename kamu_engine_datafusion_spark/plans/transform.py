@@ -91,9 +91,7 @@ def compute_new_watermark(request: TransformRequest) -> datetime | None:
 
 
 def execute_transform(
-    spark: SparkSession,
-    request: TransformRequest,
-    distributed_offsets: bool = False,
+    spark: SparkSession, request: TransformRequest
 ) -> TransformResponse:
     """Entry point 1 (reference ``src/engine.rs:127-183``).
 
@@ -110,11 +108,7 @@ def execute_transform(
     df = normalize_raw_result(df, request.vocab)
     validate_raw_result(df, request.vocab)
     df = with_system_columns(
-        df,
-        request.vocab,
-        request.system_time,
-        request.next_offset,
-        distributed_offsets=distributed_offsets,
+        df, request.vocab, request.system_time, request.next_offset
     )
 
     num_rows = write_parquet_single_file(df, request.new_data_path)
@@ -184,12 +178,8 @@ class Engine:
         except Exception as e:
             raise InternalError(str(e), traceback.format_exc()) from e
 
-    def execute_transform(
-        self, request: TransformRequest, distributed_offsets: bool = False
-    ) -> TransformResponse:
-        return self._envelope(
-            execute_transform, self.spark, request, distributed_offsets
-        )
+    def execute_transform(self, request: TransformRequest) -> TransformResponse:
+        return self._envelope(execute_transform, self.spark, request)
 
     def execute_raw_query(self, request: RawQueryRequest) -> RawQueryResponse:
         return self._envelope(execute_raw_query, self.spark, request)

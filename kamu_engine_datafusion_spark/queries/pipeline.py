@@ -9047,7 +9047,8 @@ def _repetition_report_oracle(
     joins = []
     for n in sorted({*top_ns, *dup_ns}):
         # word n-grams: m = greatest(len(t) - n + 1, 0) grams (empty
-        # for short docs — matches _word_ngrams, NOT word_shingles)
+        # for short docs — matches _word_ngrams_from_tokens, NOT
+        # word_shingles)
         ctes.append(
             f"g{n} AS (SELECT doc_id, unnest(list_transform("
             f"range(1, greatest(len(t) - {n - 1}, 0) + 1), "

@@ -178,35 +178,3 @@ def zorder_value(
                 )
             )
     return out, z
-
-
-def optimize_layout_zorder(
-    df,
-    path: str,
-    cols: list[str],
-    target_files: int = 32,
-    bits_per_col: int = 16,
-    mode: str = "overwrite",
-) -> None:
-    """Multi-dimensional OPTIMIZE ... ZORDER: range-partition + sort the
-    table by its Morton z-value so parquet footer min/max stats prune
-    files for predicates on ANY of ``cols`` — where the 1-D
-    :func:`optimize_layout` prunes only its leading sort column.
-
-    Each output file covers a contiguous z-range = a small hyper-
-    rectangle of the (col1 × col2 × …) space, so every column's
-    per-file min/max span is ~``range / files^(1/d)`` instead of the
-    full range. The z column itself is dropped before writing — it is
-    layout, not data. Cost: one bounds aggregate + one range exchange,
-    same shape as the 1-D op.
-    """
-    with_bounds, z = zorder_value(df, cols, bits_per_col)
-    drop = [f"__lo_{c}" for c in cols] + [f"__hi_{c}" for c in cols]
-    (
-        with_bounds.withColumn("__z", z)
-        .repartitionByRange(target_files, F.col("__z"))
-        .sortWithinPartitions("__z")
-        .drop("__z", *drop)
-        .write.mode(mode)
-        .parquet(path)
-    )

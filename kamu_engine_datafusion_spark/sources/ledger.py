@@ -17,6 +17,9 @@ Spark-first notes:
   Multi-file reads, partition parallelism and row-group pruning are
   unchanged. :func:`read_ledger_schema` gives a whole ledger directory
   its schema the same way, for the streaming folds that must pin one.
+- Schema evolution, a TODO in the reference (``src/engine.rs:235``),
+  is the session's ``spark.sql.parquet.mergeSchema``: with it set,
+  :func:`read_parquet` reads the union of all footers.
 - The offset filter is an ordinary Catalyst predicate → pushed to the
   Parquet scan; with ledger files written in offset order, row-group
   min/max statistics prune whole files/row groups, which is exactly the
@@ -84,8 +87,16 @@ def _is_plain_file(path: str) -> bool:
 
 
 def read_parquet(spark: SparkSession, paths: list[str]) -> DataFrame:
-    """``spark.read.parquet(*paths)`` with the schema given up front, so
-    building the relation runs no Spark job.
+    """A1: ``spark.read.parquet(*paths)`` with the schema given up
+    front, so building the relation runs no Spark job.
+
+    Reference: ``src/engine.rs:231-248`` (``ParquetReadOptions`` with no
+    extension filter and no declared schema), which takes the first
+    file's footer and leaves schema evolution as a TODO
+    (``src/engine.rs:235``). A session with
+    ``spark.sql.parquet.mergeSchema=true`` reads the union of all
+    footers instead: a ledger whose later ticks added columns reads as
+    the superset schema, early rows null-filled.
 
     Spark infers the schema of a multi-file read from one footer: the
     first leaf file by path string (``ParquetUtils.splitFiles``), paths
@@ -123,24 +134,6 @@ def read_parquet(spark: SparkSession, paths: list[str]) -> DataFrame:
             while len(_schemas) > SCHEMA_CACHE_MAX:
                 _schemas.popitem(last=False)
     return spark.read.schema(schema).parquet(*paths)
-
-
-def read_parquet_ledger(
-    spark: SparkSession, paths: list[str], merge_schema: bool = False
-) -> DataFrame:
-    """A1: read N ledger part-files as one table, schema inferred.
-
-    Reference: ``src/engine.rs:231-248`` (``ParquetReadOptions`` with no
-    extension filter and no declared schema). The reference leaves
-    schema evolution as an explicit TODO (``src/engine.rs:235``) and
-    takes the first file's footer; beyond parity, ``merge_schema=True``
-    unions the footers of ALL part files (a ledger whose later ticks
-    added columns reads as the superset schema, early rows null-filled)
-    — Spark's native parquet schema merging, one extra footer pass.
-    """
-    if merge_schema:
-        return spark.read.option("mergeSchema", "true").parquet(*paths)
-    return read_parquet(spark, paths)
 
 
 def _listed_by_spark(name: str) -> bool:
@@ -213,7 +206,7 @@ def register_input(spark: SparkSession, inp: TransformRequestInput) -> DataFrame
                 f"input {inp.query_alias!r}: data_paths without an "
                 "offset_interval"
             )
-        df = read_parquet_ledger(spark, inp.data_paths)
+        df = read_parquet(spark, inp.data_paths)
         df = slice_offset_interval(df, inp.vocab.offset_column, inp.offset_interval)
     else:
         df = empty_ledger(spark, inp.schema_file)

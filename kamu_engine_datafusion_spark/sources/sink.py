@@ -15,8 +15,7 @@ RLE_DICTIONARY without extra configuration; tests assert this via
 pyarrow metadata.
 
 Scale note: single-file output is an ODF-protocol requirement for the
-coordinator, not an engine limitation. ``write_parquet_dir`` is the
-scale path (many files, parallel write). ``write_parquet_single_file``
+coordinator, not an engine limitation. ``write_parquet_single_file``
 writes one partition; since ``coalesce(1)`` is a narrow dependency, the
 single write task also runs everything back to the plan's last
 exchange — for an exchange-free query, the whole scan and projection.
@@ -72,9 +71,3 @@ def write_parquet_single_file(df: DataFrame, path: str) -> int:
         return int(num_records)
     finally:
         shutil.rmtree(tmp_dir, ignore_errors=True)
-
-
-def write_parquet_dir(df: DataFrame, path: str, mode: str = "overwrite") -> None:
-    """Scale-path sink: parallel multi-file Parquet write (not part of the
-    ODF single-file contract; used by the beyond-parity operators)."""
-    df.write.mode(mode).parquet(path)

@@ -1,30 +1,9 @@
-"""Structured Streaming over ODF ledgers: continuous sources and
-maintained state.
+"""Structured Streaming over ODF ledgers: maintained state.
 
 The ODF parity layer needs only incremental batch (see
-``streaming/incremental.py``); this module runs the engine's semantics
-against continuous sources.
-
-Streams:
-
-- :func:`ledger_stream` — a ledger directory as a file stream, one part
-  file per micro-batch (≅ one coordinator tick).
-- :func:`windowed_event_counts`, :func:`session_window_counts` —
-  watermarked tumbling- and session-window counts (late data handled by
-  Spark state eviction, the piece the reference defers to Flink).
-- :func:`hll_register_stream` — per-group HyperLogLog registers.
-- :func:`streaming_dedup` — exact dedup with watermark-bounded state.
-- :func:`stream_interval_join` — watermarked stream-stream join with a
-  two-sided time bound so both state stores expire.
-- :func:`stream_to_ledger` — any stream into an ODF ledger through the
-  engine's ingest path, exactly once (:func:`make_ledger_sink`).
-- :func:`streaming_dedup_against_index` — near-dedup of each
-  micro-batch against a persisted MinHash index.
-- :func:`run_to_memory` — run a stream over the data available now into
-  a memory table (test harness).
-
-Maintained state: each ``maintained_*`` fold keeps a state directory
-equal to a batch operator over the whole ledger, at a per-tick cost of
+``streaming/incremental.py``). This module keeps state continuously:
+each ``maintained_*`` fold keeps a state directory equal to a batch
+operator over the whole ledger, at a per-tick cost of
 O(increment + touched state).
 
 - :func:`fold_stream` is their one driver: it starts the availableNow
@@ -59,163 +38,6 @@ from pyspark.sql import types as T
 from kamu_engine_datafusion_spark.operators.changelog import sum_merge
 
 
-def ledger_stream(
-    spark: SparkSession, ledger_dir: str, schema: T.StructType
-) -> DataFrame:
-    """Stream a ledger directory: each arriving ``*.parquet`` part file
-    becomes micro-batch input (schema must be pinned for streams)."""
-    return (
-        spark.readStream.format("parquet")
-        .schema(schema)
-        .option("maxFilesPerTrigger", 1)
-        .load(ledger_dir)
-    )
-
-
-def windowed_event_counts(
-    events: DataFrame,
-    event_time_col: str = "event_time",
-    window: str = "1 hour",
-    watermark_delay: str = "1 hour",
-    group_col: str | None = None,
-) -> DataFrame:
-    """Watermarked tumbling-window counts/sums — the streaming aggregation
-    surface the reference explicitly lacks (``README.md:18``)."""
-    keys = [F.window(F.col(event_time_col), window)]
-    if group_col:
-        keys.append(F.col(group_col))
-    return (
-        events.withWatermark(event_time_col, watermark_delay)
-        .groupBy(*keys)
-        .agg(F.count(F.lit(1)).alias("n"))
-        .select(
-            F.col("window.start").alias("window_start"),
-            F.col("window.end").alias("window_end"),
-            *([F.col(group_col)] if group_col else []),
-            "n",
-        )
-    )
-
-
-def session_window_counts(
-    events: DataFrame,
-    event_time_col: str = "event_time",
-    gap: str = "30 minutes",
-    watermark_delay: str = "1 hour",
-    group_col: str | None = None,
-) -> DataFrame:
-    """Watermarked session windows: a session closes after ``gap`` of
-    inactivity per group — the streaming counterpart of the batch
-    sessionizer (``queries/pipeline.py::q_xsessionize``). Spark merges
-    and expires session state via the watermark, so state stays bounded
-    by the number of OPEN sessions, not history."""
-    keys = [F.session_window(F.col(event_time_col), gap)]
-    if group_col:
-        keys.append(F.col(group_col))
-    return (
-        events.withWatermark(event_time_col, watermark_delay)
-        .groupBy(*keys)
-        .agg(F.count(F.lit(1)).alias("n_events"))
-        .select(
-            F.col("session_window.start").alias("session_start"),
-            F.col("session_window.end").alias("session_end"),
-            *([F.col(group_col)] if group_col else []),
-            "n_events",
-        )
-    )
-
-
-def hll_register_stream(
-    stream: DataFrame,
-    group_cols: list[str],
-    key: str,
-    b: int = 6,
-    hash_fn: str = "poly",
-) -> DataFrame:
-    """Streaming HyperLogLog: maintain per-group cardinality registers
-    incrementally as ledger batches arrive — the natural streaming use
-    of a mergeable sketch (register max is associative, commutative,
-    and idempotent, so replayed or reordered micro-batches can never
-    corrupt it; no watermark needed because state is BOUNDED at
-    ``2^b`` rows per group by construction, not by time eviction).
-
-    Plain streaming ``groupBy(group, bucket).max(rho)`` in update
-    mode: Spark's state store holds one long per (group, bucket) and
-    each micro-batch emits only the registers it changed. Feed the
-    updates to :func:`~kamu_engine_datafusion_spark.operators.sketches.
-    hll_estimate` batch-side for the running cardinality.
-    """
-    from kamu_engine_datafusion_spark.operators.sketches import (
-        hll_registers,
-    )
-
-    # hll_registers is pure DataFrame ops (select + groupBy + max), so
-    # it lifts to a streaming frame unchanged
-    return hll_registers(stream, group_cols, key, b, hash_fn)
-
-
-def streaming_dedup(
-    df: DataFrame,
-    key_cols: list[str],
-    event_time_col: str,
-    watermark_delay: str = "1 hour",
-) -> DataFrame:
-    """Stateful exact dedup across micro-batches; the watermark bounds
-    the dedup state so it doesn't grow unboundedly."""
-    return df.withWatermark(event_time_col, watermark_delay).dropDuplicates(
-        [*key_cols, event_time_col]
-    )
-
-
-def stream_interval_join(
-    left: DataFrame,
-    right: DataFrame,
-    key_col: str,
-    left_time_col: str,
-    right_time_col: str,
-    max_delay: str = "10 minutes",
-    watermark_delay: str = "1 hour",
-) -> DataFrame:
-    """Watermarked stream-stream interval join: each left event matches
-    right events with the same key whose timestamp lies in
-    ``[left_time, left_time + max_delay]`` — the click-to-conversion /
-    request-to-response attribution shape.
-
-    Both sides are watermarked, and the join condition bounds the time
-    difference in BOTH directions, so Spark can expire buffered state:
-    a right row is held only until the left watermark passes
-    ``right_time`` (and vice versa). Without the two-sided bound the
-    state store grows without limit — the classic stream-join footgun.
-    State is keyed by (key, time range); at 1000 executors it shards on
-    the join key like any shuffle.
-    """
-    lw = left.withWatermark(left_time_col, watermark_delay).alias("l")
-    rw = right.withWatermark(right_time_col, watermark_delay).alias("r")
-    lt, rt = F.col(f"l.{left_time_col}"), F.col(f"r.{right_time_col}")
-    return lw.join(
-        rw,
-        (F.col(f"l.{key_col}") == F.col(f"r.{key_col}"))
-        & (rt >= lt)
-        & (rt <= lt + F.expr(f"INTERVAL {max_delay}")),
-    )
-
-
-def run_to_memory(
-    spark: SparkSession, stream_df: DataFrame, name: str, output_mode: str = "append"
-) -> DataFrame:
-    """Process all currently-available input synchronously into an
-    in-memory table and return it (deterministic test harness)."""
-    q = (
-        stream_df.writeStream.format("memory")
-        .queryName(name)
-        .outputMode(output_mode)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-    return spark.table(name)
-
-
 def fold_stream(
     spark: SparkSession | None,
     ledger_dir: str,
@@ -238,181 +60,10 @@ def fold_stream(
     stream = spark.readStream.schema(
         schema or read_ledger_schema(spark, ledger_dir)
     ).parquet(ledger_dir)
-    return _start_fold(stream, checkpoint_dir, fold)
-
-
-def _start_fold(stream: DataFrame, checkpoint_dir: str | None, fold):
-    """Run ``fold`` on each micro-batch of ``stream`` over the data
-    available now; the query checkpoints to ``checkpoint_dir`` when one
-    is given."""
     writer = stream.writeStream.foreachBatch(fold).trigger(availableNow=True)
     if checkpoint_dir:
         writer = writer.option("checkpointLocation", checkpoint_dir)
     return writer.start()
-
-
-def make_ledger_sink(ledger_dir: str, system_time_fn=None, vocab=None):
-    """Build the exactly-once ``foreachBatch`` ledger sink.
-
-    Spark's checkpoint gives at-least-once for ``foreachBatch``: after a
-    crash between the parquet append and the checkpoint commit, the
-    whole batch replays under the SAME batch id. The sink makes the
-    append idempotent with a two-marker protocol in
-    ``<ledger_dir>/_stream_commits/`` (underscore prefix — Spark readers
-    treat it as metadata and ignore it):
-
-    1. ``<id>.json`` commit marker present → the batch is fully in the
-       ledger; skip the replay.
-    2. ``<id>.intent`` present without a commit marker → a previous
-       attempt crashed mid-append; delete its (uncommitted) part file.
-    3. Write the intent marker naming the part file, append via
-       :func:`~kamu_engine_datafusion_spark.sources.ingest.ingest_batch`
-       with that exact filename, then atomically write the commit
-       marker.
-
-    Any crash point replays to the same final ledger: dense
-    exactly-once offsets, no duplicated or lost batches.
-    """
-    import json
-    from datetime import datetime, timezone
-
-    from kamu_engine_datafusion_spark.sources.ingest import ingest_batch
-
-    def _sink(batch_df: DataFrame, batch_id: int) -> None:
-        import glob
-        import os
-
-        if batch_df.isEmpty():
-            return
-        commits = os.path.join(ledger_dir, "_stream_commits")
-        os.makedirs(commits, exist_ok=True)
-        commit_marker = os.path.join(commits, f"{batch_id}.json")
-        if os.path.exists(commit_marker):
-            return  # replay of a fully-committed batch
-        intent_marker = os.path.join(commits, f"{batch_id}.intent")
-        if os.path.exists(intent_marker):
-            with open(intent_marker) as f:
-                prior_part = json.load(f)["part"]
-            if os.path.exists(prior_part):
-                os.remove(prior_part)  # roll back the uncommitted append
-        n_existing = len(glob.glob(os.path.join(ledger_dir, "*.parquet")))
-        part = os.path.join(
-            ledger_dir, f"part-{n_existing:05d}-b{batch_id:06d}.parquet"
-        )
-        tmp = intent_marker + ".tmp"
-        with open(tmp, "w") as f:
-            json.dump({"part": part}, f)
-        os.replace(tmp, intent_marker)
-
-        st = (
-            system_time_fn(batch_id)
-            if system_time_fn
-            else datetime.now(timezone.utc)
-        )
-        n = ingest_batch(
-            batch_df.sparkSession,
-            batch_df,
-            ledger_dir,
-            st,
-            vocab=vocab,
-            part_filename=os.path.basename(part),
-        )
-        tmp = commit_marker + ".tmp"
-        with open(tmp, "w") as f:
-            json.dump({"part": part, "rows": n}, f)
-        os.replace(tmp, commit_marker)
-        os.remove(intent_marker)
-
-    return _sink
-
-
-def stream_to_ledger(
-    stream_df: DataFrame,
-    ledger_dir: str,
-    system_time_fn=None,
-    vocab=None,
-    checkpoint_dir: str | None = None,
-):
-    """Streaming → ODF ledger sink: every micro-batch runs the engine's
-    own ingest path (normalize → validate → system columns → single-file
-    append with continuing offsets), so a Structured Streaming source
-    feeds the same ledger a batch coordinator would.
-
-    ``system_time_fn(batch_id) -> datetime`` pins the per-batch
-    system_time (defaults to the wall clock, which is the production
-    behavior; tests pass a deterministic function). Returns the started
-    ``StreamingQuery``; callers own its lifecycle (``awaitTermination``
-    / ``stop``). Exactly-once: replayed batch ids are detected and
-    skipped, and a crashed half-appended batch is rolled back before
-    re-ingest (see :func:`make_ledger_sink`) — the ledger's dense-offset
-    contract survives crash/restart at any point.
-    """
-    return _start_fold(
-        stream_df,
-        checkpoint_dir,
-        make_ledger_sink(ledger_dir, system_time_fn, vocab),
-    )
-
-
-def streaming_dedup_against_index(
-    stream: DataFrame,
-    index_dir: str,
-    out_dir: str,
-    checkpoint_dir: str,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-    threshold: float = 0.7,
-):
-    """Continuous-ingestion near-dedup: each micro-batch is deduped
-    against the PERSISTED MinHash signature index (and within itself),
-    survivors append to ``out_dir`` and their index rows append to
-    ``index_dir`` — so later batches see every earlier batch without
-    ever re-reading earlier text. The streaming composition of
-    :func:`~kamu_engine_datafusion_spark.operators.dedup.dedup_increment_against_index`.
-
-    State lives in the index files, not the state store: restartable
-    from the checkpoint, index size ~num_hashes longs per surviving doc
-    (a ~0.1% shadow of the corpus at 100 TB). foreachBatch gives
-    at-least-once on crash replay; a replayed batch's duplicates are
-    self-suppressed by the index its first attempt appended (re-appended
-    survivors dedupe downstream by id).
-    """
-    from kamu_engine_datafusion_spark.operators.dedup import (
-        dedup_increment_against_index,
-        DEDUP_LEDGER,
-        minhash_index,
-    )
-
-    def _tick(batch_df: DataFrame, batch_id: int) -> None:
-        import glob as _glob
-        import os as _os
-
-        spark = batch_df.sparkSession
-        # bootstrap is decided by an explicit existence check, NOT by
-        # catching read errors: a corrupt footer or transient FS error
-        # must fail the batch loudly, never silently re-bootstrap and
-        # leak duplicates past thousands of already-indexed docs
-        have_index = bool(_glob.glob(_os.path.join(index_dir, "*.parquet")))
-        if have_index:
-            index = spark.read.parquet(index_dir)
-            survivors, new_rows = dedup_increment_against_index(
-                batch_df, index, text_col=text_col, id_col=id_col,
-                threshold=threshold,
-            )
-        else:
-            from kamu_engine_datafusion_spark.operators.dedup import (
-                minhash_lsh_dedup,
-            )
-
-            survivors = minhash_lsh_dedup(
-                batch_df, text_col=text_col, id_col=id_col, threshold=threshold
-            )
-            new_rows = minhash_index(survivors, text_col=text_col, id_col=id_col)
-        survivors.write.mode("append").parquet(out_dir)
-        new_rows.write.mode("append").parquet(index_dir)
-        DEDUP_LEDGER.release()
-
-    return _start_fold(stream, checkpoint_dir, _tick)
 
 
 #: Marker file carrying the last-folded micro-batch id INSIDE the
@@ -580,10 +231,19 @@ def _touched_state(
 ):
     """``(touched, state_subset)``: the sorted state buckets
     ``batch_df``'s keys hash to, and the stored rows of exactly those
-    buckets without the bucket column — a partition-pruned scan, so
-    untouched bucket files are never read. ``state_subset`` is None
-    when no touched bucket holds state or ``read_state`` is false."""
+    buckets without the bucket column. ``state_subset`` reads the part
+    files Spark would list in the touched bucket dirs through
+    :func:`~kamu_engine_datafusion_spark.sources.ledger.read_parquet`,
+    so untouched bucket files are never read and a warm schema costs
+    no job, where a read of the partitioned root runs a listing and
+    inference job every tick. It is None when no touched bucket holds
+    state or ``read_state`` is false."""
     import os
+
+    from kamu_engine_datafusion_spark.sources.ledger import (
+        _listed_by_spark,
+        read_parquet,
+    )
 
     touched = sorted(
         int(r[0])
@@ -591,16 +251,20 @@ def _touched_state(
         .distinct()
         .collect()
     )
-    if not read_state or not any(
-        os.path.isdir(os.path.join(state_dir, f"{_BUCKET_COL}={b}"))
-        for b in touched
-    ):
+    if not read_state:
         return touched, None
-    return touched, (
-        batch_df.sparkSession.read.parquet(state_dir)
-        .filter(F.col(_BUCKET_COL).isin(touched))
-        .drop(_BUCKET_COL)
-    )
+    files = []
+    for b in touched:
+        bucket = os.path.join(state_dir, f"{_BUCKET_COL}={b}")
+        if os.path.isdir(bucket):
+            files += [
+                os.path.join(bucket, n)
+                for n in sorted(os.listdir(bucket))
+                if n.endswith(".parquet") and _listed_by_spark(n)
+            ]
+    if not files:
+        return touched, None
+    return touched, read_parquet(batch_df.sparkSession, files)
 
 
 def _fold_buckets_append(
@@ -3482,11 +3146,9 @@ def maintained_minhash_index(
     sig_buckets: int = 8,
 ):
     """Continuously-maintained MinHash DEDUP INDEX over a document
-    stream — the TEXT twin of :func:`maintained_phash_index`, and the
-    bucketed exactly-once upgrade of
-    :func:`streaming_dedup_against_index` (which reads the WHOLE index
-    per tick and appends at-least-once): the band key doubles as the
-    state bucket key, so the touched-bucket read IS the banded-LSH
+    stream — the TEXT twin of :func:`maintained_phash_index`, bucketed
+    and exactly-once rather than a whole-index read per tick: the band
+    key doubles as the state bucket key, so the touched-bucket read IS the banded-LSH
     probe, and because a stored survivor's rows never change both
     state parts fold APPEND-ONLY (per-tick write O(increment),
     crash-idempotent, replay-skipped).

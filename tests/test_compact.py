@@ -85,32 +85,6 @@ def test_recompaction_names_do_not_collide(spark, tmp_path):
     assert after.equals(before.select(after.schema.names).cast(after.schema))
 
 
-def test_ingest_after_compaction_continues_offsets(spark, tmp_path):
-    """Compaction must be transparent to subsequent ingests: next offset
-    comes from footer row counts (not file names), and the record stream
-    stays dense across the rename."""
-    from datetime import datetime
-
-    from kamu_engine_datafusion_spark.sources.ingest import ingest_batch
-
-    ledger = tmp_path / "ledger"
-    ledger.mkdir()
-    for i in range(4):
-        _write_part(str(ledger / f"part-{i:05d}.parquet"), i * 50, 50)
-
-    assert compact_ledger(spark, str(ledger), target_rows_per_file=100) == 2
-
-    batch = spark.createDataFrame(
-        [(datetime(2023, 2, 1), 42)], "event_time timestamp, v long"
-    )
-    n = ingest_batch(spark, batch, str(ledger), datetime(2023, 2, 2, tzinfo=UTC))
-    assert n == 1
-    files = sorted(glob.glob(str(ledger / "*.parquet")))
-    allrows = pq.read_table(files).sort_by("offset")
-    offsets = allrows["offset"].to_pylist()
-    assert offsets == list(range(201))  # 200 compacted + 1 appended
-
-
 def test_optimize_layout_disjoint_file_ranges(spark, tmp_path):
     """After optimize_layout, per-file min/max stats on the sort column
     are disjoint — the provable data-skipping property."""
@@ -140,57 +114,3 @@ def test_optimize_layout_disjoint_file_ranges(spark, tmp_path):
     for (lo1, hi1), (lo2, hi2) in zip(ranges, ranges[1:]):
         assert hi1 <= lo2  # contiguous disjoint ranges across files
 
-
-def test_zorder_layout_narrows_both_dimensions(spark, tmp_path):
-    """Z-order write: per-file min/max spans shrink in BOTH columns
-    (the multi-dim skipping property a 1-D sort cannot give — its
-    second column spans the full range in every file)."""
-    import glob
-
-    import pyarrow.parquet as pq
-
-    from kamu_engine_datafusion_spark.sources.compact import (
-        optimize_layout,
-        optimize_layout_zorder,
-    )
-
-    # 2-D scrambled grid: x row-major, y column-major
-    df = spark.range(0, 16_384).selectExpr(
-        "cast(id % 128 as long) as x",
-        "cast(id / 128 as long) as y",
-        "id as payload",
-    )
-
-    def spans(path, col_idx):
-        out = []
-        for f in glob.glob(path + "/*.parquet"):
-            md = pq.read_metadata(f)
-            mins, maxs = [], []
-            for rg in range(md.num_row_groups):
-                st = md.row_group(rg).column(col_idx).statistics
-                mins.append(st.min)
-                maxs.append(st.max)
-            out.append(max(maxs) - min(mins))
-        return out
-
-    zpath = str(tmp_path / "zorder")
-    optimize_layout_zorder(df, zpath, ["x", "y"], target_files=16)
-    # schema preserved, no helper columns, row count intact
-    back = spark.read.parquet(zpath)
-    assert sorted(back.columns) == ["payload", "x", "y"]
-    assert back.count() == 16_384
-
-    spath = str(tmp_path / "sort1d")
-    optimize_layout(df, spath, ["x"], target_files=16)
-
-    # 16 files over a 128x128 grid -> most z-order files cover ~1/4 of
-    # each axis; range cuts that straddle a z-quadrant seam legitimately
-    # span wide in one dim (classic z-curve artifact), so assert the
-    # DISTRIBUTION: >= 3/4 of files narrow in BOTH dims. A 1-D sort
-    # leaves y unconstrained in every file.
-    zx, zy = spans(zpath, 0), spans(zpath, 1)
-    sy = spans(spath, 1)
-    narrow = sum(1 for a, b in zip(zx, zy) if a <= 64 and b <= 64)
-    assert narrow >= len(zx) * 3 // 4, (zx, zy)
-    assert max(sy) >= 120  # 1-D layout cannot skip on y
-    assert all(s <= 64 for s in spans(spath, 0))  # but x stays narrow

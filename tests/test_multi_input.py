@@ -133,27 +133,32 @@ def test_one_input_live_one_schema_only(spark, tmp_path):
 
 
 def test_ledger_schema_evolution_merge(spark, tmp_path):
-    """Beyond parity (the reference's engine.rs:235 TODO): a ledger
-    whose later part files added a column reads as the superset schema
-    with merge_schema=True, early rows null-filled; the default read
-    keeps the reference's first-footer behavior."""
-    import os
+    """Beyond parity (the reference's engine.rs:235 TODO): in a session
+    with ``spark.sql.parquet.mergeSchema=true`` a ledger whose later
+    part files added a column reads as the superset schema, early rows
+    null-filled; the default session keeps the reference's first-footer
+    behavior."""
+    from kamu_engine_datafusion_spark.sources.ledger import read_parquet
 
-    from kamu_engine_datafusion_spark.sources.ledger import (
-        read_parquet_ledger,
+    p1, p2 = str(tmp_path / "p1.parquet"), str(tmp_path / "p2.parquet")
+    pq.write_table(
+        pa.table({"offset": pa.array([0], pa.int64()), "city": ["a"]}), p1
+    )
+    pq.write_table(
+        pa.table(
+            {
+                "offset": pa.array([1], pa.int64()),
+                "city": ["b"],
+                "population": pa.array([7], pa.int32()),
+            }
+        ),
+        p2,
     )
 
-    d = str(tmp_path / "evo")
-    os.makedirs(d)
-    spark.createDataFrame(
-        [(0, "a")], "offset long, city string"
-    ).coalesce(1).write.parquet(d + "/p1.parquet")
-    spark.createDataFrame(
-        [(1, "b", 7)], "offset long, city string, population int"
-    ).coalesce(1).write.parquet(d + "/p2.parquet")
-    paths = [d + "/p1.parquet", d + "/p2.parquet"]
-
-    merged = read_parquet_ledger(spark, paths, merge_schema=True)
+    assert read_parquet(spark, [p1, p2]).columns == ["offset", "city"]
+    session = spark.newSession()
+    session.conf.set("spark.sql.parquet.mergeSchema", "true")
+    merged = read_parquet(session, [p1, p2])
     assert set(merged.columns) == {"offset", "city", "population"}
     rows = {r["offset"]: r for r in merged.collect()}
     assert rows[0]["population"] is None and rows[1]["population"] == 7

@@ -1,26 +1,13 @@
-"""Tests for skew salting and bucketed co-located joins — including the
-plan-level proof that bucketing removes the join shuffle."""
+"""Tests for skew salting and the key-skew profile."""
 
 from __future__ import annotations
-
-import contextlib
-import io
 
 from pyspark.sql import functions as F
 
 from kamu_engine_datafusion_spark.operators.partitioning import (
-    bucketed_join,
     salted_count,
     salted_join,
-    write_bucketed,
 )
-
-
-def _plan(df) -> str:
-    buf = io.StringIO()
-    with contextlib.redirect_stdout(buf):
-        df.explain("formatted")
-    return buf.getvalue()
 
 
 def test_salted_count_matches_plain_count(spark):
@@ -42,27 +29,6 @@ def test_salted_join_matches_plain_join(spark):
     )
     want = sorted((r["id"], r["v"]) for r in big.join(small, "k").collect())
     assert got == want
-
-
-def test_bucketed_join_has_no_shuffle(spark, tmp_path):
-    spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-    try:
-        a = spark.range(0, 1_000).select(F.col("id").alias("k"),
-                                         (F.col("id") * 2).alias("va"))
-        b = spark.range(0, 1_000).select(F.col("id").alias("k"),
-                                         (F.col("id") * 3).alias("vb"))
-        write_bucketed(a, "bkt_a", "k", num_buckets=8, sort_col="k")
-        write_bucketed(b, "bkt_b", "k", num_buckets=8, sort_col="k")
-        joined = bucketed_join(spark, "bkt_a", "bkt_b", "k")
-        plan = _plan(joined)
-        # co-located: sort-merge join with NO exchange on either side
-        assert "SortMergeJoin" in plan
-        assert "Exchange hashpartitioning" not in plan
-        assert joined.count() == 1_000
-    finally:
-        spark.conf.unset("spark.sql.autoBroadcastJoinThreshold")
-        spark.sql("DROP TABLE IF EXISTS bkt_a")
-        spark.sql("DROP TABLE IF EXISTS bkt_b")
 
 
 def test_key_skew_profile_ranks_and_shares(spark):

@@ -123,86 +123,13 @@ def test_system_time_exact_integer_milliseconds(spark):
     assert got.replace(tzinfo=timezone.utc) == st
 
 
-def test_execute_transform_distributed_offsets_end_to_end(spark, tmp_path):
-    """The full transform lifecycle in scale mode: parallel query,
-    distributed two-pass offsets, protocol-valid single-file output with
-    dense offsets and correct interval accounting."""
-    ledger = write_cities_ledger(str(tmp_path / "cities.parquet"))
-    from datetime import datetime, timezone
-
-    from kamu_engine_datafusion_spark import (
-        DatasetVocabulary,
-        OffsetInterval,
-        SqlQueryStep,
-        TransformRequest,
-        TransformRequestInput,
-        execute_transform,
-    )
-
-    req = TransformRequest(
-        dataset_alias="out",
-        system_time=datetime(2023, 2, 1, tzinfo=timezone.utc),
-        next_offset=10,
-        vocab=DatasetVocabulary(),
-        transform=[
-            SqlQueryStep(
-                query="SELECT event_time, city, population FROM foo"
-            )
-        ],
-        inputs=[
-            TransformRequestInput(
-                dataset_alias="foo",
-                query_alias="foo",
-                schema_file=ledger,
-                data_paths=[ledger],
-                offset_interval=OffsetInterval(0, 2),
-            )
-        ],
-        new_data_path=str(tmp_path / "result.parquet"),
-    )
-    resp = execute_transform(spark, req, distributed_offsets=True)
-    assert resp.new_offset_interval == OffsetInterval(10, 12)
-    out = pq.read_table(str(tmp_path / "result.parquet"))
-    offsets = sorted(out["offset"].to_pylist())
-    assert offsets == [10, 11, 12]
-    assert out.schema.names[:4] == ["offset", "op", "system_time", "event_time"]
-
-
 @pytest.mark.parametrize("base_map_max", [64, 0], ids=["map", "join"])
-def test_distributed_offsets_are_not_nullable(spark, tmp_path, monkeypatch, base_map_max):
+def test_distributed_offsets_are_not_nullable(spark, monkeypatch, base_map_max):
     """Both ways of carrying the per-partition bases (a literal map below
     the threshold, a broadcast join above it) give a NOT NULL offset, as
-    the serial path does, so a scale-mode transform writes a required
-    ``offset`` column."""
-    from datetime import datetime, timezone
-
-    from kamu_engine_datafusion_spark import (
-        DatasetVocabulary,
-        OffsetInterval,
-        TransformRequest,
-        TransformRequestInput,
-        execute_transform,
-    )
+    the serial path does."""
     from kamu_engine_datafusion_spark.operators import system_columns
 
     monkeypatch.setattr(system_columns, "_BASE_MAP_LITERAL_MAX", base_map_max)
     out = assign_offsets_distributed(spark.range(0, 6, 1, 3), "offset", 10)
     assert not out.schema["offset"].nullable
-
-    ledger = write_cities_ledger(str(tmp_path / "cities.parquet"))
-    path = str(tmp_path / "result.parquet")
-    execute_transform(spark, TransformRequest(
-        dataset_alias="out",
-        system_time=datetime(2023, 2, 1, tzinfo=timezone.utc),
-        next_offset=10,
-        vocab=DatasetVocabulary(),
-        transform=[SqlQueryStep(query="SELECT event_time, city FROM foo")],
-        inputs=[TransformRequestInput(
-            "foo", "foo", schema_file=ledger, data_paths=[ledger],
-            offset_interval=OffsetInterval(0, 2),
-        )],
-        new_data_path=path,
-    ), distributed_offsets=True)
-    written = pq.read_schema(path).field("offset")
-    assert not written.nullable
-    assert sorted(pq.read_table(path)["offset"].to_pylist()) == [10, 11, 12]

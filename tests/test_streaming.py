@@ -1,5 +1,5 @@
-"""Tests for the incremental micro-batch driver and the Structured
-Streaming helpers."""
+"""Tests for the incremental micro-batch driver and the maintained
+Structured Streaming folds."""
 
 from __future__ import annotations
 
@@ -13,12 +13,6 @@ from kamu_engine_datafusion_spark.plans.types import SqlQueryStep
 from kamu_engine_datafusion_spark.streaming.incremental import (
     IncrementalRunner,
     LedgerInput,
-)
-from kamu_engine_datafusion_spark.streaming.structured import (
-    ledger_stream,
-    run_to_memory,
-    streaming_dedup,
-    windowed_event_counts,
 )
 from tests.conftest import write_cities_ledger
 
@@ -84,290 +78,6 @@ def test_incremental_runner_two_ticks(spark, tmp_path):
     d = pq.read_table(str(out_dir / out_files[1])).to_pydict()
     assert d["city"] == ["osaka"]
     assert d["offset"] == [2]
-
-
-def test_structured_streaming_windowed_counts(spark, tmp_path):
-    in_dir = tmp_path / "stream"
-    in_dir.mkdir()
-    write_cities_ledger(str(in_dir / "part-00000.parquet"))
-    schema = spark.read.parquet(str(in_dir / "part-00000.parquet")).schema
-
-    stream = ledger_stream(spark, str(in_dir), schema)
-    agg = windowed_event_counts(stream, "event_time", "1 hour", "1 hour")
-    # append mode only emits a window after the watermark passes its end,
-    # which needs a later batch; complete mode shows state after one batch
-    out = run_to_memory(spark, agg, "win_counts", output_mode="complete")
-    rows = out.collect()
-    assert len(rows) == 1 and rows[0]["n"] == 3  # all fixture rows share one hour
-
-
-def test_streaming_dedup_bounds_state(spark, tmp_path):
-    in_dir = tmp_path / "dedupstream"
-    in_dir.mkdir()
-    rows = [("vancouver", 1), ("vancouver", 1), ("kyiv", 2)]
-    write_cities_ledger(str(in_dir / "part-00000.parquet"), rows=rows)
-    schema = spark.read.parquet(str(in_dir / "part-00000.parquet")).schema
-
-    stream = ledger_stream(spark, str(in_dir), schema)
-    deduped = streaming_dedup(stream, ["city", "population"], "event_time")
-    out = run_to_memory(spark, deduped, "dedup_out")
-    cities = sorted(r["city"] for r in out.collect())
-    assert cities == ["kyiv", "vancouver"]
-
-
-def test_structured_streaming_session_windows(spark, tmp_path):
-    """Two bursts of events separated by more than the gap must land in
-    two sessions; events within the gap merge into one."""
-    from datetime import datetime, timezone
-
-    from kamu_engine_datafusion_spark.streaming.structured import (
-        session_window_counts,
-    )
-
-    in_dir = tmp_path / "sessstream"
-    in_dir.mkdir()
-    t0 = datetime(2023, 1, 1, 10, 0, tzinfo=timezone.utc)
-
-    import pyarrow as pa
-    import pyarrow.parquet as pq_w
-    from datetime import timedelta
-
-    times = [t0, t0 + timedelta(minutes=5), t0 + timedelta(hours=2)]
-    tbl = pa.table(
-        {
-            "event_time": pa.array(times, pa.timestamp("ms", "UTC")),
-            "user": pa.array(["u1"] * 3),
-        }
-    )
-    pq_w.write_table(tbl, str(in_dir / "part-00000.parquet"))
-    schema = spark.read.parquet(str(in_dir / "part-00000.parquet")).schema
-
-    stream = ledger_stream(spark, str(in_dir), schema)
-    agg = session_window_counts(
-        stream, "event_time", gap="30 minutes", group_col="user"
-    )
-    out = run_to_memory(spark, agg, "sess_counts", output_mode="complete")
-    rows = sorted(out.collect(), key=lambda r: r["session_start"])
-    assert [r["n_events"] for r in rows] == [2, 1]
-    # first session spans the two clustered events + gap extension
-    assert rows[0]["session_start"].minute == 0
-
-
-def test_stream_to_ledger_appends_with_continuing_offsets(spark, tmp_path):
-    """Micro-batches arriving as files must land in the ledger through
-    the full ingest path with dense, continuing offsets."""
-    from datetime import datetime, timezone
-
-    import glob as _glob
-
-    import pyarrow as pa
-    import pyarrow.parquet as pq_w
-
-    from kamu_engine_datafusion_spark.streaming.structured import (
-        stream_to_ledger,
-    )
-
-    in_dir = tmp_path / "arrivals"
-    in_dir.mkdir()
-    utc = timezone.utc
-
-    def write_arrival(idx: int, cities: list[str]) -> None:
-        t0 = datetime(2023, 3, 1, tzinfo=utc)
-        tbl = pa.table(
-            {
-                "event_time": pa.array([t0] * len(cities), pa.timestamp("ms", "UTC")),
-                "city": pa.array(cities),
-            }
-        )
-        pq_w.write_table(tbl, str(in_dir / f"arrival-{idx:03d}.parquet"))
-
-    write_arrival(0, ["vancouver", "kyiv"])
-    schema = spark.read.parquet(str(in_dir)).schema
-    stream = ledger_stream(spark, str(in_dir), schema)
-
-    ledger_dir = str(tmp_path / "ledger")
-    st_fn = lambda bid: datetime(2023, 3, 2, tzinfo=utc)  # noqa: E731
-    q = stream_to_ledger(
-        stream, ledger_dir, system_time_fn=st_fn,
-        checkpoint_dir=str(tmp_path / "ckpt"),
-    )
-    q.awaitTermination()
-
-    # second arrival: restart the stream from the checkpoint
-    write_arrival(1, ["lyon"])
-    stream2 = ledger_stream(spark, str(in_dir), schema)
-    q2 = stream_to_ledger(
-        stream2, ledger_dir, system_time_fn=st_fn,
-        checkpoint_dir=str(tmp_path / "ckpt"),
-    )
-    q2.awaitTermination()
-
-    import pyarrow.parquet as pq_r
-
-    files = sorted(_glob.glob(ledger_dir + "/*.parquet"))
-    allrows = pq_r.read_table(files).sort_by("offset")
-    assert allrows["offset"].to_pylist() == [0, 1, 2]
-    assert sorted(allrows["city"].to_pylist()) == ["kyiv", "lyon", "vancouver"]
-    assert allrows.schema.names[:4] == ["offset", "op", "system_time", "event_time"]
-
-
-def test_ledger_sink_exactly_once_on_crash_replay(spark, tmp_path):
-    """foreachBatch is at-least-once: a crash between the parquet append
-    and the checkpoint commit replays the batch under the same id. The
-    sink must converge to exactly-once at every crash point."""
-    import glob as _glob
-    import json
-    import os
-    from datetime import datetime, timezone
-
-    import pyarrow.parquet as pq_r
-
-    from kamu_engine_datafusion_spark.streaming.structured import (
-        make_ledger_sink,
-    )
-
-    ledger_dir = str(tmp_path / "ledger")
-    st_fn = lambda bid: datetime(2023, 3, 2, tzinfo=timezone.utc)  # noqa: E731
-    sink = make_ledger_sink(ledger_dir, system_time_fn=st_fn)
-
-    def batch(cities):
-        return spark.createDataFrame(
-            [(datetime(2023, 3, 1, tzinfo=timezone.utc), c) for c in cities],
-            "event_time timestamp, city string",
-        )
-
-    def ledger_offsets():
-        files = sorted(_glob.glob(ledger_dir + "/*.parquet"))
-        return pq_r.read_table(files)["offset"].to_pylist() if files else []
-
-    # batch 0 commits normally; replaying it (checkpoint lost AFTER
-    # commit) must be a no-op
-    sink(batch(["vancouver", "kyiv"]), 0)
-    assert sorted(ledger_offsets()) == [0, 1]
-    sink(batch(["vancouver", "kyiv"]), 0)
-    assert sorted(ledger_offsets()) == [0, 1]
-
-    # batch 1 "crashes" after the parquet append but before the commit
-    # marker: simulate by running the real sink, then deleting its
-    # commit marker (intent must survive, as it would in a crash)
-    sink(batch(["lyon"]), 1)
-    commits = os.path.join(ledger_dir, "_stream_commits")
-    commit_marker = os.path.join(commits, "1.json")
-    with open(commit_marker) as f:
-        part_written = json.load(f)["part"]
-    os.remove(commit_marker)
-    with open(os.path.join(commits, "1.intent"), "w") as f:
-        json.dump({"part": part_written}, f)
-    assert sorted(ledger_offsets()) == [0, 1, 2]  # orphan rows present
-
-    # the replay must roll the orphan back and land exactly once
-    sink(batch(["lyon"]), 1)
-    assert sorted(ledger_offsets()) == [0, 1, 2]
-
-    # batch 2 "crashes" after writing the intent but before the append:
-    # replay must simply ingest (nothing to roll back)
-    intent = os.path.join(commits, "2.intent")
-    with open(intent, "w") as f:
-        json.dump({"part": os.path.join(ledger_dir, "nonexistent.parquet")}, f)
-    sink(batch(["osaka", "turin"]), 2)
-    assert sorted(ledger_offsets()) == [0, 1, 2, 3, 4]
-
-    # dense offsets, no duplicate cities anywhere
-    files = sorted(_glob.glob(ledger_dir + "/*.parquet"))
-    cities = pq_r.read_table(files)["city"].to_pylist()
-    assert sorted(cities) == ["kyiv", "lyon", "osaka", "turin", "vancouver"]
-
-
-def test_stream_stream_interval_join(spark, tmp_path):
-    """Clicks join conversions with the same user within 10 minutes —
-    two-sided time bound so both state stores can expire."""
-    import pandas as pd
-
-    from kamu_engine_datafusion_spark.streaming.structured import (
-        stream_interval_join,
-    )
-
-    ldir = tmp_path / "clicks"
-    rdir = tmp_path / "convs"
-    ldir.mkdir()
-    rdir.mkdir()
-    t0 = datetime(2024, 1, 1, 12, 0, 0, tzinfo=UTC)
-
-    def write(d, name, rows, cols):
-        # pandas writes ns timestamps, which nanosAsLong turns into
-        # BIGINT on read; coerce to us so the stream sees TIMESTAMP
-        pd.DataFrame(rows, columns=cols).to_parquet(
-            str(d / name), coerce_timestamps="us", allow_truncated_timestamps=True
-        )
-
-    write(ldir, "p0.parquet",
-          [(1, t0), (2, t0)], ["user_id", "click_time"])
-    write(rdir, "p0.parquet",
-          # user 1 converts 5 min after the click (match); user 2
-          # converts 30 min after (outside max_delay -> no match)
-          [(1, datetime(2024, 1, 1, 12, 5, tzinfo=UTC)), (2, datetime(2024, 1, 1, 12, 30, tzinfo=UTC))],
-          ["user_id", "conv_time"])
-
-    lschema = spark.read.parquet(str(ldir / "p0.parquet")).schema
-    rschema = spark.read.parquet(str(rdir / "p0.parquet")).schema
-    joined = stream_interval_join(
-        ledger_stream(spark, str(ldir), lschema),
-        ledger_stream(spark, str(rdir), rschema),
-        key_col="user_id",
-        left_time_col="click_time",
-        right_time_col="conv_time",
-        max_delay="10 minutes",
-    )
-    rows = run_to_memory(spark, joined, "ssjoin").collect()
-    assert len(rows) == 1  # only user 1 attributes within the window
-    assert rows[0]["conv_time"].minute == 5
-
-
-def test_streaming_dedup_against_index(spark, tmp_path):
-    """Batch 2's near-duplicates of batch 1 docs are suppressed by the
-    persisted index; restart sees the accumulated index."""
-    import pandas as pd
-
-    from kamu_engine_datafusion_spark.streaming.structured import (
-        streaming_dedup_against_index,
-    )
-
-    in_dir = tmp_path / "docs"
-    in_dir.mkdir()
-    base = "the quick brown fox jumps over the lazy dog again and again"
-    other = "completely different content about spark engines and parquet"
-
-    pd.DataFrame(
-        [(0, base), (1, other)], columns=["doc_id", "text"]
-    ).to_parquet(str(in_dir / "b0.parquet"))
-
-    schema = spark.read.parquet(str(in_dir / "b0.parquet")).schema
-    kwargs = dict(
-        index_dir=str(tmp_path / "index"),
-        out_dir=str(tmp_path / "clean"),
-        checkpoint_dir=str(tmp_path / "ckpt"),
-        threshold=0.6,
-    )
-    q = streaming_dedup_against_index(
-        ledger_stream(spark, str(in_dir), schema), **kwargs
-    )
-    q.awaitTermination()
-
-    # second batch: one dup of doc 0, one genuinely new doc
-    pd.DataFrame(
-        [(10, base), (11, "fresh text that matches nothing else at all")],
-        columns=["doc_id", "text"],
-    ).to_parquet(str(in_dir / "b1.parquet"))
-    q2 = streaming_dedup_against_index(
-        ledger_stream(spark, str(in_dir), schema), **kwargs
-    )
-    q2.awaitTermination()
-
-    ids = sorted(
-        r["doc_id"]
-        for r in spark.read.parquet(str(tmp_path / "clean")).collect()
-    )
-    assert ids == [0, 1, 11]  # 10 suppressed as a dup of indexed doc 0
 
 
 def test_maintained_view_incremental_equals_full_recompute(spark, tmp_path):
@@ -550,14 +260,21 @@ def test_unparseable_fold_marker_fails_the_fold(spark, tmp_path):
     assert sorted(map(tuple, state.collect())) == [("a", 1), ("b", 2)]
 
 
-def test_maintained_view_recovers_from_mid_swap_crash(spark, tmp_path):
-    """End-to-end: kill the query 'between the two renames' (state_dir
-    gone, .old = tick-1 state, .next = tick-2 state + marker), wipe the
-    checkpoint so BOTH batches re-deliver, restart — the view must come
-    back exactly equal to the post-tick-2 state, with no double-merge
-    and no silent reset to empty."""
+def test_maintained_view_recovers_from_crash_mid_intent_apply(
+    spark, tmp_path, monkeypatch
+):
+    """End-to-end: tick 2's fold crashes after its ``_intent`` commit
+    point with one bucket already moved into the root and the marker
+    still at batch 0; the checkpoint is lost too, so the restarted
+    stream re-delivers the whole ledger. Recovery must finish tick 2's
+    apply and skip the re-delivery — the view comes back exactly equal
+    to the post-tick-2 state, no double merge, no half-applied tick."""
+    import json
     import shutil
 
+    import pytest
+
+    from kamu_engine_datafusion_spark.streaming import structured
     from kamu_engine_datafusion_spark.streaming.structured import (
         maintained_view,
     )
@@ -567,37 +284,74 @@ def test_maintained_view_recovers_from_mid_swap_crash(spark, tmp_path):
     ck = os.path.join(str(tmp_path), "cck")
     os.makedirs(ledger_dir)
     schema = "offset long, op int, k string, value double"
+    t1 = [(0, 0, "a", 1.0), (1, 0, "b", 5.0)]
+    t2 = [(2, 0, "a", 2.0), (3, 1, "b", 5.0)]
 
-    def tick(rows):
+    def append(rows):
         spark.createDataFrame(rows, schema).coalesce(1).write.mode(
             "append"
         ).parquet(ledger_dir)
-        q = maintained_view(
+
+    def fold():
+        maintained_view(
             ledger_dir, state_dir, ck, ["k"], {"vs": "value"},
             schema=spark.read.parquet(ledger_dir).schema, spark=spark,
+        ).awaitTermination()
+
+    def view():
+        return sorted(tuple(r) for r in spark.read.parquet(state_dir).collect())
+
+    # the uncrashed run fixes the post-tick-2 view
+    append(t1)
+    fold()
+    t1_state = os.path.join(str(tmp_path), "t1_state")
+    t1_ck = os.path.join(str(tmp_path), "t1_ck")
+    shutil.copytree(state_dir, t1_state)
+    shutil.copytree(ck, t1_ck)
+    append(t2)
+    fold()
+    want = view()
+
+    # rerun tick 2 from the tick-1 state, crashing right after the
+    # intent commit with the first bucket of its plan already applied
+    shutil.rmtree(state_dir)
+    shutil.rmtree(ck)
+    shutil.copytree(t1_state, state_dir)
+    shutil.copytree(t1_ck, ck)
+    real_write_intent = structured._write_intent
+    moved = []
+
+    def crash_after_one_bucket(state_dir_, batch_id, apply, drop, append=None):
+        real_write_intent(state_dir_, batch_id, apply, drop, append)
+        b = f"{structured._BUCKET_COL}={apply[0]}"
+        shutil.rmtree(os.path.join(state_dir_, b), ignore_errors=True)
+        os.replace(
+            os.path.join(structured._stage_dir(state_dir_), b),
+            os.path.join(state_dir_, b),
         )
-        q.awaitTermination()
+        moved.append(b)
+        raise RuntimeError("crash mid-apply")
 
-    tick([(0, 0, "a", 1.0), (1, 0, "b", 5.0)])
-    after_t1 = os.path.join(str(tmp_path), "saved_t1")
-    shutil.copytree(state_dir, after_t1)
-    tick([(2, 0, "a", 2.0), (3, 1, "b", 5.0)])
-    want = sorted(
-        tuple(r) for r in spark.read.parquet(state_dir).collect()
-    )
+    monkeypatch.setattr(structured, "_write_intent", crash_after_one_bucket)
+    with pytest.raises(Exception, match="crash mid-apply"):
+        fold()
+    monkeypatch.undo()
 
-    # reconstruct the exact mid-swap crash layout of the tick-2 fold
-    shutil.move(state_dir, state_dir + ".next")  # carries marker 1
-    shutil.copytree(after_t1, state_dir + ".old")
-    shutil.rmtree(ck)  # checkpoint lost too: batches 0 AND 1 re-deliver
+    stage = state_dir + ".next"
+    with open(os.path.join(stage, "_intent")) as f:
+        intent = json.load(f)
+    assert intent["batch_id"] == 1 and len(moved) == 1
+    assert not os.path.exists(os.path.join(stage, moved[0]))
+    assert os.path.isdir(os.path.join(state_dir, moved[0]))
+    with open(os.path.join(state_dir, "_folded_batch_id")) as f:
+        assert f.read().strip() == "0"
 
-    q = maintained_view(
-        ledger_dir, state_dir, ck, ["k"], {"vs": "value"},
-        schema=spark.read.parquet(ledger_dir).schema, spark=spark,
-    )
-    q.awaitTermination()
-    got = sorted(tuple(r) for r in spark.read.parquet(state_dir).collect())
-    assert got == want  # a: (2, 3.0); b retracted — not doubled, not empty
+    shutil.rmtree(ck)  # checkpoint lost: the whole ledger re-delivers
+    fold()
+    assert view() == want  # a: (2, 3.0); b retracted — not doubled
+    assert not os.path.exists(stage)
+    with open(os.path.join(state_dir, "_folded_batch_id")) as f:
+        assert f.read().strip() == "1"
 
 
 def test_maintained_distinct_sketch_union_equals_full(spark, tmp_path):
@@ -920,10 +674,9 @@ def test_maintained_view_null_group_key_buckets_fine(spark, tmp_path):
 
 
 def test_bucketed_state_read_partition_prunes(spark, tmp_path):
-    """The touched-bucket state read must PRUNE untouched buckets at
-    the scan (PartitionFilters on the hive bucket column) — the
-    'untouched buckets are never read' half of the O(touched) claim
-    (the byte-identity test covers the never-rewritten half)."""
+    """A bucket-filtered read of a state root (compaction's read) must
+    PRUNE untouched buckets at the scan (PartitionFilters on the hive
+    bucket column)."""
     from kamu_engine_datafusion_spark.streaming.structured import (
         _BUCKET_COL,
         _bucket_of,
@@ -943,6 +696,54 @@ def test_bucketed_state_read_partition_prunes(spark, tmp_path):
     assert pf and "IN (3,7)" in pf[0].replace(" ", "").replace(
         "IN(3,7)", "IN (3,7)"
     ), plan
+
+
+def test_touched_state_warm_read_runs_no_job(spark, tmp_path):
+    """The per-tick touched-state read lists the touched bucket dirs and
+    reads their files with the cached footer schema: once warm it starts
+    no Spark job (a read of the partitioned root ran a listing and
+    inference job on every tick), and it returns exactly the touched
+    buckets' rows and the state's schema — the 'untouched buckets are
+    never read' half of the O(touched) claim."""
+    from kamu_engine_datafusion_spark.streaming.structured import (
+        _bucket_of,
+        _fold_buckets,
+        _touched_state,
+        read_maintained_state,
+    )
+    from tests.test_coordinator_edges import _spark_jobs
+
+    d, n = str(tmp_path / "state"), 16
+    rows = spark.range(64).selectExpr("id AS k", "id * 10 AS v")
+
+    def add(state, inc):
+        if state is None:
+            return inc
+        return inc.unionByName(state).groupBy("k").agg(F.sum("v").alias("v"))
+
+    for tick in range(3):
+        _fold_buckets(rows.filter(F.col("k") % 3 == tick), tick, d, ["k"], n, add)
+    batch = spark.createDataFrame([(1, 1), (2, 1), (40, 1)], "k long, v long")
+
+    got = []
+
+    def touched_state(read_state):
+        got.append(_touched_state(batch, d, ["k"], n, read_state))
+
+    touched_state(True)  # cold: the schema cache learns the footer
+    with_read = _spark_jobs(spark, lambda: touched_state(True))
+    without_read = _spark_jobs(spark, lambda: touched_state(False))
+    assert with_read == without_read  # the subset read itself ran no job
+
+    touched, subset = got[1]
+    assert got[2] == (touched, None) and 1 < len(touched) < n
+    want = read_maintained_state(spark, d).filter(
+        _bucket_of(["k"], n).isin(touched)
+    )
+    assert subset.schema == want.schema
+    assert sorted(map(tuple, subset.collect())) == sorted(
+        map(tuple, want.collect())
+    )
 
 
 def test_maintained_countmin_equals_batch_grid(spark, tmp_path):
