@@ -1,5 +1,5 @@
 """Partitioning utilities for the 100 TB regime: skew-salted
-aggregation/joins and a key-skew profile.
+aggregation and a key-skew profile.
 
 AQE (enabled in ``session.py``) already splits skewed shuffle/join
 partitions at runtime; these helpers cover the case AQE can't: a single
@@ -35,30 +35,6 @@ def salted_count(
     )
 
 
-def salted_join(
-    big: DataFrame,
-    small: DataFrame,
-    key: str,
-    salt_buckets: int = 8,
-) -> DataFrame:
-    """Skew-proof equi-join: salt the big side's key, replicate the small
-    side once per salt value, join on (key, salt).
-
-    For when the small side is too large to broadcast outright but a hot
-    key on the big side would otherwise pin one reducer. Replication
-    factor = ``salt_buckets`` on the small side only.
-    """
-    salted_big = big.withColumn(
-        "__salt", (F.rand(seed=42) * salt_buckets).cast("int")
-    )
-    salts = F.explode(
-        F.sequence(F.lit(0), F.lit(salt_buckets - 1))
-    ).alias("__salt")
-    replicated_small = small.select("*", salts)
-    out = salted_big.join(replicated_small, [key, "__salt"])
-    return out.drop("__salt")
-
-
 #: The profile returned by key_skew_profile lazily reads its persisted
 #: count table, so the table is released at the NEXT call.
 SKEW_LEDGER = DeferredLedger()
@@ -75,7 +51,7 @@ def key_skew_profile(
     tuple (unit-separator joined), ``share`` its fraction of all rows.
     A top key holding ≫ 1/shuffle-partitions of the table is the key
     AQE cannot split in a GROUP BY: salt it (:func:`salted_count`) or
-    broadcast its join side (:func:`salted_join`).
+    broadcast its join side.
 
     One partial-aggregated count per key; the count table is persisted
     (and released at the next call) because the grand total — which

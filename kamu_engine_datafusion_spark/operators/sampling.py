@@ -7,10 +7,8 @@ partitioning; these are stable, period.
 
 - :func:`deterministic_sample` — keep rows whose keyed hash falls under
   the fraction (consistent across any execution plan).
-- :func:`stratified_sample` — per-stratum fractions (e.g. language
-  rebalancing: downsample English, keep all low-resource languages).
-- :func:`split_train_holdout` — disjoint, exhaustive, reproducible
-  train/holdout split from the same keyed hash.
+- :func:`split_by_group` — leakage-safe train/holdout split of whole
+  groups from the same keyed hash.
 
 All pure column predicates → pushed to the scan, zero shuffles.
 """
@@ -67,24 +65,6 @@ def deterministic_sample(
     )
 
 
-def stratified_sample(
-    df: DataFrame,
-    key_col: str,
-    stratum_col: str,
-    fractions: dict[str, float],
-    default_fraction: float = 1.0,
-    salt: int = 0,
-) -> DataFrame:
-    """Per-stratum deterministic sampling (strata not listed keep
-    ``default_fraction``)."""
-    threshold = F.lit(int(default_fraction * _BUCKETS))
-    for stratum, frac in sorted(fractions.items()):
-        threshold = F.when(
-            F.col(stratum_col) == stratum, F.lit(int(frac * _BUCKETS))
-        ).otherwise(threshold)
-    return df.filter(_bucket(F.col(key_col), salt) < threshold)
-
-
 def stratified_sample_exact(
     df: DataFrame,
     key_col: str,
@@ -97,14 +77,14 @@ def stratified_sample_exact(
     keyed-hash order — deterministic across runs, engines, and
     partitionings (the hash orders rows, the rank cuts the sample).
 
-    Use over :func:`stratified_sample` when the binomial spread of
-    per-row hashing is unacceptable (small strata, hard quota).
+    Use over a per-row keyed-hash filter (:func:`deterministic_sample`
+    per stratum) when the binomial spread of per-row hashing is
+    unacceptable (small strata, hard quota).
 
     Scale: ONE shuffle on the stratum key; the rank and the stratum-size
     windows share that exchange. A single giant stratum serializes
     through one partition's window sort — for heavy-tailed strata prefer
-    the per-row :func:`stratified_sample`, which stays embarrassingly
-    parallel.
+    a per-row keyed-hash filter, which stays embarrassingly parallel.
     """
     b = _bucket(F.col(key_col), salt, hash_fn)
     w_rank = Window.partitionBy(stratum_col).orderBy(b, F.col(key_col))
@@ -428,16 +408,6 @@ def pack_layout(
     return df.withColumn("chunk", chunk).withColumn("start", start)
 
 
-def split_train_holdout(
-    df: DataFrame, key_col: str, holdout_fraction: float = 0.01, salt: int = 0
-) -> tuple[DataFrame, DataFrame]:
-    """Disjoint, exhaustive (train, holdout) split keyed on the id —
-    every row lands in exactly one side, stably."""
-    b = _bucket(F.col(key_col), salt)
-    cut = int(holdout_fraction * _BUCKETS)
-    return df.filter(b >= cut), df.filter(b < cut)
-
-
 def split_by_group(
     df: DataFrame,
     group_col: str,
@@ -449,7 +419,7 @@ def split_by_group(
     site) land on one side, so near-duplicates and templated pages from
     the same origin can never straddle the boundary — the standard
     guard against train/eval contamination that a row-level split
-    (:func:`split_train_holdout`) cannot give.
+    cannot give.
 
     Scale: pure column predicate on the group key's hash — no shuffle,
     no group materialization; pushed to the scan.
@@ -571,6 +541,31 @@ def ares_key(
     # half-up, not the engines' round(): exact .5 halves disagree
     # between Spark and DuckDB and this IS a rank sort key
     return half_up(F.log(u) / w, 9)
+
+
+def ares_top_n(
+    df: DataFrame, group_col: str, n: int, key_col: str
+) -> DataFrame:
+    """The ``n`` rows with the highest A-Res key ``__akey``
+    (:func:`ares_key`) per ``group_col``, ties broken by ``key_col``:
+    the per-group reservoir cut that :func:`weighted_sample_per_group`,
+    the streaming ``maintained_weighted_sample`` fold and its registry
+    replay share. Because the key is a pure function of the row id,
+    ``top_n(A ∪ B) == top_n(top_n(A) ∪ B)``, so folding ticks through it
+    is exact.
+
+    Keep the rank filter in the ``row_number().over(...) <= n`` form:
+    it is the shape Catalyst's Partial ``WindowGroupLimit`` recognizes
+    (see :func:`cap_per_group`), so a hot group ships at most ``n``
+    rows per upstream partition."""
+    rank_w = Window.partitionBy(group_col).orderBy(
+        F.col("__akey").desc(), F.col(key_col)
+    )
+    return (
+        df.withColumn("__rn", F.row_number().over(rank_w))
+        .filter(F.col("__rn") <= n)
+        .drop("__rn")
+    )
 
 
 def weighted_sample(
@@ -904,17 +899,10 @@ def weighted_sample_per_group(
     upstream partition. Rows with ``w <= 0`` or null are excluded.
     """
     w = F.col(weight_col).cast("double")
-    res_key = ares_key(key_col, weight_col, salt, hash_fn)
-    rank_w = Window.partitionBy(group_col).orderBy(
-        F.col("__akey").desc(), F.col(key_col)
+    keyed = df.filter(w > 0).withColumn(
+        "__akey", ares_key(key_col, weight_col, salt, hash_fn)
     )
-    return (
-        df.filter(w > 0)
-        .withColumn("__akey", res_key)
-        .withColumn("__rn", F.row_number().over(rank_w))
-        .filter(F.col("__rn") <= n)
-        .drop("__akey", "__rn")
-    )
+    return ares_top_n(keyed, group_col, n, key_col).drop("__akey")
 
 
 def pack_sequences_ffd(

@@ -171,7 +171,8 @@ def ivf_index(
 
     Returns ``(assigned_corpus, kmeans_model)``. At scale the assigned
     corpus is written partitioned by ``__list`` so a query reads only
-    its probed lists; MLlib k-means trains in a few distributed passes.
+    its probed lists (see :func:`ivf_topk`); MLlib k-means trains in a
+    few distributed passes.
     """
     from pyspark.ml.clustering import KMeans
     from pyspark.ml.functions import array_to_vector
@@ -185,18 +186,6 @@ def ivf_index(
     ).fit(feat)
     assigned = model.transform(feat).drop("__features")
     return assigned, model
-
-
-def ivf_write(assigned_corpus: DataFrame, path: str, mode: str = "overwrite") -> None:
-    """Persist an IVF-assigned corpus partitioned by list id — the
-    write-time bucketing that turns ``nprobe`` into physical partition
-    pruning: :func:`ivf_topk` over ``spark.read.parquet(path)`` pushes
-    its ``__list IN (...)`` filter into ``PartitionFilters``, so unprobed
-    lists are never read (files, not rows, are skipped). At 100 TB this
-    is the difference between scanning the corpus per query and scanning
-    ``nprobe/nlist`` of it; proven in ``tests/test_similarity_ann.py``.
-    """
-    assigned_corpus.write.mode(mode).partitionBy("__list").parquet(path)
 
 
 def ivf_topk(

@@ -37,6 +37,22 @@ from kamu_engine_datafusion_spark.plans.types import (
 )
 
 
+def latest_per_key(
+    df: DataFrame, keys: list[str], offset_col: str
+) -> DataFrame:
+    """The record with the highest ``offset_col`` per ``keys``, dead
+    records (retractions, correct-from halves) INCLUDED: the
+    latest-per-key merge law that the batch snapshot, ledger compaction,
+    the maintained snapshot fold and its registry replay share. Offsets
+    are unique, so there are no ties."""
+    w = Window.partitionBy(*keys).orderBy(F.col(offset_col).desc())
+    return (
+        df.withColumn("__rn", F.row_number().over(w))
+        .filter(F.col("__rn") == 1)
+        .drop("__rn")
+    )
+
+
 def snapshot_of_ledger(
     ledger: DataFrame,
     primary_key: str | list[str],
@@ -48,12 +64,7 @@ def snapshot_of_ledger(
     vocab = vocab or DatasetVocabulary()
     keys = [primary_key] if isinstance(primary_key, str) else list(primary_key)
     off, op = vocab.offset_column, vocab.operation_type_column
-    w = Window.partitionBy(*keys).orderBy(F.col(off).desc())
-    latest = (
-        ledger.withColumn("__rn", F.row_number().over(w))
-        .filter(F.col("__rn") == 1)
-        .drop("__rn")
-    )
+    latest = latest_per_key(ledger, keys, off)
     live = latest.filter(~F.col(op).isin(OP_RETRACT, OP_CORRECT_FROM))
     drop_cols = [off, op, vocab.system_time_column]
     return live.drop(*drop_cols)
@@ -310,10 +321,4 @@ def compact_ledger(
     off = vocab.offset_column
     old = ledger.filter(F.col(off) <= horizon_offset)
     recent = ledger.filter(F.col(off) > horizon_offset)
-    w = Window.partitionBy(*keys).orderBy(F.col(off).desc())
-    compacted_old = (
-        old.withColumn("__rn", F.row_number().over(w))
-        .filter(F.col("__rn") == 1)
-        .drop("__rn")
-    )
-    return compacted_old.unionByName(recent)
+    return latest_per_key(old, keys, off).unionByName(recent)

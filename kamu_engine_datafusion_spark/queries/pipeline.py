@@ -1793,7 +1793,9 @@ def q_xsnapshot_merge(spark: SparkSession, sf_dir: str) -> DataFrame:
     live rows selected at the end. Oracle = latest-per-key over the
     whole ledger directly — hash match proves the fold reproduces the
     batch snapshot."""
-    from pyspark.sql import Window
+    from kamu_engine_datafusion_spark.operators.snapshot import (
+        latest_per_key,
+    )
 
     t = load(spark, sf_dir, "events")
     ledger = t["events"].select(
@@ -1803,15 +1805,10 @@ def q_xsnapshot_merge(spark: SparkSession, sf_dir: str) -> DataFrame:
         "value",
     )
     state = None
-    w = Window.partitionBy("user_id").orderBy(F.col("offset").desc())
     for k in range(3):
         tick = ledger.filter(F.col("offset") % 3 == k)
         merged = tick if state is None else state.unionByName(tick)
-        state = (
-            merged.withColumn("__rn", F.row_number().over(w))
-            .filter(F.col("__rn") == 1)
-            .drop("__rn")
-        )
+        state = latest_per_key(merged, ["user_id"], "offset")
     return state.filter(~F.col("op").isin(1, 2)).select(
         "user_id", "offset", "op", "value"
     )
@@ -3098,16 +3095,14 @@ def q_xsample_weighted_merge(spark: SparkSession, sf_dir: str) -> DataFrame:
     (the ``xsample_weighted_group`` oracle) and a hash match proves
     fold ≡ batch draw row-for-row through the driver. State per group
     never exceeds n rows — per-tick cost O(increment + state)."""
-    from pyspark.sql import Window
-
-    from kamu_engine_datafusion_spark.operators.sampling import ares_key
+    from kamu_engine_datafusion_spark.operators.sampling import (
+        ares_key,
+        ares_top_n,
+    )
 
     t = load(spark, sf_dir, "documents")
     d = t["documents"]
     w = F.col("n_chars").cast("double")
-    rank_w = Window.partitionBy("lang").orderBy(
-        F.col("__akey").desc(), F.col("doc_id")
-    )
     state = None
     for i in range(3):
         inc = (
@@ -3118,11 +3113,7 @@ def q_xsample_weighted_merge(spark: SparkSession, sf_dir: str) -> DataFrame:
             )
         )
         merged = inc if state is None else inc.unionByName(state)
-        state = (
-            merged.withColumn("__rn", F.row_number().over(rank_w))
-            .filter(F.col("__rn") <= 50)
-            .drop("__rn")
-        )
+        state = ares_top_n(merged, "lang", 50, "doc_id")
     return state.select(
         "doc_id", "lang", F.col("n_chars").cast("long").alias("n_chars")
     )

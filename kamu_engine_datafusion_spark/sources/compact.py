@@ -95,34 +95,6 @@ def compact_ledger(
     return len(final)
 
 
-def optimize_layout(
-    df,
-    path: str,
-    sort_cols: list[str],
-    target_files: int = 32,
-    mode: str = "overwrite",
-) -> None:
-    """Write ``df`` range-partitioned and sorted by ``sort_cols`` — the
-    lakehouse data-layout maintenance op (OPTIMIZE ... ZORDER's
-    single-dimension cousin) that turns parquet row-group min/max stats
-    into real data skipping.
-
-    After this write, each output file holds a contiguous, disjoint
-    range of ``sort_cols[0]``; a point or range predicate on that column
-    prunes whole files (footer stats) and row groups (page stats) at
-    scan planning time instead of scanning the corpus. At 100 TB the
-    scan cost of a time-sliced query drops from "every file" to "files
-    overlapping the slice" — the same mechanism the offset-sliced
-    ledger read relies on, applied to any hot filter column.
-    """
-    (
-        df.repartitionByRange(target_files, *[F.col(c) for c in sort_cols])
-        .sortWithinPartitions(*sort_cols)
-        .write.mode(mode)
-        .parquet(path)
-    )
-
-
 def zorder_value(
     df,
     cols: list[str],

@@ -10,10 +10,15 @@ O(increment + touched state).
   file stream over the ledger directory, its schema read from a footer
   rather than by an inference job, and hands every micro-batch to the
   fold.
-- :func:`_fold_buckets` (rewrite) and :func:`_fold_buckets_append`
-  (append-only) stage the buckets a tick touches and commit them through
-  the intent protocol described above them, so a replayed micro-batch
-  folds exactly once.
+- A few private helpers own the hive-bucketed state layout described
+  below: :func:`_bucket_dirs` and :func:`_bucket_files` list it,
+  :func:`_read_buckets` reads the buckets a tick touches, and
+  :func:`_commit_buckets` stages and commits them through the intent
+  protocol, so a replayed micro-batch folds exactly once. The rewrite
+  fold :func:`_fold_buckets` and the append fold
+  :func:`_fold_buckets_append` differ only in the intent they commit;
+  :func:`_fold_two_roots` runs a fold whose step also feeds a sibling
+  root.
 - The merge laws live in ``operators/``: integer counters fold with
   ``operators.changelog.sum_merge``, and sketches, samples, snapshots
   and dedup indexes with their operator's own merge. The registry's
@@ -222,6 +227,55 @@ def _apply_intent(state_dir: str) -> None:
     shutil.rmtree(stage, ignore_errors=True)
 
 
+def _bucket_dirs(root: str) -> list[int]:
+    """The buckets ``root`` holds a directory for, sorted; empty when
+    ``root`` does not exist."""
+    import os
+
+    if not os.path.isdir(root):
+        return []
+    prefix = f"{_BUCKET_COL}="
+    return sorted(
+        int(n[len(prefix):])
+        for n in os.listdir(root)
+        if n.startswith(prefix) and os.path.isdir(os.path.join(root, n))
+    )
+
+
+def _bucket_files(root: str, bucket: int) -> list[str]:
+    """The parquet files Spark lists in ``bucket``'s directory under
+    ``root``, sorted by name; empty when that directory does not
+    exist."""
+    import os
+
+    from kamu_engine_datafusion_spark.sources.ledger import _listed_by_spark
+
+    d = os.path.join(root, f"{_BUCKET_COL}={bucket}")
+    if not os.path.isdir(d):
+        return []
+    return [
+        os.path.join(d, n)
+        for n in sorted(os.listdir(d))
+        if n.endswith(".parquet") and _listed_by_spark(n)
+    ]
+
+
+def _read_buckets(
+    spark: SparkSession, root: str, buckets: list[int]
+) -> DataFrame | None:
+    """The stored rows of ``buckets`` under ``root``, without the bucket
+    column; None when those buckets hold no file. It reads the files
+    :func:`_bucket_files` lists through
+    :func:`~kamu_engine_datafusion_spark.sources.ledger.read_parquet`,
+    so other buckets' files are never read and a warm schema costs no
+    job, where a read of the partitioned root runs a listing and
+    inference job on every call."""
+    from kamu_engine_datafusion_spark.sources.ledger import read_parquet
+
+    files = [f for b in buckets for f in _bucket_files(root, b)]
+    return read_parquet(spark, files) if files else None
+
+
 def _touched_state(
     batch_df: DataFrame,
     state_dir: str,
@@ -231,20 +285,8 @@ def _touched_state(
 ):
     """``(touched, state_subset)``: the sorted state buckets
     ``batch_df``'s keys hash to, and the stored rows of exactly those
-    buckets without the bucket column. ``state_subset`` reads the part
-    files Spark would list in the touched bucket dirs through
-    :func:`~kamu_engine_datafusion_spark.sources.ledger.read_parquet`,
-    so untouched bucket files are never read and a warm schema costs
-    no job, where a read of the partitioned root runs a listing and
-    inference job every tick. It is None when no touched bucket holds
-    state or ``read_state`` is false."""
-    import os
-
-    from kamu_engine_datafusion_spark.sources.ledger import (
-        _listed_by_spark,
-        read_parquet,
-    )
-
+    buckets (:func:`_read_buckets`). ``state_subset`` is None when no
+    touched bucket holds state or ``read_state`` is false."""
     touched = sorted(
         int(r[0])
         for r in batch_df.select(_bucket_of(key_cols, n_buckets))
@@ -253,18 +295,100 @@ def _touched_state(
     )
     if not read_state:
         return touched, None
-    files = []
-    for b in touched:
-        bucket = os.path.join(state_dir, f"{_BUCKET_COL}={b}")
-        if os.path.isdir(bucket):
-            files += [
-                os.path.join(bucket, n)
-                for n in sorted(os.listdir(bucket))
-                if n.endswith(".parquet") and _listed_by_spark(n)
+    return touched, _read_buckets(batch_df.sparkSession, state_dir, touched)
+
+
+def _already_folded(batch_id: int, state_dir: str, *side_dirs: str) -> bool:
+    """Heal every root's interrupted prior tick (side roots first), then
+    whether ``state_dir``'s marker already covers ``batch_id``: a
+    crash-replayed micro-batch, already folded into state."""
+    for d in (*side_dirs, state_dir):
+        _apply_intent(d)
+    return _last_folded_batch(state_dir) >= batch_id
+
+
+def _commit_buckets(
+    rows: DataFrame,
+    batch_id: int,
+    state_dir: str,
+    buckets: list[int],
+    sort_cols: list[str] | None = None,
+    append: bool = False,
+) -> None:
+    """Stage ``rows`` (carrying the bucket column, holding only
+    ``buckets``) and commit them with ``batch_id`` as the marker: the
+    one staged write of every fold and of :func:`compact_state`.
+
+    Hashing on the bucket column puts each bucket's rows in exactly one
+    task partition, so each bucket stages as one file. A rewrite intent
+    replaces each staged bucket whole and drops the ``buckets`` that
+    staged no rows; an append intent (``append``) moves each staged
+    file into its live bucket under a deterministic
+    ``b{batch_id}-{i}.parquet`` name, so a re-run cannot double-append.
+    The intent file is the commit point; :func:`_apply_intent` applies
+    it."""
+    import os
+    import shutil
+
+    stage = _stage_dir(state_dir)
+    shutil.rmtree(stage, ignore_errors=True)  # stale uncommitted staging
+    staged = rows.repartition(len(buckets), _BUCKET_COL)
+    if sort_cols:
+        # sort within each bucket file so parquet row-group min/max
+        # stats prune READS below the bucket level (the zone-map
+        # lesson applied to maintained state: a query for a few keys
+        # of a bucket skips the row groups holding everyone else's)
+        staged = staged.sortWithinPartitions(_BUCKET_COL, *sort_cols)
+    staged.write.partitionBy(_BUCKET_COL).mode("overwrite").parquet(stage)
+    if append:
+        moves = [
+            [
+                os.path.relpath(f, stage),
+                os.path.join(f"{_BUCKET_COL}={b}", f"b{batch_id}-{i}.parquet"),
             ]
-    if not files:
-        return touched, None
-    return touched, read_parquet(batch_df.sparkSession, files)
+            for b in buckets
+            for i, f in enumerate(_bucket_files(stage, b))
+        ]
+        _write_intent(state_dir, batch_id, [], [], moves)
+    else:
+        with_data = set(_bucket_dirs(stage))
+        _write_intent(
+            state_dir,
+            batch_id,
+            [b for b in buckets if b in with_data],
+            [b for b in buckets if b not in with_data],
+        )
+    _apply_intent(state_dir)
+
+
+def _commit_tick(
+    rows_fn,
+    batch_id: int,
+    state_dir: str,
+    key_cols: list[str],
+    n_buckets: int,
+    touched: list[int],
+    sort_cols: list[str] | None = None,
+    append: bool = False,
+) -> None:
+    """Commit one tick of a fold over the ``touched`` buckets: an empty
+    increment only advances the marker; otherwise the rows
+    ``rows_fn()`` returns are bucketed on ``key_cols`` and committed by
+    :func:`_commit_buckets`."""
+    import os
+
+    if not touched:
+        os.makedirs(state_dir, exist_ok=True)
+        _write_root_marker(state_dir, batch_id)
+        return
+    _commit_buckets(
+        rows_fn().withColumn(_BUCKET_COL, _bucket_of(key_cols, n_buckets)),
+        batch_id,
+        state_dir,
+        touched,
+        sort_cols,
+        append,
+    )
 
 
 def _fold_buckets_append(
@@ -286,59 +410,21 @@ def _fold_buckets_append(
     O(touched state), which is what keeps a 10k-image tick flat
     against a ≥1M-fingerprint index (the rewrite fold's touched-bucket
     rewrite is O(state) once a uniform increment touches every
-    bucket). Exactly-once: replayed batches skip on the root marker;
-    a crash mid-move re-applies idempotently (deterministic dst names,
-    ``os.replace`` per file, already-moved sources are gone)."""
-    import os
-    import shutil
-
-    _apply_intent(state_dir)  # heal any interrupted prior tick first
-    if _last_folded_batch(state_dir) >= batch_id:
-        return  # crash-replayed batch: already folded into state
+    bucket). It runs the steps of :func:`_fold_buckets` and differs
+    only in the intent it commits. Exactly-once: replayed batches skip
+    on the root marker; a crash mid-move re-applies idempotently
+    (deterministic dst names, ``os.replace`` per file, already-moved
+    sources are gone)."""
+    if _already_folded(batch_id, state_dir):
+        return
     touched, state_subset = _touched_state(
         batch_df, state_dir, key_cols, n_buckets, read_state
     )
-    if not touched:  # empty increment: just advance the marker
-        os.makedirs(state_dir, exist_ok=True)
-        _write_root_marker(state_dir, batch_id)
-        return
-    new_rows = new_rows_fn(state_subset, batch_df)
-    stage = _stage_dir(state_dir)
-    shutil.rmtree(stage, ignore_errors=True)  # stale uncommitted staging
-    staged_rows = new_rows.withColumn(
-        _BUCKET_COL, _bucket_of(key_cols, n_buckets)
-    ).repartition(len(touched), _BUCKET_COL)
-    if sort_cols:
-        # sort within each bucket file so parquet row-group min/max
-        # stats prune READS below the bucket level (the zone-map
-        # lesson applied to maintained state: a query for a few keys
-        # of a bucket skips the row groups holding everyone else's)
-        staged_rows = staged_rows.sortWithinPartitions(
-            _BUCKET_COL, *sort_cols
-        )
-    (
-        staged_rows.write.partitionBy(_BUCKET_COL)
-        .mode("overwrite")
-        .parquet(stage)
+    _commit_tick(
+        lambda: new_rows_fn(state_subset, batch_df),
+        batch_id, state_dir, key_cols, n_buckets, touched, sort_cols,
+        append=True,
     )
-    moves: list[list[str]] = []
-    for b in touched:
-        bdir = os.path.join(stage, f"{_BUCKET_COL}={b}")
-        if not os.path.isdir(bdir):
-            continue
-        files = sorted(
-            f for f in os.listdir(bdir)
-            if f.endswith(".parquet") and not f.startswith(("_", "."))
-        )
-        moves.extend(
-            [
-                os.path.join(f"{_BUCKET_COL}={b}", f),
-                os.path.join(f"{_BUCKET_COL}={b}", f"b{batch_id}-{i}.parquet"),
-            ]
-            for i, f in enumerate(files)
-        )
-    _write_intent(state_dir, batch_id, [], [], moves)  # commit point
-    _apply_intent(state_dir)
 
 
 def _fold_buckets(
@@ -355,8 +441,8 @@ def _fold_buckets(
     ``merge_fn(state_subset_or_None, batch_df) -> DataFrame`` computes
     the replacement rows for the touched buckets only; its output must
     contain ``key_cols``. ``state_subset`` arrives WITHOUT the bucket
-    column and covers exactly the touched buckets (partition-pruned
-    scan — untouched bucket files are never read).
+    column and covers exactly the touched buckets (read from their
+    files only — untouched bucket files are never read).
 
     ``sort_cols`` sorts each rewritten bucket file (the append fold's
     zone-map option carried to the rewrite fold): because the rewrite
@@ -369,42 +455,51 @@ def _fold_buckets(
     join-probed indexes (MinHash bands, pHash chunks, SemDeDup
     clusters) gain nothing — a join carries no static predicate for
     the scan to prune on (audited r15, SCALE.md)."""
-    import os
-    import shutil
-
-    _apply_intent(state_dir)  # heal any interrupted prior tick first
-    if _last_folded_batch(state_dir) >= batch_id:
-        return  # crash-replayed batch: already folded into state
+    if _already_folded(batch_id, state_dir):
+        return
     touched, state_subset = _touched_state(
         batch_df, state_dir, key_cols, n_buckets
     )
-    if not touched:  # empty increment: just advance the marker
-        os.makedirs(state_dir, exist_ok=True)
-        _write_root_marker(state_dir, batch_id)
-        return
-    merged = merge_fn(state_subset, batch_df)
-    stage = _stage_dir(state_dir)
-    shutil.rmtree(stage, ignore_errors=True)  # stale uncommitted staging
-    staged_rows = merged.withColumn(
-        _BUCKET_COL, _bucket_of(key_cols, n_buckets)
-    ).repartition(len(touched), _BUCKET_COL)
-    if sort_cols:
-        staged_rows = staged_rows.sortWithinPartitions(
-            _BUCKET_COL, *sort_cols
-        )
-    (
-        staged_rows.write.partitionBy(_BUCKET_COL)
-        .mode("overwrite")
-        .parquet(stage)
+    _commit_tick(
+        lambda: merge_fn(state_subset, batch_df),
+        batch_id, state_dir, key_cols, n_buckets, touched, sort_cols,
     )
-    with_data = [
-        b
-        for b in touched
-        if os.path.isdir(os.path.join(stage, f"{_BUCKET_COL}={b}"))
-    ]
-    emptied = [b for b in touched if b not in set(with_data)]
-    _write_intent(state_dir, batch_id, with_data, emptied)  # commit point
-    _apply_intent(state_dir)
+
+
+def _fold_two_roots(
+    batch_df: DataFrame,
+    batch_id: int,
+    state_dir: str,
+    key_cols: list[str],
+    n_buckets: int,
+    step,
+    side_dir: str,
+    fold_side,
+) -> None:
+    """One tick of a fold whose operator step emits rows for a sibling
+    root as well as its new state (debounce's kept log, transitions'
+    pair counts, the sessions' closed log).
+
+    ``step(state_subset_or_None, batch_df)`` returns ``(side_rows,
+    new_state)`` and runs once per tick, on the touched buckets read
+    once. ``fold_side(side_rows)`` folds the checkpointed side rows
+    into ``side_dir`` FIRST, under that root's own marker; ``new_state``
+    then replaces the touched buckets under the authoritative
+    ``state_dir`` marker. A crash between the two replays the tick: the
+    side fold skips on its marker, and the step recomputes from the
+    unchanged old state and the same batch, so it is deterministic.
+    ``new_state`` must carry ``key_cols``, the keys the touched buckets
+    are taken from."""
+    if _already_folded(batch_id, state_dir, side_dir):
+        return
+    touched, old_state = _touched_state(
+        batch_df, state_dir, key_cols, n_buckets
+    )
+    side_rows, new_state = step(old_state, batch_df)
+    fold_side(side_rows.localCheckpoint(eager=True))
+    _commit_tick(
+        lambda: new_state, batch_id, state_dir, key_cols, n_buckets, touched
+    )
 
 
 def read_maintained_state(
@@ -434,8 +529,8 @@ def compact_state(
     ``sources.compact.compact_ledger``).
 
     Crash safety rides the fold protocol unchanged: pending intents
-    are healed first, the compacted buckets are staged under
-    ``state.next``, the intent file is the commit point, and
+    are healed first, the compacted buckets are staged and committed
+    by :func:`_commit_buckets`, the folds' staged write, and
     :func:`_apply_intent` promotes each bucket with one atomic
     ``os.replace``. The root ``_folded_batch_id`` marker is written
     back with its CURRENT value, so replay skipping and the next
@@ -446,7 +541,6 @@ def compact_state(
     "files_after": b}``. Buckets already at or under
     ``max_files_per_bucket`` files are left byte-identical (their
     dirs are not staged, not rewritten, not re-linked)."""
-    import os
     import shutil
 
     # heal any interrupted prior tick/compaction first — the same
@@ -455,66 +549,27 @@ def compact_state(
     # the commit point and is discarded like the folds discard it
     _apply_intent(state_dir)
     shutil.rmtree(_stage_dir(state_dir), ignore_errors=True)
-    if not os.path.isdir(state_dir):
-        return {"buckets_compacted": 0, "files_before": 0, "files_after": 0}
-    batch_id = _last_folded_batch(state_dir)
-
-    def bucket_files(root: str, b: int) -> list[str]:
-        d = os.path.join(root, f"{_BUCKET_COL}={b}")
-        if not os.path.isdir(d):
-            return []
-        return [
-            f
-            for f in os.listdir(d)
-            if f.endswith(".parquet") and not f.startswith(("_", "."))
-        ]
-
-    buckets = sorted(
-        int(d.split("=", 1)[1])
-        for d in os.listdir(state_dir)
-        if d.startswith(f"{_BUCKET_COL}=")
-        and os.path.isdir(os.path.join(state_dir, d))
-    )
-    todo = [
-        b for b in buckets if len(bucket_files(state_dir, b)) > max_files_per_bucket
-    ]
-    files_before = sum(len(bucket_files(state_dir, b)) for b in buckets)
-    if not todo:
-        return {
-            "buckets_compacted": 0,
-            "files_before": files_before,
-            "files_after": files_before,
-        }
-    stage = _stage_dir(state_dir)
-    shutil.rmtree(stage, ignore_errors=True)  # stale uncommitted staging
-    rows = (
-        spark.read.parquet(state_dir)
-        .filter(F.col(_BUCKET_COL).isin([int(b) for b in todo]))
-        # partitionBy writes one file per bucket per task partition;
-        # hashing on the bucket col puts each bucket's rows in exactly
-        # one partition -> exactly one file per compacted bucket dir
-        .repartition(len(todo), _BUCKET_COL)
-    )
-    if sort_cols:
+    buckets = _bucket_dirs(state_dir)
+    files_before = {b: len(_bucket_files(state_dir, b)) for b in buckets}
+    todo = [b for b in buckets if files_before[b] > max_files_per_bucket]
+    if todo:
+        # the root read keeps the bucket column, which the staged write
+        # partitions by and which no key column can recompute here
+        rows = spark.read.parquet(state_dir).filter(
+            F.col(_BUCKET_COL).isin(todo)
+        )
         # compaction is WHERE layout pays: per-tick files are small,
         # the compacted file is the big one — sorting it by the probe
         # key makes parquet row-group stats prune sub-bucket reads
-        # (pass the fold's sort_cols, e.g. ["term"] for postings)
-        rows = rows.sortWithinPartitions(_BUCKET_COL, *sort_cols)
-    (
-        rows.write.partitionBy(_BUCKET_COL)
-        .mode("overwrite")
-        .parquet(stage)
-    )
-    # commit point: same intent + apply path as the rewrite fold, with
-    # the marker value preserved (content-neutral)
-    _write_intent(state_dir, batch_id, todo, [])
-    _apply_intent(state_dir)
-    files_after = sum(len(bucket_files(state_dir, b)) for b in buckets)
+        # (pass the fold's sort_cols, e.g. ["term"] for postings).
+        # The marker value is preserved (content-neutral)
+        _commit_buckets(
+            rows, _last_folded_batch(state_dir), state_dir, todo, sort_cols
+        )
     return {
         "buckets_compacted": len(todo),
-        "files_before": files_before,
-        "files_after": files_after,
+        "files_before": sum(files_before.values()),
+        "files_after": sum(len(_bucket_files(state_dir, b)) for b in buckets),
     }
 
 
@@ -542,26 +597,8 @@ def compact_state_if_needed(
     per 64 ticks; size it DOWN for read-heavy serving state (postings)
     and UP for write-heavy archival logs. Single-writer discipline —
     call it from the fold loop, never concurrently with a tick."""
-    import os
-
-    if not os.path.isdir(state_dir):
-        return None
-
-    def nfiles(d: str) -> int:
-        p = os.path.join(state_dir, d)
-        return sum(
-            1
-            for f in os.listdir(p)
-            if f.endswith(".parquet") and not f.startswith(("_", "."))
-        )
-
     worst = max(
-        (
-            nfiles(d)
-            for d in os.listdir(state_dir)
-            if d.startswith(f"{_BUCKET_COL}=")
-            and os.path.isdir(os.path.join(state_dir, d))
-        ),
+        (len(_bucket_files(state_dir, b)) for b in _bucket_dirs(state_dir)),
         default=0,
     )
     if worst <= trigger_files_per_bucket:
@@ -653,24 +690,20 @@ def maintained_snapshot(
     """
     from kamu_engine_datafusion_spark.plans.types import DatasetVocabulary
 
+    from kamu_engine_datafusion_spark.operators.snapshot import (
+        latest_per_key,
+    )
+
     vocab = vocab or DatasetVocabulary()
     keys = (
         [primary_key] if isinstance(primary_key, str) else list(primary_key)
     )
-    off = vocab.offset_column
-
-    from pyspark.sql import Window
 
     def _merge(state_subset, batch_df):
         merged = batch_df
         if state_subset is not None:
             merged = state_subset.unionByName(batch_df)
-        w = Window.partitionBy(*keys).orderBy(F.col(off).desc())
-        return (
-            merged.withColumn("__rn", F.row_number().over(w))
-            .filter(F.col("__rn") == 1)
-            .drop("__rn")
-        )
+        return latest_per_key(merged, keys, vocab.offset_column)
 
     def _fold(batch_df: DataFrame, batch_id: int) -> None:
         _fold_buckets(
@@ -1018,38 +1051,21 @@ def maintained_debounce(
     kept_dir = state_dir + _KEPT_SUFFIX
 
     def _fold(batch_df: DataFrame, batch_id: int) -> None:
-        _apply_intent(kept_dir)
-        _apply_intent(state_dir)
-        if _last_folded_batch(state_dir) >= batch_id:
-            return
-        _, old_last = _touched_state(
-            batch_df, state_dir, group_cols, state_buckets
-        )
-        kept, _ = debounce_increment(
-            old_last, batch_df, time_col, gap_seconds, group_cols,
-            order_tiebreak,
-        )
-        kept = kept.localCheckpoint(eager=True)
-        # kept log FIRST (own marker; replay self-skips)
-        _fold_buckets_append(
-            kept,
-            batch_id,
-            kept_dir,
-            group_cols,
-            state_buckets,
-            lambda s, d: d,
-            read_state=False,
-        )
-        # last-event rewrite SECOND (authoritative marker)
-        _fold_buckets(
+        # kept log FIRST (own marker), last-event rewrite SECOND
+        _fold_two_roots(
             batch_df,
             batch_id,
             state_dir,
             group_cols,
             state_buckets,
-            lambda ss, b: debounce_increment(
-                ss, b, time_col, gap_seconds, group_cols, order_tiebreak
-            )[1],
+            lambda last, b: debounce_increment(
+                last, b, time_col, gap_seconds, group_cols, order_tiebreak
+            ),
+            kept_dir,
+            lambda kept: _fold_buckets_append(
+                kept, batch_id, kept_dir, group_cols, state_buckets,
+                lambda s, d: d, read_state=False,
+            ),
         )
 
     return fold_stream(spark, ledger_dir, checkpoint_dir, _fold, schema)
@@ -1107,42 +1123,27 @@ def maintained_transitions(
     pairs_dir = state_dir + _PAIRS_SUFFIX
 
     def _fold(batch_df: DataFrame, batch_id: int) -> None:
-        _apply_intent(pairs_dir)
-        _apply_intent(state_dir)
-        if _last_folded_batch(state_dir) >= batch_id:
-            return
-        _, old_last = _touched_state(
-            batch_df, state_dir, [user_col], state_buckets
-        )
-        pair_inc, _ = transitions_increment(
-            old_last, batch_df, user_col, type_col, ts_col,
-            order_tiebreak,
-        )
-        pair_inc = pair_inc.localCheckpoint(eager=True)
-
-        # pair counts FIRST (own marker; reads the OLD last state)
-        _fold_buckets(
-            pair_inc,
-            batch_id,
-            pairs_dir,
-            ["from_type", "to_type"],
-            pair_buckets,
-            lambda state, inc: sum_merge(state, inc, ["from_type", "to_type"]),
-        )
-        # last-event rewrite SECOND (authoritative marker); merge_fn
-        # recomputes deterministically from the same old state + batch.
-        # The increment's output key is always "user_id", so normalize
-        # the batch's user column first (bucket hashes are value-based
-        # — renaming cannot move a user between buckets)
-        _fold_buckets(
+        # pair counts FIRST (own marker), last-event rewrite SECOND. The
+        # increment's output key is always "user_id", so normalize the
+        # batch's user column first (bucket hashes are value-based —
+        # renaming cannot move a user between buckets)
+        _fold_two_roots(
             batch_df.withColumnRenamed(user_col, "user_id"),
             batch_id,
             state_dir,
             ["user_id"],
             state_buckets,
-            lambda ss, b: transitions_increment(
-                ss, b, "user_id", type_col, ts_col, order_tiebreak
-            )[1],
+            lambda last, b: transitions_increment(
+                last, b, "user_id", type_col, ts_col, order_tiebreak
+            ),
+            pairs_dir,
+            lambda pair_inc: _fold_buckets(
+                pair_inc, batch_id, pairs_dir, ["from_type", "to_type"],
+                pair_buckets,
+                lambda state, inc: sum_merge(
+                    state, inc, ["from_type", "to_type"]
+                ),
+            ),
         )
 
     return fold_stream(spark, ledger_dir, checkpoint_dir, _fold, schema)
@@ -1253,38 +1254,22 @@ def maintained_sessions(
     closed_dir = state_dir + _CLOSED_SUFFIX
 
     def _fold(batch_df: DataFrame, batch_id: int) -> None:
-        _apply_intent(closed_dir)
-        _apply_intent(state_dir)
-        if _last_folded_batch(state_dir) >= batch_id:
-            return
-        _, state_subset = _touched_state(
-            batch_df, state_dir, [user_col], state_buckets
-        )
-        closed, _ = session_fold_increment(
-            state_subset, batch_df, gap_sec, user_col, ts_col, id_col
-        )
-        closed = closed.localCheckpoint(eager=True)
-        # closed log FIRST (own marker; replay self-skips)
-        _fold_buckets_append(
-            closed,
-            batch_id,
-            closed_dir,
-            ["user_id"],
-            state_buckets,
-            lambda s, d: d,
-            read_state=False,
-        )
-        # open-state rewrite SECOND (authoritative marker); merge_fn
-        # recomputes deterministically from the same old state + batch
-        _fold_buckets(
-            batch_df,
+        # closed log FIRST (own marker), open-state rewrite SECOND; the
+        # increment keys both on "user_id", whatever the user column
+        _fold_two_roots(
+            batch_df.withColumnRenamed(user_col, "user_id"),
             batch_id,
             state_dir,
-            [user_col],
+            ["user_id"],
             state_buckets,
-            lambda ss, b: session_fold_increment(
-                ss, b, gap_sec, user_col, ts_col, id_col
-            )[1],
+            lambda state, b: session_fold_increment(
+                state, b, gap_sec, "user_id", ts_col, id_col
+            ),
+            closed_dir,
+            lambda closed: _fold_buckets_append(
+                closed, batch_id, closed_dir, ["user_id"], state_buckets,
+                lambda s, d: d, read_state=False,
+            ),
         )
 
     return fold_stream(spark, ledger_dir, checkpoint_dir, _fold, schema)
@@ -1296,22 +1281,16 @@ def read_maintained_sessions(
     """The live sessions view of :func:`maintained_sessions`:
     closed-log ∪ open-state in the batch sessionizer's frame
     (``operators/sessions.py::sessions_read``)."""
-    import os
-
     from kamu_engine_datafusion_spark.operators.sessions import (
         sessions_read,
     )
 
     closed_dir = state_dir + _CLOSED_SUFFIX
     closed = None
-    if os.path.isdir(closed_dir) and any(
-        d.startswith(f"{_BUCKET_COL}=") for d in os.listdir(closed_dir)
-    ):
+    if _bucket_dirs(closed_dir):
         closed = read_maintained_state(spark, closed_dir)
     state = None
-    if os.path.isdir(state_dir) and any(
-        d.startswith(f"{_BUCKET_COL}=") for d in os.listdir(state_dir)
-    ):
+    if _bucket_dirs(state_dir):
         state = read_maintained_state(spark, state_dir)
     return sessions_read(closed, state)
 
@@ -1875,8 +1854,9 @@ def read_maintained_ann_topk(
     TWO reads: the dedup fold probes a tick's clusters; this searches
     them. The state is an IVF index by construction (cluster == list,
     cluster == bucket key), so a query reads ONLY the bucket files
-    holding its ``nprobe`` nearest lists — the ``ivf_write``
-    partition-pruning dial carried to the maintained layer: at 100 TB
+    holding its ``nprobe`` nearest lists — IVF's list-pruning dial
+    (``operators/similarity.py::ivf_topk``) carried to the maintained
+    layer: at 100 TB
     the query cost is ``nprobe/nlist`` of the SURVIVOR store, and the
     store is already deduped (a search never returns six copies of
     the same boilerplate — SemDeDup killed them at fold time).
@@ -2679,7 +2659,10 @@ def maintained_weighted_sample(
     cannot be refilled without history); feed the live/append stream.
     Current sample = :func:`read_maintained_state`.
     """
-    from kamu_engine_datafusion_spark.operators.sampling import ares_key
+    from kamu_engine_datafusion_spark.operators.sampling import (
+        ares_key,
+        ares_top_n,
+    )
 
     def _merge(state_subset, batch_df):
         w = F.col(weight_col).cast("double")
@@ -2696,16 +2679,7 @@ def maintained_weighted_sample(
         )
         if state_subset is not None:
             inc = inc.unionByName(state_subset)
-        from pyspark.sql import Window
-
-        rank_w = Window.partitionBy(group_col).orderBy(
-            F.col("__akey").desc(), F.col(key_col)
-        )
-        return (
-            inc.withColumn("__rn", F.row_number().over(rank_w))
-            .filter(F.col("__rn") <= n)
-            .drop("__rn")
-        )
+        return ares_top_n(inc, group_col, n, key_col)
 
     def _fold(batch_df: DataFrame, batch_id: int) -> None:
         _fold_buckets(
@@ -2726,7 +2700,6 @@ def maintained_components(
     schema: T.StructType | None = None,
     spark: SparkSession | None = None,
     state_buckets: int = 16,
-    node_index: bool = True,
 ):
     """Continuously-maintained CONNECTED COMPONENTS over a stream of
     near-dup edges — the dedup stack's last batch-only piece made
@@ -2757,12 +2730,7 @@ def maintained_components(
     marker mismatch (a crash between the two folds, or a pre-index
     state layout) falls back to a full-scan resolve plus a one-time
     full index rebuild — correctness never depends on the index being
-    fresh. ``node_index=False`` skips the index entirely and always
-    full-scan-resolves: the right mode when total state is small
-    enough that a scan is cheaper than the index's extra per-tick
-    orchestration (measured locally at 1M rows — see SCALE.md r11;
-    the index pays for itself when state-scan BYTES dominate, i.e.
-    the multi-executor regime it exists for).
+    fresh.
 
     Edge retraction is NOT supported (component splits need the full
     edge history); feed the append pair stream. Live view =
@@ -2813,8 +2781,6 @@ def maintained_components(
         return keep.unionByName(rows)
 
     def _fold(batch_df: DataFrame, batch_id: int) -> None:
-        import os
-
         sess = batch_df.sparkSession
         node_dir = state_dir + _NODE_IDX_SUFFIX
         # heal interrupted prior ticks BEFORE reading either marker —
@@ -2830,46 +2796,34 @@ def maintained_components(
             .filter(F.col("u") != F.col("v"))
             .distinct()
         )
-        have_state = os.path.isdir(state_dir) and any(
-            e.startswith(_BUCKET_COL) for e in os.listdir(state_dir)
-        )
+        have_state = bool(_bucket_dirs(state_dir))
         # the node index is usable only when it folded the same batch
         # the component state did (a crash between the two folds, or a
         # pre-index layout, de-syncs them → full-scan fallback + rebuild)
         node_ok = (
-            node_index
-            and have_state
+            have_state
+            and bool(_bucket_dirs(node_dir))
             and _last_folded_batch(node_dir) == _last_folded_batch(state_dir)
-            and os.path.isdir(node_dir)
         )
         nodes_all = (
             edges.select(F.col("u").alias("node"))
             .unionByName(edges.select(F.col("v").alias("node")))
             .distinct()
         )
-        if not have_state:
+        idx = None
+        if node_ok:
+            # O(touched node buckets): read only the node-index buckets
+            # the increment's endpoints hash into
+            _, idx = _touched_state(
+                nodes_all, node_dir, ["node"], state_buckets
+            )
+        elif have_state:
+            idx = read_maintained_state(sess, state_dir)
+        if idx is None:
             resolved = nodes_all.select(
                 "node", F.col("node").alias("__root")
             )
         else:
-            if node_ok:
-                # O(touched node buckets): prune the node index to the
-                # buckets the increment's endpoints hash into
-                nb = sorted(
-                    r[0]
-                    for r in nodes_all.select(
-                        _bucket_of(["node"], state_buckets).alias("b")
-                    )
-                    .distinct()
-                    .collect()
-                )
-                idx = (
-                    sess.read.parquet(node_dir)
-                    .filter(F.col(_BUCKET_COL).isin([int(b) for b in nb]))
-                    .drop(_BUCKET_COL)
-                )
-            else:
-                idx = read_maintained_state(sess, state_dir)
             resolved = nodes_all.join(idx, "node", "left").select(
                 "node", F.coalesce("component", "node").alias("__root")
             )
@@ -2925,47 +2879,30 @@ def maintained_components(
         )
         # ---- node-index maintenance (after the component fold, so a
         # crash-replay that skips the fold still reads the right rows) --
-        if not node_index:
-            return
-        empty_rows = batch_df.select(
-            F.col(id_a).alias("node"), F.col(id_a).alias("component")
-        ).limit(0)
+        rows_new = None
         if not node_ok:
             # one-time rebuild (first tick, post-crash, or migration):
             # re-bucket the whole post-fold state by node
-            rows_new = (
-                read_maintained_state(sess, state_dir)
-                if os.path.isdir(state_dir)
-                and any(
-                    e.startswith(_BUCKET_COL) for e in os.listdir(state_dir)
-                )
-                else empty_rows
-            )
+            if _bucket_dirs(state_dir):
+                rows_new = read_maintained_state(sess, state_dir)
         elif has_edges:
-            touched = sorted(
-                r[0]
-                for r in exploded.select(
-                    _bucket_of(["component"], state_buckets).alias("b")
-                )
-                .distinct()
-                .collect()
+            # the post-fold rows of the touched component buckets,
+            # joined to the tick's final roots: every contracted-graph
+            # node relabels to one of these
+            _, touched_rows = _touched_state(
+                exploded, state_dir, ["component"], state_buckets
             )
-            # the tick's final roots: every contracted-graph node
-            # relabels to one of these
             final_roots = relabel.select(
                 F.col("__new").alias("component")
             ).distinct()
-            rows_new = (
-                sess.read.parquet(state_dir)
-                .filter(
-                    F.col(_BUCKET_COL).isin([int(b) for b in touched])
-                )
-                .drop(_BUCKET_COL)
-                .join(F.broadcast(final_roots), "component")
-                .select("node", "component")
-            )
-        else:
-            rows_new = empty_rows
+            if touched_rows is not None:
+                rows_new = touched_rows.join(
+                    F.broadcast(final_roots), "component"
+                ).select("node", "component")
+        if rows_new is None:
+            rows_new = batch_df.select(
+                F.col(id_a).alias("node"), F.col(id_a).alias("component")
+            ).limit(0)
         _fold_buckets(
             rows_new, batch_id, node_dir, ["node"], state_buckets,
             _node_upsert,
@@ -3188,10 +3125,7 @@ def maintained_minhash_index(
     sig_dir = state_dir + _SIG_SUFFIX
 
     def _fold(batch_df: DataFrame, batch_id: int) -> None:
-        sess = batch_df.sparkSession
-        _apply_intent(sig_dir)
-        _apply_intent(state_dir)
-        if _last_folded_batch(state_dir) >= batch_id:
+        if _already_folded(batch_id, state_dir, sig_dir):
             return
         inc = minhash_index(
             batch_df, text_col, id_col, shingle_len, num_hashes,
@@ -3231,24 +3165,13 @@ def maintained_minhash_index(
             # id-hash buckets are read — this is where the split
             # layout pays (bounded distinct-bucket collect ≤
             # sig_buckets ints)
-            cand_buckets = [
-                int(r[0])
-                for r in cand.select(
-                    F.pmod(F.xxhash64("idx_id"), F.lit(sig_buckets))
-                    .cast("int")
-                    .alias("__b")
-                )
-                .distinct()
-                .collect()
-            ]
-            if cand_buckets:
-                sigs = (
-                    sess.read.parquet(sig_dir)
-                    .filter(F.col(_BUCKET_COL).isin(cand_buckets))
-                    .drop(_BUCKET_COL)
-                    .withColumnRenamed("doc_id", "idx_id")
-                    .withColumnRenamed("sig", "isig")
-                )
+            _, sigs = _touched_state(
+                cand, sig_dir, ["idx_id"], sig_buckets
+            )
+            if sigs is not None:
+                sigs = sigs.withColumnRenamed(
+                    "doc_id", "idx_id"
+                ).withColumnRenamed("sig", "isig")
                 dead = (
                     cand.join(sigs, "idx_id")
                     .select(
@@ -3318,8 +3241,7 @@ def read_maintained_minhash_index(
         "doc_id", "__band"
     )
     sigs = (
-        spark.read.parquet(state_dir + _SIG_SUFFIX)
-        .drop(_BUCKET_COL)
+        read_maintained_state(spark, state_dir + _SIG_SUFFIX)
         .select("doc_id", "sig")
         .distinct()
     )

@@ -83,34 +83,3 @@ def test_recompaction_names_do_not_collide(spark, tmp_path):
     assert len(files) == 1
     after = pq.read_table(files).sort_by("offset")
     assert after.equals(before.select(after.schema.names).cast(after.schema))
-
-
-def test_optimize_layout_disjoint_file_ranges(spark, tmp_path):
-    """After optimize_layout, per-file min/max stats on the sort column
-    are disjoint — the provable data-skipping property."""
-    import glob
-
-    import pyarrow.parquet as pq
-
-    from kamu_engine_datafusion_spark.sources.compact import optimize_layout
-
-    df = spark.range(0, 10_000).selectExpr(
-        "cast(id * 7919 % 10000 as long) as ts", "id as payload"
-    )  # scrambled order on purpose
-    out = str(tmp_path / "layout")
-    optimize_layout(df, out, ["ts"], target_files=8)
-
-    ranges = []
-    for f in glob.glob(out + "/*.parquet"):
-        md = pq.read_metadata(f)
-        mins, maxs = [], []
-        for rg in range(md.num_row_groups):
-            col = md.row_group(rg).column(0)  # ts is the first column
-            mins.append(col.statistics.min)
-            maxs.append(col.statistics.max)
-        ranges.append((min(mins), max(maxs)))
-    ranges.sort()
-    assert len(ranges) >= 2
-    for (lo1, hi1), (lo2, hi2) in zip(ranges, ranges[1:]):
-        assert hi1 <= lo2  # contiguous disjoint ranges across files
-

@@ -6,7 +6,6 @@ from pyspark.sql import functions as F
 
 from kamu_engine_datafusion_spark.operators.partitioning import (
     salted_count,
-    salted_join,
 )
 
 
@@ -17,17 +16,6 @@ def test_salted_count_matches_plain_count(spark):
     got = {r["k"]: r["n"] for r in salted_count(df, ["k"]).collect()}
     want = {r["k"]: r["n"] for r in
             df.groupBy("k").agg(F.count(F.lit(1)).alias("n")).collect()}
-    assert got == want
-
-
-def test_salted_join_matches_plain_join(spark):
-    big = spark.range(0, 5_000).select((F.col("id") % 10).alias("k"), "id")
-    small = spark.range(0, 10).select(F.col("id").alias("k"),
-                                      (F.col("id") * 100).alias("v"))
-    got = sorted(
-        (r["id"], r["v"]) for r in salted_join(big, small, "k").collect()
-    )
-    want = sorted((r["id"], r["v"]) for r in big.join(small, "k").collect())
     assert got == want
 
 

@@ -7,8 +7,6 @@ from pyspark.sql import functions as F
 
 from kamu_engine_datafusion_spark.operators.sampling import (
     deterministic_sample,
-    split_train_holdout,
-    stratified_sample,
 )
 
 
@@ -21,28 +19,6 @@ def test_sample_stable_across_partitioning(spark):
     )
     assert a == b  # identical rows regardless of plan
     assert 0.15 < len(a) / 10_000 < 0.25
-
-
-def test_stratified_fractions(spark):
-    df = spark.range(0, 10_000).select(
-        F.col("id").alias("k"),
-        F.when(F.col("id") % 2 == 0, "en").otherwise("sw").alias("lang"),
-    )
-    out = stratified_sample(df, "k", "lang", {"en": 0.1})  # downsample en only
-    counts = {r["lang"]: r["n"] for r in
-              out.groupBy("lang").agg(F.count(F.lit(1)).alias("n")).collect()}
-    assert counts["sw"] == 5_000  # untouched stratum kept whole
-    assert 300 < counts["en"] < 700  # ~10% of 5000
-
-
-def test_split_disjoint_exhaustive(spark):
-    df = spark.range(0, 5_000).withColumnRenamed("id", "k")
-    train, holdout = split_train_holdout(df, "k", holdout_fraction=0.1)
-    tr = set(r["k"] for r in train.collect())
-    ho = set(r["k"] for r in holdout.collect())
-    assert tr.isdisjoint(ho)
-    assert len(tr) + len(ho) == 5_000
-    assert 300 < len(ho) < 700
 
 
 def test_salt_decorrelates(spark):

@@ -8,7 +8,6 @@ from pyspark.sql import functions as F
 from kamu_engine_datafusion_spark.operators.similarity import (
     ivf_index,
     ivf_topk,
-    ivf_write,
     srp_lsh_topk,
     topk_bruteforce,
 )
@@ -60,31 +59,6 @@ def test_srp_multiprobe_recall_monotone(spark):
     r0, r4 = recall(0), recall(4)
     assert r4 >= r0  # probing more buckets never loses candidates
     assert r4 > 0  # and finds at least part of the true top-10
-
-
-def test_ivf_partitioned_index_prunes_unprobed_lists(spark, tmp_path):
-    """The written-partitioned IVF index must turn the nprobe filter into
-    physical partition pruning: unprobed lists never reach the scan."""
-    emb = _corpus(spark)
-    query = emb.filter(F.col("vec_id") == 0)
-    assigned, model = ivf_index(emb, nlist=8)
-    idx_path = str(tmp_path / "ivf_index")
-    ivf_write(assigned, idx_path)
-
-    on_disk = spark.read.parquet(idx_path)
-    out = ivf_topk(on_disk, model, query, k=10, nprobe=2, dim=64)
-    plan = out._jdf.queryExecution().executedPlan().toString()
-    assert "PartitionFilters" in plan and "__list" in plan
-    # pruning is physical: the scan reads at most nprobe of nlist lists
-    import re
-
-    m = re.search(r"PartitionFilters: \[([^\]]*)\]", plan)
-    assert m and "__list" in m.group(1), plan[:2000]
-
-    # results identical to the in-memory path
-    mem = [r["vec_id"] for r in ivf_topk(assigned, model, query, k=10, nprobe=2).collect()]
-    disk = [r["vec_id"] for r in out.collect()]
-    assert disk == mem
 
 
 def test_quantize_codes_range_and_reconstruction(spark):

@@ -7,6 +7,7 @@ import os
 from datetime import datetime, timezone
 
 import pyarrow.parquet as pq
+import pytest
 from pyspark.sql import functions as F
 
 from kamu_engine_datafusion_spark.plans.types import SqlQueryStep
@@ -1196,6 +1197,52 @@ def test_maintained_components_node_index_desync_rebuilds(spark, tmp_path):
     assert idx == got
 
 
+def test_components_node_index_bucket_read_runs_no_job(spark, tmp_path):
+    """The components fold resolves a tick's endpoints through the
+    bucket reader on the node index: once its schema is warm, that read
+    starts no Spark job (a read of the partitioned root ran a listing
+    and inference job every tick), and it returns exactly the rows of
+    the buckets asked for."""
+    from kamu_engine_datafusion_spark.streaming.structured import (
+        _NODE_IDX_SUFFIX,
+        _bucket_dirs,
+        _bucket_of,
+        _read_buckets,
+        maintained_components,
+        read_maintained_state,
+    )
+    from tests.test_coordinator_edges import _spark_jobs
+
+    ledger_dir = os.path.join(str(tmp_path), "rledger")
+    state_dir = os.path.join(str(tmp_path), "rstate")
+    ck = os.path.join(str(tmp_path), "rck")
+    os.makedirs(ledger_dir)
+    schema = "id_a long, id_b long"
+    for rows in [[(1, 2), (2, 3), (10, 11)], [(3, 4), (20, 21)]]:
+        spark.createDataFrame(rows, schema).coalesce(1).write.mode(
+            "append"
+        ).parquet(ledger_dir)
+        maintained_components(
+            ledger_dir, state_dir, ck,
+            schema=spark.read.parquet(ledger_dir).schema, spark=spark,
+        ).awaitTermination()
+
+    node_dir = state_dir + _NODE_IDX_SUFFIX
+    buckets = _bucket_dirs(node_dir)[:2]
+    got = []
+    _read_buckets(spark, node_dir, buckets)  # cold: learns the footer
+    jobs = _spark_jobs(
+        spark, lambda: got.append(_read_buckets(spark, node_dir, buckets))
+    )
+    assert jobs == 0
+    want = read_maintained_state(spark, node_dir).filter(
+        _bucket_of(["node"], 16).isin(buckets)
+    )
+    assert sorted(map(tuple, got[0].collect())) == sorted(
+        map(tuple, want.collect())
+    )
+
+
 def test_maintained_weighted_sample_equals_batch_draw(spark, tmp_path):
     """The per-group weighted sample folded across 3 ticks must equal
     the batch weighted_sample_per_group over the whole ledger
@@ -1435,48 +1482,6 @@ def test_phash_append_intent_heals_at_every_crash_point(spark, tmp_path):
         .collect()
     )
     assert got == want
-
-
-def test_maintained_components_node_index_opt_out(spark, tmp_path):
-    """node_index=False: pure full-scan resolve, no .nodeidx dir ever
-    created, results identical to the indexed mode."""
-    from kamu_engine_datafusion_spark.operators.clustering import (
-        connected_components,
-    )
-    from kamu_engine_datafusion_spark.streaming.structured import (
-        _NODE_IDX_SUFFIX,
-        maintained_components,
-        read_maintained_state,
-    )
-
-    ledger_dir = os.path.join(str(tmp_path), "oledger")
-    state_dir = os.path.join(str(tmp_path), "ostate")
-    ck = os.path.join(str(tmp_path), "ock")
-    os.makedirs(ledger_dir)
-    schema = "id_a long, id_b long"
-    seen = []
-    for rows in [[(1, 2), (10, 11)], [(2, 10), (20, 21)]]:
-        seen.extend(rows)
-        spark.createDataFrame(rows, schema).coalesce(1).write.mode(
-            "append"
-        ).parquet(ledger_dir)
-        maintained_components(
-            ledger_dir, state_dir, ck,
-            schema=spark.read.parquet(ledger_dir).schema, spark=spark,
-            node_index=False,
-        ).awaitTermination()
-    got = {
-        r["node"]: r["component"]
-        for r in read_maintained_state(spark, state_dir).collect()
-    }
-    want = {
-        r["node"]: r["component"]
-        for r in connected_components(
-            spark.createDataFrame(seen, schema)
-        ).collect()
-    }
-    assert got == want
-    assert not os.path.isdir(state_dir + _NODE_IDX_SUFFIX)
 
 
 def test_maintained_minhash_index_equals_batch_increment_path(
@@ -2661,6 +2666,61 @@ def test_maintained_debounce_equals_batch(spark, tmp_path):
     bad = spark.createDataFrame([(1, t(100), "click", 99)], schema)
     with _pytest.raises(ValueError, match="event-time order"):
         debounce_increment(st, bad, gap_seconds=gap)[0].collect()
+
+
+@pytest.mark.parametrize(
+    "module, step, fold",
+    [
+        ("sessions", "session_fold_increment", "maintained_sessions"),
+        ("funnel", "transitions_increment", "maintained_transitions"),
+        ("funnel", "debounce_increment", "maintained_debounce"),
+    ],
+)
+def test_two_root_fold_runs_its_step_once_per_tick(
+    spark, tmp_path, monkeypatch, module, step, fold
+):
+    """A two-root fold (side rows first, new state second) reads its
+    touched state once and calls its operator step once per tick: both
+    roots are committed from that one call's ``(side_rows,
+    new_state)``, not from a second run of the step."""
+    import importlib
+
+    from kamu_engine_datafusion_spark.streaming import structured
+
+    mod = importlib.import_module(
+        f"kamu_engine_datafusion_spark.operators.{module}"
+    )
+    real = getattr(mod, step)
+    calls = []
+
+    def counted(*args, **kwargs):
+        calls.append(1)
+        return real(*args, **kwargs)
+
+    # the folds import their step at call time, so the module
+    # attribute is what they run
+    monkeypatch.setattr(mod, step, counted)
+
+    def t(minute):
+        return datetime(2024, 1, 1, 0, minute, tzinfo=UTC)
+
+    schema = "user_id long, ts timestamp, event_type string, event_id long"
+    ledger, state, ck = (
+        os.path.join(str(tmp_path), n) for n in ("ledger", "state", "ck")
+    )
+    ticks = [
+        [(1, t(0), "view", 0), (2, t(0), "view", 1)],
+        [(1, t(50), "click", 2)],
+    ]
+    for i, rows in enumerate(ticks):
+        spark.createDataFrame(rows, schema).coalesce(1).write.mode(
+            "append"
+        ).parquet(ledger)
+        getattr(structured, fold)(
+            ledger, state, ck,
+            schema=spark.read.parquet(ledger).schema, spark=spark,
+        ).awaitTermination()
+        assert len(calls) == i + 1
 
 
 def test_compact_state_if_needed_cadence_and_closed_log(spark, tmp_path):

@@ -2568,7 +2568,8 @@ def main() -> None:
             gap_sessionize,
         )
         from kamu_engine_datafusion_spark.streaming.structured import (
-            _BUCKET_COL,
+            _bucket_dirs,
+            _bucket_files,
             compact_state_if_needed,
             maintained_sessions,
             read_maintained_sessions,
@@ -2583,21 +2584,10 @@ def main() -> None:
 
         def closed_files() -> int:
             root = st + ".closed"
-            if not os.path.isdir(root):
-                return 0
-            worst = 0
-            for d in os.listdir(root):
-                p = os.path.join(root, d)
-                if d.startswith(f"{_BUCKET_COL}=") and os.path.isdir(p):
-                    worst = max(
-                        worst,
-                        sum(
-                            1
-                            for f in os.listdir(p)
-                            if f.endswith(".parquet")
-                        ),
-                    )
-            return worst
+            return max(
+                (len(_bucket_files(root, b)) for b in _bucket_dirs(root)),
+                default=0,
+            )
 
         n_ticks, per_tick = 30, 200_000
         n_compactions, max_files = 0, 0
