@@ -11,7 +11,7 @@ which is what ``bench.py``'s ``calibration_hof`` measures.
 
 This module computes the SAME signatures in numpy inside an
 Arrow-batched pandas UDF — the sanctioned slow-path escape (the
-``semantic_dedup`` ``cosine_backend="arrow"`` template): one padded
+template of ``semantic_dedup``'s numpy kernels): one padded
 byte-matrix xxhash64 over the batch's distinct tokens, one flat
 ragged-range shingle fold, and ``num_hashes`` vectorized min-reduces.
 Bit-exact with the JVM path by construction:
@@ -30,8 +30,9 @@ Bit-exact with the JVM path by construction:
 Scale shape: ZERO shuffle — signatures are computed in-row per Arrow
 batch, so parallelism comes from the input splits (the right shape on
 a many-split 100 TB corpus, where the explode→groupBy formulation
-pays a corpus-sized exchange). The JVM variants stay as correctness
-twins; equivalence is pytest-pinned on the documents corpus.
+pays a corpus-sized exchange). The interpreted formulations live in
+``tests/jvm_twins.py`` as references; equivalence is pytest-pinned on
+the documents corpus.
 """
 
 from __future__ import annotations
@@ -78,7 +79,7 @@ def java_tokens(s: str) -> list[str]:
     locale. Running executors under ``tr_TR``-style JVM locales
     breaks the arrow/JVM signature bit-parity — set
     ``-Duser.language=en`` (or any non-special-casing locale) on the
-    executors, or use ``signature_backend='jvm'`` there."""
+    executors."""
     return _JAVA_WS.split(s.lower().strip(" "))
 
 
@@ -926,8 +927,8 @@ def float_dots_ordered_const_udf(vecs: list[list[float]]) -> "callable":
     """Arrow-batched pandas UDF ``array<numeric> -> array<double>``:
     one LEFT-TO-RIGHT ordered dot per CONSTANT vector (the seed list
     rides the closure) — the bit-exact kernel form of
-    ``semantic_dedup``'s per-seed assignment dots, whose JVM form runs
-    one interpreted fold per seed per row."""
+    ``semantic_dedup``'s per-seed assignment dots, whose interpreted
+    form runs one fold per seed per row."""
     import numpy as np
     import pandas as pd
     from pyspark.sql.pandas.functions import PandasUDFType, pandas_udf
@@ -944,36 +945,45 @@ def float_dots_ordered_const_udf(vecs: list[list[float]]) -> "callable":
     return pandas_udf(_dots, "array<double>", PandasUDFType.SCALAR)
 
 
-def srp_band_keys_ordered_udf(
-    planes: list[list[float]], num_bands: int, bits_per_band: int
+def srp_band_keys_udf(
+    planes: list[list[float]], num_bands: int, bits_per_band: int, exact: bool
 ) -> "callable":
     """Arrow-batched pandas UDF ``array<numeric> -> array<long>``: the
-    SRP-LSH band keys of ``embedding_near_dups``'s JVM ``band_key``
-    expression, bit-exact — each plane dot uses the left-to-right
-    ordered fold (:func:`_ordered_dot`, so the ``>= 0`` sign decisions
-    match the oracle exactly), bits pack as ``band_offset + Σ 1<<r``
-    in int64."""
+    SRP-LSH band keys of ``embedding_near_dups``. Each band key packs
+    its plane-sign bits as ``band_offset + Σ 1<<r`` in int64, over one
+    (n × planes) projection per batch:
+
+    - ``exact=False``: ``V @ P.T`` — one BLAS matmul, the scale path;
+      its blocked summation can move a plane dot by an ulp, so a dot
+      landing exactly on 0.0 may take the other sign (a measure-zero
+      recall difference).
+    - ``exact=True``: the left-to-right ordered fold of
+      ``functions.columns.dot_product`` (one rounded multiply and one
+      rounded add per dimension, array order), so every ``>= 0`` sign
+      decision matches the SQL oracle bit for bit. All planes
+      accumulate per dimension at once."""
     import numpy as np
     import pandas as pd
     from pyspark.sql.pandas.functions import PandasUDFType, pandas_udf
 
-    pm = [np.asarray(p, dtype=np.float64) for p in planes]
+    P = np.asarray(planes, dtype=np.float64)  # (bands*bits, dim)
+    weights = 1 << np.arange(bits_per_band, dtype=np.int64)
+    offsets = np.arange(num_bands, dtype=np.int64) << bits_per_band
 
     def _keys(v):
         if len(v) == 0:
             return pd.Series([], dtype=object)
         vm = _float_mat(v)
-        n = vm.shape[0]
-        keys = np.empty((n, num_bands), dtype=np.int64)
-        for j in range(num_bands):
-            key = np.full(n, j * (1 << bits_per_band), dtype=np.int64)
-            for r in range(bits_per_band):
-                plane = pm[j * bits_per_band + r]
-                acc = np.zeros(n, dtype=np.float64)
-                for d in range(vm.shape[1]):
-                    acc = acc + vm[:, d] * plane[d]
-                key = key + np.where(acc >= 0.0, 1 << r, 0)
-            keys[:, j] = key
+        if exact:
+            proj = np.zeros((vm.shape[0], P.shape[0]), dtype=np.float64)
+            for d in range(vm.shape[1]):
+                proj = proj + vm[:, d:d + 1] * P[:, d]
+        else:
+            proj = vm @ P.T
+        bits = proj >= 0.0
+        keys = (
+            bits.reshape(len(vm), num_bands, bits_per_band) @ weights
+        ) + offsets  # (n, bands)
         return pd.Series(list(keys))
 
     return pandas_udf(_keys, "array<long>", PandasUDFType.SCALAR)

@@ -11,16 +11,22 @@ O(n²) candidate generation):
 - :func:`ngram_jaccard_pairs` — token-set Jaccard within blocks.
 - :func:`embedding_near_dups` — cosine near-duplicates within SRP bands.
 - :func:`semantic_dedup` — SemDeDup-style: embedding clusters + within-
-  cluster cosine prune (vectorized ``cosine_backend="arrow"`` default).
+  cluster cosine prune.
 - :func:`paragraph_dedup` — first global occurrence of each paragraph.
 - :func:`minhash_index` / :func:`dedup_increment_against_index` —
   continuous ingestion against a persisted signature index.
 
-All are pure DataFrame compositions (JVM-side column math from
-``functions.columns``); nothing collects to the driver except
-semantic_dedup's k seed vectors (the IVF-centroid pattern), and the
-optional arrow backends are Arrow-batched Pandas UDFs, never
-row-at-a-time Python.
+All are DataFrame compositions; nothing collects to the driver except
+semantic_dedup's k seed vectors (the IVF-centroid pattern). Each kernel
+has one production formulation: MinHash signatures, shingle sets, SRP
+band keys and the float cosines run as Arrow-batched Pandas UDFs, never
+row-at-a-time Python. The float kernels take ``exact``: ``True``
+replays the SQL oracles' left-to-right double arithmetic bit for bit,
+``False`` sums with BLAS/einsum (the same pairs up to last-ulp ties).
+The interpreted Spark formulations they were derived from live in
+``tests/jvm_twins.py`` as references. A kernel's parallelism comes from
+its input splits; :func:`_resolve_fan_out` widens a few-split input by
+its size.
 
 Caching discipline: the LSH operators ``persist()`` small
 multi-consumer intermediates (banded signature sets, duplicate-id
@@ -42,17 +48,12 @@ from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
 from kamu_engine_datafusion_spark.functions.columns import (
-    _MERSENNE_31,
-    dot_product,
     hamming64,
     l2_norm,
     lsh_band_keys,
     lsh_band_keys_fold,
-    minhash_coeffs,
     poly_hash31,
-    shingle_hash_array,
     tokens,
-    word_shingles,
 )
 from kamu_engine_datafusion_spark.operators.deferred import DeferredLedger
 
@@ -65,7 +66,7 @@ DEDUP_LEDGER = DeferredLedger()
 #: fold/query — a separate ledger because the per-call release above
 #: must NOT drop state a later tick still folds over.
 #:
-#: Why persist them (r17): a chained per-tick fold
+#: Why persist them: a chained per-tick fold
 #: (``state = f(state, tick)``) that references ``state`` more than once
 #: per tick (an index is probed AND unioned; component edges are joined
 #: twice) nests the dual reference — at action time tick t's plan
@@ -104,74 +105,54 @@ def exact_dedup(
     )
 
 
-def _resolve_sig_layout(layout: str | None, base_hash: str) -> str:
-    """r17: the vectorized arrow signature backend is the OPERATOR
-    DEFAULT (``layout=None`` → ``"arrow"``) — for xxhash64 after two
-    driver windows certified it bit-exact, and for the poly/SQL-oracle
-    profile since the ``minhash_signature_poly_udf`` kernel landed (its
-    JVM form runs the poly char fold per shingle inside an interpreted
-    ``transform`` — the dominant cost of every poly-profile dedup key).
-    Pass an explicit layout to pin a backend (``"explode"``/``"inrow"``
-    are the pytest-pinned correctness twins)."""
-    if layout is not None:
-        return layout
-    return "arrow"
-
-
 def _resolve_fan_out(
-    narrow: DataFrame, fan_out, target_bytes: int = 2 * 1024 * 1024
+    narrow: DataFrame, target_bytes: int = 2 * 1024 * 1024
 ) -> int | None:
-    """Resolve a fan-out knob for the zero-shuffle arrow kernels.
+    """Repartition width for a zero-shuffle arrow kernel over
+    ``narrow``, derived from the input size rather than a hand-tuned
+    constant: one task per ``target_bytes`` of uncompressed file bytes,
+    capped at the cluster's default parallelism. None (no repartition)
+    when that is one task, when the scan's own splits already give that
+    many, or when ``narrow`` reads no Parquet files (an in-memory or
+    checkpointed frame).
 
-    ``fan_out="auto"`` (r17) derives the repartition width from the
-    INPUT SIZE instead of a hand-tuned constant (guide §2: make
-    partitioning scale-adaptive): one task per ``target_bytes`` of
-    underlying file bytes, capped at the cluster's default parallelism,
-    and NO repartition at all when the scan's own splits already give
-    at least that many tasks — on a many-split 100 TB corpus this
-    resolves to None (the operator's natural shape), on the local
-    single-file sf0.1 ledger to None as well (the kernel is cheaper
-    than the shuffle: measured 2.61→2.07 s on the full dedup), and on
-    the single-file sf1 replica corpus to ~12 (where the 1-task kernel
-    was the bottleneck: 10.2→5.8 s measured at fan 8, r16).
-    Ints and None pass through unchanged."""
-    if fan_out != "auto":
-        return fan_out
+    What that gives: a many-split 100 TB scan resolves to None (its
+    splits fan out); the single-file sf0.1 ledgers resolve to None too,
+    where the kernel is cheaper than the shuffle (the full MinHash
+    dedup measured 2.07 s against 2.61 s at a fixed width of 8); the
+    single-file 10× replica corpus resolves to about 12, where a
+    one-task kernel was the bottleneck (10.2 → 5.8 s at width 8)."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    files = [
+        f[len("file:"):] if f.startswith("file:") else f
+        for f in narrow.inputFiles()
+    ]
+    if not files:
+        return None
+    # UNCOMPRESSED footer bytes, not file sizes: a replica-heavy
+    # corpus compresses 10:1 and would under-fan exactly where the
+    # kernel is slowest. Footer-only reads; sampled + extrapolated
+    # so a many-file input costs O(16) metadata reads.
+    sample = files[:16]
+    uncomp = 0
     try:
-        import pyarrow.parquet as pq
-
-        files = [
-            f[len("file:"):] if f.startswith("file:") else f
-            for f in narrow.inputFiles()
-        ]
-        if not files:
-            return None
-        # UNCOMPRESSED footer bytes, not file sizes: a replica-heavy
-        # corpus compresses 10:1 and would under-fan exactly where the
-        # kernel is slowest. Footer-only reads; sampled + extrapolated
-        # so a many-file input costs O(16) metadata reads.
-        sample = files[:16]
-        uncomp = 0
         for path in sample:
             md = pq.ParquetFile(path).metadata
             uncomp += sum(
                 md.row_group(i).total_byte_size
                 for i in range(md.num_row_groups)
             )
-        size = uncomp * len(files) // len(sample)
-    except Exception:
-        return None
+    except (OSError, pa.ArrowException):
+        return None  # not a local Parquet footer: keep the scan's shape
+    size = uncomp * len(files) // len(sample)
     if size <= 0:
         return None
     sc = narrow.sparkSession.sparkContext
     want = min(sc.defaultParallelism, max(1, size // target_bytes))
-    if want <= 1:
+    if want <= 1 or narrow.rdd.getNumPartitions() >= want:
         return None
-    try:
-        if narrow.rdd.getNumPartitions() >= want:
-            return None  # the scan already fans out enough
-    except Exception:
-        pass
     return int(want)
 
 
@@ -183,120 +164,50 @@ def minhash_signatures(
     num_hashes: int = 32,
     seed: int = 42,
     base_hash: str = "xxhash64",
-    layout: str | None = None,
-    fan_out: int | str | None = None,
 ) -> DataFrame:
-    """Per-document MinHash signatures via the scalable explode→groupBy
-    formulation: shingles are hashed WITHOUT materializing strings
-    (``layout="arrow"`` computes the SAME signatures vectorized in
-    numpy instead — see below)
-    (:func:`shingle_hash_array`), one row per (doc, distinct shingle
-    hash), then ``num_hashes`` MIN aggregates (map-side partials do most
-    of the work, the shuffle carries only num_hashes longs per doc).
+    """Per-document MinHash signatures ``(__id, __sig)`` computed in ONE
+    Arrow-batched pandas UDF (``functions.arrow_hash.
+    minhash_signature_udf`` / ``minhash_signature_poly_udf``): numpy
+    token hashing, a flat shingle fold and vectorized minima, with no
+    shuffle. A doc with no shingle has no signature row.
 
-    This shape is deliberate twice over: a single-Column signature
-    expression makes Catalyst re-evaluate the tokenize→shingle pipeline
-    once per hash function (project collapsing duplicates aliases), and
-    string shingles cost an array allocation per position — both
-    measured order-of-magnitude effects at sf0.1.
+    ``base_hash``: ``"xxhash64"`` (default, fastest) or ``"poly"``
+    (polynomial char hash over string shingles — reproducible in plain
+    SQL, enabling a full cross-engine oracle of the LSH pipeline).
 
-    ``base_hash``: ``"xxhash64"`` (default, fastest, JVM-native) or
-    ``"poly"`` (polynomial char hash over string shingles — slower but
-    reproducible in plain SQL, enabling a full cross-engine oracle of
-    the LSH pipeline).
+    Why a UDF: the interpreted formulation (tokenize → shingle-hash
+    ``transform`` → per-hash minima) runs Spark's higher-order
+    functions outside codegen, which made it the most expensive and
+    most host-drift-sensitive kernel of the dedup family, and its
+    explode → groupBy(MIN) shape pays a corpus-sized exchange. SCALE.md
+    keeps those measurements; ``tests/jvm_twins.py::
+    minhash_signatures_explode`` keeps the formulation as the bit-exact
+    reference.
 
-    ``layout="inrow"`` computes the signature with ZERO shuffle: the
-    distinct shingle-hash array is materialized once per row (its own
-    projection, so Catalyst can't inline 32 copies of the shingle
-    pipeline) and each hash function is an ``array_min(transform(...))``
-    over it. On a many-split 100 TB corpus this is the better shape —
-    parallelism comes from the input splits and the exchange disappears;
-    on the local one-file bench input it's SLOWER (measured 1.1s vs
-    0.75s warm at sf0.1) because without the shuffle there's nothing to
-    fan the single input partition out to 32 cores. Default stays
-    ``"explode"``; both layouts produce identical signatures
-    (equivalence pytest).
-
-    ``layout="arrow"`` (xxhash64 only) computes bit-identical
-    signatures in ONE Arrow-batched pandas UDF
-    (``functions.arrow_hash.minhash_signature_udf``): distinct-token
-    numpy xxhash64 + flat shingle fold + vectorized minima. This takes
-    the whole tokenize→shingle→min pipeline OFF Spark's interpreted
-    HOF path — the r13–r15 host-drift class ``bench.py``'s
-    ``calibration_hof`` measures — and, like ``inrow``, needs ZERO
-    shuffle (parallelism from the input splits; at 100 TB the explode
-    path's corpus-sized exchange disappears). Equivalence is
-    pytest-pinned on the documents corpus + edge docs.
-
-    Default layout is ``None`` → resolved by :func:`_resolve_sig_layout`
-    (``"arrow"`` for xxhash64 since r17 — two driver windows certified
-    bit-parity; ``"explode"`` for poly).
+    The UDF's parallelism comes from the input splits, and a
+    single-file ledger gives it one task, so the narrow ``(id, text)``
+    projection is widened first when :func:`_resolve_fan_out` says so.
     """
-    layout = _resolve_sig_layout(layout, base_hash)
-    if layout == "arrow":
-        from kamu_engine_datafusion_spark.functions.arrow_hash import (
-            minhash_signature_poly_udf,
-            minhash_signature_udf,
-        )
+    from kamu_engine_datafusion_spark.functions.arrow_hash import (
+        minhash_signature_poly_udf,
+        minhash_signature_udf,
+    )
 
-        udf = (
-            minhash_signature_poly_udf(shingle_len, num_hashes, seed)
-            if base_hash == "poly"
-            else minhash_signature_udf(shingle_len, num_hashes, seed)
-        )
-        narrow = df.select(
-            F.col(id_col).alias("__id"), F.col(text_col).alias("__t")
-        )
-        fan_out = _resolve_fan_out(narrow, fan_out)
-        if fan_out:
-            # the UDF's parallelism comes from the input splits; a
-            # SINGLE-FILE local ledger gives it one task, so fan the
-            # narrow (id, text) projection out first. At 100 TB the
-            # scan has plentiful splits — leave fan_out=None there
-            # (measured: sf1 single-file 10.2s → 5.8s at fan_out=8;
-            # many-split inputs need no shuffle at all). "auto"
-            # derives the width from the input size (r17, guide §2).
-            narrow = narrow.repartition(fan_out)
-        return narrow.select(
-            "__id",
-            udf(F.col("__t")).alias("__sig"),
-        ).filter(F.col("__sig").isNotNull())
-    if base_hash == "poly":
-        hash_arr = F.transform(
-            word_shingles(tokens(text_col), shingle_len),
-            lambda s: poly_hash31(s),
-        )
-    else:
-        hash_arr = shingle_hash_array(tokens(text_col), shingle_len)
-    coeffs = minhash_coeffs(num_hashes, seed)
-    if layout == "inrow":
-        # size guard matches the explode path: a doc with no shingles
-        # has no signature (explode drops it; array_min would null it)
-        d = df.select(
-            F.col(id_col).alias("__id"),
-            F.array_distinct(hash_arr).alias("__sharr"),
-        ).filter(F.size("__sharr") > 0)
-        mins = [
-            F.array_min(
-                F.transform("__sharr", lambda h: (h * a + b) % _MERSENNE_31)
-            ).alias(f"__mh{j}")
-            for j, (a, b) in enumerate(coeffs)
-        ]
-        return d.select("__id", *mins).select(
-            "__id",
-            F.array(*[f"__mh{j}" for j in range(num_hashes)]).alias("__sig"),
-        )
-    shingled = df.select(
-        F.col(id_col).alias("__id"),
-        F.explode(F.array_distinct(hash_arr)).alias("__h"),
+    udf = (
+        minhash_signature_poly_udf(shingle_len, num_hashes, seed)
+        if base_hash == "poly"
+        else minhash_signature_udf(shingle_len, num_hashes, seed)
     )
-    aggs = [
-        F.min((F.col("__h") * a + b) % _MERSENNE_31).alias(f"__mh{j}")
-        for j, (a, b) in enumerate(coeffs)
-    ]
-    return shingled.groupBy("__id").agg(*aggs).select(
-        "__id", F.array(*[f"__mh{j}" for j in range(num_hashes)]).alias("__sig")
+    narrow = df.select(
+        F.col(id_col).alias("__id"), F.col(text_col).alias("__t")
     )
+    fan_out = _resolve_fan_out(narrow)
+    if fan_out:
+        narrow = narrow.repartition(fan_out)
+    return narrow.select(
+        "__id",
+        udf(F.col("__t")).alias("__sig"),
+    ).filter(F.col("__sig").isNotNull())
 
 
 #: Max oversized bucket keys inlined as a NOT-IN literal by the
@@ -326,11 +237,9 @@ def _cap_buckets(
     ``antijoin``: aggregate the oversized keys lazily and
     broadcast-anti-join them away — everything stays in one job; the
     right mode when ``banded`` is NOT persisted (no eager pass over an
-    unmaterialized lineage). Measured faster than ``window`` at both 5k
-    docs (1.46s vs 1.80s warm) and 50k docs (5.64s vs 6.39s full
-    pipeline) — see SCALE.md.
-    ``window``: one count-over-window pass; kept for single-pass cases
-    where the banded set is not re-computable.
+    unmaterialized lineage). Measured faster than a count-over-window
+    pass at both 5k docs (1.46s vs 1.80s warm) and 50k docs (5.64s vs
+    6.39s full pipeline) — see SCALE.md.
     """
     if mode == "collect":
         big = (
@@ -345,21 +254,14 @@ def _cap_buckets(
             return banded
         if len(big) <= _COLLECT_CAP_LIMIT:
             return banded.filter(~F.col(key).isin([r[0] for r in big]))
-        mode = "antijoin"  # degenerate corpus: too many keys to inline
-    if mode == "antijoin":
-        big = (
-            banded.groupBy(key)
-            .agg(F.count(F.lit(1)).alias("__n"))
-            .filter(F.col("__n") > max_bucket_size)
-            .select(key)
-        )
-        return banded.join(F.broadcast(big), key, "left_anti")
-    w = Window.partitionBy(key)
-    return (
-        banded.withColumn("__bucket_n", F.count(F.lit(1)).over(w))
-        .filter(F.col("__bucket_n") <= max_bucket_size)
-        .drop("__bucket_n")
+        # degenerate corpus: too many keys to inline, anti-join below
+    big = (
+        banded.groupBy(key)
+        .agg(F.count(F.lit(1)).alias("__n"))
+        .filter(F.col("__n") > max_bucket_size)
+        .select(key)
     )
+    return banded.join(F.broadcast(big), key, "left_anti")
 
 
 def minhash_lsh_candidates(
@@ -371,9 +273,6 @@ def minhash_lsh_candidates(
     num_bands: int = 8,
     max_bucket_size: int | None = 200,
     base_hash: str = "xxhash64",
-    bucket_cap_mode: str = "collect",
-    signature_layout: str | None = None,
-    signature_fan_out: int | str | None = None,
     _cleanup: list[DataFrame] | None = None,
 ) -> DataFrame:
     """Candidate near-duplicate pairs via banded MinHash LSH.
@@ -382,45 +281,25 @@ def minhash_lsh_candidates(
     ``num_bands`` band keys → explode → self-join on band key → distinct
     pairs (id_a < id_b).
 
-    Scale: the only shuffles are the signature groupBy and the band-key
-    join (hash keys — uniform). ``max_bucket_size`` drops pathological
-    buckets (boilerplate shared by thousands of docs) that would go
-    quadratic — the standard production guard; run :func:`exact_dedup`
-    first so identical texts don't form such buckets.
+    Scale: the signatures need no shuffle (at most one widening
+    repartition of a few-split input); the band-key join is the one
+    corpus-sized exchange (hash keys — uniform). ``max_bucket_size``
+    drops pathological buckets (boilerplate shared by thousands of
+    docs) that would go quadratic — the standard production guard; run
+    :func:`exact_dedup` first so identical texts don't form such
+    buckets.
     """
     if _cleanup is None:  # standalone call: this IS the entry point
         DEDUP_LEDGER.release()
-    rows_per_band = num_hashes // num_bands
     sigs = minhash_signatures(
-        df,
-        text_col,
-        id_col,
-        shingle_len,
-        num_hashes,
-        base_hash=base_hash,
-        layout=signature_layout,
-        fan_out=signature_fan_out,
+        df, text_col, id_col, shingle_len, num_hashes, base_hash=base_hash
     )
-    band_fn = lsh_band_keys_fold if base_hash == "poly" else lsh_band_keys
-    banded = sigs.select(
-        "__id",
-        F.explode(band_fn(F.col("__sig"), num_bands, rows_per_band)).alias("__band"),
-    )
-    if base_hash == "poly":
-        # band index disambiguation: fold keys from different bands could
-        # collide across bands; join must stay within a band position
-        banded = sigs.select(
-            "__id",
-            F.posexplode(
-                band_fn(F.col("__sig"), num_bands, rows_per_band)
-            ).alias("__bandpos", "__bandkey"),
-        ).select(
-            "__id",
-            F.concat_ws(":", F.col("__bandpos"), F.col("__bandkey")).alias("__band"),
-        )
+    banded = _banded_sigs(
+        sigs, num_bands, num_hashes // num_bands, base_hash
+    ).select("__id", "__band")
     # The banded set feeds the bucket-cap count AND both legs of the pair
     # self-join; without materialization the whole signature pipeline
-    # (tokenize → shingle-hash → 32 MIN aggregates) recomputes for each
+    # (tokenize → shingle-hash → 32 minima) recomputes for each
     # consumer. The set is tiny relative to the corpus — (id, band) pairs,
     # num_bands rows per doc — so materializing it is the cheap side of
     # the trade. Eager population is deliberate: persist() alone is
@@ -436,14 +315,10 @@ def minhash_lsh_candidates(
         # the returned pair set still reads banded's cache lazily;
         # park it for release at the next call
         DEDUP_LEDGER.park(banded)
-    if max_bucket_size and bucket_cap_mode == "collect":
-        banded = _cap_buckets(banded, "__band", max_bucket_size, "collect")
+    if max_bucket_size:
+        banded = _cap_buckets(banded, "__band", max_bucket_size)
     else:
         banded.count()
-        if max_bucket_size:
-            banded = _cap_buckets(
-                banded, "__band", max_bucket_size, bucket_cap_mode
-            )
     a = banded.alias("a")
     b = banded.alias("b")
     return (
@@ -460,8 +335,6 @@ def verified_jaccard(
     id_col: str = "doc_id",
     shingle_len: int = 3,
     use_hashed_shingles: bool = True,
-    shingle_backend: str | None = None,
-    fan_out: int | str | None = None,
 ) -> DataFrame:
     """Exact shingle-set Jaccard for candidate pairs: join the shingle
     sets back onto the (small) candidate pair set and compare.
@@ -473,20 +346,24 @@ def verified_jaccard(
     corpus and touching a few thousand rows).
 
     ``use_hashed_shingles`` compares 64-bit shingle hashes (the same
-    :func:`shingle_hash_array` form the signature pipeline consumes)
+    ``shingle_hash_array`` form the signature pipeline consumes)
     instead of materialized shingle strings: set semantics are identical
     up to xxhash64 collisions (~n²/2⁶⁴ per doc — negligible) and the
     intersect/union runs on longs, which measures ~4× faster than
     string arrays. Set it False for the SQL-oracle (poly-hash) variant,
     which replicates string shingles verbatim.
 
-    ``shingle_backend="arrow"`` (hashed shingles only) builds the
-    distinct shingle-hash sets in the vectorized numpy pipeline
-    (``functions.arrow_hash.shingle_hash_set_udf``) instead of the
-    interpreted ``shingle_hash_array`` HOF — value-identical sets
-    (equivalence pytest); the set-intersection itself already runs
-    codegen'd on longs either way.
+    Either set is built in one vectorized kernel
+    (``functions.arrow_hash.shingle_hash_set_udf`` /
+    ``word_shingle_set_udf``), set-identical to the interpreted
+    ``array_distinct`` of the shingle array (twin pytest); the
+    intersection itself runs codegen'd.
     """
+    from kamu_engine_datafusion_spark.functions.arrow_hash import (
+        shingle_hash_set_udf,
+        word_shingle_set_udf,
+    )
+
     cand_ids = (
         pairs.select(F.col("id_a").alias("__cid"))
         .unionByName(pairs.select(F.col("id_b").alias("__cid")))
@@ -495,46 +372,25 @@ def verified_jaccard(
     pruned = df.join(
         F.broadcast(cand_ids), df[id_col] == F.col("__cid"), "left_semi"
     )
-    fan_out = _resolve_fan_out(df.select(id_col, text_col), fan_out)
+    fan_out = _resolve_fan_out(df.select(id_col, text_col))
     if fan_out:
         # the set build's parallelism follows df's input splits; on a
         # single-file local ledger that is ONE task over every
-        # candidate doc (the sf1 replica corpus makes ~all docs
-        # candidates — measured +4.7s). At 100 TB the pruned frame
-        # inherits plentiful splits — leave None there. "auto" derives
-        # the width from the BASE corpus size (an upper bound on the
-        # pruned set — r17, guide §2).
+        # candidate doc (the 10× replica corpus makes ~all docs
+        # candidates — measured +4.7s). The width comes from the BASE
+        # corpus size, an upper bound on the pruned set.
         pruned = pruned.select(id_col, text_col).repartition(fan_out)
-    if shingle_backend is None:
-        # r17 default: arrow (driver-certified bit-parity) for both the
-        # hashed-shingle form and the string-shingle (SQL-oracle
-        # replay) form — each has a set-identical vectorized kernel.
-        shingle_backend = "arrow"
-    if shingle_backend == "arrow":
-        from kamu_engine_datafusion_spark.functions.arrow_hash import (
-            shingle_hash_set_udf,
-            word_shingle_set_udf,
-        )
-
-        sh_udf = (
-            shingle_hash_set_udf(shingle_len)
-            if use_hashed_shingles
-            else word_shingle_set_udf(shingle_len)
-        )
-        sh_col = sh_udf(F.col(text_col))
-    else:
-        shingle_set = (
-            shingle_hash_array(tokens(text_col), shingle_len)
-            if use_hashed_shingles
-            else word_shingles(tokens(text_col), shingle_len)
-        )
-        sh_col = F.array_distinct(shingle_set)
+    sh_udf = (
+        shingle_hash_set_udf(shingle_len)
+        if use_hashed_shingles
+        else word_shingle_set_udf(shingle_len)
+    )
     # both join legs consume the shingle sets; persist so the prune +
     # tokenize + shingle work runs once (candidate-sized — tiny), released
     # at the next dedup call like every LSH intermediate
     sh = pruned.select(
         F.col(id_col).alias("__id"),
-        sh_col.alias("__sh"),
+        sh_udf(F.col(text_col)).alias("__sh"),
     ).persist()
     sh.count()  # populate before the two join legs race through it
     DEDUP_LEDGER.park(sh)
@@ -573,9 +429,6 @@ def minhash_lsh_dedup(
     num_bands: int = 8,
     max_bucket_size: int | None = 200,
     base_hash: str = "xxhash64",
-    bucket_cap_mode: str = "collect",
-    signature_layout: str | None = None,
-    signature_fan_out: int | str | None = None,
 ) -> DataFrame:
     """Full MinHash-LSH near-dedup: candidates → verified Jaccard ≥
     threshold → drop every doc that matches a lower-id survivor.
@@ -584,11 +437,9 @@ def minhash_lsh_dedup(
     transitive chains needs iterative joins; the lower-id-wins rule is
     the standard single-pass policy and matches what exact_dedup does.)
 
-    Caching discipline: the banded set and candidate pairs are
-    unpersisted before return (the duplicate-id set is materialized, so
-    their blocks are dead weight by then); the duplicate-id set itself —
-    which the returned anti-join still reads — is released at the next
-    dedup call (see module docstring).
+    Caching discipline: the banded set, the candidate pairs and the
+    shingle sets stay cached until the next dedup call (see module
+    docstring) — the returned anti-join still reads them.
     """
     DEDUP_LEDGER.release()
     # candidates are tiny but their lineage is the whole signature+LSH
@@ -604,9 +455,6 @@ def minhash_lsh_dedup(
         num_bands,
         max_bucket_size,
         base_hash,
-        bucket_cap_mode,
-        signature_layout,
-        signature_fan_out,
         _cleanup=handles,
     ).persist()
     # populate the pair cache before verification fans out over it
@@ -620,13 +468,6 @@ def minhash_lsh_dedup(
             id_col,
             shingle_len,
             use_hashed_shingles=(base_hash != "poly"),
-            shingle_backend=(
-                "arrow"
-                if _resolve_sig_layout(signature_layout, base_hash)
-                == "arrow"
-                else "jvm"
-            ),
-            fan_out=signature_fan_out,
         )
         .filter(F.col("jaccard") >= threshold)
         .select(F.col("id_b").alias(id_col))
@@ -990,36 +831,6 @@ def srp_plane_components(plane_idx: int, dim: int) -> list[float]:
     ]
 
 
-def _arrow_srp_band_keys(
-    planes: list[list[float]], num_bands: int, bits_per_band: int
-):
-    """Vectorized SRP band keys: one (batch × dim) @ (dim × planes)
-    matmul + bit packing per Arrow batch. Returns a pandas_udf producing
-    ``array<long>`` of ``num_bands`` keys (band-offset encoded, same
-    key space as the Column-fold formulation)."""
-    import numpy as np
-    import pandas as pd
-    from pyspark.sql.pandas.functions import PandasUDFType, pandas_udf
-
-    P = np.asarray(planes, dtype=np.float64)  # (bands*bits, dim)
-    weights = 1 << np.arange(bits_per_band, dtype=np.int64)
-    offsets = np.arange(num_bands, dtype=np.int64) << bits_per_band
-
-    # no type hints: PEP 563 (module-wide `annotations` import) turns
-    # them into strings pandas_udf cannot resolve; eval type is explicit
-    def _keys(vs):
-        V = np.array([np.asarray(v, dtype=np.float64) for v in vs])
-        if V.size == 0:
-            return pd.Series([], dtype=object)
-        bits = (V @ P.T) >= 0  # (n, bands*bits)
-        keys = (
-            bits.reshape(len(V), num_bands, bits_per_band) @ weights
-        ) + offsets  # (n, bands)
-        return pd.Series(list(keys))
-
-    return pandas_udf(_keys, "array<long>", PandasUDFType.SCALAR)
-
-
 def embedding_near_dups(
     df: DataFrame,
     vec_col: str = "embedding",
@@ -1029,9 +840,7 @@ def embedding_near_dups(
     num_bands: int = 4,
     bits_per_band: int = 8,
     max_bucket_size: int | None = 1000,
-    cosine_backend: str = "arrow",
-    signature_backend: str = "arrow",
-    fan_out: int | None = None,
+    exact: bool = False,
 ) -> DataFrame:
     """Embedding-cosine near-duplicate pairs via SRP-LSH candidates.
 
@@ -1052,31 +861,23 @@ def embedding_near_dups(
     keep ``max_bucket_size`` as the guard against degenerate buckets
     (e.g. zero-vector pile-ups).
 
-    ``cosine_backend``: ``"arrow"`` (default since r17 — the 10× A/B
-    held pair-set-identical) = vectorized numpy Pandas UDF for the
-    verification pass — see :func:`semantic_dedup`; ``"jvm"`` =
-    bit-exact oracle-matching left-to-right double cosine (the
-    hash-verified oracle keys pin it — SIMD summation order can move
-    the 6dp-rounded cosine by one ulp on half-boundary values).
-
-    ``signature_backend``: ``"arrow"`` (default since r17) computes ALL
-    band keys in one numpy matmul per Arrow batch (corpus × planes) —
-    the 100 TB path (measured 2.4× full-pipeline at 50k vectors; the
-    signature stage itself is ~30×); ``"jvm"`` computes the
-    ``num_bands × bits_per_band`` plane dots as interpreted Column
-    folds — bit-exact against the SQL oracle. The two backends can
-    disagree only on a plane dot that lands exactly on 0.0 under a
-    different summation order — a measure-zero recall difference;
-    verification stays exact either way.
-
-    ``"arrow_exact"`` (r17, both knobs): the vectorized kernels with
-    the JVM's LEFT-TO-RIGHT summation order
-    (``functions/arrow_hash.py::float_dot_ordered_udf`` /
-    ``srp_band_keys_ordered_udf`` — one rounded multiply + one rounded
-    add per element, array order, no FMA/blocked sums) — BIT-EXACT
-    with the ``"jvm"`` folds at arrow speed; the hash-verified oracle
-    keys pin this backend (equivalence pytest-pinned on the corpus).
+    Both stages are vectorized kernels: all band keys in one projection
+    per Arrow batch (``functions/arrow_hash.py::srp_band_keys_udf``),
+    and the verify cosine of :func:`_pair_cosine`. ``exact=True``
+    sums every dot left to right, one rounded multiply and one rounded
+    add per element — bit-identical with the SQL oracle's double
+    arithmetic, which the hash-verified oracle keys need (a blocked sum
+    can move the 6dp-rounded cosine by one ulp on a half-boundary
+    value). ``exact=False`` uses a BLAS matmul and einsum: the scale
+    path (band keys of a 10k × 64 batch over 32 planes take 1.8 ms as a
+    matmul and 58 ms as the ordered fold), with the same pairs except
+    where a plane dot lands exactly on 0.0 or a cosine within an ulp of
+    the threshold.
     """
+    from kamu_engine_datafusion_spark.functions.arrow_hash import (
+        srp_band_keys_udf,
+    )
+
     DEDUP_LEDGER.release()
     if dim is None:
         head = df.select(F.size(vec_col)).head()
@@ -1084,53 +885,23 @@ def embedding_near_dups(
     base = df.select(
         F.col(id_col).alias("__id"), F.col(vec_col).alias("__v")
     )
+    fan_out = _resolve_fan_out(base)
     if fan_out:
-        # the arrow band-key matmul (and the verify pass) inherit the
-        # input's splits; a single-file local ledger gives them one
-        # task — the minhash signature_fan_out lesson. At 100 TB the
-        # scan has plentiful splits: leave None.
+        # the band-key kernel and the verify pass inherit the input's
+        # splits; a single-file local ledger gives them one task
         base = base.repartition(fan_out)
     base = base.withColumn("__nrm", l2_norm(F.col("__v"), dim))
-
-    def band_key(j: int) -> Column:
-        key = F.lit(j * (1 << bits_per_band)).cast("long")  # band offset
-        for r in range(bits_per_band):
-            plane = F.array(
-                *[F.lit(x) for x in srp_plane_components(j * bits_per_band + r, dim)]
-            )
-            bit = F.when(
-                dot_product(F.col("__v"), plane, dim) >= 0, F.lit(1 << r)
-            ).otherwise(F.lit(0))
-            key = key + bit
-        return key
-
-    if signature_backend in ("arrow", "arrow_exact"):
-        planes = [
-            srp_plane_components(pidx, dim)
-            for pidx in range(num_bands * bits_per_band)
-        ]
-        if signature_backend == "arrow_exact":
-            from kamu_engine_datafusion_spark.functions.arrow_hash import (
-                srp_band_keys_ordered_udf,
-            )
-
-            band_keys_col = srp_band_keys_ordered_udf(
-                planes, num_bands, bits_per_band
-            )(F.col("__v"))
-        else:
-            band_keys_col = _arrow_srp_band_keys(
-                planes, num_bands, bits_per_band
-            )(F.col("__v"))
-    else:
-        band_keys_col = F.array(*[band_key(j) for j in range(num_bands)])
-    # band keys cost num_bands × bits_per_band interpreted dot products
-    # per row (jvm backend; one matmul per batch on arrow); persist the
-    # banded set so the cap count and BOTH join legs read it instead of
-    # recomputing (released at the next dedup call like every LSH
-    # intermediate)
+    planes = [
+        srp_plane_components(pidx, dim)
+        for pidx in range(num_bands * bits_per_band)
+    ]
+    band_keys = srp_band_keys_udf(planes, num_bands, bits_per_band, exact)
+    # persist the banded set so the cap count and BOTH join legs read
+    # it instead of recomputing the projection (released at the next
+    # dedup call like every LSH intermediate)
     banded = base.select(
         "__id",
-        F.explode(band_keys_col).alias("__band"),
+        F.explode(band_keys(F.col("__v"))).alias("__band"),
     ).persist()
     DEDUP_LEDGER.park(banded)
     if max_bucket_size:
@@ -1156,33 +927,35 @@ def embedding_near_dups(
         .select(
             "id_a",
             "id_b",
-            F.round(
-                _pair_cosine(cosine_backend, dim),
-                6,
-            ).alias("cosine"),
+            F.round(_pair_cosine(exact), 6).alias("cosine"),
         )
         .filter(F.col("cosine") >= threshold)
     )
 
 
-def _pair_cosine(cosine_backend: str, dim):
-    """The verification cosine of ``embedding_near_dups``'s joined pair
-    frame (legs aliased ``a``/``b`` with precomputed ``__nrm``):
-    ``arrow`` = einsum kernel (fast, last-bit order difference);
-    ``arrow_exact`` = ordered-fold kernel over the precomputed norms —
-    BIT-EXACT with ``jvm`` (r17); ``jvm`` = interpreted fold."""
-    if cosine_backend == "arrow":
-        return _arrow_cosine(F.col("a.__v"), F.col("b.__v"))
-    if cosine_backend == "arrow_exact":
-        from kamu_engine_datafusion_spark.functions.arrow_hash import (
-            float_dot_ordered_udf,
-        )
+def _pair_cosine(exact: bool) -> Column:
+    """The verify cosine of a joined pair frame whose legs are aliased
+    ``a``/``b`` and carry ``__v`` and its norm ``__nrm`` — shared by
+    :func:`embedding_near_dups` and :func:`semantic_dedup`. A zero
+    vector's cosine to anything is 0.
 
-        return float_dot_ordered_udf()(
-            F.col("a.__v"), F.col("b.__v")
-        ) / (F.col("a.__nrm") * F.col("b.__nrm"))
-    return dot_product(F.col("a.__v"), F.col("b.__v"), dim) / (
-        F.col("a.__nrm") * F.col("b.__nrm")
+    ``exact=False``: the einsum kernel of :func:`_arrow_cosine`.
+    ``exact=True``: the left-to-right ordered dot
+    (``functions/arrow_hash.py::float_dot_ordered_udf``) over the
+    precomputed norms — bit-identical with the interpreted
+    ``dot_product`` fold the SQL oracles replay. The zero-norm guard is
+    a CASE, not a division result: ANSI mode makes x/0 an error."""
+    if not exact:
+        return _arrow_cosine(F.col("a.__v"), F.col("b.__v"))
+    from kamu_engine_datafusion_spark.functions.arrow_hash import (
+        float_dot_ordered_udf,
+    )
+
+    return F.when(
+        (F.col("a.__nrm") == 0.0) | (F.col("b.__nrm") == 0.0), F.lit(0.0)
+    ).otherwise(
+        float_dot_ordered_udf()(F.col("a.__v"), F.col("b.__v"))
+        / (F.col("a.__nrm") * F.col("b.__nrm"))
     )
 
 
@@ -1192,7 +965,7 @@ def _arrow_cosine(u_col: Column, v_col: Column) -> Column:
     genuinely can't keep up: per-pair higher-order lambdas evaluate
     interpreted (~3-4 µs per 64-dim cosine), while numpy does the same
     math SIMD-vectorized per Arrow batch. Summation order differs from
-    the left-to-right JVM/oracle form in the last float bits."""
+    the left-to-right oracle form in the last float bits."""
     import numpy as np
     import pandas as pd
     from pyspark.sql.pandas.functions import PandasUDFType, pandas_udf
@@ -1210,7 +983,7 @@ def _arrow_cosine(u_col: Column, v_col: Column) -> Column:
 
     # asNondeterministic: callers filter on the cosine (>= threshold),
     # and pushdown otherwise copies the UDF below the filter — two
-    # evaluations per pair (guide §4.4; r17)
+    # evaluations per pair (guide §4.4)
     return pandas_udf(
         _cos, "double", PandasUDFType.SCALAR
     ).asNondeterministic()(u_col, v_col)
@@ -1223,8 +996,8 @@ def _arrow_nearest_seed(
     Arrow batch against the (num_seeds × dim) unit-seed matrix,
     ``argmax`` row-wise. Seeds ride the UDF closure (k × dim doubles).
     ``argmax`` returns the FIRST maximum and seeds are ordered by id, so
-    ties break to the lower seed id — same total order as the JVM path
-    (up to SIMD float-rounding on near-ties)."""
+    ties break to the lower seed id — the total order of the exact
+    path (up to SIMD float-rounding on near-ties)."""
     import numpy as np
     import pandas as pd
     from pyspark.sql.pandas.functions import PandasUDFType, pandas_udf
@@ -1235,7 +1008,7 @@ def _arrow_nearest_seed(
     # zero-norm seeds must never win the argmax (an unguarded division
     # would give a NaN row, and argmax over NaN assigns EVERYTHING to
     # that seed); sentinel below the cosine floor keeps them inert,
-    # matching the JVM path's Python-level guard
+    # matching the exact path's guard
     sm = np.where(snorm == 0.0, 0.0, sm / np.where(snorm == 0.0, 1.0, snorm))
     dead = (snorm[:, 0] == 0.0)
 
@@ -1250,6 +1023,51 @@ def _arrow_nearest_seed(
     return pandas_udf(_assign, "long", PandasUDFType.SCALAR)(v_col)
 
 
+def _assign_clusters(base: DataFrame, seed_rows: list, exact: bool) -> DataFrame:
+    """``base`` (``__id``, ``__v``, ``__nrm``) plus ``__cluster``: the id
+    of each vector's nearest seed by cosine — higher cosine wins, ties
+    break to the lower seed id.
+
+    ``exact=False``: one matmul per Arrow batch
+    (:func:`_arrow_nearest_seed`). ``exact=True``: all seed dots in one
+    left-to-right ordered-fold kernel
+    (``functions/arrow_hash.py::float_dots_ordered_const_udf``), then a
+    max over ``(cosine, -seed_id)`` structs, bit-identical with the
+    interpreted per-seed ``dot_product`` folds the SQL oracle replays.
+    Zero-norm guards on BOTH sides: a NaN cosine would win Spark's
+    struct max (NaN sorts greatest) and silently funnel the corpus into
+    one cluster, so a zero seed gets a sentinel below the cosine floor
+    and a zero corpus vector gets cosine 0 (matching the matmul
+    kernel)."""
+    seed_vecs = [list(map(float, r["__v"])) for r in seed_rows]
+    if not exact:
+        return base.withColumn(
+            "__cluster",
+            _arrow_nearest_seed(
+                F.col("__v"), [r["__id"] for r in seed_rows], seed_vecs
+            ),
+        )
+    from kamu_engine_datafusion_spark.functions.arrow_hash import (
+        float_dots_ordered_const_udf,
+    )
+
+    choices = []
+    for i, (r, vec) in enumerate(zip(seed_rows, seed_vecs)):
+        sn = math.sqrt(sum(x * x for x in vec))
+        if sn == 0.0:
+            cos_expr = F.lit(-2.0)
+        else:
+            cos_expr = F.when(F.col("__nrm") == 0.0, F.lit(0.0)).otherwise(
+                F.element_at("__sdots", i + 1) / (F.col("__nrm") * sn)
+            )
+        choices.append(
+            F.struct(cos_expr.alias("cos"), F.lit(-r["__id"]).alias("negsid"))
+        )
+    return base.withColumn(
+        "__sdots", float_dots_ordered_const_udf(seed_vecs)(F.col("__v"))
+    ).withColumn("__cluster", -F.array_max(F.array(*choices))["negsid"])
+
+
 def semantic_dedup(
     df: DataFrame,
     vec_col: str = "embedding",
@@ -1258,8 +1076,7 @@ def semantic_dedup(
     num_seeds: int = 16,
     seeds: DataFrame | None = None,
     max_cluster_size: int | None = None,
-    cosine_backend: str = "arrow",
-    fan_out: int | None = None,
+    exact: bool = False,
 ) -> DataFrame:
     """SemDeDup-style semantic dedup: partition the corpus into
     embedding clusters, verify pairwise cosine ONLY within a cluster,
@@ -1278,18 +1095,17 @@ def semantic_dedup(
 
     Scale shape: seeds are collected to the driver (``num_seeds × dim``
     doubles — same sanctioned pattern as the IVF centroid math) so the
-    nearest-seed assignment is pure in-row column math over broadcast
-    literals — no n×k assignment shuffle. Within-cluster pairing is a
+    nearest-seed assignment is in-row math over the seeds in the UDF
+    closure — no n×k assignment shuffle. Within-cluster pairing is a
     capped self-join on the cluster id (codegen'd join — measured
     decisively faster than in-array pair expansion, whose higher-order
     lambdas evaluate interpreted; see SCALE.md round-5), with the
-    assignment persisted so its expression pipeline runs once, not per
-    join leg. Within-cluster comparison is quadratic per cluster BY
-    CONTRACT — the SemDeDup trade: choose ``num_seeds`` so clusters
-    stay small, and/or set ``max_cluster_size`` to drop degenerate
-    clusters outright (count semantics, never silent truncation). The
-    assignment expression grows with ``num_seeds``; past a few hundred
-    seeds use the k-means/IVF route instead.
+    assignment persisted so it runs once, not per join leg.
+    Within-cluster comparison is quadratic per cluster BY CONTRACT —
+    the SemDeDup trade: choose ``num_seeds`` so clusters stay small,
+    and/or set ``max_cluster_size`` to drop degenerate clusters
+    outright (count semantics, never silent truncation). Past a few
+    hundred seeds use the k-means/IVF route instead.
 
     Tie-breaks are total: assignment prefers higher cosine, then lower
     seed id; the drop rule is the family's lower-id-wins single pass
@@ -1297,100 +1113,37 @@ def semantic_dedup(
     closest to the centroid; lower-id-wins is deterministic under
     re-partitioning, which matters more in a ledger engine.)
 
-    ``cosine_backend``: ``"arrow"`` (default since r17) runs
-    BOTH passes as vectorized numpy Pandas UDFs (matmul assignment,
-    einsum verify — ~100× less per-pair CPU) — the 100 TB path.
-    ``"jvm"`` computes assignment and
-    verification with the left-to-right double dot product —
-    bit-identical to the DuckDB oracle, but higher-order lambdas
-    evaluate interpreted (~3-4 µs per 64-dim cosine); SIMD
-    summation order may flip near-tie assignments or pairs within float
-    rounding of the threshold, so the oracle demo pins ``"jvm"``.
+    Both passes are vectorized kernels (:func:`_assign_clusters`,
+    :func:`_pair_cosine`). ``exact=True`` keeps the SQL oracle's
+    left-to-right double arithmetic bit for bit; ``exact=False``
+    (matmul assignment, einsum verify — the 100 TB path) may flip a
+    near-tie assignment or a pair within float rounding of the
+    threshold.
     """
     DEDUP_LEDGER.release()
     base = df.select(
         F.col(id_col).alias("__id"),
         F.col(vec_col).cast("array<double>").alias("__v"),
     )
-    if fan_out:
-        # the arrow nearest-seed matmul inherits the input's splits; a
-        # single-file local ledger gives it one task (the minhash
-        # signature_fan_out lesson). At 100 TB: leave None.
-        base = base.repartition(fan_out)
-    base = base.withColumn("__nrm", l2_norm(F.col("__v")))
     seed_src = base if seeds is None else seeds.select(
         F.col(id_col).alias("__id"),
         F.col(vec_col).cast("array<double>").alias("__v"),
     )
-    seed_rows = seed_src.orderBy("__id").limit(num_seeds).select("__id", "__v").collect()
-    if cosine_backend == "arrow":
-        cluster = _arrow_nearest_seed(
-            F.col("__v"),
-            [r["__id"] for r in seed_rows],
-            [list(map(float, r["__v"])) for r in seed_rows],
-        )
-    elif cosine_backend == "arrow_exact":
-        # one ordered-fold dot per seed in ONE kernel (bit-exact with
-        # the jvm per-seed folds — r17); the guards, divisions, and
-        # struct-max tie-break stay the exact JVM expressions below
-        from kamu_engine_datafusion_spark.functions.arrow_hash import (
-            float_dots_ordered_const_udf,
-        )
-
-        dots = float_dots_ordered_const_udf(
-            [list(map(float, r["__v"])) for r in seed_rows]
-        )(F.col("__v"))
-        sd = base.withColumn("__sdots", dots)
-        choices = []
-        for i, r in enumerate(seed_rows):
-            sn = math.sqrt(sum(float(x) * float(x) for x in r["__v"]))
-            if sn == 0.0:
-                cos_expr = F.lit(-2.0)
-            else:
-                cos_expr = F.when(
-                    F.col("__nrm") == 0.0, F.lit(0.0)
-                ).otherwise(
-                    F.element_at("__sdots", i + 1)
-                    / (F.col("__nrm") * sn)
-                )
-            choices.append(
-                F.struct(
-                    cos_expr.alias("cos"),
-                    F.lit(-r["__id"]).alias("negsid"),
-                )
-            )
-        cluster = -F.array_max(F.array(*choices))["negsid"]
-        base = sd
-    else:
-        # nearest seed in-row: max over (cosine, -seed_id) structs —
-        # higher cosine wins, ties break to the lower seed id. Zero-norm
-        # guards on BOTH sides: a NaN cosine would win Spark's struct
-        # max (NaN sorts greatest), silently funneling the corpus into
-        # one cluster; zero seeds get a sentinel below the cosine floor,
-        # zero corpus vectors get cosine 0 (matching the arrow backend).
-        choices = []
-        for r in seed_rows:
-            sn = math.sqrt(sum(float(x) * float(x) for x in r["__v"]))
-            if sn == 0.0:
-                cos_expr = F.lit(-2.0)
-            else:
-                cos_expr = F.when(F.col("__nrm") == 0.0, F.lit(0.0)).otherwise(
-                    dot_product(
-                        F.col("__v"), F.array(*[F.lit(float(x)) for x in r["__v"]])
-                    )
-                    / (F.col("__nrm") * sn)
-                )
-            choices.append(
-                F.struct(cos_expr.alias("cos"), F.lit(-r["__id"]).alias("negsid"))
-            )
-        cluster = -F.array_max(F.array(*choices))["negsid"]
+    seed_rows = seed_src.orderBy("__id").limit(num_seeds).collect()
+    fan_out = _resolve_fan_out(base)
+    if fan_out:
+        # the assignment kernel inherits the input's splits; a
+        # single-file local ledger gives it one task. The seeds are
+        # taken before, so their top-k scan pays no shuffle.
+        base = base.repartition(fan_out)
+    base = base.withColumn("__nrm", l2_norm(F.col("__v")))
     # both self-join legs consume the assignment; persist so the
     # dot-product pipeline runs once. Unlike the banded LSH operators —
     # where a doc appears in num_bands buckets and carrying vectors
     # would duplicate them per membership — a doc is in EXACTLY ONE
     # cluster, so the legs carry the vectors directly: zero join-backs,
     # and the cosine filter runs in the same stage as the join.
-    assigned = base.withColumn("__cluster", cluster).persist()
+    assigned = _assign_clusters(base, seed_rows, exact).persist()
     legs = assigned
     if max_cluster_size:
         # collect-mode cap doubles as the cache-populating job
@@ -1398,36 +1151,13 @@ def semantic_dedup(
     else:
         assigned.count()  # populate before the join legs race through it
     a, b = legs.alias("a"), legs.alias("b")
-    if cosine_backend == "arrow":
-        cos = _arrow_cosine(F.col("a.__v"), F.col("b.__v"))
-    elif cosine_backend == "arrow_exact":
-        from kamu_engine_datafusion_spark.functions.arrow_hash import (
-            float_dot_ordered_udf,
-        )
-
-        cos = F.when(
-            (F.col("a.__nrm") == 0.0) | (F.col("b.__nrm") == 0.0),
-            F.lit(0.0),
-        ).otherwise(
-            float_dot_ordered_udf()(F.col("a.__v"), F.col("b.__v"))
-            / (F.col("a.__nrm") * F.col("b.__nrm"))
-        )
-    else:
-        # zero-norm guard (ANSI mode makes x/0 an ERROR, not NaN):
-        # a zero vector's cosine to anything is defined as 0
-        cos = F.when(
-            (F.col("a.__nrm") == 0.0) | (F.col("b.__nrm") == 0.0), F.lit(0.0)
-        ).otherwise(
-            dot_product(F.col("a.__v"), F.col("b.__v"))
-            / (F.col("a.__nrm") * F.col("b.__nrm"))
-        )
     dups = (
         a.join(
             b,
             (F.col("a.__cluster") == F.col("b.__cluster"))
             & (F.col("a.__id") < F.col("b.__id")),
         )
-        .filter(cos >= threshold)
+        .filter(_pair_cosine(exact) >= threshold)
         .select(F.col("b.__id").alias("__dup"))
         .distinct()
     )
@@ -1494,7 +1224,6 @@ def minhash_index(
     num_hashes: int = 32,
     num_bands: int = 8,
     base_hash: str = "xxhash64",
-    signature_layout: str | None = None,
 ) -> DataFrame:
     """Build the persistable signature index: one row per (band key,
     doc), carrying the full signature for estimate-based verification.
@@ -1504,13 +1233,7 @@ def minhash_index(
     """
     rows_per_band = num_hashes // num_bands
     sigs = minhash_signatures(
-        df,
-        text_col,
-        id_col,
-        shingle_len,
-        num_hashes,
-        base_hash=base_hash,
-        layout=signature_layout,
+        df, text_col, id_col, shingle_len, num_hashes, base_hash=base_hash
     )
     return _banded_sigs(sigs, num_bands, rows_per_band, base_hash).select(
         F.col("__id").alias("doc_id"), F.col("__sig").alias("sig"), "__band"
@@ -1525,7 +1248,6 @@ def minhash_index_split(
     num_hashes: int = 32,
     num_bands: int = 8,
     base_hash: str = "xxhash64",
-    signature_layout: str | None = None,
 ) -> tuple[DataFrame, DataFrame]:
     """Build the SPLIT persistable index: ``(bands, sigs)`` —
     ``bands`` one narrow row per (band key, doc) ``(doc_id, __band)``
@@ -1542,13 +1264,7 @@ def minhash_index_split(
     :func:`dedup_increment_against_index`."""
     rows_per_band = num_hashes // num_bands
     sigs = minhash_signatures(
-        df,
-        text_col,
-        id_col,
-        shingle_len,
-        num_hashes,
-        base_hash=base_hash,
-        layout=signature_layout,
+        df, text_col, id_col, shingle_len, num_hashes, base_hash=base_hash
     )
     banded = _banded_sigs(sigs, num_bands, rows_per_band, base_hash)
     return (
@@ -1576,7 +1292,7 @@ def dedup_increment_against_index(
 ) -> tuple[DataFrame, ...]:
     """Dedup an increment against a persisted index and within itself.
 
-    ``eager_dead=False`` (r18, guide §2.6/§5): skip the eager
+    ``eager_dead=False``: skip the eager
     cache-populating ``dead.count()`` job. The count is NOT semantic —
     it exists so that consumers fanning out across SEPARATE downstream
     jobs read a populated cache instead of racing to compute ``dead``
@@ -1588,7 +1304,7 @@ def dedup_increment_against_index(
     Keep the default for big standalone increments whose returned
     frames feed several separate actions.
 
-    ``precomputed_sigs`` (r18, guide §2.6): the caller may pass the
+    ``precomputed_sigs``: the caller may pass the
     :func:`minhash_signatures` frame for ``new_docs`` (same text/id
     cols, shingle_len, num_hashes, base_hash — the caller's contract)
     already materialized. The signature kernel depends only on the
@@ -1620,11 +1336,9 @@ def dedup_increment_against_index(
     very tick still kills its own higher-id within-tick near-dups
     (they are near-dups of the indexed survivor one hop away; with
     the whole corpus as one increment this reduces to the batch
-    lower-id-wins greedy rule, which the oracles replay). The r13
-    verdict read the comment below as "survivors-only within tick" —
-    that was the comment misleading, not a semantic difference: both
-    legs chain-kill within the tick, and both are pinned by their
-    3-tick driver oracles (``xdedup_incremental``,
+    lower-id-wins greedy rule, which the oracles replay). Both legs
+    chain-kill within the tick, and both are pinned by their 3-tick
+    driver oracles (``xdedup_incremental``,
     ``xminhash_index_maintained``, ``xsemdedup_incremental``).
 
     ``emit_pairs=True`` returns ``(survivors, new_index_rows, pairs)``
@@ -1668,8 +1382,8 @@ def dedup_increment_against_index(
         # first action through banded and populates the cache; its
         # consumers run sequentially inside that one job, so the worst
         # case is a block-level duplicate compute of one partition —
-        # cheaper than a whole extra job per call (r17: the uncapped
-        # path is the maintained-fold one, 2 eager jobs × ticks).
+        # cheaper than a whole extra job per call (the uncapped path
+        # is the maintained-fold one: 2 eager jobs × ticks).
         capped = banded
     # The cap must hold on BOTH join sides: an uncapped index-side
     # mega-bucket (boilerplate shared by thousands of indexed docs)
@@ -1907,7 +1621,7 @@ def span_dedup_increment(
     id_col: str = "doc_id",
     min_len: int = 20,
 ) -> tuple[DataFrame, DataFrame]:
-    """One tick of MAINTAINED substring-span dedup (r17 staging: the
+    """One tick of MAINTAINED substring-span dedup (the
     novelty-set device applied to :func:`duplicate_spans`): the state
     is the gram FIRST-OCCURRENCE index — the set of ``min_len``-token
     rolling-window hashes seen in all prior ticks, an append-only
@@ -2234,9 +1948,6 @@ def minhash_lsh_report(
     num_bands: int = 8,
     max_bucket_size: int | None = 200,
     base_hash: str = "xxhash64",
-    bucket_cap_mode: str = "collect",
-    signature_layout: str | None = None,
-    signature_fan_out: int | str | None = None,
 ) -> DataFrame:
     """Audit companion to :func:`minhash_lsh_dedup`: one row per
     DROPPED document with its lowest-id matching partner and the
@@ -2263,9 +1974,6 @@ def minhash_lsh_report(
         num_bands,
         max_bucket_size,
         base_hash,
-        bucket_cap_mode,
-        signature_layout,
-        signature_fan_out,
         _cleanup=handles,
     ).persist()
     cand.count()
@@ -2276,13 +1984,6 @@ def minhash_lsh_report(
         id_col,
         shingle_len,
         use_hashed_shingles=(base_hash != "poly"),
-        shingle_backend=(
-            "arrow"
-            if _resolve_sig_layout(signature_layout, base_hash)
-            == "arrow"
-            else "jvm"
-        ),
-        fan_out=signature_fan_out,
     ).filter(F.col("jaccard") >= threshold)
     w = Window.partitionBy("id_b").orderBy(F.col("id_a"))
     rep = (
@@ -2421,10 +2122,9 @@ def dedup_trajectory_increment(
     id_col: str = "doc_id",
     dp: int = 4,
 ) -> tuple[DataFrame, DataFrame]:
-    """One tick of the maintained DEDUP-RATE TRAJECTORY (r17 staging:
-    "dedup-rate trajectory") — the curation health metric a 100 TB
-    ingest dashboards per tick: how much of each arriving batch is
-    already-seen content. Returns ``(stats, new_state)``:
+    """One tick of the maintained DEDUP-RATE TRAJECTORY — the curation
+    health metric a 100 TB ingest dashboards per tick: how much of each
+    arriving batch is already-seen content. Returns ``(stats, new_state)``:
 
     - ``stats``: ONE row ``(tick, n_docs, n_kept, n_dup, dup_rate)``
       — ``n_kept`` counts the tick's docs that are the FIRST

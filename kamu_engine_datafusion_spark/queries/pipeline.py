@@ -42,32 +42,21 @@ def q_xdedup_minhash(spark: SparkSession, sf_dir: str) -> DataFrame:
     """MinHash+LSH near-dedup SURVIVOR SET (xxhash64-based —
     deterministic but engine-specific → rows-only; survivor-set-sized
     so the driver's row count carries regression signal, not a 5-row
-    per-lang rollup). r16: signatures ride the vectorized Arrow/numpy
-    backend (``functions/arrow_hash.py``) — bit-identical to the
-    explode formulation (equivalence pytest; survivor set unchanged),
-    but off Spark's interpreted-HOF path, which was the bench's most
-    expensive kernel and its one host-drift-sensitive subsystem
-    (r13–r15 adjudications)."""
+    per-lang rollup). Signatures run in the vectorized Arrow/numpy
+    kernel (``functions/arrow_hash.py``), bit-identical to the
+    interpreted explode formulation (twin pytest) but off Spark's
+    interpreted-HOF path, which was the bench's most expensive kernel
+    and its one host-drift-sensitive subsystem. The kernels' width
+    comes from the input size (``dedup._resolve_fan_out``)."""
     t = load(spark, sf_dir, "documents")
-    # fan_out="auto" (r17): the local test ledgers are SINGLE parquet
-    # files, so the kernels would otherwise get one task; "auto"
-    # derives the repartition width from the input size (guide §2 —
-    # scale-adaptive, not a constant tuned for one box): sf0.1 resolves
-    # to None (kernel cheaper than the shuffle — full dedup measured
-    # 2.61→2.07 s vs the old fan_out=8), the 10× replica corpus to ~12
-    # (where the 1-task kernel was the bottleneck), and a many-split
-    # 100 TB scan to None (its splits already fan out).
-    return D.minhash_lsh_dedup(
-        t["documents"],
-        threshold=0.7,
-        signature_layout="arrow",
-        signature_fan_out="auto",
-    ).select("doc_id", "lang")
+    return D.minhash_lsh_dedup(t["documents"], threshold=0.7).select(
+        "doc_id", "lang"
+    )
 
 
 def q_xdedup_minhash_survivors(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Driver-checkable twin of the bench key ``xdedup_minhash`` (r18,
-    VERDICT r17 item 2): the SAME full-corpus survivor-set pipeline —
+    """Driver-checkable twin of the bench key ``xdedup_minhash``: the
+    SAME full-corpus survivor-set pipeline —
     default 32 hashes / 8 bands / bucket-cap 200 (cap replayed by the
     oracle) / verified true-Jaccard ≥ 0.7 / lower-id-wins — with the
     SQL-replayable polynomial base hash instead of xxhash64, so the
@@ -78,11 +67,7 @@ def q_xdedup_minhash_survivors(spark: SparkSession, sf_dir: str) -> DataFrame:
     DuckDB cannot replay xxhash64."""
     t = load(spark, sf_dir, "documents")
     return D.minhash_lsh_dedup(
-        t["documents"],
-        threshold=0.7,
-        base_hash="poly",
-        signature_layout="arrow",
-        signature_fan_out="auto",
+        t["documents"], threshold=0.7, base_hash="poly"
     ).select("doc_id", "lang")
 
 
@@ -190,12 +175,9 @@ def q_xdedup_semantic(spark: SparkSession, sf_dir: str) -> DataFrame:
     t = load(spark, sf_dir, "embeddings")
     sub = t["embeddings"].filter(F.col("vec_id") < 2000)
     return (
-        # arrow_exact: bit-identical to the jvm left-to-right float
-        # arithmetic the oracle replays, at arrow speed (r17)
-        D.semantic_dedup(
-            sub, threshold=0.4, num_seeds=16,
-            cosine_backend="arrow_exact",
-        )
+        # exact: bit-identical to the left-to-right float arithmetic
+        # the oracle replays
+        D.semantic_dedup(sub, threshold=0.4, num_seeds=16, exact=True)
         .groupBy("label")
         .agg(F.count(F.lit(1)).alias("n_vecs"))
     )
@@ -336,14 +318,13 @@ def q_xdedup_embcos(spark: SparkSession, sf_dir: str) -> DataFrame:
     # The synthetic embeddings top out near cosine 0.51, so the demo runs
     # at threshold 0.4 with a high-recall band layout (8 bands x 4 bits);
     # production near-dup thresholds (0.9+) use the operator defaults.
-    # arrow_exact backends: this key is hash-verified against a DuckDB
-    # oracle replaying the exact left-to-right double arithmetic — the
-    # ordered-fold kernels reproduce that bit-for-bit at arrow speed
-    # (r17; the plain "arrow" default is pair-set-identical but not
-    # bit-identical in the 6dp-rounded cosine).
+    # exact: this key is hash-verified against a DuckDB oracle
+    # replaying the left-to-right double arithmetic — the ordered-fold
+    # kernels reproduce that bit for bit (exact=False keeps the pair
+    # set but not the last bit of the 6dp-rounded cosine).
     return D.embedding_near_dups(
         sub, threshold=0.4, dim=64, num_bands=8, bits_per_band=4,
-        cosine_backend="arrow_exact", signature_backend="arrow_exact",
+        exact=True,
     )
 
 
@@ -2701,11 +2682,10 @@ def q_xpipeline_embed(spark: SparkSession, sf_dir: str) -> DataFrame:
     t = load(spark, sf_dir, "embeddings")
     emb = t["embeddings"]
     sub = emb.filter(F.col("vec_id") < 2000)
-    # arrow_exact: bit-identical to the jvm left-to-right fold the
-    # oracle replays, at arrow speed (r17)
+    # exact: bit-identical to the left-to-right fold the oracle replays
     pairs = DD.embedding_near_dups(
         sub, threshold=0.4, dim=64, num_bands=8, bits_per_band=4,
-        cosine_backend="arrow_exact", signature_backend="arrow_exact",
+        exact=True,
     )
     # the tiny dup-id set feeds THREE consumers (quantization params,
     # the quantized search, the MMR pool prune) — persist it so the

@@ -18,6 +18,7 @@ from pyspark.sql import functions as F
 from kamu_engine_datafusion_spark.functions.columns import (
     _MERSENNE_31 as _M31,
     _let,
+    dot_product,
     minhash_coeffs,
     poly_hash31,
     shingle_hash_array,
@@ -341,6 +342,96 @@ def hash31_fold(key, hash_fn: str):
 def window_hash_arr_fold(text_col: str, n: int):
     """``dedup._window_hash_arr`` as the slice/zip_with HOF."""
     return shingle_hash_array(tokens(text_col), n)
+
+
+# -- MinHash signatures and float folds (operators/dedup.py) ----------------
+
+
+def minhash_signatures_explode(
+    df: DataFrame,
+    text_col: str = "text",
+    id_col: str = "doc_id",
+    shingle_len: int = 3,
+    num_hashes: int = 32,
+    seed: int = 42,
+    base_hash: str = "xxhash64",
+) -> DataFrame:
+    """``dedup.minhash_signatures`` as one row per (doc, distinct
+    shingle hash) and ``num_hashes`` MIN aggregates — map-side partials,
+    one exchange of num_hashes longs per doc. A doc with no shingle has
+    no row; the poly profile gives NULL text one empty shingle."""
+    if base_hash == "poly":
+        hash_arr = F.transform(
+            word_shingles(tokens(text_col), shingle_len),
+            lambda s: poly_hash31(s),
+        )
+    else:
+        hash_arr = shingle_hash_array(tokens(text_col), shingle_len)
+    coeffs = minhash_coeffs(num_hashes, seed)
+    shingled = df.select(
+        F.col(id_col).alias("__id"),
+        F.explode(F.array_distinct(hash_arr)).alias("__h"),
+    )
+    aggs = [
+        F.min((F.col("__h") * a + b) % _M31).alias(f"__mh{j}")
+        for j, (a, b) in enumerate(coeffs)
+    ]
+    return shingled.groupBy("__id").agg(*aggs).select(
+        "__id",
+        F.array(*[f"__mh{j}" for j in range(num_hashes)]).alias("__sig"),
+    )
+
+
+def srp_band_keys_fold(v, planes, num_bands: int, bits_per_band: int):
+    """``arrow_hash.srp_band_keys_udf``'s keys with one interpreted
+    ``dot_product`` fold per plane: ``band_offset + Σ 1<<r`` over the
+    band's planes whose dot is ``>= 0``."""
+    keys = []
+    for j in range(num_bands):
+        key = F.lit(j * (1 << bits_per_band)).cast("long")
+        for r in range(bits_per_band):
+            plane = F.array(
+                *[F.lit(float(x)) for x in planes[j * bits_per_band + r]]
+            )
+            key = key + F.when(
+                dot_product(v, plane) >= 0, F.lit(1 << r)
+            ).otherwise(F.lit(0))
+        keys.append(key)
+    return F.array(*keys)
+
+
+def pair_cosine_fold(exact=None):
+    """``dedup._pair_cosine`` as the interpreted fold over legs
+    ``a``/``b`` (``__v``, ``__nrm``); a zero vector scores 0."""
+    return F.when(
+        (F.col("a.__nrm") == 0.0) | (F.col("b.__nrm") == 0.0), F.lit(0.0)
+    ).otherwise(
+        dot_product(F.col("a.__v"), F.col("b.__v"))
+        / (F.col("a.__nrm") * F.col("b.__nrm"))
+    )
+
+
+def assign_clusters_fold(base: DataFrame, seed_rows: list, exact=None):
+    """``dedup._assign_clusters`` as a max over ``(cosine, -seed_id)``
+    structs with one interpreted ``dot_product`` fold per seed: a zero
+    seed never wins, a zero vector scores 0 against every seed."""
+    choices = []
+    for r in seed_rows:
+        vec = [float(x) for x in r["__v"]]
+        sn = math.sqrt(sum(x * x for x in vec))
+        if sn == 0.0:
+            cos_expr = F.lit(-2.0)
+        else:
+            cos_expr = F.when(F.col("__nrm") == 0.0, F.lit(0.0)).otherwise(
+                dot_product(F.col("__v"), F.array(*[F.lit(x) for x in vec]))
+                / (F.col("__nrm") * sn)
+            )
+        choices.append(
+            F.struct(cos_expr.alias("cos"), F.lit(-r["__id"]).alias("negsid"))
+        )
+    return base.withColumn(
+        "__cluster", -F.array_max(F.array(*choices))["negsid"]
+    )
 
 
 # -- Bloom decontamination (operators/decontaminate.py) ---------------------

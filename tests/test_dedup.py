@@ -1,15 +1,18 @@
-"""MinHash signature layout equivalence (explode+groupBy vs zero-shuffle
-in-row) — ``operators/dedup.py::minhash_signatures``."""
+"""Dedup operators and their kernels against the reference
+formulations in ``tests/jvm_twins.py`` — ``operators/dedup.py`` and
+``functions/arrow_hash.py``."""
 
 
 
 def test_minhash_signature_layouts_identical(spark):
-    """The zero-shuffle in-row signature layout must produce exactly
-    the explode+groupBy signatures for both hash backends — including
-    dropping shingle-less docs the same way."""
+    """The arrow signature kernel must produce exactly the explode +
+    groupBy reference's signatures for both hash profiles — including
+    dropping shingle-less docs the same way, and the whitespace edges
+    Spark's space-only ``trim`` leaves as empty tokens."""
     from kamu_engine_datafusion_spark.operators.dedup import (
         minhash_signatures,
     )
+    from tests import jvm_twins as J
 
     df = spark.createDataFrame(
         [
@@ -19,6 +22,9 @@ def test_minhash_signature_layouts_identical(spark):
             (4, "too short"),  # < shingle_len tokens -> no shingles
             (5, ""),
             (6, None),
+            (7, "  padded   whitespace  "),
+            (8, "trailing tab\t"),
+            (9, " \t mixed ends \n "),
         ],
         "doc_id long, text string",
     )
@@ -29,29 +35,53 @@ def test_minhash_signature_layouts_identical(spark):
         }
         b = {
             r["__id"]: list(r["__sig"])
-            for r in minhash_signatures(
-                df, base_hash=bh, layout="inrow"
+            for r in J.minhash_signatures_explode(
+                df, base_hash=bh
             ).collect()
         }
         assert a == b  # identical ids AND identical signature vectors
         assert 1 in a and 2 in a and a[1] != a[2]
+    # the xxhash64 profile drops NULL text; poly keeps it as "" (above)
+    assert 6 not in {
+        r["__id"] for r in minhash_signatures(df).collect()
+    }
 
 
-def test_minhash_inrow_layout_has_no_shuffle(spark):
+def test_resolve_fan_out_rule(spark, tmp_path):
+    """The one fan-out rule of the arrow kernels: one task per
+    ``target_bytes`` of uncompressed footer bytes, capped at the
+    default parallelism; None for an in-memory frame, a small input, a
+    frame that already has the width, or a non-Parquet input."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
     from kamu_engine_datafusion_spark.operators.dedup import (
-        minhash_signatures,
+        _resolve_fan_out,
     )
 
-    df = spark.createDataFrame(
-        [(1, "a b c d e f g h")], "doc_id long, text string"
+    assert _resolve_fan_out(
+        spark.createDataFrame([(1, "a b c")], "doc_id long, text string")
+    ) is None
+
+    path = str(tmp_path / "one.parquet")
+    pq.write_table(
+        pa.table({"doc_id": list(range(50)), "text": ["a b c d"] * 50}), path
     )
-    plan = (
-        minhash_signatures(df, layout="inrow")
-        ._jdf.queryExecution()
-        .executedPlan()
-        .toString()
-    )
-    assert "Exchange" not in plan
+    md = pq.ParquetFile(path).metadata
+    size = sum(md.row_group(i).total_byte_size for i in range(md.num_row_groups))
+    one = spark.read.parquet(path)
+    assert one.rdd.getNumPartitions() == 1
+    assert _resolve_fan_out(one) is None  # far under 2 MiB
+    want = min(spark.sparkContext.defaultParallelism, size)
+    assert want > 1
+    assert _resolve_fan_out(one, target_bytes=1) == want
+    assert _resolve_fan_out(one.repartition(want), target_bytes=1) is None
+
+    csv = tmp_path / "one.csv"
+    csv.write_text("doc_id,text\n1,a b c\n")
+    assert _resolve_fan_out(
+        spark.read.csv(str(csv), header=True), target_bytes=1
+    ) is None  # no Parquet footer to size
 
 
 def test_dedup_cross_corpus_exact_overlap_and_nulls(spark):
@@ -229,19 +259,14 @@ def test_arrow_tokens_match_jvm(spark):
     assert [java_tokens(c) for c in cases] == [list(t) for t in jvm]
 
 
-def test_minhash_arrow_layout_identical_and_dedup_equal(spark):
-    """r16: the vectorized Arrow/numpy signature backend must produce
-    the explode layout's EXACT signatures (same dropped null docs, same
-    vectors — n=3 partial-shingle short docs included), and the full
-    LSH dedup must return the identical survivor set under either
-    backend on the real corpus slice."""
-    from pyspark.sql import functions as F
-
-    from kamu_engine_datafusion_spark.operators.dedup import (
-        minhash_lsh_dedup,
-        DEDUP_LEDGER,
-        minhash_signatures,
-    )
+def test_minhash_arrow_layout_identical_and_dedup_equal(spark, monkeypatch):
+    """On the real corpus slice plus edge docs, the arrow signature
+    kernel must produce the explode reference's EXACT signatures for
+    both hash profiles (same dropped docs, same vectors — partial-
+    shingle short docs included), and the full LSH dedup must keep the
+    same survivors when the reference computes its signatures."""
+    from kamu_engine_datafusion_spark.operators import dedup as D
+    from tests import jvm_twins as J
 
     docs = spark.read.parquet(
         "/root/testdata/sf0.001/documents.parquet"
@@ -264,57 +289,47 @@ def test_minhash_arrow_layout_identical_and_dedup_equal(spark):
         "doc_id long, text string",
     )
     d = docs.unionByName(edge)
-    a = {
-        r["__id"]: list(r["__sig"])
-        for r in minhash_signatures(d, id_col="doc_id").collect()
-    }
-    b = {
-        r["__id"]: list(r["__sig"])
-        for r in minhash_signatures(
-            d, id_col="doc_id", layout="arrow"
-        ).collect()
-    }
-    assert a == b
-    assert 9001 not in a  # null text dropped by both
+    for bh in ("xxhash64", "poly"):
+        a = {
+            r["__id"]: list(r["__sig"])
+            for r in D.minhash_signatures(
+                d, id_col="doc_id", base_hash=bh
+            ).collect()
+        }
+        b = {
+            r["__id"]: list(r["__sig"])
+            for r in J.minhash_signatures_explode(
+                d, id_col="doc_id", base_hash=bh
+            ).collect()
+        }
+        assert a == b, bh
+        # the xxhash64 profile drops null-text docs; the poly/
+        # word_shingles profile KEEPS them (NULL behaves like "": one
+        # empty shingle)
+        assert (9001 in a) == (bh == "poly")
 
-    surv_jvm = sorted(
-        r["doc_id"]
-        for r in minhash_lsh_dedup(d, threshold=0.7).collect()
-    )
-    DEDUP_LEDGER.release()
-    surv_arrow = sorted(
-        r["doc_id"]
-        for r in minhash_lsh_dedup(
-            d, threshold=0.7, signature_layout="arrow"
-        ).collect()
-    )
-    DEDUP_LEDGER.release()
-    assert surv_jvm == surv_arrow
+    def survivors(bh):
+        out = sorted(
+            r["doc_id"]
+            for r in D.minhash_lsh_dedup(
+                d, threshold=0.7, base_hash=bh
+            ).collect()
+        )
+        D.DEDUP_LEDGER.release()
+        return out
 
-    # r17: the poly base hash has its own vectorized kernel — the
-    # arrow layout must be BIT-EXACT with the JVM transform+poly fold
-    # (incl. the <n-token whole-text shingle rule and null drop)
-    a_poly = {
-        r["__id"]: list(r["__sig"])
-        for r in minhash_signatures(
-            d, id_col="doc_id", base_hash="poly", layout="explode"
-        ).collect()
-    }
-    b_poly = {
-        r["__id"]: list(r["__sig"])
-        for r in minhash_signatures(
-            d, id_col="doc_id", base_hash="poly", layout="arrow"
-        ).collect()
-    }
-    assert a_poly == b_poly
-    # the poly/word_shingles profile KEEPS null-text docs (NULL behaves
-    # like "": one empty shingle) — unlike the xxhash64 profile above
-    assert 9001 in a_poly
+    arrow = {bh: survivors(bh) for bh in ("xxhash64", "poly")}
+    monkeypatch.setattr(
+        D, "minhash_signatures", J.minhash_signatures_explode
+    )
+    for bh, surv in arrow.items():
+        assert surv == survivors(bh), bh
+        assert 0 < len(surv) < d.count()
 
 
 def test_arrow_shingle_sets_match_jvm(spark):
-    """r16: the vectorized shingle-set build (verified_jaccard's
-    shingle_backend='arrow') must produce the exact distinct
+    """The vectorized shingle-set build of verified_jaccard must
+    produce the exact distinct
     shingle-hash SET of array_distinct(shingle_hash_array(...)) per
     doc — order-insensitive (sets)."""
     from pyspark.sql import functions as F
@@ -428,63 +443,105 @@ def test_span_scan_backend_twins(spark, monkeypatch):
     assert arrow == jvm and len(arrow) > 0
 
 
-def test_embedding_near_dups_arrow_exact_bit_identical(spark):
-    """r17: the ordered-fold float kernels (float_dot_ordered_udf /
-    srp_band_keys_ordered_udf) must be BIT-identical to the jvm
-    left-to-right folds — same band keys, same pairs, same 6dp
-    cosines — on the real embeddings corpus."""
-    from kamu_engine_datafusion_spark.operators.dedup import (
-        DEDUP_LEDGER,
-        embedding_near_dups,
-    )
-
+def _embeddings_with_zero_vector(spark):
+    """The sf0.001 embeddings (64-dim) plus one all-zero vector, the
+    guard edge of every cosine kernel."""
     emb = spark.read.parquet(
         "/root/testdata/sf0.001/embeddings.parquet"
+    ).select("vec_id", "embedding")
+    return emb.unionByName(
+        spark.createDataFrame(
+            [(10**6, [0.0] * 64)], "vec_id long, embedding array<double>"
+        )
     )
 
-    def run(backend):
-        out = sorted(
-            map(
-                tuple,
-                embedding_near_dups(
-                    emb, threshold=0.3, dim=64, num_bands=8,
-                    bits_per_band=4, cosine_backend=backend,
-                    signature_backend=backend,
-                ).collect(),
-            )
-        )
-        DEDUP_LEDGER.release()
-        return out
 
-    exact = run("arrow_exact")
-    jvm = run("jvm")
-    assert exact == jvm and len(exact) > 0
+def test_embedding_near_dups_arrow_exact_bit_identical(spark):
+    """embedding_near_dups' kernels with exact=True must be
+    BIT-identical to the interpreted left-to-right folds: every row's
+    SRP band keys, and every pair's verify cosine (zero vector
+    included) on the real embeddings corpus."""
+    from pyspark.sql import functions as F
+
+    from kamu_engine_datafusion_spark.functions.arrow_hash import (
+        srp_band_keys_udf,
+    )
+    from kamu_engine_datafusion_spark.functions.columns import l2_norm
+    from kamu_engine_datafusion_spark.operators.dedup import (
+        _pair_cosine,
+        srp_plane_components,
+    )
+    from tests import jvm_twins as J
+
+    emb = _embeddings_with_zero_vector(spark)
+    planes = [srp_plane_components(p, 64) for p in range(8 * 4)]
+    keys = emb.select(
+        "vec_id",
+        srp_band_keys_udf(planes, 8, 4, True)(F.col("embedding")).alias("k"),
+        J.srp_band_keys_fold(F.col("embedding"), planes, 8, 4).alias("ref"),
+    ).collect()
+    assert len(keys) == emb.count()
+    assert all(list(r["k"]) == list(r["ref"]) for r in keys)
+
+    legs = emb.filter(
+        (F.col("vec_id") < 60) | (F.col("vec_id") == 10**6)
+    ).select(
+        F.col("vec_id").alias("__id"),
+        F.col("embedding").alias("__v"),
+        l2_norm(F.col("embedding")).alias("__nrm"),
+    )
+    pairs = (
+        legs.alias("a")
+        .join(legs.alias("b"), F.col("a.__id") < F.col("b.__id"))
+        .select(
+            _pair_cosine(True).alias("cos"),
+            J.pair_cosine_fold().alias("ref"),
+        )
+        .collect()
+    )
+    assert len(pairs) == 60 * 61 // 2
+    assert all(r["cos"] == r["ref"] for r in pairs)
+    assert sum(r["cos"] == 0.0 for r in pairs) >= 60  # the zero vector
 
 
 def test_semantic_dedup_arrow_exact_bit_identical(spark):
-    """r17: semantic_dedup's arrow_exact backend (ordered-fold seed
-    dots + pair dots) must keep the exact jvm survivor set — same
-    assignments, same thresholded pairs."""
+    """semantic_dedup's nearest-seed assignment must give every row the
+    cluster id of the interpreted per-seed folds: bit-identical with
+    exact=True, and equal on this corpus with the matmul kernel. A
+    zero vector among the seeds never wins."""
+    from pyspark.sql import functions as F
+
+    from kamu_engine_datafusion_spark.functions.columns import l2_norm
     from kamu_engine_datafusion_spark.operators.dedup import (
-        DEDUP_LEDGER,
-        semantic_dedup,
+        _assign_clusters,
     )
+    from tests import jvm_twins as J
 
-    emb = spark.read.parquet(
-        "/root/testdata/sf0.001/embeddings.parquet"
+    emb = _embeddings_with_zero_vector(spark).withColumn(
+        "vec_id",
+        F.when(F.col("vec_id") == 10**6, F.lit(-1)).otherwise(
+            F.col("vec_id")
+        ),
     )
+    base = emb.select(
+        F.col("vec_id").alias("__id"),
+        F.col("embedding").cast("array<double>").alias("__v"),
+        l2_norm(F.col("embedding")).alias("__nrm"),
+    )
+    seed_rows = base.orderBy("__id").limit(16).select("__id", "__v").collect()
+    assert seed_rows[0]["__id"] == -1  # the zero vector is a seed
 
-    def run(backend):
-        out = sorted(
-            r["vec_id"]
-            for r in semantic_dedup(
-                emb, threshold=0.35, num_seeds=16,
-                cosine_backend=backend,
-            ).collect()
-        )
-        DEDUP_LEDGER.release()
-        return out
-
-    exact = run("arrow_exact")
-    jvm = run("jvm")
-    assert exact == jvm and 0 < len(exact) <= emb.count()
+    ref = {
+        r["__id"]: r["__cluster"]
+        for r in J.assign_clusters_fold(base, seed_rows).collect()
+    }
+    assert len(ref) == emb.count() and -1 not in ref.values()
+    for exact in (True, False):
+        got = {
+            r["__id"]: r["__cluster"]
+            for r in _assign_clusters(base, seed_rows, exact)
+            .select("__id", "__cluster")
+            .collect()
+        }
+        assert got == ref, exact
+    assert len(set(ref.values())) > 1

@@ -384,12 +384,18 @@ def test_oov_rate_counts_occurrences(spark):
     assert abs(r["oov_rate"] - 0.25) < 1e-9  # one OOV occurrence of four
 
 
-def test_semantic_dedup_arrow_backend_matches_jvm(vectors):
-    a = sorted(r["vec_id"] for r in D.semantic_dedup(
-        vectors, threshold=0.95, num_seeds=2).collect())
-    b = sorted(r["vec_id"] for r in D.semantic_dedup(
-        vectors, threshold=0.95, num_seeds=2, cosine_backend="arrow").collect())
-    assert a == b
+def test_semantic_dedup_arrow_backend_matches_jvm(vectors, monkeypatch):
+    """Both kernel forms keep the survivors of the interpreted folds."""
+    from tests import jvm_twins as J
+
+    def survivors(**kw):
+        return sorted(r["vec_id"] for r in D.semantic_dedup(
+            vectors, threshold=0.95, num_seeds=2, **kw).collect())
+
+    fast, exact = survivors(), survivors(exact=True)
+    monkeypatch.setattr(D, "_assign_clusters", J.assign_clusters_fold)
+    monkeypatch.setattr(D, "_pair_cosine", J.pair_cosine_fold)
+    assert fast == exact == survivors() == [0, 1, 2, 4]
 
 
 def test_unigram_logprob_oov_floor(spark):
@@ -404,12 +410,23 @@ def test_unigram_logprob_oov_floor(spark):
     assert abs(r["mean_logprob"] - round(want, 4)) < 1e-9
 
 
-def test_embedding_near_dups_arrow_backend(vectors):
-    a = {(r["id_a"], r["id_b"]) for r in D.embedding_near_dups(
-        vectors, threshold=0.9, dim=3).collect()}
-    b = {(r["id_a"], r["id_b"]) for r in D.embedding_near_dups(
-        vectors, threshold=0.9, dim=3, cosine_backend="arrow").collect()}
-    assert a == b
+def test_embedding_near_dups_arrow_backend(vectors, monkeypatch):
+    """Both kernel forms find the pairs of the interpreted folds."""
+    from kamu_engine_datafusion_spark.functions import arrow_hash
+    from tests import jvm_twins as J
+
+    def pairs(**kw):
+        return {(r["id_a"], r["id_b"]) for r in D.embedding_near_dups(
+            vectors, threshold=0.9, dim=3, **kw).collect()}
+
+    fast, exact = pairs(), pairs(exact=True)
+    monkeypatch.setattr(
+        arrow_hash, "srp_band_keys_udf",
+        lambda planes, nb, bpb, exact: (
+            lambda v: J.srp_band_keys_fold(v, planes, nb, bpb)),
+    )
+    monkeypatch.setattr(D, "_pair_cosine", J.pair_cosine_fold)
+    assert fast == exact == pairs() and (0, 3) in fast
 
 
 def test_semantic_dedup_with_kmeans_centroid_seeds(spark):
@@ -510,12 +527,12 @@ def test_semantic_dedup_zero_seed_vector_is_inert(spark):
         (3, [0.0, 1.0, 0.0], 0),
     ]
     emb = spark.createDataFrame(rows, ["vec_id", "embedding", "label"])
-    for backend in ("jvm", "arrow"):
+    for exact in (True, False):
         got = sorted(r["vec_id"] for r in D.semantic_dedup(
-            emb, threshold=0.9, num_seeds=2, cosine_backend=backend).collect())
+            emb, threshold=0.9, num_seeds=2, exact=exact).collect())
         # 2 is a near-dup of 1 (same cluster); zero vector must not
         # swallow the corpus into one NaN cluster
-        assert got == [0, 1, 3], backend
+        assert got == [0, 1, 3], exact
 
 
 def test_topk_batch_zero_query_and_empty_queries(vectors):

@@ -71,24 +71,13 @@ def test_topk_similarity_no_corpus_shuffle(spark):
     assert "Exchange hashpartitioning" not in p
 
 
-def test_minhash_signatures_partial_aggregation(spark):
-    """The explode-layout signature stage is codegen'd MIN aggregates
-    with map-side partials (the exchange carries num_hashes longs per
-    doc) — the formulation that beat in-row higher-order lambdas 2.2×
-    at 50k docs (interpreted evaluation; SCALE.md round-5). Pinned
-    explicitly since r17: the OPERATOR default resolves to the arrow
-    backend (one ArrowEvalPython, zero shuffle), asserted below."""
+def test_minhash_signatures_one_arrow_kernel_no_exchange(spark):
+    """Signatures are one vectorized ArrowEvalPython node with no
+    aggregate and no exchange: parallelism comes from the input splits
+    (the sf0.001 documents file is too small to widen)."""
     from kamu_engine_datafusion_spark.operators.dedup import minhash_signatures
 
     docs = spark.read.parquet(f"{SF}/documents.parquet")
-    buf = io.StringIO()
-    with contextlib.redirect_stdout(buf):
-        minhash_signatures(docs, layout="explode").explain("formatted")
-    p = buf.getvalue()
-    assert p.count("HashAggregate") >= 2  # partial + final min aggregates
-
-    # r17 default (layout=None → arrow for xxhash64): one vectorized
-    # ArrowEvalPython node, no aggregate and no exchange at all.
     buf = io.StringIO()
     with contextlib.redirect_stdout(buf):
         minhash_signatures(docs).explain("formatted")

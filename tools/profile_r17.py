@@ -45,48 +45,30 @@ def profile_minhash(spark):
     from kamu_engine_datafusion_spark.operators.dedup import (
         minhash_lsh_candidates,
         minhash_signatures,
-        verified_jaccard,
     )
 
     t = load(spark, SF_DIR, "documents")
     docs = t["documents"]
     print(f"documents rows: {docs.count()}")
 
-    # stage 1: signatures only (arrow, fan_out=8 as registered)
+    # stage 1: signatures only
     timed(
         spark,
-        "minhash: signatures arrow fan8",
-        lambda: noop(
-            minhash_signatures(docs, layout="arrow", fan_out=8)
-        ),
+        "minhash: signatures",
+        lambda: noop(minhash_signatures(docs)),
     )
-    for fo in (16, 32, None):
-        timed(
-            spark,
-            f"minhash: signatures arrow fan{fo}",
-            lambda fo=fo: noop(minhash_signatures(docs, layout="arrow", fan_out=fo)),
-        )
 
     # stage 2: candidates (includes persist + cap collect + self-join)
     def cands():
         D.DEDUP_LEDGER.release()
-        noop(
-            minhash_lsh_candidates(
-                docs, signature_layout="arrow", signature_fan_out=8
-            )
-        )
+        noop(minhash_lsh_candidates(docs))
 
     timed(spark, "minhash: candidates (full)", cands)
 
     # stage 3: full dedup as registered
     def full():
         noop(
-            D.minhash_lsh_dedup(
-                docs,
-                threshold=0.7,
-                signature_layout="arrow",
-                signature_fan_out=8,
-            ).select("doc_id", "lang")
+            D.minhash_lsh_dedup(docs, threshold=0.7).select("doc_id", "lang")
         )
 
     timed(spark, "minhash: full dedup (registered)", full, reps=4)

@@ -244,15 +244,6 @@ def main() -> None:
 
     t("exact_dedup", lambda: D.exact_dedup(docs).count())
     t("minhash_lsh_dedup", lambda: D.minhash_lsh_dedup(docs, threshold=0.7).count())
-    t(
-        "minhash_lsh_dedup_arrow",
-        lambda: D.minhash_lsh_dedup(
-            docs,
-            threshold=0.7,
-            signature_layout="arrow",
-            signature_fan_out=8,
-        ).count(),
-    )
     t("simhash", lambda: D.simhash_near_dups(docs, max_hamming=3).count())
     t("paragraph", lambda: D.paragraph_dedup(docs, sep=" the ").count())
     t(
@@ -260,40 +251,15 @@ def main() -> None:
         lambda: D.embedding_near_dups(emb, threshold=0.4, dim=64).count(),
     )
     t(
-        "embcos_srp_arrow_sig",
+        "embcos_srp_exact",
         lambda: D.embedding_near_dups(
-            emb,
-            threshold=0.4,
-            dim=64,
-            signature_backend="arrow",
-            cosine_backend="arrow",
+            emb, threshold=0.4, dim=64, exact=True
         ).count(),
     )
     t(
-        "embcos_srp_arrow_fan8",
-        lambda: D.embedding_near_dups(
-            emb,
-            threshold=0.4,
-            dim=64,
-            signature_backend="arrow",
-            cosine_backend="arrow",
-            fan_out=8,
-        ).count(),
-    )
-    t(
-        "semantic_dedup_jvm",
+        "semantic_dedup",
         lambda: D.semantic_dedup(
             emb, threshold=0.4, num_seeds=64, max_cluster_size=4000
-        ).count(),
-    )
-    t(
-        "semantic_dedup_arrow",
-        lambda: D.semantic_dedup(
-            emb,
-            threshold=0.4,
-            num_seeds=64,
-            max_cluster_size=4000,
-            cosine_backend="arrow",
         ).count(),
     )
     t(
@@ -519,26 +485,16 @@ def main() -> None:
         or docs.count(),
     )
 
-    # round-7: MinHash signature layout on a MANY-SPLIT input — the
-    # 100 TB shape (input splits >= cores), vs the one-file bench input
-    # where explode's exchange is what fans work out to the cores. Rule
-    # recorded in SCALE.md: splits >= cores => inrow; single/few-split
-    # => explode.
+    # MinHash signatures on a MANY-SPLIT input — the 100 TB shape
+    # (input splits >= cores), where the kernel's parallelism comes
+    # from the splits and the derived fan-out adds no shuffle.
     split_dir = os.path.join(args.data_dir, "documents_32split.parquet")
     if not os.path.exists(split_dir):
         docs.repartition(32).write.mode("overwrite").parquet(split_dir)
     docs32 = spark.read.parquet(split_dir)
     t(
-        "minhash_sig_explode_32split",
+        "minhash_sig_32split",
         lambda: D.minhash_signatures(docs32)
-        .write.format("noop")
-        .mode("overwrite")
-        .save()
-        or docs32.count(),
-    )
-    t(
-        "minhash_sig_inrow_32split",
-        lambda: D.minhash_signatures(docs32, layout="inrow")
         .write.format("noop")
         .mode("overwrite")
         .save()
